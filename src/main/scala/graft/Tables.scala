@@ -51,41 +51,39 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame  = apply(spark, dir, "documents")
 
-  /** Spread parallelism for a small, under-split, CPU-heavy scan.
-    * Full cluster width is measurably the WRONG target on a table this
+  /** Spread quantum for a small, under-split, CPU-heavy scan. Full
+    * cluster width is measurably the WRONG target on a table this
     * small: a 32-wide spread cut the ANN family's wall 82 → 49 s but
     * charged +157 cpu-s of per-task/per-stage overhead across the
     * many-tiny-stage index-audit queries that read the same table
     * (~130 stages each × 32 near-empty tasks). A bounded quantum keeps
-    * most of the wall win at a fraction of the task overhead; override
-    * with `spark.graft.smallScan.parallelism` where the per-row work
-    * justifies full width. */
-  def smallScanParallelism(spark: SparkSession): Int =
-    math.min(spark.conf.get("spark.graft.smallScan.parallelism", "8").toInt,
-      spark.sparkContext.defaultParallelism)
+    * most of the wall win at a fraction of the task overhead. */
+  private val spreadQuantum = 8
 
-  /** Scan split count per (session, dir) — probing it via
-    * `df.rdd.getNumPartitions` forces physical planning of the scan,
-    * so the probe runs ONCE per (session, dir) and is memoized (r15
-    * ADVICE: the loader is called from dozens of hot sites and was
-    * re-planning the scan on every call). Entries die with the
-    * session. */
-  private val splitMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Integer]()
+  /** Table `name`, spread over min(8, defaultParallelism) partitions by
+    * `key` when (and only when) the file layout under-splits it: at
+    * production scale the scan is many splits and no exchange is added,
+    * so a large scan is never repartitioned down. The numbered form is
+    * the one AQE never coalesces. Row content is untouched, and every
+    * caller's result is partitioning-invariant.
+    *
+    * The split count is memoized per (session, table, dir): probing it
+    * via `rdd.getNumPartitions` plans the scan, and the loaders are
+    * called from dozens of hot sites. */
+  def spread(spark: SparkSession, dir: String, name: String, key: String): DataFrame = {
+    val df = apply(spark, dir, name)
+    val target = math.min(spreadQuantum, spark.sparkContext.defaultParallelism)
+    val splits = graft.util.SessionMemo.value(spark, s"splits/$name", dir)(
+      df.rdd.getNumPartitions)
+    if (splits >= target) df
+    else df.repartition(target, org.apache.spark.sql.functions.col(key))
+  }
 
   /** Every embeddings consumer is vector-math-heavy per row (distance
     * scans, quantizer encodes, md5-derived projections), and the local
     * table is ONE small parquet split — so the whole ANN family was
-    * measured running its map stages 1-task serial. Spread the scan
-    * when (and only when) the file layout under-splits: at production
-    * scale the table is many splits and no exchange is added. Row
-    * content is untouched; vec_id keying spreads evenly. */
-  def embeddings(spark: SparkSession, dir: String): DataFrame = {
-    val df = apply(spark, dir, "embeddings")
-    val target = smallScanParallelism(spark)
-    val splits: Int = splitMemo.computeIfAbsent((spark, dir),
-      _ => df.rdd.getNumPartitions)
-    if (splits >= target) df
-    else df.repartition(target, org.apache.spark.sql.functions.col("vec_id"))
-  }
+    * measured running its map stages 1-task serial. vec_id keying
+    * spreads evenly. */
+  def embeddings(spark: SparkSession, dir: String): DataFrame =
+    spread(spark, dir, "embeddings", "vec_id")
 }

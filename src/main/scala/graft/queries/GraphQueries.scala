@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.SessionMemo
 import graft.model.GraphOps
 import graft.gen.Generators
 import graft.linalg.EigenInit
@@ -28,11 +29,8 @@ object GraphQueries {
     * union+distinct subplan across passes once different projections
     * push into each copy — without the cache every pass repays the
     * scan+distinct shuffle. */
-  private val graphMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def lineitemGraph(s: SparkSession, d: String): DataFrame =
-    graphMemo.computeIfAbsent((s, d), _ => {
+    SessionMemo.frame(s, "lineitemGraph", d) {
       val src = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("src"), col("l_partkey").as("dst"))
       // Cache width follows the SOURCE scan's split count, not the
@@ -47,10 +45,8 @@ object GraphQueries {
       val parts = math.max(1, math.min(
         s.conf.get("spark.sql.shuffle.partitions").toInt,
         src.rdd.getNumPartitions))
-      GraphOps.undirect(src)
-        .repartition(parts, col("src"), col("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+      GraphOps.undirect(src).repartition(parts, col("src"), col("dst"))
+    }
 
   /** The lineitem graph's triangle enumeration, shared by its three
     * consumers (q156 transitivity / q157 edge Jaccard / q80 local
@@ -59,13 +55,9 @@ object GraphQueries {
     * persisted enumeration per (session, dir) serves all — the
     * BruteTruth.topK within-session reuse pattern. The first consumer
     * pays the full enumeration inside its own timed window. */
-  private val triMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private def lineitemTriangles(s: SparkSession, d: String): DataFrame =
-    triMemo.computeIfAbsent((s, d), _ =>
-      graft.metrics.GraphFeatures.triangles(lineitemGraph(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionMemo.frame(s, "lineitemTriangles", d)(
+      graft.metrics.GraphFeatures.triangles(lineitemGraph(s, d)))
 
   /** Supplier–nation bipartite graph with disjoint id spaces. */
   def supplierGraph(s: SparkSession, d: String): DataFrame =
@@ -76,17 +68,14 @@ object GraphQueries {
   /** GraphX staticPageRank(10) over the supplier graph, cached per
     * (session, dir): q23 emits it and q37 correlates it — sharing the
     * frame saves a full GraphX run when both execute in one session. */
-  private val prMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private def pagerankFrame(s: SparkSession, d: String): DataFrame =
-    prMemo.computeIfAbsent((s, d), _ => {
+    SessionMemo.frame(s, "supplierPagerank", d) {
       import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph}
       val rdd = supplierGraph(s, d).rdd.map(r => GxEdge(r.getLong(0), r.getLong(1), 1))
       val pr = GxGraph.fromEdges(rdd, 0).staticPageRank(10).vertices
       s.createDataFrame(pr).toDF("id", "rank")
-        .select(col("id"), round(col("rank"), 6).as("rank")).cache()
-    })
+        .select(col("id"), round(col("rank"), 6).as("rank"))
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q14_gen_grid" -> ((s, _) => Generators.roadNetwork(s, 30, 20)),

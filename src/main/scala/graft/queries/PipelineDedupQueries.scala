@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.SessionMemo
 import graft.pipeline.{Dedup, TextAnalysis}
 
 /** Deduplication / decontamination / record-linkage query surface —
@@ -29,34 +30,24 @@ object PipelineDedupQueries {
     * the full posting-list join (~5 s wall apiece at sf0.1). One
     * enumeration per (session, dir) serves all — the lineitemTriangles
     * / BruteTruth.topK within-session-sharing pattern (r15 verdict:
-    * shared computation, not cross-run caching; entries die with the
-    * session). The persisted frame is tens of PAIR rows, nothing like
-    * the reverted narrow-string subtree persists. The first consumer
-    * pays the build inside its own timed window. */
-  private val jaccardMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
+    * shared computation, not cross-run caching). The persisted frame
+    * is tens of PAIR rows, nothing like the reverted narrow-string
+    * subtree persists. The first consumer pays the build inside its
+    * own timed window. */
   private[queries] def docJaccardPairs(s: SparkSession, d: String): DataFrame =
-    jaccardMemo.computeIfAbsent((s, d), _ =>
-      // numbered repartition: the shingle explode reads the ONE-split
-      // documents scan serial otherwise (the q214/q178 treatment);
-      // the pair set is deterministic algebra, partitioning-invariant
-      Dedup.jaccardPairs(
-          Tables.documents(s, d)
-            .repartition(Tables.smallScanParallelism(s), col("doc_id")),
-          n = 3, threshold = 0.10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionMemo.frame(s, "docJaccardPairs", d)(
+      // spread: the shingle explode reads the ONE-split documents scan
+      // serial otherwise (the q214/q178 treatment); the pair set is
+      // deterministic algebra, partitioning-invariant
+      Dedup.jaccardPairs(Tables.spread(s, d, "documents", "doc_id"),
+        n = 3, threshold = 0.10))
 
   /** Same sharing for the winnow pair graph (q46 emits it, q47
     * clusters it). */
-  private val winnowMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   private def docWinnowPairs(s: SparkSession, d: String): DataFrame =
-    winnowMemo.computeIfAbsent((s, d), _ =>
+    SessionMemo.frame(s, "docWinnowPairs", d)(
       TextAnalysis.winnowPairs(Tables.documents(s, d), k = 4, w = 4,
-          minShared = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        minShared = 2))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = r8Queries ++ Map(
     "q24_dedup_exact" -> ((s, d) =>
@@ -75,8 +66,7 @@ object PipelineDedupQueries {
       // the k=64 signature map is per-doc md5-heavy over a one-split
       // scan — spread it (q214/q178 treatment; signatures are per-row
       // algebra, partitioning-invariant)
-      val docs = Tables.documents(s, d)
-        .repartition(Tables.smallScanParallelism(s), col("doc_id"))
+      val docs = Tables.spread(s, d, "documents", "doc_id")
       // md5-family hashes (signature mins + band buckets) so the whole
       // LSH candidate generation is DuckDB-replicable — q27 graduates
       // from rows-only to a full hash-checked oracle row
@@ -106,9 +96,7 @@ object PipelineDedupQueries {
     // banding, candidate join, agreement fraction — replays in DuckDB.
     "q175_sig_dedup" -> ((s, d) =>
       // spread the k=64 signature map (the q27 note)
-      Dedup.minhashLsh(
-          Tables.documents(s, d)
-            .repartition(Tables.smallScanParallelism(s), col("doc_id")),
+      Dedup.minhashLsh(Tables.spread(s, d, "documents", "doc_id"),
           n = 3, k = 64, bands = 16,
           threshold = 0.5, md5Based = true, verify = "sig")
         .orderBy("id_a", "id_b")),
@@ -122,12 +110,10 @@ object PipelineDedupQueries {
       // by construction, so the oracle doubles as a recall proof).
       // The per-doc md5-per-token fingerprint map is the cost and the
       // documents table is ONE parquet split (wall ≈ run ≈ one busy
-      // core, measured 5 s serial) — numbered repartition spreads it
-      // at the bounded small-scan quantum (the q214/q178 treatment);
-      // fingerprints are per-row md5 algebra, partitioning-invariant.
-      Dedup.simhashPairs(
-          Tables.documents(s, d)
-            .repartition(Tables.smallScanParallelism(s), col("doc_id")),
+      // core, measured 5 s serial) — spread it at the bounded
+      // small-scan quantum (the q214/q178 treatment); fingerprints are
+      // per-row md5 algebra, partitioning-invariant.
+      Dedup.simhashPairs(Tables.spread(s, d, "documents", "doc_id"),
           maxDist = 7, chunks = 8, hasher = Dedup.md5Hash64)
         .orderBy("id_a", "id_b")),
 
@@ -308,9 +294,7 @@ object PipelineDedupQueries {
     // brute with the asymmetric denominator).
     "q192_containment_pairs" -> ((s, d) =>
       // spread the shingle explode over the one-split scan (q27 note)
-      Dedup.containmentPairs(
-        Tables.documents(s, d)
-          .repartition(Tables.smallScanParallelism(s), col("doc_id")),
+      Dedup.containmentPairs(Tables.spread(s, d, "documents", "doc_id"),
         n = 3, threshold = 0.8).orderBy("id_a", "id_b")))
 
   private def r8Oracles: Map[String, String] = Map(

@@ -39,7 +39,6 @@ object PipelineQueries {
     // compared only through the argmax (ties broken by language
     // code), keeping the row hash free of float-sum-order hazards.
     "q218_langid_profile" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select("doc_id", "text")
       // ONE corpus scan forges all four script variants (explode over
       // the script index, literal-argument translate per branch)
       // instead of a 4-leg union that re-scanned the corpus per leg;
@@ -52,14 +51,13 @@ object PipelineQueries {
         when(col("_i") === idx,
           translate(lower(col("text")), latinAz, target)) }
         .reduceRight(_ otherwise _)
-      // numbered repartition (REPARTITION_BY_NUM is the one origin AQE
-      // never coalesces — both the bare and the expression-only form
-      // were sized down to ONE partition on this few-hundred-KB corpus
-      // and the gram stages ran serial); sized to the cluster, keyed on
+      // the spread's numbered repartition (REPARTITION_BY_NUM is the
+      // one origin AQE never coalesces — both the bare and the
+      // expression-only form were sized down to ONE partition on this
+      // few-hundred-KB corpus and the gram stages ran serial), keyed on
       // the unique doc_id for an even spread — the stage is CPU-bound
       // per row, not byte-bound, so core count is the right scale
-      val variants = docs
-        .repartition(Tables.smallScanParallelism(s), col("doc_id"))
+      val variants = Tables.spread(s, d, "documents", "doc_id")
         .select(col("doc_id"), col("text"),
           explode(array(scriptTargets.map(t => lit(t._1)): _*)).as("_i"))
         .select((col("doc_id") * 4 + col("_i")).as("vid"), col("doc_id"),
@@ -167,12 +165,11 @@ object PipelineQueries {
       // the quality featurization is regex/token-heavy per row and the
       // documents table is ONE parquet split, so both featurize
       // consumers (the train collect and the scoring map) ran serial —
-      // numbered repartition (never AQE-coalesced) spreads them across
-      // the bounded small-scan quantum (the q214 band-key treatment;
-      // guide §2.5 input skew). Output columns are contract booleans,
-      // insensitive to the row order this changes.
-      val docs = Tables.documents(s, d)
-        .repartition(Tables.smallScanParallelism(s), col("doc_id"))
+      // the spread (never AQE-coalesced) puts them on the bounded
+      // small-scan quantum (the q214 band-key treatment; guide §2.5
+      // input skew). Output columns are contract booleans, insensitive
+      // to the row order this changes.
+      val docs = Tables.spread(s, d, "documents", "doc_id")
       val feat = QualityClassifier.featurize(docs, col("keep"))
       val (w, losses) = QualityClassifier.train(feat, iters = 30, lr = 1.0)
       val scored = QualityClassifier.score(feat, w).cache()

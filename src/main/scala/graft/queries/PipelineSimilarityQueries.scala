@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.{Concurrent, SessionMemo}
 import graft.pipeline.{Multimodal, Similarity}
 
 /** Embedding / similarity-search query surface — the ANN family split
@@ -22,75 +23,17 @@ object PipelineSimilarityQueries {
     * (~50 s of the r10 core). The frame is computed once per (session,
     * table dir), persisted (250 rows at k=5), and shared — the audits'
     * floors and the dumped contract booleans are unchanged because the
-    * VALUES are identical by construction. Keyed by session identity
-    * so test suites with fresh sessions never see a stale plan. */
+    * VALUES are identical by construction. */
   private object BruteTruth {
-    private val cache = scala.collection.concurrent.TrieMap
-      .empty[String, (DataFrame, Long)]
-    /** Stable unique session key (r11 ADVICE: identityHashCode can
-      * collide between two live sessions, handing one a frame bound to
-      * the other's plan). Every runtime session is the classic
-      * implementation and keys on its `sessionUUID`; the hash fallback
-      * only exists so a hypothetical other implementation degrades to
-      * the old behavior instead of crashing. Entries die with the
-      * session's block manager on `stop()`; the map itself holds one
-      * small plan object per (session, dir) — bounded by the
-      * harness's session count. */
-    private def sessionKey(s: SparkSession): String =
-      // sessionUUID is private[sql] at the Scala level but public in
-      // bytecode — the one-reflective-call cost is nothing next to the
-      // brute scan it keys
-      try s.getClass.getMethod("sessionUUID").invoke(s).asInstanceOf[String]
-      catch { case _: ReflectiveOperationException =>
-        s"idhash-${System.identityHashCode(s)}" }
     /** (full brute top-5 frame for vec_id<50 queries — persisted,
       * columns (qid, rid, cos, rn) —, its row count). */
-    def topK(s: SparkSession, d: String): (DataFrame, Long) =
-      cache.getOrElseUpdate(s"${sessionKey(s)}:$d", {
+    def topK(s: SparkSession, d: String): (DataFrame, Long) = {
+      val b = SessionMemo.frame(s, "bruteTop5", d) {
         val e = Tables.embeddings(s, d)
-        val b = Similarity
-          .bruteForceTopK(e.filter(col("vec_id") < 50), e, k = 5)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (b, b.count())
-      })
-  }
-
-  /** Run independent audit arms as CONCURRENT driver threads (guide
-    * §2.6 "overlap independent jobs"): the index-lifecycle audits are
-    * chains of tiny write→probe→mutate→re-probe jobs whose cost is
-    * almost entirely per-job scheduling/planning latency, and their
-    * arms operate on DISJOINT directories/state — running them
-    * sequentially leaves the cluster idle between every micro-job.
-    * Each arm's own audited sequence is untouched (ordering WITHIN an
-    * arm is preserved; only independent arms overlap). Spark handles
-    * concurrent actions from one session natively (FIFO backfill);
-    * none of the arms mutates session conf (checked — the wrappers in
-    * [[graft.util.Iterate]] are never called inside these paths).
-    * Failures propagate: any arm's exception rethrows at the await,
-    * exactly as loud as the sequential form. */
-  private def concurrently[A, B](a: () => A, b: () => B): (A, B) = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val fa = Future(a()); val fb = Future(b())
-      (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-    } finally { pool.shutdown(); () }
-  }
-
-  private def concurrently4[A, B, C, D](a: () => A, b: () => B, c: () => C,
-                                        d: () => D): (A, B, C, D) = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val fa = Future(a()); val fb = Future(b())
-      val fc = Future(c()); val fd = Future(d())
-      (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-        Await.result(fc, Duration.Inf), Await.result(fd, Duration.Inf))
-    } finally { pool.shutdown(); () }
+        Similarity.bruteForceTopK(e.filter(col("vec_id") < 50), e, k = 5)
+      }
+      (b, SessionMemo.value(s, "bruteTop5.rows", d)(b.count()))
+    }
   }
 
   /** Invariant-oracle audit shape shared by the approximate top-k
@@ -851,10 +794,11 @@ object PipelineSimilarityQueries {
         reports.toList.map(_.fired) == List(true) &&
           idx.exceptAll(want).unionByName(want.exceptAll(idx)).isEmpty
       }
-      val ((refreshEq, valveOk, compactOk, healOk), pqEq, resetD2,
-        (policyFired, cadenceFired)) =
-        concurrently4(() => cycleArm(), () => pqArm(), () => resetArm(),
-          () => concurrently(() => policyArm(), () => cadenceArm()))
+      val Seq((refreshEq: Boolean, valveOk: Boolean, compactOk: Boolean,
+        healOk: Boolean), pqEq: Boolean, resetD2: Double,
+        Seq(policyFired: Boolean, cadenceFired: Boolean)) =
+        Concurrent.all(s)(() => cycleArm(), () => pqArm(), () => resetArm(),
+          () => Concurrent.all(s)(() => policyArm(), () => cadenceArm()))
       import s.implicits._
       Seq((refreshEq, valveOk, compactOk, healOk, pqEq,
         shiftedD2 > healthy * 2, resetD2 < shiftedD2 / 2, policyFired,
@@ -926,13 +870,14 @@ object PipelineSimilarityQueries {
       // the on-disk delete (mutates $root/idx) and the in-memory
       // expected-survivors probe share no state — run them as two
       // concurrent jobs (guide §2.6; ivfTopKFromIndex materializes its
-      // own output eagerly, so the future's work completes inside it)
-      val (report, want) = concurrently(
-        () => IndexDelete.deleteIds(s, s"$root/idx", doomed, "vec_id"),
-        () => Similarity.ivfTopKFromIndex(s, qs,
-          IvfStream.assignOnIngest(e, centers)
-            .filter(!col("vec_id").isin(doomed: _*)),
-          centers, k = 5, nProbe = 3))
+      // own output eagerly, so the arm's work completes inside it)
+      val Seq(report: IndexDelete.DeleteReport, want: DataFrame @unchecked) =
+        Concurrent.all(s)(
+          () => IndexDelete.deleteIds(s, s"$root/idx", doomed, "vec_id"),
+          () => Similarity.ivfTopKFromIndex(s, qs,
+            IvfStream.assignOnIngest(e, centers)
+              .filter(!col("vec_id").isin(doomed: _*)),
+            centers, k = 5, nProbe = 3))
       val after = IvfStream.readIndex(s, s"$root/idx")
       val got = Similarity.ivfTopKFromIndex(s, qs, after, centers,
         k = 5, nProbe = 3).cache()
@@ -1131,9 +1076,10 @@ object PipelineSimilarityQueries {
         stablePin &&
           rows(vi.topKPinned(s, vi.pin(s), qs, pe, 5)) == wantNew
       }
-      val ((pinnedStable, currentExcludes, probeParity, genMonotone,
-        vacuumReclaims), refreshPinOk) =
-        concurrently(() => manifestArm(), () => pinArm())
+      val Seq((pinnedStable: Boolean, currentExcludes: Boolean,
+        probeParity: Boolean, genMonotone: Boolean, vacuumReclaims: Boolean),
+        refreshPinOk: Boolean) =
+        Concurrent.all(s)(() => manifestArm(), () => pinArm())
       import s.implicits._
       Seq((pinnedStable, currentExcludes, probeParity, genMonotone,
         vacuumReclaims, refreshPinOk))
@@ -1168,25 +1114,23 @@ object PipelineSimilarityQueries {
         .createTempDirectory("graft_q214").toString
       // data-sized shuffles for the whole cycle (the q207 note): every
       // frame here is bounded by the documents table; the k=64 band
-      // map keeps its explicit numbered repartition below
+      // map keeps its numbered spread below
       graft.util.Iterate.withSizedShuffle(s, docs.count()) {
       // the three setup reads (exact-fp index write, band-key index
       // write, the takedown target row) share no state — concurrent
       // jobs (guide §2.6), each internally unchanged. The k=64 minhash
       // signature is the per-doc hot map and the doc scan is one small
-      // parquet split — numbered repartition (never AQE-coalesced)
-      // spreads the measured 6 s serial stage across the cluster;
-      // index CONTENT is per-row md5-derived, so partitioning cannot
-      // change it
-      val (_, _, target, _) = concurrently4(
+      // parquet split — the spread (never AQE-coalesced) puts the
+      // measured 6 s serial stage across the cluster; index CONTENT is
+      // per-row md5-derived, so partitioning cannot change it
+      val Seq(_, _, target: Row) = Concurrent.all(s)(
         () => docs.select(md5(col("text")).as("fp"))
           .write.mode("overwrite").parquet(s"$root/fp/batch=0"),
-        () => NearDupStream.bandKeys(
-            docs.repartition(Tables.smallScanParallelism(s), col("doc_id")))
+        () => NearDupStream.bandKeys(Tables.spread(s, d, "documents", "doc_id")
+            .select("doc_id", "text"))
           .select("doc_id", "band", "bucket", "sig")
           .write.mode("overwrite").parquet(s"$root/band/batch=0"),
-        () => docs.orderBy("doc_id").limit(1).collect()(0),
-        () => ())
+        () => docs.orderBy("doc_id").limit(1).collect()(0))
       import s.implicits._
       val probe = Seq((10000000L, target.getString(1))).toDF("doc_id", "text")
       val probeFp = probe.select(col("doc_id"), md5(col("text")).as("fp"))
