@@ -164,16 +164,20 @@ object Bench {
     // power-iteration distributed route (broadcastEdgeMax=0) that
     // carries graphs past 1e7 edges. Paired timings mirror the
     // reference's backend comparison (compare_backends.py:296-311).
+    // Both are timed through the `noop` sink, which computes every
+    // column: a count() would let column pruning skip measures.
     val (centRouted, centDist) = {
       import graft.metrics.Centralities
+      def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+        df.write.format("noop").mode("overwrite").save()
       val g = Generators.barabasiAlbert(spark, 4039, 22, 42).cache()
       val cm = g.count()
       val (_, rt) = time {
-        Centralities.all(spark, g, 4039).count()
+        materialize(Centralities.all(spark, g, 4039))
       }
       System.err.println(f"[bench] centralities routed (CSR) n=4039 m=$cm ${rt}%.1fs")
       val (_, lt) = time {
-        Centralities.all(spark, g, 4039, broadcastEdgeMax = 0).count()
+        materialize(Centralities.all(spark, g, 4039, broadcastEdgeMax = 0))
       }
       g.unpersist()
       System.err.println(f"[bench] centralities DISTRIBUTED n=4039 m=$cm ${lt}%.1fs")

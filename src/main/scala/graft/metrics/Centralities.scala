@@ -7,15 +7,17 @@ import graft.model.GraphOps
 /** Centrality measures (reference L6: benchmark.py:73-107, all computed
   * via NetworkX on the driver). Spark disposition:
   *
-  *  - degree: one hash aggregate (A1).
-  *  - Below `broadcastEdgeMax` edges the graph fits a driver/broadcast
-  *    CSR and every measure runs as cheap in-memory passes parallelized
-  *    over sources (the standard distributed-Brandes layout: exact,
-  *    embarrassingly parallel; the reference itself caps betweenness at
-  *    n<5000, run_benchmarks.py:311-313).
-  *  - Above it, `all` routes to distributed implementations: GraphX
-  *    PageRank, DataFrame power iteration for eigenvector, and
-  *    level-synchronous multi-source BFS / Brandes for closeness,
+  *  - Below `broadcastEdgeMax` edges `all` collects ONE driver CSR and
+  *    returns a local frame of driver arrays: closeness, betweenness and
+  *    load from ONE job of per-source BFS ([[sweep]], the standard
+  *    distributed-Brandes layout: exact, embarrassingly parallel; the
+  *    reference caps betweenness at n<5000, run_benchmarks.py:311-313),
+  *    degree, PageRank and eigenvector as driver passes. The CSR's rows
+  *    are sorted and partials are summed in partition order, so every
+  *    value depends on the edge multiset alone; no shuffle, no join.
+  *  - Above it, `all` outer-joins distributed implementations: a degree
+  *    aggregate, DataFrame power iteration for PageRank and eigenvector,
+  *    and level-synchronous multi-source BFS / Brandes for closeness,
   *    betweenness and load (sources sampled above `sourcesCap`, the
   *    classic Eppstein–Wang / pivot-sampling estimate).
   */
@@ -29,10 +31,17 @@ object Centralities {
     GraphOps.degrees(edges)
       .select(col("id"), (col("degree") / (n - 1.0)).as("degree_centrality"))
 
-  /** Broadcast CSR of the undirected graph. ONE edge collect per
-    * pipeline — callers share it across measures. */
-  def buildBroadcastCsr(spark: SparkSession, edges: DataFrame, n: Long)
-      : org.apache.spark.broadcast.Broadcast[Csr] = {
+  /** [[degreeCentrality]] from the CSR offsets (a self-loop counts
+    * twice on both); isolated vertices read 0.0. */
+  private def degreeCsr(g: Csr): Array[Double] =
+    Array.tabulate(g.n) { v =>
+      val d = g.off(v + 1) - g.off(v)
+      if (d == 0) 0.0 else d / (g.n - 1.0)
+    }
+
+  /** CSR of the undirected graph from ONE edge collect; each row is
+    * sorted, so the CSR does not depend on the collect order. */
+  def collectCsr(edges: DataFrame, n: Long): Csr = {
     val es = edges.select(col("src").cast("int"), col("dst").cast("int"))
       .collect().map(r => (r.getInt(0), r.getInt(1)))
     val nn = n.toInt
@@ -45,7 +54,9 @@ object Centralities {
     val cur = off.clone()
     es.foreach { case (s, d) =>
       nbr(cur(s)) = d; cur(s) += 1; nbr(cur(d)) = s; cur(d) += 1 }
-    spark.sparkContext.broadcast(Csr(nn, off, nbr))
+    i = 0
+    while (i < nn) { java.util.Arrays.sort(nbr, off(i), off(i + 1)); i += 1 }
+    Csr(nn, off, nbr)
   }
 
   /** PageRank via GraphX — the distributed path for graphs past
@@ -67,11 +78,9 @@ object Centralities {
     * x' = (1-α)/n + α(Σ_{u∈N(v)} x_u/deg_u + dangling/n), tol-converged.
     * GraphX's 20-iteration Pregel costs ~40 driver-blocking jobs — on a
     * sub-broadcast graph this is a few ms of arithmetic instead. */
-  def pageRankCsr(spark: SparkSession,
-                  csr: org.apache.spark.broadcast.Broadcast[Csr],
-                  alpha: Double = 0.85, tol: Double = 1e-6,
-                  maxIter: Int = 100): DataFrame = {
-    val Csr(n, off, nbr) = csr.value
+  def pageRankCsr(g: Csr, alpha: Double = 0.85, tol: Double = 1e-6,
+                  maxIter: Int = 100): Array[Double] = {
+    val Csr(n, off, nbr) = g
     var x = Array.fill(n)(1.0 / n)
     var it = 0
     var done = false
@@ -103,10 +112,7 @@ object Centralities {
       if (err < n * tol) done = true
       it += 1
     }
-    import spark.implicits._
-    spark.sparkContext.parallelize(
-      x.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq)
-      .toDF("id", "pagerank")
+    x
   }
 
   /** nx.pagerank semantics, DISTRIBUTED: the same damped power
@@ -174,6 +180,71 @@ object Centralities {
     }
   }
 
+  /** (src, nbrs, deg) neighbor arrays of the symmetrized graph for
+    * [[personalizedPageRank]], PERSISTED; `m2` is the arc count.
+    *
+    * HUB-SEGMENTED (r15 verdict #5, guide §2.5 skew / §5 memory): an
+    * unbounded per-vertex array makes a 100 M-degree hub ONE multi-GB
+    * aggregation buffer and row, so no array holds more than `maxChunk`
+    * neighbors (`spark.graft.adjMaxChunk`, default 2²² ≈ 32 MB of longs
+    * per buffer — far above any bench graph, so locally every vertex
+    * keeps exactly one chunk and the plan is unchanged). A hub's arcs
+    * split by their rank over the hub's sorted arcs into ceil(deg/cap)
+    * contiguous chunks (the randomWalks layout: a hash of dst would put
+    * a multigraph hub's duplicate arcs into one chunk), each row
+    * carrying the FULL degree for the contribution division; the per-dst
+    * sum is chunking-invariant (same multiset of v/deg terms). The route
+    * is decided by a degree probe that runs ONLY when the free upper
+    * bound (total arcs) exceeds the cap — a graph whose whole arc count
+    * fits one chunk cannot contain a hub that doesn't.
+    *
+    * The build runs under a raised ObjectHashAggregate fallback
+    * threshold: the default (128 distinct keys) silently degrades every
+    * >128-group-per-partition collect_list to a SORT-based aggregate —
+    * the exact window sort this layout removes (measured: 21 s CPU map
+    * side at the default, hash path below it). The threshold stays
+    * finite so the spill path survives (Iterate.withObjectAggHash doc). */
+  private[graft] def adjacencyChunks(spark: SparkSession, edges: DataFrame,
+                                     m2: Long, maxChunk: Int): DataFrame =
+    graft.util.Iterate.withObjectAggHash(spark) {
+      val arcs = symmetrize(edges)
+      // degree probe BEFORE the array build: the hazard is the
+      // aggregation buffer itself. One narrow two-stage aggregate
+      // (coalesce: null on an empty graph — r15 ADVICE).
+      lazy val degF = arcs.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val maxDeg =
+        if (m2 <= maxChunk) m2
+        else degF.agg(coalesce(max(col("deg")), lit(0L))).head.getLong(0)
+      val a = (if (maxDeg <= maxChunk)
+          // no hub exceeds the cap: single-chunk arrays, degree free as
+          // size(nbrs) — no join, no extra shuffle (the measured fast
+          // path; every bench graph takes it)
+          arcs.groupBy(col("src"))
+            .agg(collect_list(col("dst")).as("nbrs"))
+            .select(col("src"), col("nbrs"),
+              size(col("nbrs")).cast("long").as("deg"))
+        else {
+          // hub route: only the hub rows pay the rank sort; integer
+          // `div` (SQL `/` on longs is double division)
+          import org.apache.spark.sql.expressions.Window
+          val withDeg = arcs.join(degF, "src")
+          val hubs = withDeg.filter(col("deg") > maxChunk)
+            .withColumn("_rn", row_number().over(
+              Window.partitionBy("src").orderBy("dst")).cast("long") - 1)
+            .select(col("src"), col("dst"), col("deg"),
+              expr(s"_rn div $maxChunk").as("_chunk"))
+          withDeg.filter(col("deg") <= maxChunk).withColumn("_chunk", lit(0L))
+            .unionByName(hubs)
+            .groupBy(col("src"), col("_chunk"))
+            .agg(collect_list(col("dst")).as("nbrs"), first(col("deg")).as("deg"))
+            .select(col("src"), col("nbrs"), col("deg"))
+        })
+        .sortWithinPartitions("src")
+        .persist()
+      a.count()
+      a
+    }
+
   /** Personalized PageRank (fixed-iteration power form): restart mass
     * concentrated on `seeds` instead of uniform — the "importance
     * relative to THESE nodes" ranking behind related-item and
@@ -207,20 +278,6 @@ object Centralities {
     // sources' arcs — per-round work scales with the rank support's
     // incident arcs, not the graph (guide §2.3/§2.4).
     //
-    // HUB-SEGMENTED arrays (r15 verdict #5, guide §2.5 skew / §5
-    // memory): an unbounded per-vertex array makes a 100 M-degree hub
-    // ONE multi-GB aggregation buffer and row. Arrays are therefore
-    // capped at `spark.graft.adjMaxChunk` neighbors (default 2²² ≈
-    // 32 MB of longs per buffer worst-case — bounded, spillable-scale;
-    // far above any bench graph, so locally every vertex keeps exactly
-    // one chunk and the plan is unchanged): a hub's arcs hash-split
-    // into ceil(deg/cap) chunk rows, each carrying the FULL degree for
-    // the contribution division, and the per-dst sum is
-    // chunking-invariant (same multiset of v/deg terms). The route is
-    // decided by a degree probe that runs ONLY when the free upper
-    // bound (total arcs) exceeds the cap — a graph whose whole arc
-    // count fits one chunk cannot contain a hub that doesn't.
-    //
     // 2·m is known without a pass over the arrays (every edge is two
     // arcs), so the BUILD runs data-sized too — the session-wide
     // shuffle width on an n-row frame was pure per-task overhead.
@@ -233,51 +290,7 @@ object Centralities {
     var x = s0.select(col("id"), col("s").as("v"))
     var handle: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
     graft.util.Iterate.withSizedShuffle(spark, m2) {
-      // the build runs under a raised ObjectHashAggregate fallback
-      // threshold: the default (128 distinct keys) silently degrades
-      // every >128-group-per-partition collect_list to a SORT-based
-      // aggregate — the exact window sort this layout removes
-      // (measured: 21 s CPU map side at the default, hash path below
-      // it). The threshold stays finite so the spill path survives
-      // (Iterate.withObjectAggHash doc).
-      val adjArr = graft.util.Iterate.withObjectAggHash(spark) {
-        val arcs = symmetrize(edges)
-        // degree probe BEFORE the array build: the hazard is the
-        // aggregation buffer itself, so the route must be decided
-        // before any array materializes. m2 (total arcs) is a free
-        // upper bound on every degree — the probe job only runs past
-        // it. One narrow two-stage aggregate (coalesce: null on an
-        // empty graph — r15 ADVICE).
-        lazy val degF = arcs.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        val maxDeg =
-          if (m2 <= maxChunk) m2
-          else degF.agg(coalesce(max(col("deg")), lit(0L))).head.getLong(0)
-        val a = (if (maxDeg <= maxChunk)
-            // no hub exceeds the cap: single-chunk arrays, degree free
-            // as size(nbrs) — no join, no extra shuffle (the measured
-            // fast path; every bench graph takes it)
-            arcs.groupBy(col("src"))
-              .agg(collect_list(col("dst")).as("nbrs"))
-              .select(col("src"), col("nbrs"),
-                size(col("nbrs")).cast("long").as("deg"))
-          else
-            // hub route: hash-split each vertex's arcs into
-            // ceil(deg/cap) chunk rows (integer `div` — SQL `/` on
-            // longs is double division), each carrying the full degree
-            // for the contribution division; the deg join and the
-            // chunked aggregate ride the same src clustering
-            arcs.join(degF, "src")
-              .withColumn("_chunk", pmod(xxhash64(col("dst")),
-                expr(s"(deg + ${maxChunk - 1}) div $maxChunk")))
-              .groupBy(col("src"), col("_chunk"))
-              .agg(collect_list(col("dst")).as("nbrs"),
-                first(col("deg")).as("deg"))
-              .select(col("src"), col("nbrs"), col("deg")))
-          .sortWithinPartitions("src")
-          .persist()
-        a.count()
-        a
-      }
+      val adjArr = adjacencyChunks(spark, edges, m2, maxChunk)
       // TELEPORT FOLDED INTO THE CONTRIB AGGREGATE (r15 verdict #4):
       // the restart mass enters as ≤|seeds| extra pre-aggregate rows,
       // so each round is ONE join + ONE shuffle — the old shape paid a
@@ -313,36 +326,26 @@ object Centralities {
     * falls back to degree centrality on failure (benchmark.py:82-93). */
   def eigenvectorCentrality(spark: SparkSession, edges: DataFrame, n: Long,
                             iters: Int = 50): DataFrame =
-    eigenvectorCsr(spark, edges, buildBroadcastCsr(spark, edges, n), n, iters)
+    column(spark, "eigenvector", eigenvectorCsr(collectCsr(edges, n), iters))
 
-  def eigenvectorCsr(spark: SparkSession, edges: DataFrame,
-                     csr: org.apache.spark.broadcast.Broadcast[Csr],
-                     n: Long, iters: Int = 50): DataFrame = {
-    try {
-      val Csr(nn, off, nbr) = csr.value
-      var x = Array.fill(nn)(1.0 / math.sqrt(nn.toDouble))
-      var it = 0
-      while (it < iters) {
-        val y = new Array[Double](nn)
-        var v = 0
-        while (v < nn) {
-          var j = off(v)
-          while (j < off(v + 1)) { y(v) += x(nbr(j)); j += 1 }
-          v += 1
-        }
-        val nrm = math.sqrt(y.map(d => d * d).sum)
-        if (nrm == 0.0) throw new ArithmeticException("zero vector")
-        x = y.map(_ / nrm)
-        it += 1
+  def eigenvectorCsr(g: Csr, iters: Int = 50): Array[Double] = {
+    val Csr(nn, off, nbr) = g
+    var x = Array.fill(nn)(1.0 / math.sqrt(nn.toDouble))
+    var it = 0
+    while (it < iters) {
+      val y = new Array[Double](nn)
+      var v = 0
+      while (v < nn) {
+        var j = off(v)
+        while (j < off(v + 1)) { y(v) += x(nbr(j)); j += 1 }
+        v += 1
       }
-      import spark.implicits._
-      spark.sparkContext.parallelize(
-        x.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq)
-        .toDF("id", "eigenvector")
-    } catch {
-      case _: Exception =>
-        degreeCentrality(edges, n).withColumnRenamed("degree_centrality", "eigenvector")
+      val nrm = math.sqrt(y.map(d => d * d).sum)
+      if (nrm == 0.0) return degreeCsr(g)
+      x = y.map(_ / nrm)
+      it += 1
     }
+    x
   }
 
   /** Distributed eigenvector centrality: DataFrame power iteration
@@ -403,118 +406,110 @@ object Centralities {
     } finally sym.unpersist()
   }
 
-  /** Closeness centrality, Wasserman–Faust improved form as NetworkX
-    * default: C(v) = ((r-1)/(n-1)) * ((r-1)/sum_d) with r = reachable
-    * count. Exact BFS per source, sources distributed. */
-  def closeness(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
-    closenessCsr(spark, buildBroadcastCsr(spark, edges, n))
-
-  def closenessCsr(spark: SparkSession,
-                   csr: org.apache.spark.broadcast.Broadcast[Csr]): DataFrame = {
-    val nn = csr.value.n
-    import spark.implicits._
-    spark.sparkContext.parallelize(0 until nn, math.min(64, math.max(1, nn / 16)))
-      .map { s =>
-        val Csr(_, off, nbr) = csr.value
-        val dist = Array.fill(nn)(-1)
-        var frontier = List(s); dist(s) = 0
-        var sumD = 0L; var reach = 1
-        while (frontier.nonEmpty) {
-          var next = List.empty[Int]
-          frontier.foreach { v =>
+  /** Closeness, betweenness and load of every vertex from ONE BFS per
+    * source, in ONE job over the sources:
+    *  - closeness: Wasserman–Faust improved form as NetworkX default,
+    *    ((r-1)/(n-1)) * ((r-1)/sum_d) with r = reachable count;
+    *  - betweenness: Brandes, δ_v += σ_v/σ_w · (1 + δ_w);
+    *  - load (nx.load_centrality, Newman 2001): the unit arriving at w is
+    *    split EQUALLY among w's np(w) predecessors, (1 + δ_w)/np(w). nx's
+    *    `if x == source: break` quirk is unreachable: a distance-1 node's
+    *    only predecessor IS the source, which both forms exclude.
+    * A partition reuses O(n) scratch arrays across its sources and finds
+    * predecessors by rescanning the CSR (`dist(v) == dist(w) - 1`). It
+    * returns its sources' closeness and dense dependency partial sums,
+    * which the driver adds in partition-index order, then divides by
+    * (n-1)(n-2) (nx's 2/((n-1)(n-2)) per unordered pair; a division, not
+    * a reciprocal multiply, for bit-parity with SQL oracles). */
+  private def sweep(spark: SparkSession, g: Csr)
+      : (Array[Double], Array[Double], Array[Double]) = {
+    val n = g.n
+    val bc = spark.sparkContext.broadcast(g)
+    val parts = try spark.sparkContext
+      .parallelize(0 until n, math.min(64, math.max(1, n / 16)))
+      .mapPartitions { sources =>
+        val Csr(_, off, nbr) = bc.value
+        val ids = sources.toArray
+        val cl = new Array[Double](ids.length)
+        val bet = new Array[Double](n)
+        val ld = new Array[Double](n)
+        val dist = Array.fill(n)(-1)
+        val sigma = new Array[Double](n)
+        val np = new Array[Int](n)
+        val db = new Array[Double](n)
+        val dl = new Array[Double](n)
+        val order = new Array[Int](n) // BFS queue; read backwards, the stack
+        var k = 0
+        while (k < ids.length) {
+          val s = ids(k)
+          dist(s) = 0; sigma(s) = 1.0; order(0) = s
+          var head = 0; var tail = 1; var sumD = 0L
+          while (head < tail) {
+            val v = order(head); head += 1
             var j = off(v)
             while (j < off(v + 1)) {
-              val u = nbr(j)
-              if (dist(u) < 0) { dist(u) = dist(v) + 1; sumD += dist(u)
-                reach += 1; next = u :: next }
+              val w = nbr(j)
+              if (dist(w) < 0) {
+                dist(w) = dist(v) + 1; sumD += dist(w); order(tail) = w; tail += 1 }
+              if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); np(w) += 1 }
               j += 1
             }
           }
-          frontier = next
-        }
-        val c = if (sumD > 0)
-          ((reach - 1).toDouble / (nn - 1)) * ((reach - 1).toDouble / sumD)
-        else 0.0
-        (s.toLong, c)
-      }.toDF("id", "closeness")
-  }
-
-  /** Brandes (betweenness) / Newman equal-split (load) accumulation —
-    * one scaffold, parallel over sources with the CSR broadcast.
-    *
-    * load (nx.load_centrality, Newman 2001): the unit arriving at w is
-    * split EQUALLY among w's predecessors, regardless of each pred's
-    * shortest-path count — vs Brandes' σ_v/σ_w proportional split.
-    * (nx's `if x == source: break` quirk is unreachable divergence:
-    * a distance-1 node's only predecessor IS the source, so the skip
-    * equals excluding flow into the source, which both forms do.) */
-  private def brandesCsr(spark: SparkSession,
-                         csr: org.apache.spark.broadcast.Broadcast[Csr],
-                         loadMode: Boolean, outCol: String): DataFrame = {
-    val nn = csr.value.n
-    import spark.implicits._
-    val partial = spark.sparkContext
-      .parallelize(0 until nn, math.min(64, math.max(1, nn / 16)))
-      .flatMap { s =>
-        val Csr(_, off, nbr) = csr.value
-        val stack = new scala.collection.mutable.ArrayBuffer[Int](nn)
-        val preds = Array.fill(nn)(List.empty[Int])
-        val sigma = new Array[Double](nn); sigma(s) = 1.0
-        val dist = Array.fill(nn)(-1); dist(s) = 0
-        val queue = scala.collection.mutable.Queue(s)
-        while (queue.nonEmpty) {
-          val v = queue.dequeue()
-          stack += v
-          var j = off(v)
-          while (j < off(v + 1)) {
-            val w = nbr(j)
-            if (dist(w) < 0) { dist(w) = dist(v) + 1; queue.enqueue(w) }
-            if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); preds(w) ::= v }
-            j += 1
-          }
-        }
-        val delta = new Array[Double](nn)
-        stack.reverseIterator.foreach { w =>
-          if (preds(w).nonEmpty) {
-            if (loadMode) {
-              val share = (1.0 + delta(w)) / preds(w).size
-              preds(w).foreach(v => delta(v) += share)
-            } else {
-              preds(w).foreach { v =>
-                delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
-              }
+          cl(k) = if (sumD > 0)
+            ((tail - 1).toDouble / (n - 1)) * ((tail - 1).toDouble / sumD)
+          else 0.0
+          var i = tail - 1
+          while (i > 0) {
+            val w = order(i)
+            val bw = 1.0 + db(w)
+            val lw = (1.0 + dl(w)) / np(w)
+            var j = off(w)
+            while (j < off(w + 1)) {
+              val v = nbr(j)
+              if (dist(v) == dist(w) - 1) { db(v) += sigma(v) / sigma(w) * bw; dl(v) += lw }
+              j += 1
             }
+            bet(w) += db(w); ld(w) += dl(w)
+            i -= 1
           }
+          i = 0
+          while (i < tail) {
+            val v = order(i)
+            dist(v) = -1; sigma(v) = 0.0; np(v) = 0; db(v) = 0.0; dl(v) = 0.0
+            i += 1
+          }
+          k += 1
         }
-        (0 until nn).iterator.filter(v => v != s && delta(v) != 0.0)
-          .map(v => (v.toLong, delta(v)))
-      }
-      .toDF("id", "d")
-    // nx normalized form 2/((n-1)(n-2)) per unordered pair == ordered
-    // delta sum / ((n-1)(n-2)); expressed as a division (not multiply
-    // by reciprocal) for bit-parity with SQL oracles.
-    val denom = if (nn > 2) (nn - 1.0) * (nn - 2.0) else 1.0
-    val all = spark.range(nn.toLong).toDF("id")
-    all.join(partial.groupBy("id").agg(sum("d").as("d")), Seq("id"), "left")
-      .select(col("id"), (coalesce(col("d"), lit(0.0)) / denom).as(outCol))
+        Iterator.single((ids, cl, bet, ld))
+      }.collect()
+    finally bc.destroy()
+    val closeness = new Array[Double](n)
+    val bet = new Array[Double](n)
+    val ld = new Array[Double](n)
+    parts.foreach { case (ids, c, b, l) =>
+      var i = 0
+      while (i < ids.length) { closeness(ids(i)) = c(i); i += 1 }
+      i = 0
+      while (i < n) { bet(i) += b(i); ld(i) += l(i); i += 1 }
+    }
+    val denom = if (n > 2) (n - 1.0) * (n - 2.0) else 1.0
+    (closeness, bet.map(_ / denom), ld.map(_ / denom))
   }
 
-  /** Betweenness centrality — exact Brandes, parallel over sources. */
-  def betweenness(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
-    brandesCsr(spark, buildBroadcastCsr(spark, edges, n), loadMode = false,
-      "betweenness")
+  private def column(spark: SparkSession, name: String, xs: Array[Double]) =
+    spark.createDataFrame(xs.toSeq.zipWithIndex.map(p => (p._2.toLong, p._1))).toDF("id", name)
 
-  def betweennessCsr(spark: SparkSession,
-                     csr: org.apache.spark.broadcast.Broadcast[Csr]): DataFrame =
-    brandesCsr(spark, csr, loadMode = false, "betweenness")
+  /** Closeness centrality ([[sweep]]), exact. */
+  def closeness(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
+    column(spark, "closeness", sweep(spark, collectCsr(edges, n))._1)
+
+  /** Betweenness centrality — exact Brandes ([[sweep]]). */
+  def betweenness(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
+    column(spark, "betweenness", sweep(spark, collectCsr(edges, n))._2)
 
   /** Load centrality (nx.load_centrality; benchmark.py:105-107). */
   def load(spark: SparkSession, edges: DataFrame, n: Long): DataFrame =
-    brandesCsr(spark, buildBroadcastCsr(spark, edges, n), loadMode = true, "load")
-
-  def loadCsr(spark: SparkSession,
-              csr: org.apache.spark.broadcast.Broadcast[Csr]): DataFrame =
-    brandesCsr(spark, csr, loadMode = true, "load")
+    column(spark, "load", sweep(spark, collectCsr(edges, n))._3)
 
   // ------------------------------------------------------------------
   // Distributed (past-broadcast-scale) closeness / betweenness / load:
@@ -758,9 +753,7 @@ object Centralities {
   /** Fused distributed closeness + betweenness + load: ONE forward
     * multi-source BFS and ONE backward accumulation computing the
     * Brandes (σ-proportional) and Newman (equal-split) deltas as two
-    * columns of the same per-level frame — `all()`'s distributed branch
-    * previously ran the BFS three times (closeness, betweenness, load),
-    * tripling the dominant cost of the tier. Semantics identical to the
+    * columns of the same per-level frame. Semantics identical to the
     * standalone [[closenessDistributed]]/[[brandesDistributed]]
     * (asserted by the threshold-0 route-parity test). Returned frames
     * are PERSISTED; callers may unpersist. */
@@ -858,34 +851,38 @@ object Centralities {
       cap.toLong)
   }
 
-  /** All reference centralities (benchmark.py:73-107) in one frame —
-    * now including load. `broadcastEdgeMax` guards the CSR collect:
-    * small graphs share ONE broadcast CSR across pagerank, eigenvector,
-    * closeness, betweenness and load; past it every measure routes to
-    * its distributed implementation. */
+  /** All reference centralities (benchmark.py:73-107) in one frame
+    * (id, degree_centrality, pagerank, eigenvector, closeness,
+    * betweenness, load), one row per id in [0, n). `broadcastEdgeMax`
+    * guards the CSR collect: at or below it every measure is a driver
+    * array over ONE collected CSR (closeness, betweenness and load from
+    * the one [[sweep]] job) and the result is a local frame — no join,
+    * no shuffle; past it every measure routes to its distributed
+    * implementation and the frames are outer-joined on id. */
   def all(spark: SparkSession, edges: DataFrame, n: Long,
           broadcastEdgeMax: Long = 10000000L): DataFrame = {
-    val m = edges.count()
-    val parts =
-      if (m <= broadcastEdgeMax) {
-        val csr = buildBroadcastCsr(spark, edges, n)
-        Seq(pageRankCsr(spark, csr),
-          eigenvectorCsr(spark, edges, csr, n),
-          closenessCsr(spark, csr),
-          betweennessCsr(spark, csr),
-          loadCsr(spark, csr))
-      } else {
-        // pageRankDistributed (not GraphX static) so pagerank semantics
-        // are route-invariant across the broadcastEdgeMax threshold —
-        // same nx convergence rule as pageRankCsr on both sides; the
-        // three BFS measures share ONE forward BFS + backward pass.
-        val (cl, bt, ld) = bfsMeasuresDistributed(spark, edges, n)
-        Seq(pageRankDistributed(spark, edges, n),
-          eigenvectorDistributed(spark, edges, n),
-          cl, bt, ld)
-      }
-    parts.foldLeft(degreeCentrality(edges, n)) {
-      (acc, df) => acc.join(df, Seq("id"), "outer")
-    }.na.fill(0.0)
+    // an empty projection keeps the scan pruned, and the RDD count adds
+    // no exchange (a Dataset count shuffles its partials to one task)
+    val m = edges.select().rdd.count()
+    if (m <= broadcastEdgeMax) {
+      val g = collectCsr(edges, n)
+      val (cl, bt, ld) = sweep(spark, g)
+      val (deg, pr, ev) = (degreeCsr(g), pageRankCsr(g), eigenvectorCsr(g))
+      import spark.implicits._
+      (0 until g.n).map(i => (i.toLong, deg(i), pr(i), ev(i), cl(i), bt(i), ld(i)))
+        .toDF("id", "degree_centrality", "pagerank", "eigenvector",
+          "closeness", "betweenness", "load")
+    } else {
+      // pageRankDistributed (not GraphX static) so pagerank semantics
+      // are route-invariant across the broadcastEdgeMax threshold —
+      // same nx convergence rule as pageRankCsr on both sides; the
+      // three BFS measures share ONE forward BFS + backward pass.
+      val (cl, bt, ld) = bfsMeasuresDistributed(spark, edges, n)
+      Seq(pageRankDistributed(spark, edges, n),
+        eigenvectorDistributed(spark, edges, n), cl, bt, ld)
+        .foldLeft(degreeCentrality(edges, n)) {
+          (acc, df) => acc.join(df, Seq("id"), "outer")
+        }.na.fill(0.0)
+    }
   }
 }

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * shuffle beyond the aggregate. Scoring is a codegen'd narrow map.
   *
   * Everything is deterministic for a fixed input partitioning (fixed
-  * zero init, fixed lr, dataframe aggregates), and the training
+  * zero init, fixed lr, dataframe aggregates; the driver route trains
+  * on its rows in a canonical order), and the training
   * CONTRACT — loss strictly improved over the zero model, scores are
   * valid probabilities, AUC above a floor on a learnable label — is
   * what q178 pins through the DuckDB oracle (the weights themselves
@@ -45,6 +46,11 @@ object QualityClassifier {
       (col(c) - col(s"_m_$c")) /
         when(col(s"_s_$c") > 1e-12, col(s"_s_$c")).otherwise(lit(1.0))): _*)
     std.select(col("doc_id"), feats.as("features"), col("_label").as("label"))
+  }
+
+  private val rowOrder: Ordering[(Seq[Double], Double)] = {
+    val d = Ordering.Double.TotalOrdering
+    Ordering.Tuple2(Ordering.Implicits.seqOrdering[Seq, Double](d), d)
   }
 
   /** Full-batch GD on the logistic loss. Returns (weights with bias
@@ -82,12 +88,15 @@ object QualityClassifier {
       val probe = ds.limit(math.min(driverMaxRows, Int.MaxValue - 2L).toInt + 1)
         .collect()
       if (probe.length <= driverMaxRows) {
-        val n = probe.length
+        // a canonical row order: the loop's float sums then do not
+        // depend on how the rows were partitioned
+        val rows = probe.sorted(rowOrder)
+        val n = rows.length
         require(n > 0, "train: empty featurized frame")
         for (_ <- 0 to iters) {
           var lossSum = 0.0
           val gSum = new Array[Double](d + 1)
-          probe.foreach { case (f, y) =>
+          rows.foreach { case (f, y) =>
             var dot = 0.0
             var j = 0
             while (j < d) { dot += w(j) * f(j); j += 1 }

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.gen.Generators
+import graft.model.GraphOps
 import graft.metrics.{Centralities, Correlation}
 
 /** Centrality and correlation invariants against closed-form values on
@@ -181,17 +185,25 @@ class MetricsSpec extends SparkSpec {
     assert(pA == Correlation.spearmanPValue(rhoA, 9L))
   }
 
+  private def byId(df: DataFrame): Map[Long, Row] =
+    df.collect().map(r => r.getLong(0) -> r).toMap
+
+  /** The broadcast route of `all` (one source sweep) against the
+    * distributed route (broadcastEdgeMax 0) on the three BFS measures;
+    * every id in [0, n) has a row on both. */
+  private def assertBfsRouteParity(edges: DataFrame, n: Int): Unit = {
+    val dist = byId(Centralities.all(spark, edges, n, broadcastEdgeMax = 0))
+    val csr = byId(Centralities.all(spark, edges, n))
+    assert(csr.keySet == (0L until n).toSet && dist.keySet == csr.keySet)
+    for (id <- 0L until n; c <- Seq("closeness", "betweenness", "load"))
+      assert(math.abs(dist(id).getAs[Double](c) - csr(id).getAs[Double](c)) < 1e-9,
+        s"$c($id) of n=$n: ${dist(id).getAs[Double](c)} vs ${csr(id).getAs[Double](c)}")
+  }
+
   test("distributed BFS on a high-diameter path graph (visited compaction fires)") {
     // P20: diameter 19 → the every-8-levels visited compaction runs
     // twice; closed forms from the exact CSR route
-    val p20 = (0L until 19L).map(i => (i, i + 1)).toDF("src", "dst")
-    val dist = Centralities.all(spark, p20, 20, broadcastEdgeMax = 0)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    val csr = Centralities.all(spark, p20, 20)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    for (id <- 0L until 20L; c <- Seq("closeness", "betweenness", "load"))
-      assert(math.abs(dist(id).getAs[Double](c) - csr(id).getAs[Double](c)) < 1e-9,
-        s"$c($id): ${dist(id).getAs[Double](c)} vs ${csr(id).getAs[Double](c)}")
+    assertBfsRouteParity((0L until 19L).map(i => (i, i + 1)).toDF("src", "dst"), 20)
   }
 
   test("spearmanMany: range-partitioned rank route matches the window route") {
@@ -301,17 +313,19 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("distributed route (threshold 0) matches driver-CSR closed forms") {
+    // closeness, betweenness and load (exact: every vertex a source) on
+    // the star, the load fixture, a disconnected graph with a self-loop
+    // (on 4) and an isolated vertex (6), and a BA graph
+    assertBfsRouteParity(star(8), 8)
+    assertBfsRouteParity(loadFixture, 6)
+    assertBfsRouteParity(Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 4L),
+      (4L, 5L)).toDF("src", "dst"), 7)
+    assertBfsRouteParity(Generators.barabasiAlbert(spark, 60, 2, 7), 60)
     // forces every measure through the distributed implementations
-    val all = Centralities.all(spark, loadFixture, 6, broadcastEdgeMax = 0)
-      .collect().map(r => r.getLong(0) -> r).toMap
+    val all = byId(Centralities.all(spark, loadFixture, 6, broadcastEdgeMax = 0))
     def colOf(id: Long, c: String) =
       all(id).getAs[Double](c)
-    // closed forms from the driver-CSR path (exact: all 6 sources used)
-    val csrAll = Centralities.all(spark, loadFixture, 6).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    for (id <- 0L until 6L; c <- Seq("closeness", "betweenness", "load"))
-      assert(math.abs(colOf(id, c) - csrAll(id).getAs[Double](c)) < 1e-9,
-        s"$c($id): ${colOf(id, c)} vs ${csrAll(id).getAs[Double](c)}")
+    val csrAll = byId(Centralities.all(spark, loadFixture, 6))
     // eigenvector: same direction up to tolerance (same power iteration,
     // distributed matvec)
     for (id <- 0L until 6L)
@@ -378,6 +392,94 @@ class MetricsSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(chunked == base, s"chunked=$chunked base=$base")
     } finally spark.conf.unset(key)
+  }
+
+  test("personalizedPageRank: a multigraph hub's duplicate arcs respect the chunk cap") {
+    // hub 0 carries (0,1)×4 and (0,2)×3: a chunk picked by a hash of dst
+    // would put all four (0,1) arcs into one chunk of a cap-3 split
+    val hub = (Seq.fill(4)((0L, 1L)) ++ Seq.fill(3)((0L, 2L)) ++
+      Seq((0L, 3L), (3L, 4L))).toDF("src", "dst")
+    val arrays = Centralities.adjacencyChunks(spark, hub, 2L * hub.count(), 3)
+    val rows = arrays.collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
+    arrays.unpersist()
+    assert(rows.forall(_._2.size <= 3), rows.mkString(", "))
+    assert(rows.count(_._1 == 0L) == 3 && rows.filter(_._1 == 0L).forall(_._3 == 8L))
+    assert(rows.filter(_._1 == 0L).flatMap(_._2).sorted.toSeq ==
+      (Seq.fill(4)(1L) ++ Seq.fill(3)(2L) :+ 3L))
+    val base = Centralities.personalizedPageRank(spark, hub, Seq(0L, 4L), iters = 3)
+    val baseM = base.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    base.unpersist()
+    val key = "spark.graft.adjMaxChunk"
+    spark.conf.set(key, "3")
+    try {
+      val chunked = Centralities.personalizedPageRank(spark, hub, Seq(0L, 4L), iters = 3)
+      val m = chunked.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      chunked.unpersist()
+      assert(m.keySet == baseM.keySet)
+      m.foreach { case (k, v) => assert(math.abs(v - baseM(k)) < 1e-12, s"$k: $v vs ${baseM(k)}") }
+    } finally spark.conf.unset(key)
+  }
+
+  test("centralities.all: bit-identical across shuffle widths and edge partitionings") {
+    // the broadcast route's doubles are a function of the edge multiset
+    // alone: neither the collect order of the edges nor the session's
+    // shuffle width may move a bit
+    val g = GraphOps.undirect(Generators.barabasiAlbert(spark, 120, 3, 11)).persist()
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def run(edgeParts: Int, width: Int): Seq[Seq[Long]] = {
+      spark.conf.set(key, width.toString)
+      try Centralities.all(spark, g.repartition(edgeParts), 120).collect()
+        .sortBy(_.getLong(0)).toSeq
+        .map(r => r.getLong(0) +: (1 until r.length).map(i =>
+          java.lang.Double.doubleToLongBits(r.getDouble(i))))
+      finally spark.conf.set(key, prev)
+    }
+    val (a, b) = (run(1, 1), run(5, 7))
+    g.unpersist()
+    assert(a.length == 120 && a == b)
+  }
+
+  test("centralities.all broadcast route: at most 4 jobs and no shuffle") {
+    // the edge count, the CSR collect, the source sweep and at most one
+    // materialization: a per-measure job or a shuffle fold coming back
+    // fails here
+    val g = Generators.barabasiAlbert(spark, 200, 3, 5).persist()
+    g.count()
+    val sc = spark.sparkContext
+    val (group, fence) = ("centralities-all", "centralities-all-fence")
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val fenceJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(e.jobId); e.stageIds.foreach(stages.add(_))
+          case Some(`fence`) => fenceJob.set(e.jobId)
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
+            e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceJob.get) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "broadcast-route centralities")
+      val rows = try Centralities.all(spark, g, 200).collect() finally sc.clearJobGroup()
+      assert(rows.length == 200)
+      // listener events arrive in order: once a later job has ended,
+      // every event of the group's jobs has been seen
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.size <= 4, s"${jobs.size} jobs")
+      assert(shuffleBytes.get == 0L, s"${shuffleBytes.get} shuffle bytes")
+    } finally { sc.removeSparkListener(listener); g.unpersist() }
   }
 
   test("personalizedPageRank: multi-seed mass splits and stays <= 1") {

@@ -1408,6 +1408,20 @@ class PipelineSpec extends SparkSpec {
       assert(math.abs(a - b) < 1e-9, s"loss route divergence: $a vs $b") }
   }
 
+  test("classifier train: driver-route weights are bit-identical under any row order") {
+    import spark.implicits._
+    import graft.pipeline.QualityClassifier
+    val docs = (0 until 80).map(i => (i.toLong, (0 until 5 + i % 17)
+      .map(j => s"w${(i * j) % 23}" + "x" * (j % 4)).mkString(" ")))
+      .toDF("doc_id", "text")
+    val feat = QualityClassifier.featurize(docs, col("doc_id") % 3 === 0).persist()
+    val (w1, l1) = QualityClassifier.train(feat.coalesce(1), iters = 10)
+    val (w7, l7) = QualityClassifier.train(feat.repartition(7), iters = 10)
+    feat.unpersist()
+    assert(w1.sameElements(w7), s"${w1.mkString(",")} vs ${w7.mkString(",")}")
+    assert(l1.sameElements(l7))
+  }
+
   test("auc: bucket-offset ranks ≡ brute Mann–Whitney (ties, few buckets, degenerate)") {
     import spark.implicits._
     import graft.pipeline.QualityClassifier
