@@ -16,6 +16,10 @@ import graft.influence.Influence
   *
   * Validation is eager (embedder_pytorch.py:127-147): empty edge sets
   * and non-positive dimensions are rejected at build time.
+  *
+  * The canonical edges stay persisted for the facade's life, so the
+  * edge memo of [[graft.util.DriverRoute]] keeps their pairs on the
+  * driver (16 bytes an edge) for as long.
   */
 class GraphEm private (spark: SparkSession, edges: DataFrame,
                        val nVertices: Long, cfg: LayoutConfig) {

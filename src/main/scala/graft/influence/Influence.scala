@@ -24,7 +24,8 @@ object Influence {
 
   /** Probe-collect canonical long/long edges when the graph fits the
     * driver-route budget; None (→ distributed) when larger or when the
-    * schema isn't long/long. Shared idiom: [[graft.util.DriverRoute]]. */
+    * schema isn't long/long. Shared idiom: [[graft.util.DriverRoute]],
+    * whose memo serves a persisted edge frame without a job. */
   private def localEdges(edges: DataFrame, cap: Long): Option[Array[(Long, Long)]] =
     graft.util.DriverRoute.probePairs(edges, "src", "dst", cap)
 
@@ -99,8 +100,9 @@ object Influence {
                          localMaxEdges: Long = 500000L): DataFrame =
     localEdges(edges, localMaxEdges) match {
       case Some(eArr) =>
-        val seedIds = seeds.select(col("id").cast("long")).distinct()
-          .collect().map(_.getLong(0))
+        // no distinct(): it costs a shuffle job, and cascadeLocal
+        // de-duplicates the seeds on the driver
+        val seedIds = seeds.select(col("id").cast("long")).collect().map(_.getLong(0))
         val inf = cascadeLocal(adjacency(eArr), seedIds, p, maxRounds, seed)
         val out = new Array[Long](inf.size())
         val it = inf.iterator(); var i = 0

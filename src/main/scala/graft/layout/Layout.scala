@@ -595,12 +595,16 @@ object Layout {
 
   /** Driver-local twin of the distributed loop — identical dynamics
     * (same eid hashing, same hash-threshold midpoint sampling, same
-    * bounded-buffer kNN with (d2, rid) tie-breaks, same P4/P5/P6
-    * intersection predicate, same ddof=1 normalization), executed on
-    * collected arrays with the kNN parallelized across cores. The
-    * reference runs this entire regime single-node (NumPy/PyTorch);
-    * routing small graphs to the driver is the Spark-honest version of
-    * that, with [[runLoop]] carrying the 100 TB regime. */
+    * exact kNN with (d2, rid) tie-breaks, same P4/P5/P6 intersection
+    * predicate, same ddof=1 normalization), executed on collected
+    * arrays. The kNN is [[knnCells]]: one exact cell-grid search per
+    * iteration, its queries fanned out across cores, and each query's
+    * neighbours applied in (d2, rid) order. The edges come sorted from
+    * the probe, so the spring sums do not depend on the partition order
+    * of the collect. The reference runs this entire regime single-node
+    * (NumPy/PyTorch); routing small graphs to the driver is the
+    * Spark-honest version of that, with [[runLoop]] carrying the 100 TB
+    * regime. */
   private def runLocal(spark: SparkSession, eArrAll: Array[(Long, Long)],
                        initial: DataFrame, cfg: LayoutConfig): DataFrame = {
     import graft.util.DriverRoute.{hashStart, foldLong, toUniform}
@@ -654,46 +658,19 @@ object Layout {
         ei += 1
       }
       if (cfg.kInter != 0.0) {
-        val mids = Array.tabulate(m) { j =>
+        val mids = new Array[Double](m * d)
+        var j = 0
+        while (j < m) {
           val pa = pos(esrc(j)); val pb = pos(edst(j))
-          Array.tabulate(d)(i => (pa(i) + pb(i)) / 2.0)
+          var i = 0
+          while (i < d) { mids(j * d + i) = (pa(i) + pb(i)) / 2.0; i += 1 }
+          j += 1
         }
         val thr = cfg.sampleSize.toDouble / mFull
         val sampled =
           if (mFull <= cfg.sampleSize) Array.range(0, m)
           else Array.range(0, m).filter(j => hashU(cfg.seed + it, eids(j)) < thr)
-        val k = cfg.nNeighbors
-        // kNN: per-query bounded worst-out buffer, (d2, rid) asc ties —
-        // queries are independent, so fan out across cores
-        val nbrs = new Array[Array[Int]](sampled.length)
-        java.util.stream.IntStream.range(0, sampled.length).parallel().forEach { si =>
-          val qj = sampled(si)
-          val qm = mids(qj)
-          val ds = Array.fill(k)(Double.MaxValue)
-          val rs = Array.fill(k)(Long.MaxValue)
-          val ridx = new Array[Int](k)
-          var wi = 0 // current worst slot
-          var rj = 0
-          while (rj < m) {
-            if (eids(rj) != eids(qj)) {
-              val rm = mids(rj)
-              var d2 = 0.0; var i = 0
-              while (i < d) { val df = qm(i) - rm(i); d2 += df * df; i += 1 }
-              val rid = eids(rj)
-              if (d2 < ds(wi) || (d2 == ds(wi) && rid < rs(wi))) {
-                ds(wi) = d2; rs(wi) = rid; ridx(wi) = rj
-                var j = 1; wi = 0
-                while (j < k) {
-                  if (ds(j) > ds(wi) || (ds(j) == ds(wi) && rs(j) > rs(wi))) wi = j
-                  j += 1
-                }
-              }
-            }
-            rj += 1
-          }
-          nbrs(si) = (0 until k).filter(s => ds(s) < Double.MaxValue)
-            .map(ridx).toArray
-        }
+        val nbrs = knnCells(mids, d, eids, sampled, cfg.nNeighbors)
         // A3 intersection repulsion over surviving (P4/P5/P6) pairs
         var si = 0
         while (si < sampled.length) {
@@ -757,6 +734,237 @@ object Layout {
     }
     import spark.implicits._
     ids.zip(pos).toSeq.toDF("id", "pos")
+  }
+
+  /** Exact kNN of the driver loop over the flat midpoints `mid` (row j
+    * at j*d): for each query index, the (up to) k references j with
+    * eids(j) != eids(query) that come first in (d2, eid, index) order,
+    * listed in that order. That is the (d2, rid) order of the
+    * distributed kNN; the index only decides between duplicate edges,
+    * whose forces are identical.
+    *
+    * Cell grid: each dimension is cut into g slabs at the quantiles of
+    * a strided sample of its coordinates (g^d ≈ m/2 cells, so a packed
+    * cloud still spreads over them), the midpoints are counting-sorted
+    * by cell, and each
+    * query scans rings of cells outward from its own. The ring bound
+    * comes from the actual coordinate extents: a point in a slab below
+    * (above) the scanned box has a coordinate no larger (smaller) than
+    * the largest (smallest) one in those slabs, and the slab of a
+    * coordinate is monotone in it, so the bound holds in floating
+    * point with no slack. The scan stops once the bound exceeds the
+    * current k-th d2; on a tie it goes on, since a point at equal d2
+    * may have a smaller eid. */
+  private[graft] def knnCells(mid: Array[Double], d: Int, eids: Array[Long],
+                              queries: Array[Int], k: Int): Array[Array[Int]] = {
+    if (k <= 0 || eids.isEmpty) return queries.map(_ => Array.emptyIntArray)
+    val grid = new CellGrid(mid, d, eids)
+    val out = new Array[Array[Int]](queries.length)
+    java.util.stream.IntStream.range(0, queries.length).parallel()
+      .forEach(qi => out(qi) = grid.knn(queries(qi), k))
+    out
+  }
+
+  /** (d2, eid, index) order of [[knnCells]]. */
+  private def before(d2: Double, e: Long, j: Int, d2b: Double, eb: Long, jb: Int): Boolean =
+    d2 < d2b || (d2 == d2b && (e < eb || (e == eb && j < jb)))
+
+  /** The cell grid of [[knnCells]] over m > 0 midpoints. */
+  private final class CellGrid(mid: Array[Double], d: Int, eids: Array[Long]) {
+    private val m = eids.length
+    private val g = math.max(1, math.pow(m / 2.0, 1.0 / d).toInt)
+    private val stride = Array.iterate(1, d)(_ * g)
+    private val slabs = new Array[Int](m * d)
+    private val cellOf = new Array[Int](m)
+    // maxBelow(i*(g+1) + t): largest coordinate of dimension i in slabs
+    // < t; minFrom(i*(g+1) + t): smallest in slabs >= t
+    private val maxBelow = new Array[Double](d * (g + 1))
+    private val minFrom = new Array[Double](d * (g + 1))
+    // cell-sorted midpoints: start(c) until start(c+1) are cell c's rows
+    // of cm (coordinates), ce (eids) and order (original index)
+    private val start = new Array[Int](stride(d - 1) * g + 1)
+    private val order = new Array[Int](m)
+    private val cm = new Array[Double](m * d)
+    private val ce = new Array[Long](m)
+
+    build()
+
+    // a method, not a block in the constructor: a loop inside an
+    // expression cannot be compiled on stack replacement, and the
+    // constructor runs too rarely to be compiled whole
+    private def build(): Unit = {
+      // cuts at the quantiles of a strided sample (any sorted cuts keep
+      // the search exact; the sample keeps the sort small)
+      val step = math.max(1, m / (64 * g))
+      val xs = new Array[Double]((m + step - 1) / step)
+      val cut = new Array[Double](g - 1)
+      var i = 0
+      while (i < d) {
+        var j = 0
+        while (j < xs.length) { xs(j) = mid(j * step * d + i); j += 1 }
+        java.util.Arrays.sort(xs)
+        var t = 0
+        while (t < g - 1) { cut(t) = xs(((t + 1).toLong * xs.length / g).toInt); t += 1 }
+        val b = i * (g + 1)
+        java.util.Arrays.fill(maxBelow, b, b + g + 1, Double.NegativeInfinity)
+        java.util.Arrays.fill(minFrom, b, b + g + 1, Double.PositiveInfinity)
+        j = 0
+        while (j < m) {
+          // slab = #cuts <= x: monotone in x
+          val x = mid(j * d + i)
+          var lo = 0; var hi = g - 1
+          while (lo < hi) { val h = (lo + hi) >>> 1; if (cut(h) <= x) lo = h + 1 else hi = h }
+          slabs(j * d + i) = lo
+          cellOf(j) += lo * stride(i)
+          // math.max/min keep a NaN, which disables the early stop
+          maxBelow(b + lo + 1) = math.max(maxBelow(b + lo + 1), x)
+          minFrom(b + lo) = math.min(minFrom(b + lo), x)
+          j += 1
+        }
+        t = 0
+        while (t < g) { maxBelow(b + t + 1) = math.max(maxBelow(b + t + 1), maxBelow(b + t)); t += 1 }
+        t = g - 1
+        while (t >= 0) { minFrom(b + t) = math.min(minFrom(b + t), minFrom(b + t + 1)); t -= 1 }
+        i += 1
+      }
+      var j = 0
+      while (j < m) { start(cellOf(j) + 1) += 1; j += 1 }
+      var c = 0
+      while (c < start.length - 1) { start(c + 1) += start(c); c += 1 }
+      val fill = start.clone()
+      j = 0
+      while (j < m) {
+        val p = fill(cellOf(j))
+        fill(cellOf(j)) += 1
+        order(p) = j; ce(p) = eids(j)
+        var i = 0
+        while (i < d) { cm(p * d + i) = mid(j * d + i); i += 1 }
+        j += 1
+      }
+    }
+
+    /** Up to k neighbours of midpoint q in (d2, eid, index) order. */
+    def knn(q: Int, k: Int): Array[Int] = {
+      val qb = q * d
+      val qe = eids(q)
+      // best-k buffer; `worst` is its last slot in order once full.
+      // A d2 of Double.MaxValue or more (or NaN) is never admitted.
+      val bd = new Array[Double](k); val be = new Array[Long](k); val bj = new Array[Int](k)
+      var size = 0
+      var worst = 0
+      var cells = new Array[Int](32)
+      val lo = new Array[Int](d); val hi = new Array[Int](d); val cur = new Array[Int](d)
+      var r = 0
+      var done = false
+      while (!done) {
+        // the cells of ring r: those whose first dimension at offset ±r is f
+        var nc = 0
+        if (r == 0) { cells(0) = cellOf(q); nc = 1 }
+        else {
+          var f = 0
+          while (f < d) {
+            var sgn = -1
+            while (sgn <= 1) {
+              val cf = slabs(qb + f) + sgn * r
+              if (cf >= 0 && cf < g) {
+                var l = 0
+                while (l < d) {
+                  if (l == f) { lo(l) = cf; hi(l) = cf }
+                  else {
+                    val reach = if (l < f) r - 1 else r
+                    lo(l) = math.max(0, slabs(qb + l) - reach)
+                    hi(l) = math.min(g - 1, slabs(qb + l) + reach)
+                  }
+                  cur(l) = lo(l)
+                  l += 1
+                }
+                var more = true
+                while (more) {
+                  var cell = 0
+                  l = 0
+                  while (l < d) { cell += cur(l) * stride(l); l += 1 }
+                  if (nc == cells.length) cells = java.util.Arrays.copyOf(cells, 2 * nc)
+                  cells(nc) = cell; nc += 1
+                  more = false
+                  l = 0
+                  while (l < d && !more) {
+                    if (cur(l) < hi(l)) { cur(l) += 1; more = true }
+                    else { cur(l) = lo(l); l += 1 }
+                  }
+                }
+              }
+              sgn += 2
+            }
+            f += 1
+          }
+        }
+        var ci = 0
+        while (ci < nc) {
+          var p = start(cells(ci))
+          val end = start(cells(ci) + 1)
+          while (p < end) {
+            val e = ce(p)
+            if (e != qe) {
+              var d2 = 0.0
+              var i = 0
+              while (i < d) { val df = mid(qb + i) - cm(p * d + i); d2 += df * df; i += 1 }
+              if (d2 < Double.MaxValue && (size < k || (d2 <= bd(worst) &&
+                  before(d2, e, order(p), bd(worst), be(worst), bj(worst))))) {
+                val s = if (size < k) { size += 1; size - 1 } else worst
+                bd(s) = d2; be(s) = e; bj(s) = order(p)
+                if (size == k) {
+                  worst = 0
+                  var t = 1
+                  while (t < k) {
+                    if (before(bd(worst), be(worst), bj(worst), bd(t), be(t), bj(t))) worst = t
+                    t += 1
+                  }
+                }
+              }
+            }
+            p += 1
+          }
+          ci += 1
+        }
+        // lower bound on d2 of every midpoint outside the scanned box
+        var bound = Double.PositiveInfinity
+        var covered = true
+        var i = 0
+        while (i < d) {
+          val x = mid(qb + i)
+          val below = slabs(qb + i) - r
+          val above = slabs(qb + i) + r + 1
+          if (below > 0) {
+            covered = false
+            val gap = x - maxBelow(i * (g + 1) + below)
+            bound = math.min(bound, gap * gap)
+          }
+          if (above < g) {
+            covered = false
+            val gap = minFrom(i * (g + 1) + above) - x
+            bound = math.min(bound, gap * gap)
+          }
+          i += 1
+        }
+        done = covered || (size == k && bound > bd(worst))
+        r += 1
+      }
+      // insertion sort of the admitted slots into (d2, eid, index) order
+      val slot = Array.range(0, size)
+      var a = 1
+      while (a < size) {
+        val s = slot(a)
+        var b = a - 1
+        while (b >= 0 && before(bd(s), be(s), bj(s), bd(slot(b)), be(slot(b)), bj(slot(b)))) {
+          slot(b + 1) = slot(b); b -= 1
+        }
+        slot(b + 1) = s
+        a += 1
+      }
+      var a2 = 0
+      while (a2 < size) { slot(a2) = bj(slot(a2)); a2 += 1 }
+      slot
+    }
   }
 
   private def runLoop(spark: SparkSession, e: DataFrame, initial: DataFrame,

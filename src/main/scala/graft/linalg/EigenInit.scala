@@ -24,24 +24,49 @@ import graft.gen.Generators.hashUniform
   *    path scales to any n a cluster holds.
   *
   * Eigensign is arbitrary (tests accept reflections, mirroring
-  * tests/test_integration.py:238-249). On solver failure we fall back to
-  * seeded random positions (embedder_pytorch.py:366-369).
+  * tests/test_integration.py:238-249). The seeded random fallback
+  * (embedder_pytorch.py:366-369, where only `eigsh` may fail) is
+  * narrowed the same way: it covers the solver alone — a graph with
+  * n ≤ k vertices (no k non-trivial eigenvectors to find; `eigsh`
+  * rejects it too), arithmetic errors and Breeze's convergence and
+  * singularity exceptions — and logs one warning when it fires. A
+  * failed Spark job propagates, and so does an edge id outside [0, n)
+  * (IllegalArgumentException naming the id).
   */
 object EigenInit {
 
+  private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Entry point: edges must be canonical (src<dst), ids in 0..n-1.
     * Returns positions DataFrame (id: long, pos: array<double> of k).
+    * Up to `driverMaxEdges` edges ([[graft.util.DriverRoute.rowsAtMost]],
+    * free on a loaded persisted frame), the pairs come from
+    * [[graft.util.DriverRoute.probeIdPairs]] (one job, or none when a
+    * persisted frame was probed before).
     */
   def init(spark: SparkSession, edges: DataFrame, n: Long, k: Int,
            seed: Long = 42, driverMaxEdges: Long = 5000000L): DataFrame = {
     require(k > 0, "n_components must be positive")
-    try {
-      val m = edges.count()
-      if (m == 0) randomPositions(spark, n, k, seed)
-      else if (m <= driverMaxEdges) driverPath(spark, edges, n.toInt, k, seed)
-      else distributedPath(spark, edges, n, k, seed)
-    } catch {
-      case _: Exception => randomPositions(spark, n, k, seed)
+    import graft.util.DriverRoute
+    val probed =
+      if (DriverRoute.rowsAtMost(edges, driverMaxEdges))
+        DriverRoute.probeIdPairs(edges, "src", "dst", driverMaxEdges)
+      else None
+    if (probed.exists(_.isEmpty)) randomPositions(spark, n, k, seed)
+    else {
+      val g = probed.map(graft.metrics.Centralities.csrOf(_, n))
+      def fallback(why: Any): DataFrame = {
+        logger.warn(s"eigen init fell back to seeded random positions: $why")
+        randomPositions(spark, n, k, seed)
+      }
+      if (n <= k) fallback(s"$n vertices, $k components")
+      else try g match {
+        case Some(csr) => driverPath(spark, csr, k, seed)
+        case None => distributedPath(spark, edges, n, k, seed)
+      } catch {
+        case e @ (_: ArithmeticException | _: breeze.linalg.NotConvergedException |
+                  _: breeze.linalg.MatrixSingularException) => fallback(e)
+      }
     }
   }
 
@@ -59,21 +84,14 @@ object EigenInit {
 
   // ---------------- driver backend ----------------
 
-  private def driverPath(spark: SparkSession, edges: DataFrame, n: Int, k: Int,
-                         seed: Long): DataFrame = {
+  private def driverPath(spark: SparkSession, g: graft.metrics.Centralities.Csr,
+                         k: Int, seed: Long): DataFrame = {
     import breeze.linalg.{DenseMatrix, eigSym, qr}
-    val es = edges.select(col("src").cast("int"), col("dst").cast("int"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
-    // CSR-ish adjacency
-    val deg = new Array[Int](n)
-    es.foreach { case (s, d) => deg(s) += 1; deg(d) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val nbr = new Array[Int](2 * es.length)
-    val cur = off.clone()
-    es.foreach { case (s, d) => nbr(cur(s)) = d; cur(s) += 1; nbr(cur(d)) = s; cur(d) += 1 }
-    val dinv = deg.map(d => if (d > 0) 1.0 / math.sqrt(d.toDouble) else 0.0)
+    val graft.metrics.Centralities.Csr(n, off, nbr) = g
+    val dinv = Array.tabulate(n) { v =>
+      val d = off(v + 1) - off(v)
+      if (d > 0) 1.0 / math.sqrt(d.toDouble) else 0.0
+    }
 
     val kk = k + 1
     val rnd = new scala.util.Random(seed)

@@ -39,21 +39,33 @@ object Centralities {
       if (d == 0) 0.0 else d / (g.n - 1.0)
     }
 
-  /** CSR of the undirected graph from ONE edge collect; each row is
-    * sorted, so the CSR does not depend on the collect order. */
-  def collectCsr(edges: DataFrame, n: Long): Csr = {
-    val es = edges.select(col("src").cast("int"), col("dst").cast("int"))
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
+  /** CSR of the undirected graph from ONE edge collect. */
+  def collectCsr(edges: DataFrame, n: Long): Csr =
+    csrOf(edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))), n)
+
+  /** CSR of the undirected graph on ids [0, n) from its (src, dst)
+    * pairs; each row is sorted, so the CSR does not depend on the pair
+    * order. An id outside [0, n) throws IllegalArgumentException. */
+  def csrOf(es: Array[(Long, Long)], n: Long): Csr = {
+    require(n >= 0 && n < Int.MaxValue, s"vertex count $n out of range")
     val nn = n.toInt
     val deg = new Array[Int](nn)
-    es.foreach { case (s, d) => deg(s) += 1; deg(d) += 1 }
+    es.foreach { case (s, d) =>
+      if (s < 0 || s >= n || d < 0 || d >= n)
+        throw new IllegalArgumentException(
+          s"edge ($s, $d): vertex id ${if (s < 0 || s >= n) s else d} outside [0, $n)")
+      deg(s.toInt) += 1; deg(d.toInt) += 1
+    }
     val off = new Array[Int](nn + 1)
     var i = 0
     while (i < nn) { off(i + 1) = off(i) + deg(i); i += 1 }
     val nbr = new Array[Int](2 * es.length)
     val cur = off.clone()
     es.foreach { case (s, d) =>
-      nbr(cur(s)) = d; cur(s) += 1; nbr(cur(d)) = s; cur(d) += 1 }
+      nbr(cur(s.toInt)) = d.toInt; cur(s.toInt) += 1
+      nbr(cur(d.toInt)) = s.toInt; cur(d.toInt) += 1
+    }
     i = 0
     while (i < nn) { java.util.Arrays.sort(nbr, off(i), off(i + 1)); i += 1 }
     Csr(nn, off, nbr)
@@ -622,10 +634,7 @@ object Centralities {
     // [0, n), h = Σ_{d(s,v)>0} 1/d (unreachable → 0.0), scale 1.
     // Sampled mode (n > sourcesCap) always runs distributed.
     if (n <= sourcesCap) {
-      graft.util.DriverRoute.probePairs(
-        edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst")),
-        "src", "dst", driverEdgeCap) match {
+      graft.util.DriverRoute.probeIdPairs(edges, "src", "dst", driverEdgeCap) match {
         case Some(arr) =>
           import scala.collection.mutable
           val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
@@ -854,35 +863,40 @@ object Centralities {
   /** All reference centralities (benchmark.py:73-107) in one frame
     * (id, degree_centrality, pagerank, eigenvector, closeness,
     * betweenness, load), one row per id in [0, n). `broadcastEdgeMax`
-    * guards the CSR collect: at or below it every measure is a driver
-    * array over ONE collected CSR (closeness, betweenness and load from
+    * caps the edge probe ([[graft.util.DriverRoute.rowsAtMost]], then
+    * [[graft.util.DriverRoute.probeIdPairs]]; no job when a loaded
+    * persisted frame was probed before): at or below it every measure
+    * is a driver array over ONE CSR (closeness, betweenness and load from
     * the one [[sweep]] job) and the result is a local frame — no join,
     * no shuffle; past it every measure routes to its distributed
     * implementation and the frames are outer-joined on id. */
   def all(spark: SparkSession, edges: DataFrame, n: Long,
           broadcastEdgeMax: Long = 10000000L): DataFrame = {
-    // an empty projection keeps the scan pruned, and the RDD count adds
-    // no exchange (a Dataset count shuffles its partials to one task)
-    val m = edges.select().rdd.count()
-    if (m <= broadcastEdgeMax) {
-      val g = collectCsr(edges, n)
-      val (cl, bt, ld) = sweep(spark, g)
-      val (deg, pr, ev) = (degreeCsr(g), pageRankCsr(g), eigenvectorCsr(g))
-      import spark.implicits._
-      (0 until g.n).map(i => (i.toLong, deg(i), pr(i), ev(i), cl(i), bt(i), ld(i)))
-        .toDF("id", "degree_centrality", "pagerank", "eigenvector",
-          "closeness", "betweenness", "load")
-    } else {
-      // pageRankDistributed (not GraphX static) so pagerank semantics
-      // are route-invariant across the broadcastEdgeMax threshold —
-      // same nx convergence rule as pageRankCsr on both sides; the
-      // three BFS measures share ONE forward BFS + backward pass.
-      val (cl, bt, ld) = bfsMeasuresDistributed(spark, edges, n)
-      Seq(pageRankDistributed(spark, edges, n),
-        eigenvectorDistributed(spark, edges, n), cl, bt, ld)
-        .foldLeft(degreeCentrality(edges, n)) {
-          (acc, df) => acc.join(df, Seq("id"), "outer")
-        }.na.fill(0.0)
+    import graft.util.DriverRoute
+    val probed =
+      if (DriverRoute.rowsAtMost(edges, broadcastEdgeMax))
+        DriverRoute.probeIdPairs(edges, "src", "dst", broadcastEdgeMax)
+      else None
+    probed match {
+      case Some(pairs) =>
+        val g = csrOf(pairs, n)
+        val (cl, bt, ld) = sweep(spark, g)
+        val (deg, pr, ev) = (degreeCsr(g), pageRankCsr(g), eigenvectorCsr(g))
+        import spark.implicits._
+        (0 until g.n).map(i => (i.toLong, deg(i), pr(i), ev(i), cl(i), bt(i), ld(i)))
+          .toDF("id", "degree_centrality", "pagerank", "eigenvector",
+            "closeness", "betweenness", "load")
+      case None =>
+        // pageRankDistributed (not GraphX static) so pagerank semantics
+        // are route-invariant across the broadcastEdgeMax threshold —
+        // same nx convergence rule as pageRankCsr on both sides; the
+        // three BFS measures share ONE forward BFS + backward pass.
+        val (cl, bt, ld) = bfsMeasuresDistributed(spark, edges, n)
+        Seq(pageRankDistributed(spark, edges, n),
+          eigenvectorDistributed(spark, edges, n), cl, bt, ld)
+          .foldLeft(degreeCentrality(edges, n)) {
+            (acc, df) => acc.join(df, Seq("id"), "outer")
+          }.na.fill(0.0)
     }
   }
 }

@@ -7,6 +7,7 @@ import graft.layout.{Layout, LayoutConfig}
 import graft.influence.Influence
 import graft.api.GraphEm
 import graft.functions.VecOps
+import graft.model.GraphOps
 
 /** Embedder/layout/influence invariants mirroring the reference's
   * test battery (tests/test_pytorch_backend.py, test_integration.py,
@@ -329,5 +330,143 @@ class EmbeddingSpec extends SparkSpec {
     val degs = graft.model.GraphOps.degrees(g)
     val rho = radii.join(degs, "id").agg(corr(col("r"), col("degree"))).collect()(0)
     assert(!rho.isNullAt(0))
+  }
+
+  test("eigen init: an edge id outside [0, n) throws, naming the id") {
+    import spark.implicits._
+    val e = Seq((0L, 1L), (0L, 5L)).toDF("src", "dst")
+    val err = intercept[IllegalArgumentException](EigenInit.init(spark, e, 5, 2))
+    assert(err.getMessage.contains("vertex id 5"), err.getMessage)
+  }
+
+  test("eigen init: graphs with n <= k vertices fall back to seeded random positions") {
+    // no k non-trivial eigenvectors exist; the fallback keeps GraphEm's
+    // default nComponents = 3 working on a single edge or a triangle
+    import spark.implicits._
+    for ((es, n) <- Seq((Seq((0L, 1L)), 2), (Seq((0L, 1L), (1L, 2L), (0L, 2L)), 3))) {
+      val pos = EigenInit.init(spark, es.toDF("src", "dst"), n, 3, seed = 5)
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+      assert(pos.map(_._1) == (0 until n).map(_.toLong))
+      assert(pos.forall(p => p._2.length == 3 && p._2.forall(v => !v.isNaN && !v.isInfinite)))
+      val random = EigenInit.randomPositions(spark, n, 3, 5)
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+      assert(pos == random)
+    }
+  }
+
+  test("driver eigen init + layout: bit-identical across shuffle widths and edge partitionings") {
+    // the probe sorts the pairs, so neither the collect order nor the
+    // session's shuffle width may move a bit of the positions
+    import spark.implicits._
+    val pairs = GraphOps.undirect(Generators.barabasiAlbert(spark, 60, 2, 21))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def run(edgeParts: Int, width: Int): Seq[(Long, Seq[Long])] = {
+      spark.conf.set(key, width.toString)
+      try {
+        val e = pairs.toDF("src", "dst").repartition(edgeParts)
+        val init = EigenInit.init(spark, e, 60, 3, seed = 21)
+        Layout.run(spark, e, init, LayoutConfig(LMin = 4.0, numIterations = 10, seed = 21))
+          .collect().map(r => (r.getLong(0),
+            r.getSeq[Double](1).map(java.lang.Double.doubleToLongBits))).sortBy(_._1).toSeq
+      } finally spark.conf.set(key, prev)
+    }
+    val (a, b) = (run(1, 1), run(5, 7))
+    assert(a.length == 60 && a == b)
+  }
+
+  /** The brute scan the driver loop ran before the cell grid — every
+    * reference for every query into a worst-out buffer, (d2, rid) ties
+    * — with its survivors listed in (d2, rid, index) order. */
+  private def bruteKnn(mid: Array[Double], d: Int, eids: Array[Long],
+                       qj: Int, k: Int): Seq[Int] = {
+    def dist2(a: Int, b: Int): Double = {
+      var d2 = 0.0; var i = 0
+      while (i < d) { val df = mid(a * d + i) - mid(b * d + i); d2 += df * df; i += 1 }
+      d2
+    }
+    val ds = Array.fill(k)(Double.MaxValue)
+    val rs = Array.fill(k)(Long.MaxValue)
+    val ridx = new Array[Int](k)
+    var wi = 0
+    for (rj <- eids.indices if eids(rj) != eids(qj)) {
+      val d2 = dist2(qj, rj); val rid = eids(rj)
+      if (d2 < ds(wi) || (d2 == ds(wi) && rid < rs(wi))) {
+        ds(wi) = d2; rs(wi) = rid; ridx(wi) = rj
+        wi = 0
+        for (j <- 1 until k)
+          if (ds(j) > ds(wi) || (ds(j) == ds(wi) && rs(j) > rs(wi))) wi = j
+      }
+    }
+    (0 until k).filter(s => ds(s) < Double.MaxValue).map(ridx)
+      .sortBy(j => (dist2(qj, j), eids(j), j))
+  }
+
+  private def assertExactKnn(mid: Array[Double], d: Int, eids: Array[Long], k: Int): Unit = {
+    val queries = eids.indices.toArray
+    val grid = Layout.knnCells(mid, d, eids, queries, k)
+    queries.foreach { q =>
+      val want = bruteKnn(mid, d, eids, q, k)
+      assert(grid(q).toSeq == want, s"query $q: grid ${grid(q).toSeq} vs brute $want")
+    }
+  }
+
+  private def edgeEid(s: Long, t: Long): Long = {
+    import graft.util.DriverRoute.foldLong
+    foldLong(foldLong(42L, s), t)
+  }
+
+  /** Flat edge midpoints and eids of `pairs` under `pos`. */
+  private def midsOf(pairs: Array[(Long, Long)], pos: Map[Long, Seq[Double]],
+                     d: Int): (Array[Double], Array[Long]) = {
+    val mid = new Array[Double](pairs.length * d)
+    pairs.indices.foreach { j =>
+      val (s, t) = pairs(j)
+      (0 until d).foreach(i => mid(j * d + i) = (pos(s)(i) + pos(t)(i)) / 2.0)
+    }
+    (mid, pairs.map { case (s, t) => edgeEid(s, t) })
+  }
+
+  test("grid kNN equals the brute scan: BA n=400 at iteration 0 and after 5 iterations") {
+    val edges = GraphOps.undirect(Generators.barabasiAlbert(spark, 400, 3, 13)).persist()
+    try {
+      val pairs = graft.util.DriverRoute.probePairs(edges, "src", "dst", 100000).get
+      def positions(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Double]] =
+        df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      val init = EigenInit.init(spark, edges, 400, 3, seed = 13)
+      val (mid0, eids) = midsOf(pairs, positions(init), 3)
+      assertExactKnn(mid0, 3, eids, 15)
+      val moved = Layout.run(spark, edges, init,
+        LayoutConfig(LMin = 4.0, numIterations = 5, seed = 13))
+      assertExactKnn(midsOf(pairs, positions(moved), 3)._1, 3, eids, 15)
+    } finally edges.unpersist()
+  }
+
+  test("grid kNN equals the brute scan: 12x12 grid graph in 2-d, rid tie-breaks") {
+    val pairs = Generators.roadNetwork(spark, 12, 12).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val pos = (0L until 144L).map(v => v -> Seq((v % 12).toDouble, (v / 12).toDouble)).toMap
+    val (mid, eids) = midsOf(pairs, pos, 2)
+    Seq(1, 4, 8, 15).foreach(k => assertExactKnn(mid, 2, eids, k))
+  }
+
+  test("grid kNN equals the brute scan: duplicate midpoints, m <= k, 1-d and 4-d") {
+    val rnd = new scala.util.Random(5)
+    // 40 distinct points, each three times; one eid is shared twice
+    // (a duplicate edge), the rest distinct
+    val base = Array.fill(40 * 2)(rnd.nextGaussian())
+    val mid = Array.tabulate(120 * 2)(x => base(((x / 2) % 40) * 2 + x % 2))
+    val eids = Array.tabulate(120)(j => if (j == 41) 1L else j.toLong)
+    assertExactKnn(mid, 2, eids, 5)
+    assertExactKnn(mid, 2, eids, 7)
+    // m <= k: every other reference, in order
+    val few = Array.fill(6 * 3)(rnd.nextDouble())
+    assertExactKnn(few, 3, Array.tabulate(6)(_.toLong), 15)
+    assertExactKnn(few, 3, Array.tabulate(6)(_.toLong), 5)
+    // the kernel serves any dimension
+    assertExactKnn(Array.fill(200)(rnd.nextGaussian()), 1, Array.tabulate(200)(_.toLong), 6)
+    assertExactKnn(Array.fill(300 * 4)(rnd.nextGaussian() * 3), 4,
+      Array.tabulate(300)(j => rnd.nextLong()), 9)
   }
 }

@@ -52,4 +52,37 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** `body`'s value and the number of Spark jobs it started (counted
+    * by job group, so jobs of other threads do not count). */
+  def countingJobs[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val fence = s"$group-fence"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    val fenceJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(e.jobId)
+          case Some(`fence`) => fenceJob.set(e.jobId)
+          case _ => ()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceJob.get) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      // listener events arrive in order: once a later job has ended,
+      // every event of the group's jobs has been seen
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.size)
+    } finally sc.removeSparkListener(listener)
+  }
 }
