@@ -88,6 +88,7 @@ object Bench {
     import graft.gen.Generators
     import graft.layout.{Layout, LayoutConfig}
     import graft.linalg.EigenInit
+    import graft.util.DriverRoute
     val cfg = LayoutConfig(nComponents = 3, LMin = 10.0, kAttr = 0.5,
       kInter = 0.1, nNeighbors = 15, sampleSize = 512, numIterations = 30, seed = 42)
     val genConfigs: Seq[(String, () => DataFrame)] = Seq(
@@ -124,11 +125,14 @@ object Bench {
     // (run_benchmarks.py:199-296: snap-facebook_combined, 4,039 v /
     // 88,234 e, L_min=4.0, 30 iters). No egress here, so a synthetic
     // graph at the same n/m stands in (BA m=22 ≈ same edge count).
-    def datasetTier(label: String, dsCfg: LayoutConfig): (Long, Long, Double) = {
+    def datasetTier(label: String, dsCfg: LayoutConfig,
+                    distributed: Boolean = false): (Long, Long, Double) = {
       val g = Generators.barabasiAlbert(spark, 4039, 22, 42).cache()
       val m = g.count()
       val (_, lt) = time {
-        Layout.run(spark, g, EigenInit.init(spark, g, 4039, 3, 42), dsCfg).count()
+        val init = EigenInit.init(spark, g, 4039, 3, 42)
+        def layout() = Layout.run(spark, g, init, dsCfg).count()
+        if (distributed) DriverRoute.distributed(spark)(layout()) else layout()
       }
       g.unpersist()
       System.err.println(f"[bench] dataset-scale $label (n=4039, m=$m) layout ${lt}%.1fs")
@@ -137,11 +141,10 @@ object Bench {
     val dsBench = datasetTier("routed", cfg.copy(LMin = 4.0))
 
     // tier 2c: the SAME dataset-scale graph forced through the
-    // DISTRIBUTED loop (localMaxEdges = 0) — sub-500k-edge graphs route
+    // DISTRIBUTED loop (DriverRoute.distributed) — sub-500k-edge graphs route
     // to the driver now, but the 100 TB code path must stay measured
     // round over round or a regression there would be invisible.
-    val dsDist = datasetTier("DISTRIBUTED",
-      cfg.copy(LMin = 4.0, localMaxEdges = 0))
+    val dsDist = datasetTier("DISTRIBUTED", cfg.copy(LMin = 4.0), distributed = true)
 
     // tier 2d: the ANN layout branch — the path that carries layout at
     // 100k+ midpoints (the reference's cuVS envelope,
@@ -151,7 +154,7 @@ object Bench {
     // gets a recorded wall time round over round. Quality (ρ vs the
     // exact-kNN run) is asserted in EmbeddingSpec.
     val dsLsh = datasetTier("GRID-ANN DISTRIBUTED",
-      cfg.copy(LMin = 4.0, localMaxEdges = 0, exactKnnMaxRef = 0))
+      cfg.copy(LMin = 4.0, exactKnnMaxRef = 0), distributed = true)
 
     // restore cluster-sized shuffling: tiers 2-2d run data-sized (4)
     // for the tiny-graph loops, but the centralities tier shuffles
@@ -161,7 +164,7 @@ object Bench {
 
     // tier 2e: centralities on the dataset-scale graph, BOTH routes —
     // the broadcast-CSR route it would pick, and the multi-source-BFS /
-    // power-iteration distributed route (broadcastEdgeMax=0) that
+    // power-iteration distributed route (DriverRoute.distributed) that
     // carries graphs past 1e7 edges. Paired timings mirror the
     // reference's backend comparison (compare_backends.py:296-311).
     // Both are timed through the `noop` sink, which computes every
@@ -177,7 +180,7 @@ object Bench {
       }
       System.err.println(f"[bench] centralities routed (CSR) n=4039 m=$cm ${rt}%.1fs")
       val (_, lt) = time {
-        materialize(Centralities.all(spark, g, 4039, broadcastEdgeMax = 0))
+        DriverRoute.distributed(spark)(materialize(Centralities.all(spark, g, 4039)))
       }
       g.unpersist()
       System.err.println(f"[bench] centralities DISTRIBUTED n=4039 m=$cm ${lt}%.1fs")
@@ -190,8 +193,10 @@ object Bench {
       import spark.implicits._
       val seeds = (0L until 10L).toDF("id")
       val (cnt, lt) = time {
-        Influence.independentCascade(spark, g, seeds, 0.1, maxRounds = 100,
-          seed = 42, localMaxEdges = 0).count()
+        DriverRoute.distributed(spark) {
+          Influence.independentCascade(spark, g, seeds, 0.1, maxRounds = 100,
+            seed = 42).count()
+        }
       }
       g.unpersist()
       System.err.println(f"[bench] IC DISTRIBUTED n=200 spread=$cnt ${lt}%.1fs")

@@ -11,18 +11,23 @@ import graft.influence.Influence
   *
   * Strategy selection follows backend_selection.py:142-206 in spirit:
   * instead of cpu/pytorch/cuvs the axes here are driver-vs-distributed
-  * eigen-init and exact-vs-LSH kNN, both chosen by graph size (the same
-  * thresholds idea, re-expressed for a cluster).
+  * eigen-init and layout ([[graft.util.DriverRoute]]'s caps) and, in the
+  * distributed layout loop, exact-vs-grid kNN, all chosen by graph size
+  * (the same thresholds idea, re-expressed for a cluster).
   *
   * Validation is eager (embedder_pytorch.py:127-147): empty edge sets
   * and non-positive dimensions are rejected at build time.
   *
-  * The canonical edges stay persisted for the facade's life, so the
-  * edge memo of [[graft.util.DriverRoute]] keeps their pairs on the
-  * driver (16 bytes an edge) for as long.
+  * The canonical edges stay persisted until [[close]], and the edge
+  * memo of [[graft.util.DriverRoute]] keeps their pairs on the driver
+  * (16 bytes an edge) for as long.
   */
-class GraphEm private (spark: SparkSession, edges: DataFrame,
+class GraphEm private (spark: SparkSession, private[graft] val edges: DataFrame,
                        val nVertices: Long, cfg: LayoutConfig) {
+
+  /** Releases the persisted edges, and with them their memoized pairs.
+    * The facade still works afterwards, recomputing its edges on use. */
+  def close(): Unit = edges.unpersist()
 
   /** Eager Laplacian-eigenmap init (embedder_pytorch.py:179-180). */
   lazy val initialPositions: DataFrame =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.gen.Generators
 import graft.metrics.GraphFeatures
 import graft.model.GraphOps
+import graft.util.DriverRoute
 
 /** Scale probe for the GRAPH operators — measures the traversal /
   * decomposition / feature family on hash-seeded Erdős–Rényi graphs of
@@ -42,11 +43,9 @@ object GraphScaleProbe {
       GraphOps.connectedComponentsDF(spark, g).select("component").distinct().count())
     val (maxCore, tCore) = time(
       GraphFeatures.coreNumbers(spark, g).agg(max("core")).head.getLong(0))
-    val (ecc, tBfs) = time {
-      // driverEdgeCap=0: measure the DISTRIBUTED expansion (100 TB path)
-      val d = GraphFeatures.bfsDistances(spark, g, Seq(0L), driverEdgeCap = 0)
-      d.agg(max("dist")).head.getLong(0)
-    }
+    // measure the DISTRIBUTED expansion (100 TB path)
+    val (ecc, tBfs) = time(DriverRoute.distributed(spark)(
+      GraphFeatures.bfsDistances(spark, g, Seq(0L)).agg(max("dist")).head.getLong(0)))
     val (_, tLpa) = time(
       GraphFeatures.labelPropagation(spark, g, rounds = 3)
         .select("label").distinct().count())
@@ -64,11 +63,11 @@ object GraphScaleProbe {
     val (nScc, tScc) = time {
       val d = g.union(g.filter((col("src") + col("dst")) % 3 === 0)
         .select(col("dst").as("src"), col("src").as("dst")))
-      // driverEdgeCap=0: this probe measures the DISTRIBUTED peel (the
-      // 100 TB path) — the driver-Tarjan small route would swallow
-      // every probe size below the cap
-      GraphFeatures.stronglyConnected(spark, d, driverEdgeCap = 0)
-        .select("component").distinct().count()
+      // this probe measures the DISTRIBUTED peel (the 100 TB path) —
+      // the driver-Tarjan small route would swallow every probe size
+      // below the cap
+      DriverRoute.distributed(spark)(
+        GraphFeatures.stronglyConnected(spark, d).select("component").distinct().count())
     }
     // MST over hash-distinct weights (unique MST, deterministic rounds)
     val (nMst, tMst) = time {
@@ -77,10 +76,9 @@ object GraphScaleProbe {
           1000000.0).as("w"))
       GraphFeatures.mstBoruvka(spark, w).count()
     }
-    val (lb, tDiam) = time(
-      // driverEdgeCap=0: measure the DISTRIBUTED sweeps (100 TB path)
-      GraphFeatures.pseudoDiameter(spark, g, start = 0L, driverEdgeCap = 0)
-        .head.getLong(3))
+    // measure the DISTRIBUTED sweeps (100 TB path)
+    val (lb, tDiam) = time(DriverRoute.distributed(spark)(
+      GraphFeatures.pseudoDiameter(spark, g, start = 0L).head.getLong(3)))
     val (nPpr, tPpr) = time(
       graft.metrics.Centralities.personalizedPageRank(spark, g,
         seeds = Seq(0L, 1L, 2L), iters = 3).count())

@@ -30,8 +30,10 @@ object Harness {
   private def correlationBenchmarkImpl(spark: SparkSession, edges: DataFrame,
                                        cfg: LayoutConfig): DataFrame = {
     val em = GraphEm(spark, edges, cfg)
-    em.runLayout()
-    correlationFromPositions(spark, edges, em.positions, em.nVertices)
+    try {
+      em.runLayout()
+      correlationFromPositions(spark, edges, em.positions, em.nVertices)
+    } finally em.close()
   }
 
   /** The ρ table for ALREADY-computed positions — the facade's
@@ -68,6 +70,7 @@ object Harness {
     val (embSpread, embTime) = timed {
       em.estimateInfluence(em.selectSeeds(k), p).toDouble
     }
+    em.close()
     val (greedySpread, greedyTime) = timed {
       val seeds = Influence.greedySeeds(spark, edges, k, p,
         simRounds = 50, candidatePool = greedyPool, seed = cfg.seed)

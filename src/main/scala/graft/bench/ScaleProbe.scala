@@ -6,8 +6,9 @@ import graft.layout.{Layout, LayoutConfig}
 import graft.linalg.EigenInit
 
 /** One-off scale probe for the DISTRIBUTED code paths — the regime the
-  * per-round bench's small graphs never reach: past `localMaxEdges` the
-  * layout runs the cluster loop, and past `exactKnnMaxRef` midpoints the
+  * per-round bench's small graphs never reach: past
+  * `DriverRoute.LoopEdges` the layout runs the cluster loop, and past
+  * `exactKnnMaxRef` midpoints the
   * kNN switches to the grid-bucketed ANN kernel. Run:
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.bench.ScaleProbe 50000 22 5"

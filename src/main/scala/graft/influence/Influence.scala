@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VecOps
 import graft.gen.Generators.hashUniform
+import graft.util.DriverRoute
 
 /** Influence-maximization surface (reference: influence.py).
   *
@@ -21,13 +22,6 @@ object Influence {
     pos.select(col("id"), VecOps.norm(col("pos")).as("radius"))
       .orderBy(col("radius").desc, col("id").asc)
       .limit(k)
-
-  /** Probe-collect canonical long/long edges when the graph fits the
-    * driver-route budget; None (→ distributed) when larger or when the
-    * schema isn't long/long. Shared idiom: [[graft.util.DriverRoute]],
-    * whose memo serves a persisted edge frame without a job. */
-  private def localEdges(edges: DataFrame, cap: Long): Option[Array[(Long, Long)]] =
-    graft.util.DriverRoute.probePairs(edges, "src", "dst", cap)
 
   /** Both-direction adjacency of a canonical edge list. */
   private def adjacency(eArr: Array[(Long, Long)]): java.util.HashMap[Long, Array[Long]] = {
@@ -86,8 +80,8 @@ object Influence {
     * Returns the final infected vertex set. Edges must be canonical
     * (src<dst); propagation uses both directions.
     *
-    * Below `localMaxEdges` the loop replays on the driver with
-    * bit-identical coins (a distributed cascade round is one scheduler
+    * Up to `DriverRoute.LoopEdges` long/long edges the loop replays on
+    * the driver with bit-identical coins (a distributed cascade round is one scheduler
     * barrier; on a sub-500k-edge graph that's ALL it is); the two
     * routes return the same set, asserted by EmbeddingSpec.
     *
@@ -96,9 +90,8 @@ object Influence {
     * truncate lineage.
     */
   def independentCascade(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-                         p: Double, maxRounds: Int = 100, seed: Long = 42,
-                         localMaxEdges: Long = 500000L): DataFrame =
-    localEdges(edges, localMaxEdges) match {
+                         p: Double, maxRounds: Int = 100, seed: Long = 42): DataFrame =
+    DriverRoute.probePairs(edges, "src", "dst", DriverRoute.LoopEdges) match {
       case Some(eArr) =>
         // no distinct(): it costs a shuffle job, and cascadeLocal
         // de-duplicates the seeds on the driver
@@ -176,8 +169,8 @@ object Influence {
     */
   def greedySeeds(spark: SparkSession, edges: DataFrame, k: Int, p: Double,
                   simRounds: Int = 50, candidatePool: Int = 64,
-                  seed: Long = 42, localMaxEdges: Long = 500000L): DataFrame =
-    localEdges(edges, localMaxEdges) match {
+                  seed: Long = 42): DataFrame =
+    DriverRoute.probePairs(edges, "src", "dst", DriverRoute.LoopEdges) match {
       case Some(eArr) => greedySeedsLocal(spark, eArr, k, p, simRounds,
         candidatePool, seed)
       case None =>

@@ -20,22 +20,7 @@ case class LayoutConfig(
     /** exact kNN (compiled broadcast kernel) below this many midpoints,
       * grid-bucketed ANN above — mirrors the reference's
       * brute-force→ANN switch (embedder_cuvs.py:255-272). */
-    exactKnnMaxRef: Long = 200000L,
-    /** broadcast the positions table into gathers below this vertex
-      * count; above it, gathers shuffle-join (positions no longer fit
-      * an executor). The checkpointed positions leaf reports the
-      * default (unbounded) size estimate, so without the explicit hint
-      * Catalyst picks sort-merge even for 500 rows. */
-    broadcastPosMax: Long = 5000000L,
-    /** run the whole loop on the driver below this many edges — the
-      * same size-guarded routing Centralities/dupClusters use. A layout
-      * iteration on a sub-500k-edge graph is millisecond-scale compute;
-      * the distributed loop pays a ~0.5-1 s/iteration scheduler floor
-      * regardless of data, so small graphs (the reference's entire
-      * benchmark envelope) run 10-50× faster driver-side while the
-      * distributed path carries everything larger. Set to 0 to force
-      * the distributed route (tests do). */
-    localMaxEdges: Long = 500000L)
+    exactKnnMaxRef: Long = 200000L)
 
 /** Force-directed layout with edge-crossing repulsion — the reference's
   * engine core (embedder_pytorch.py:595-833) as one declarative
@@ -50,6 +35,13 @@ case class LayoutConfig(
   * failure mode the reference doesn't have, SURVEY.md §7 risk 2).
   */
 object Layout {
+
+  /** Broadcast the positions table into gathers up to this vertex
+    * count; above it, gathers shuffle-join (positions no longer fit an
+    * executor). The checkpointed positions leaf reports the default
+    * (unbounded) size estimate, so without the explicit hint Catalyst
+    * picks sort-merge even for 500 rows. */
+  private val BroadcastPosMax = 5000000L
 
   /** Stable deterministic edge id (hash of endpoints; canonical edges). */
   def withEdgeIds(edges: DataFrame): DataFrame =
@@ -153,8 +145,7 @@ object Layout {
     // (exact, distributed both sides) instead of a quadratic broadcast
     if (qArr.length > kernelMaxQueries) {
       System.err.println(s"[graft] knnExact query side exceeds " +
-        s"$kernelMaxQueries rows; using the distributed join+window " +
-        "plan (consider knnLsh for approximate top-k at this scale)")
+        s"$kernelMaxQueries rows; using the distributed join+window plan")
       return knnJoinWindow(queries, refs, k, dim)
     }
     val bc = spark.sparkContext.broadcast(qArr)
@@ -245,7 +236,7 @@ object Layout {
     * skipped without ever materializing a pair row.
     *
     * Why this shape and not a cell equi-join or MLlib
-    * BucketedRandomProjectionLSH (kept as [[knnLsh]]): both materialize
+    * BucketedRandomProjectionLSH: both materialize
     * every candidate PAIR as a row. Midpoints are heavily skewed (BA
     * hubs pile thousands of midpoints into a cell; iteration 0 runs on
     * eigen-init positions with σ≈1/√n where ALL midpoints share one
@@ -424,33 +415,6 @@ object Layout {
     math.max(1e-6,
       8.0 * math.pow((k + 1).toDouble / math.max(nRefs, 1L), 1.0 / dim))
 
-  /** J3 approximate kNN via MLlib bucketed random-projection LSH — the
-    * cuVS-ANN analog (embedder_cuvs.py:274-382) for large midpoint sets. */
-  def knnLsh(spark: SparkSession, queries: DataFrame, refs: DataFrame, k: Int,
-             dim: Int, seed: Long): DataFrame = {
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.functions.array_to_vector
-    val rv = refs.select(col("eid").as("rid"), col("src").as("rsrc"),
-      col("dst").as("rdst"), col("mid").as("rmid"),
-      array_to_vector(col("mid")).as("features"))
-    val qv = queries.select(col("eid").as("qid"), col("src").as("qsrc"),
-      col("dst").as("qdst"), col("mid").as("qmid"),
-      array_to_vector(col("mid")).as("features"))
-    val lsh = new BucketedRandomProjectionLSH()
-      .setBucketLength(2.0).setNumHashTables(3).setSeed(seed)
-      .setInputCol("features").setOutputCol("hashes")
-    val model = lsh.fit(rv)
-    val joined = model.approxSimilarityJoin(qv, rv, Double.MaxValue, "dist")
-      .select(col("datasetA.qid").as("qid"), col("datasetA.qsrc").as("qsrc"),
-        col("datasetA.qdst").as("qdst"), col("datasetA.qmid").as("qmid"),
-        col("datasetB.rid").as("rid"), col("datasetB.rsrc").as("rsrc"),
-        col("datasetB.rdst").as("rdst"), col("datasetB.rmid").as("rmid"),
-        (col("dist") * col("dist")).as("d2"))
-      .filter(col("qid") =!= col("rid"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("rid").asc)
-    joined.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
-  }
-
   /** A3 intersection repulsion contributions (unaggregated): for each
     * candidate edge pair from kNN that properly intersects (P4/P5/P6),
     * push all 4 endpoints away from the pair centroid with k_inter/d²
@@ -514,7 +478,7 @@ object Layout {
   def step(spark: SparkSession, edgesWithId: DataFrame, pos: DataFrame,
            cfg: LayoutConfig, iter: Int, refCount: Long,
            nVertices: Long = 0L): DataFrame = {
-    val bcast = nVertices <= cfg.broadcastPosMax
+    val bcast = nVertices <= BroadcastPosMax
     val spring = springContrib(edgesWithId, pos, cfg, bcast)
     val contrib =
       if (cfg.kInter == 0.0) spring
@@ -560,7 +524,7 @@ object Layout {
   }
 
   /** L3 driver loop (run_layout, embedder_pytorch.py:808-833).
-    * Routes to [[runLocal]] below `cfg.localMaxEdges` edges (long/long
+    * Routes to [[runLocal]] up to `DriverRoute.LoopEdges` edges (long/long
     * edge schema only — eids must hash identically on both routes);
     * the distributed loop above. Both routes implement the same
     * dynamics; they differ only in floating-point summation order, so
@@ -573,9 +537,9 @@ object Layout {
     // kNN, so a driver run (always exact kNN) would diverge
     // structurally, not just in FP order — parity holds only under the
     // joint cap.
+    import graft.util.DriverRoute.LoopEdges
     val localCap =
-      if (cfg.kInter == 0.0) cfg.localMaxEdges
-      else math.min(cfg.localMaxEdges, cfg.exactKnnMaxRef)
+      if (cfg.kInter == 0.0) LoopEdges else math.min(LoopEdges, cfg.exactKnnMaxRef)
     graft.util.DriverRoute.probePairs(edges, "src", "dst", localCap) match {
       case Some(eArr) => return runLocal(spark, eArr, initial, cfg)
       case None => // over threshold or non-long schema → distributed

@@ -39,18 +39,18 @@ object EigenInit {
 
   /** Entry point: edges must be canonical (src<dst), ids in 0..n-1.
     * Returns positions DataFrame (id: long, pos: array<double> of k).
-    * Up to `driverMaxEdges` edges ([[graft.util.DriverRoute.rowsAtMost]],
+    * Up to `DriverRoute.GraphEdges` edges ([[graft.util.DriverRoute.rowsAtMost]],
     * free on a loaded persisted frame), the pairs come from
     * [[graft.util.DriverRoute.probeIdPairs]] (one job, or none when a
     * persisted frame was probed before).
     */
   def init(spark: SparkSession, edges: DataFrame, n: Long, k: Int,
-           seed: Long = 42, driverMaxEdges: Long = 5000000L): DataFrame = {
+           seed: Long = 42): DataFrame = {
     require(k > 0, "n_components must be positive")
     import graft.util.DriverRoute
     val probed =
-      if (DriverRoute.rowsAtMost(edges, driverMaxEdges))
-        DriverRoute.probeIdPairs(edges, "src", "dst", driverMaxEdges)
+      if (DriverRoute.rowsAtMost(edges, DriverRoute.GraphEdges))
+        DriverRoute.probeIdPairs(edges, "src", "dst", DriverRoute.GraphEdges)
       else None
     if (probed.exists(_.isEmpty)) randomPositions(spark, n, k, seed)
     else {

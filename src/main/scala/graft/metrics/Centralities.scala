@@ -7,7 +7,7 @@ import graft.model.GraphOps
 /** Centrality measures (reference L6: benchmark.py:73-107, all computed
   * via NetworkX on the driver). Spark disposition:
   *
-  *  - Below `broadcastEdgeMax` edges `all` collects ONE driver CSR and
+  *  - Up to `DriverRoute.CentralityEdges` edges `all` collects ONE driver CSR and
   *    returns a local frame of driver arrays: closeness, betweenness and
   *    load from ONE job of per-source BFS ([[sweep]], the standard
   *    distributed-Brandes layout: exact, embarrassingly parallel; the
@@ -131,7 +131,7 @@ object Centralities {
     * iteration as [[pageRankCsr]] (x' = (1-α)/n + α(Σ_{u∈N(v)} x_u/deg_u
     * + dangling/n), stop when L1 err < n·tol), one join+agg per
     * iteration over the symmetrized edges — so the `all()` pagerank is
-    * ROUTE-INVARIANT: a graph crossing broadcastEdgeMax gets the same
+    * ROUTE-INVARIANT: a graph crossing the route cap gets the same
     * values either side, up to float summation order.
     *
     * Dangling handling is analytic, not a per-iteration job: on an
@@ -624,17 +624,17 @@ object Centralities {
     * (s, v, dist) levels, so the marginal cost over closeness is one
     * job. Returned frame is PERSISTED; callers may unpersist. */
   def harmonicDistributed(spark: SparkSession, edges: DataFrame, n: Long,
-                          sourcesCap: Int = 256, seed: Long = 42,
-                          driverEdgeCap: Long = 5000000L): DataFrame = {
+                          sourcesCap: Int = 256, seed: Long = 42): DataFrame = {
     // Size-guarded driver route (r16; the bfsDistances/stronglyConnected
     // precedent): in EXACT mode (n ≤ sourcesCap — every vertex is a
-    // source, no sampling to replay) on a ≤driverEdgeCap-edge graph,
+    // source, no sampling to replay) on a ≤DriverRoute.GraphEdges-edge graph,
     // n driver BFS sweeps replace ~diameter checkpoint jobs of pure
     // scheduler latency. Identical output frame: one row per id in
     // [0, n), h = Σ_{d(s,v)>0} 1/d (unreachable → 0.0), scale 1.
     // Sampled mode (n > sourcesCap) always runs distributed.
     if (n <= sourcesCap) {
-      graft.util.DriverRoute.probeIdPairs(edges, "src", "dst", driverEdgeCap) match {
+      graft.util.DriverRoute.probeIdPairs(edges, "src", "dst",
+        graft.util.DriverRoute.GraphEdges) match {
         case Some(arr) =>
           import scala.collection.mutable
           val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
@@ -862,20 +862,20 @@ object Centralities {
 
   /** All reference centralities (benchmark.py:73-107) in one frame
     * (id, degree_centrality, pagerank, eigenvector, closeness,
-    * betweenness, load), one row per id in [0, n). `broadcastEdgeMax`
-    * caps the edge probe ([[graft.util.DriverRoute.rowsAtMost]], then
+    * betweenness, load), one row per id in [0, n).
+    * `DriverRoute.CentralityEdges` caps the edge probe ([[graft.util.DriverRoute.rowsAtMost]], then
     * [[graft.util.DriverRoute.probeIdPairs]]; no job when a loaded
     * persisted frame was probed before): at or below it every measure
     * is a driver array over ONE CSR (closeness, betweenness and load from
     * the one [[sweep]] job) and the result is a local frame — no join,
     * no shuffle; past it every measure routes to its distributed
     * implementation and the frames are outer-joined on id. */
-  def all(spark: SparkSession, edges: DataFrame, n: Long,
-          broadcastEdgeMax: Long = 10000000L): DataFrame = {
+  def all(spark: SparkSession, edges: DataFrame, n: Long): DataFrame = {
     import graft.util.DriverRoute
+    import DriverRoute.CentralityEdges
     val probed =
-      if (DriverRoute.rowsAtMost(edges, broadcastEdgeMax))
-        DriverRoute.probeIdPairs(edges, "src", "dst", broadcastEdgeMax)
+      if (DriverRoute.rowsAtMost(edges, CentralityEdges))
+        DriverRoute.probeIdPairs(edges, "src", "dst", CentralityEdges)
       else None
     probed match {
       case Some(pairs) =>
@@ -888,7 +888,7 @@ object Centralities {
             "closeness", "betweenness", "load")
       case None =>
         // pageRankDistributed (not GraphX static) so pagerank semantics
-        // are route-invariant across the broadcastEdgeMax threshold —
+        // are route-invariant across the route cap —
         // same nx convergence rule as pageRankCsr on both sides; the
         // three BFS measures share ONE forward BFS + backward pass.
         val (cl, bt, ld) = bfsMeasuresDistributed(spark, edges, n)

@@ -78,9 +78,8 @@ object Correlation {
     * zero-variance guard on the hand-rolled Pearson (built-in corr
     * raises DIVIDE_BY_ZERO under ANSI on zero variance — hit live on a
     * constant PageRank over disjoint K2 components). */
-  def spearmanMany(df: DataFrame, x: String, ys: Seq[String],
-                   localMaxRows: Long = 1000000L): Map[String, Double] =
-    spearmanManyWithN(df, x, ys, localMaxRows)
+  def spearmanMany(df: DataFrame, x: String, ys: Seq[String]): Map[String, Double] =
+    spearmanManyWithN(df, x, ys)
       .map { case (k, v) => k -> v._1 }
 
   /** As [[spearmanMany]] but also returns each pair's non-null row
@@ -88,7 +87,6 @@ object Correlation {
     * deletion (a ρ computed on fewer rows must not borrow the full
     * frame's count). */
   def spearmanManyWithN(df: DataFrame, x: String, ys: Seq[String],
-                        localMaxRows: Long = 1000000L,
                         windowRankMaxRows: Long = 30000000L): Map[String, (Double, Long)] = {
     if (ys.isEmpty) return Map.empty
     val cols = x +: ys
@@ -97,31 +95,11 @@ object Correlation {
     // frame costs two distributed jobs (distinct guard + ranked corr)
     // of pure scheduler latency; ranks are exact halves either way and
     // the Pearson differs only in summation order (~1e-15 — parity
-    // test-pinned). Rows with nulls fall back to the distributed path,
-    // whose groupBy/corr null semantics are the contract.
-    val allNumeric = cached.schema.fields.forall(f => f.dataType match {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case _ => false
-    })
-    if (localMaxRows > 0 && allNumeric) {
-      val capI = math.min(localMaxRows, Int.MaxValue - 1L).toInt
-      val probe = cached.limit(capI + 1).collect()
-      // nulls or NaNs fall back distributed: the groupBy rank's
-      // null/NaN-normalized grouping is the contract there, and the
-      // local primitive == would split NaN ties. Non-numeric types
-      // (string, date, boolean — rankable distributed) never route
-      // local either; the schema check above keeps them out.
-      def unsafe(r: org.apache.spark.sql.Row) = cols.indices.exists { i =>
-        r.isNullAt(i) || (r.get(i) match {
-          case d: java.lang.Double => d.isNaN
-          case f: java.lang.Float => f.isNaN
-          case _ => false
-        })
-      }
-      if (probe.length <= capI && !probe.exists(unsafe))
-        return spearmanManyLocal(probe, ys)
-          .map { case (k, v) => k -> (v, probe.length.toLong) }
-    }
+    // test-pinned).
+    val local = localRows(cached)
+    if (local.isDefined)
+      return spearmanManyLocal(local.get, ys)
+        .map { case (k, v) => k -> (v, local.get.length.toLong) }
     // Distributed route: one branch per pair, each filtered to ITS
     // non-null rows (pairwise deletion), ranked, and reduced to the
     // five Pearson sums; the union of k one-row aggregates collects in
@@ -193,6 +171,30 @@ object Correlation {
       c -> (if (yd.distinct.length <= 1) Double.NaN
             else math.max(-1.0, math.min(1.0, localPearson(rx, localRanks(yd)))))
     }.toMap
+  }
+
+  /** The rows of `cached` for the driver route, when it has at most
+    * `DriverRoute.StatRows` of them, every column is numeric and no
+    * value is null or NaN. Nulls and NaNs fall back distributed: the
+    * groupBy rank's null/NaN-normalized grouping is the contract there,
+    * and the local primitive == would split NaN ties. Non-numeric types
+    * (string, date, boolean — rankable distributed) never route local
+    * either. */
+  private def localRows(cached: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
+    val numeric = cached.schema.fields.forall(f => f.dataType match {
+      case _: org.apache.spark.sql.types.NumericType => true
+      case _ => false
+    })
+    def unsafe(r: org.apache.spark.sql.Row) = (0 until r.length).exists { i =>
+      r.isNullAt(i) || (r.get(i) match {
+        case d: java.lang.Double => d.isNaN
+        case f: java.lang.Float => f.isNaN
+        case _ => false
+      })
+    }
+    if (!numeric) None
+    else graft.util.DriverRoute.probeRows(cached, graft.util.DriverRoute.StatRows)
+      .filterNot(_.exists(unsafe))
   }
 
   // the driver-route kernels, shared by spearmanManyLocal and
@@ -337,39 +339,22 @@ object Correlation {
   /** A7 full Spearman correlation matrix over the given columns
     * (visualization.py:52-90): returns (col_x, col_y, rho) rows.
     * One spearmanMany pass per row-column — O(k) jobs, not O(k²). */
-  def matrix(spark: SparkSession, df: DataFrame, cols: Seq[String],
-             localMaxRows: Long = 1000000L): DataFrame = {
+  def matrix(spark: SparkSession, df: DataFrame, cols: Seq[String]): DataFrame = {
     import spark.implicits._
     // Driver route below the row cap (guide §1.2/§5 driver latency —
     // the k-column loop below costs 2k jobs of scheduler latency on a
     // fixture-scale frame): ONE collect serves every pair, through the
     // IDENTICAL rank/pearson kernels spearmanMany's driver route uses,
     // so each (a, b) value is the same double the per-row-column calls
-    // produce. Same routing guards as spearmanManyWithN: all-numeric
-    // schema, no nulls/NaNs, under the cap — anything else falls back
-    // to the per-row-column loop whose groupBy semantics are the
-    // contract.
-    val cached = df.select(cols.map(col): _*)
-    val numeric = cached.schema.fields.forall(f => f.dataType match {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case _ => false
-    })
-    if (localMaxRows > 0 && numeric) {
-      val capI = math.min(localMaxRows, Int.MaxValue - 1L).toInt
-      val probe = cached.limit(capI + 1).collect()
-      def unsafe(r: org.apache.spark.sql.Row) = cols.indices.exists { i =>
-        r.isNullAt(i) || (r.get(i) match {
-          case d: java.lang.Double => d.isNaN
-          case f: java.lang.Float => f.isNaN
-          case _ => false
-        })
-      }
-      if (probe.length <= capI && !probe.exists(unsafe))
-        return matrixLocal(probe, cols).toDF("col_x", "col_y", "rho")
-    }
+    // produce. Same routing guards as spearmanManyWithN ([[localRows]]):
+    // anything else falls back to the per-row-column loop whose groupBy
+    // semantics are the contract.
+    val local = localRows(df.select(cols.map(col): _*))
+    if (local.isDefined)
+      return matrixLocal(local.get, cols).toDF("col_x", "col_y", "rho")
     val rows = cols.flatMap { a =>
       val others = cols.filterNot(_ == a)
-      val rhos = spearmanMany(df, a, others, localMaxRows)
+      val rhos = spearmanMany(df, a, others)
       val self = if (isConstant(df, a)) Double.NaN else 1.0
       (a, a, self) +: others.map(b => (a, b, rhos(b)))
     }

@@ -499,16 +499,15 @@ object GraphFeatures {
     * single-frame variant a feature pipeline joins FROM.)
     */
   def bfsDistances(spark: org.apache.spark.sql.SparkSession, edges: DataFrame,
-                   sources: Seq[Long], maxIter: Int = 200,
-                   driverEdgeCap: Long = 5000000L): DataFrame = {
+                   sources: Seq[Long], maxIter: Int = 200): DataFrame = {
     require(sources.nonEmpty, "bfsDistances needs at least one source")
     import spark.implicits._
     // Size-guarded driver route (r16; the stronglyConnected/mstBoruvka
     // precedent, guide §5 driver latency): the distributed expansion
     // pays one checkpoint job per ROUND (= source-set eccentricity),
-    // which on a small graph is the whole cost. Up to `driverEdgeCap`
-    // edges (collect bounded by limit(cap+1)) a driver level-BFS emits
-    // the identical (id, dist) frame — sources at 0 (present in the
+    // which on a small graph is the whole cost. Up to
+    // `DriverRoute.GraphEdges` edges a driver level-BFS emits the
+    // identical (id, dist) frame — sources at 0 (present in the
     // graph or not, as the distributed init does), levels capped at
     // maxIter; above the cap the distributed loop runs unchanged (the
     // 100 TB path; this Seq-sources form already implies driver-known
@@ -516,7 +515,7 @@ object GraphFeatures {
     graft.util.DriverRoute.probePairs(
       edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst")),
-      "src", "dst", driverEdgeCap) match {
+      "src", "dst", graft.util.DriverRoute.GraphEdges) match {
       case Some(arr) =>
         import scala.collection.mutable
         val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
@@ -759,8 +758,7 @@ object GraphFeatures {
     * — they don't change components).
     */
   def stronglyConnected(spark: org.apache.spark.sql.SparkSession,
-                        edges: DataFrame, maxIter: Int = 50,
-                        driverEdgeCap: Long = 5000000L): DataFrame = {
+                        edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst")).distinct()
     // Size-guarded driver route (r16; the mstBoruvka contraction
@@ -768,12 +766,12 @@ object GraphFeatures {
     // forward/backward peel costs tens of checkpoint jobs of pure
     // scheduler latency, which on a fixture-scale graph IS the whole
     // query (q102: a 13-edge graph paid ~6 s of wall). Up to
-    // `driverEdgeCap` canonical arcs (collect bounded by limit(cap+1);
-    // 5M pairs ≈ 80 MB), an iterative driver Tarjan emits the
-    // identical (id, min-member component) labeling; above the cap the
-    // distributed peel runs unchanged — the 100 TB path. Spec-pinned
-    // equal to the forced-distributed route.
-    graft.util.DriverRoute.probePairs(e0, "src", "dst", driverEdgeCap) match {
+    // `DriverRoute.GraphEdges` canonical arcs, an iterative driver
+    // Tarjan emits the identical (id, min-member component) labeling;
+    // above the cap the distributed peel runs unchanged — the 100 TB
+    // path. Spec-pinned equal to the forced-distributed route.
+    graft.util.DriverRoute.probePairs(e0, "src", "dst",
+      graft.util.DriverRoute.GraphEdges) match {
       case Some(arr) =>
         import spark.implicits._
         return sccTarjanLocal(arr).toSeq.sortBy(_._1)
@@ -966,13 +964,12 @@ object GraphFeatures {
     * collects, the EigenInit contract).
     */
   def pseudoDiameter(spark: org.apache.spark.sql.SparkSession,
-                     edges: DataFrame, start: Long,
-                     driverEdgeCap: Long = 5000000L): DataFrame = {
-    val sweep1 = bfsDistances(spark, edges, Seq(start), driverEdgeCap = driverEdgeCap)
+                     edges: DataFrame, start: Long): DataFrame = {
+    val sweep1 = bfsDistances(spark, edges, Seq(start))
     val peak = sweep1.orderBy(col("dist").desc, col("id").desc)
       .limit(1).collect()(0)
     val (peripheral, ecc1) = (peak.getLong(0), peak.getLong(1))
-    val sweep2 = bfsDistances(spark, edges, Seq(peripheral), driverEdgeCap = driverEdgeCap)
+    val sweep2 = bfsDistances(spark, edges, Seq(peripheral))
     sweep2.agg(max(col("dist")).as("diameter_lb"),
         count(lit(1)).as("n_reachable"))
       .select(lit(start).as("start"), lit(ecc1).as("ecc_start"),
@@ -1002,8 +999,7 @@ object GraphFeatures {
     * that keeps the accumulated set a forest.
     */
   def mstBoruvka(spark: org.apache.spark.sql.SparkSession,
-                 edges: DataFrame, maxRounds: Int = 40,
-                 contractCap: Long = 5000000L): DataFrame = {
+                 edges: DataFrame, maxRounds: Int = 40): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val e0 = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1043,13 +1039,13 @@ object GraphFeatures {
           // — small enough that a driver union-find (min-label roots,
           // the exact labeling connectedComponentsDF produces) replaces
           // the nested distributed CC loop's ~10 jobs per round with
-          // one bounded collect. Above `contractCap` pairs the
+          // one bounded collect. Above `DriverRoute.GraphEdges` pairs the
           // distributed CC runs unchanged (the 100 TB early rounds).
           val compEdges = sel.select(
             least(col("_cs"), col("_cd")).as("src"),
             greatest(col("_cs"), col("_cd")).as("dst")).distinct()
           val remap = graft.util.DriverRoute
-            .probePairs(compEdges, "src", "dst", contractCap) match {
+            .probePairs(compEdges, "src", "dst", graft.util.DriverRoute.GraphEdges) match {
             case Some(arr) =>
               val parent = scala.collection.mutable.HashMap.empty[Long, Long]
               def find(x: Long): Long = {

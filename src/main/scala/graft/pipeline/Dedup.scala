@@ -727,8 +727,8 @@ object Dedup {
     * cluster. Returns one row per document that appears in any pair:
     * (doc_id, keep_id, keep); documents in no pair are implicitly kept.
     *
-    * Scale: input is the PAIR list (O(dups)), never the corpus. Below
-    * `driverMaxPairs` the pairs union-find on the driver (GraphX CC
+    * Scale: input is the PAIR list (O(dups)), never the corpus. Up to
+    * `DriverRoute.DupPairs` the pairs union-find on the driver (GraphX CC
     * costs ~10 s of scheduling for a job a 1e6-row union-find finishes
     * in milliseconds); above it, GraphX connectedComponents — iterative
     * label propagation whose round count is the dup clusters' tiny
@@ -736,13 +736,13 @@ object Dedup {
     * with the min doc_id of its component, so the output is
     * route-invariant (asserted by PipelineSpec). */
   def dupClusters(spark: org.apache.spark.sql.SparkSession,
-                  pairs: DataFrame,
-                  driverMaxPairs: Long = 1000000L): DataFrame = {
+                  pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
     // single limit-probe (util/DriverRoute): one execution of the
     // (possibly expensive) pair pipeline decides the route AND supplies
     // the driver data — a count() + collect() pair would run it twice
-    val probed = graft.util.DriverRoute.probePairs(p, "id_a", "id_b", driverMaxPairs)
+    val probed = graft.util.DriverRoute.probePairs(p, "id_a", "id_b",
+      graft.util.DriverRoute.DupPairs)
     if (probed.isDefined) {
       val edges = probed.get
       val parent = scala.collection.mutable.Map.empty[Long, Long]

@@ -56,7 +56,7 @@ object QualityClassifier {
   /** Full-batch GD on the logistic loss. Returns (weights with bias
     * LAST, per-iteration mean log-loss — index 0 is the zero-model
     * loss). Two routes, same arithmetic per row (left-to-right dot,
-    * Math.exp/log, the 1e-12 clamp): ≤ `driverMaxRows` the rows
+    * Math.exp/log, the 1e-12 clamp): ≤ `DriverRoute.ClassifierRows` the rows
     * collect once and the loop runs on the driver (GD is sequential —
     * the distributed loop pays `iters` × job-scheduling latency for
     * microseconds of math at audit scale); above it, one
@@ -68,8 +68,7 @@ object QualityClassifier {
     * order (sequential vs per-partition partial); PipelineSpec pins
     * their parity at 1e-9. */
   def train(featurized: DataFrame, iters: Int = 30,
-            lr: Double = 1.0,
-            driverMaxRows: Long = 100000L): (Array[Double], Array[Double]) = {
+            lr: Double = 1.0): (Array[Double], Array[Double]) = {
     val d = featureCols.length
     val w = new Array[Double](d + 1) // zeros; bias last
     val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -80,40 +79,37 @@ object QualityClassifier {
     // dual route (the dupClusters / centralities discipline): GD is
     // inherently sequential, so at audit scale the distributed loop
     // pays `iters` × per-job scheduling latency for microseconds of
-    // arithmetic — below `driverMaxRows` the (features, label) rows
+    // arithmetic — below the row cap the (features, label) rows
     // (d+1 doubles each) collect once and the SAME loop runs on the
     // driver; above it, one map-side-combined aggregate job per
     // iteration, the only shape that scans a corpus-sized frame.
-    if (driverMaxRows > 0) {
-      val probe = ds.limit(math.min(driverMaxRows, Int.MaxValue - 2L).toInt + 1)
-        .collect()
-      if (probe.length <= driverMaxRows) {
-        // a canonical row order: the loop's float sums then do not
-        // depend on how the rows were partitioned
-        val rows = probe.sorted(rowOrder)
-        val n = rows.length
-        require(n > 0, "train: empty featurized frame")
-        for (_ <- 0 to iters) {
-          var lossSum = 0.0
-          val gSum = new Array[Double](d + 1)
-          rows.foreach { case (f, y) =>
-            var dot = 0.0
-            var j = 0
-            while (j < d) { dot += w(j) * f(j); j += 1 }
-            dot += w(d)
-            val p = 1.0 / (1.0 + math.exp(-dot))
-            val pc = math.min(math.max(p, 1e-12), 1.0 - 1e-12)
-            lossSum += -(y * math.log(pc) + (1.0 - y) * math.log(1.0 - pc))
-            val err = p - y
-            var k = 0
-            while (k < d) { gSum(k) += err * f(k); k += 1 }
-            gSum(d) += err
-          }
-          losses += lossSum / n
-          for (j <- 0 to d) w(j) -= lr * gSum(j) / n
+    val probe = graft.util.DriverRoute.probeRows(ds, graft.util.DriverRoute.ClassifierRows)
+    if (probe.isDefined) {
+      // a canonical row order: the loop's float sums then do not
+      // depend on how the rows were partitioned
+      val rows = probe.get.sorted(rowOrder)
+      val n = rows.length
+      require(n > 0, "train: empty featurized frame")
+      for (_ <- 0 to iters) {
+        var lossSum = 0.0
+        val gSum = new Array[Double](d + 1)
+        rows.foreach { case (f, y) =>
+          var dot = 0.0
+          var j = 0
+          while (j < d) { dot += w(j) * f(j); j += 1 }
+          dot += w(d)
+          val p = 1.0 / (1.0 + math.exp(-dot))
+          val pc = math.min(math.max(p, 1e-12), 1.0 - 1e-12)
+          lossSum += -(y * math.log(pc) + (1.0 - y) * math.log(1.0 - pc))
+          val err = p - y
+          var k = 0
+          while (k < d) { gSum(k) += err * f(k); k += 1 }
+          gSum(d) += err
         }
-        return (w, losses.toArray)
+        losses += lossSum / n
+        for (j <- 0 to d) w(j) -= lr * gSum(j) / n
       }
+      return (w, losses.toArray)
     }
     val cached = ds
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -281,6 +281,7 @@ object GraphQueries {
       val mat = Correlation.matrix(s, joined, cols).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
       joined.unpersist()
+      em.close()
       val symOk = cols.forall(a => cols.forall(b =>
         math.abs(mat((a, b)) - mat((b, a))) < 1e-9))
       val diagOk = cols.forall(a => mat((a, a)) == 1.0)

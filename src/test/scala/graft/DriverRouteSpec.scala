@@ -23,6 +23,10 @@ class DriverRouteSpec extends SparkSpec {
   private def probe(df: DataFrame, cap: Long) =
     countingJobs(DriverRoute.probePairs(df, "src", "dst", cap))
 
+  /** Whether `df` takes the driver route. */
+  private def routed(df: DataFrame): Boolean =
+    DriverRoute.probePairs(df, "src", "dst", 100).isDefined
+
   test("probePairs: pairs sorted by (src, dst), persisted or not") {
     val df = shuffled(40)
     val want = df.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -117,6 +121,60 @@ class DriverRouteSpec extends SparkSpec {
       assert(bytes.get < 100000L, s"${bytes.get} result bytes")
       assert(countingJobs(DriverRoute.rowsAtMost(df, rows))._1)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("distributed: every probe of a persisted frame is None with no job and no memo entry") {
+    val df = shuffled(30).persist()
+    try {
+      df.count()
+      val before = DriverRoute.memoKeys.toSet
+      val (answers, jobs) = countingJobs(DriverRoute.distributed(spark) {
+        Seq(DriverRoute.probePairs(df, "src", "dst", 100).isEmpty,
+          DriverRoute.probeIdPairs(df, "src", "dst", 100).isEmpty,
+          DriverRoute.probeRows(df, 100).isEmpty,
+          !DriverRoute.rowsAtMost(df, 100))
+      })
+      assert(answers.forall(identity) && jobs == 0)
+      assert(DriverRoute.memoKeys.toSet == before)
+      // a memoized frame is None too, and keeps its entry for later
+      assert(probe(df, 100)._1.isDefined)
+      val (memoized, jobsM) = countingJobs(DriverRoute.distributed(spark)(
+        DriverRoute.probePairs(df, "src", "dst", 100)))
+      assert(memoized.isEmpty && jobsM == 0)
+      assert(probe(df, 100)._2 == 0)
+    } finally df.unpersist()
+  }
+
+  test("distributed: the scope reaches both arms of Concurrent.all") {
+    val df = shuffled(20)
+    val arms = DriverRoute.distributed(spark)(
+      graft.util.Concurrent.all(spark)(() => routed(df), () => routed(df)))
+    assert(arms == Seq(false, false))
+    assert(graft.util.Concurrent.all(spark)(() => routed(df), () => routed(df)) == Seq(true, true))
+  }
+
+  test("distributed: restored after its body throws; nested scopes restore the outer one") {
+    val df = shuffled(20)
+    intercept[IllegalStateException](
+      DriverRoute.distributed(spark)(throw new IllegalStateException("body")))
+    assert(routed(df))
+    DriverRoute.distributed(spark) {
+      assert(!DriverRoute.distributed(spark)(routed(df)))
+      assert(!routed(df))
+    }
+    assert(routed(df))
+  }
+
+  test("GraphEm.close releases the edges from the cache and the memo") {
+    val em = graft.api.GraphEm(spark, Generators.roadNetwork(spark, 4, 4),
+      LayoutConfig(nComponents = 2, LMin = 1.0, numIterations = 2, sampleSize = 8,
+        nNeighbors = 3, seed = 5))
+    em.runLayout()
+    val buffers = CacheBridge.cachedBuffers(em.edges).get
+    assert(DriverRoute.memoKeys.contains(buffers))
+    em.close()
+    assert(CacheBridge.cachedBuffers(em.edges).isEmpty)
+    assert(!DriverRoute.memoKeys.contains(buffers))
   }
 
   test("paper pipeline on one persisted frame runs at most 6 jobs") {

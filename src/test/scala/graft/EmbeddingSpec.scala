@@ -53,11 +53,10 @@ class EmbeddingSpec extends SparkSpec {
   }
 
   test("distributed eigen path agrees with the driver path up to rotation") {
-    // force the distributed backend (driverMaxEdges=0) and compare
+    // the distributed backend against the driver one, on
     // rotation-invariant row norms of the 2-dim embedding subspace.
     val g = Generators.roadNetwork(spark, 4, 4)
-    val drv = EigenInit.init(spark, g, 16, 2, seed = 9)
-    val dist = EigenInit.init(spark, g, 16, 2, seed = 9, driverMaxEdges = 0)
+    val (drv, dist) = bothRoutes(EigenInit.init(spark, g, 16, 2, seed = 9))
     assert(dist.count() == 16)
     assert(finite(dist))
     val n1 = drv.select(col("id"), VecOps.norm(col("pos")).as("r")).collect()
@@ -93,18 +92,6 @@ class EmbeddingSpec extends SparkSpec {
       .select("qid", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaJoin == gset)
     grid.unpersist(); mids.unpersist()
-  }
-
-  test("LSH kNN path returns bounded neighbor lists that overlap exact kNN") {
-    val g = Layout.withEdgeIds(Generators.erdosRenyi(spark, 60, 0.1, 3))
-    val pos = EigenInit.init(spark, g.select("src", "dst"), 60, 3, seed = 3)
-    val mids = Layout.midpoints(g, pos).cache()
-    val exact = Layout.knnExact(mids, mids, 5, dim = 3).select("qid", "rid")
-    val lsh = Layout.knnLsh(spark, mids, mids, 5, 3, seed = 3).select("qid", "rid")
-    assert(lsh.groupBy("qid").count().filter(col("count") > 5).isEmpty)
-    val overlap = lsh.join(exact, Seq("qid", "rid"), "left_semi").count()
-    assert(overlap > 0, "LSH found nothing the exact path found")
-    mids.unpersist()
   }
 
   test("random fallback positions: shape and determinism") {
@@ -171,8 +158,7 @@ class EmbeddingSpec extends SparkSpec {
     val cfg = LayoutConfig(nComponents = 2, LMin = 1.0, numIterations = 3,
       sampleSize = 16, nNeighbors = 5, seed = 7)
     val init = EigenInit.init(spark, g, 25, 2, seed = 7)
-    val local = Layout.run(spark, g, init, cfg)
-    val dist = Layout.run(spark, g, init, cfg.copy(localMaxEdges = 0))
+    val (local, dist) = bothRoutes(Layout.run(spark, g, init, cfg))
     val joined = local.select(col("id"), col("pos").as("pl"))
       .join(dist.select(col("id"), col("pos").as("pd")), "id")
     assert(joined.count() == 25)
@@ -226,33 +212,21 @@ class EmbeddingSpec extends SparkSpec {
     // agree EXACTLY, not statistically.
     val g = Generators.erdosRenyi(spark, 80, 0.06, 11)
     val seeds = Seq(0L, 3L, 7L).toDF("id")
-    val local = Influence.independentCascade(spark, g, seeds, 0.3,
-      maxRounds = 30, seed = 11)
-    val dist = Influence.independentCascade(spark, g, seeds, 0.3,
-      maxRounds = 30, seed = 11, localMaxEdges = 0)
+    val (local, dist) = bothRoutes(Influence.independentCascade(spark, g, seeds, 0.3,
+      maxRounds = 30, seed = 11))
     assert(local.count() > 3, "cascade should spread beyond the seeds")
     assert(local.exceptAll(dist).isEmpty && dist.exceptAll(local).isEmpty)
 
-    val gl = Influence.greedySeeds(spark, g, k = 3, p = 0.2, simRounds = 10,
-      candidatePool = 8, seed = 11)
-    val gd = Influence.greedySeeds(spark, g, k = 3, p = 0.2, simRounds = 10,
-      candidatePool = 8, seed = 11, localMaxEdges = 0)
+    val (gl, gd) = bothRoutes(Influence.greedySeeds(spark, g, k = 3, p = 0.2,
+      simRounds = 10, candidatePool = 8, seed = 11))
     assert(gl.collect().map(_.getLong(0)).toSeq.sorted ==
       gd.collect().map(_.getLong(0)).toSeq.sorted)
-
-    // over-threshold fall-through: a cap smaller than the edge count
-    // must overflow the limit probe and route distributed — same result
-    val over = Influence.independentCascade(spark, g, seeds, 0.3,
-      maxRounds = 30, seed = 11, localMaxEdges = 2)
-    assert(over.exceptAll(dist).isEmpty && dist.exceptAll(over).isEmpty)
   }
 
   test("greedy seeds stop at pool exhaustion (k > pool) on both routes") {
     val g = Generators.roadNetwork(spark, 3, 3)
-    val local = Influence.greedySeeds(spark, g, k = 10, p = 0.3,
-      simRounds = 5, candidatePool = 3, seed = 2)
-    val dist = Influence.greedySeeds(spark, g, k = 10, p = 0.3,
-      simRounds = 5, candidatePool = 3, seed = 2, localMaxEdges = 0)
+    val (local, dist) = bothRoutes(Influence.greedySeeds(spark, g, k = 10, p = 0.3,
+      simRounds = 5, candidatePool = 3, seed = 2))
     assert(local.count() == 3, "should return the pool, not crash")
     assert(local.collect().map(_.getLong(0)).toSet ==
       dist.collect().map(_.getLong(0)).toSet)
@@ -291,7 +265,7 @@ class EmbeddingSpec extends SparkSpec {
 
   test("ANN layout branch: full distributed loop, quality tracks the exact run") {
     // exactKnnMaxRef=0 forces EVERY iteration's candidate search through
-    // the grid-ANN path inside the distributed loop (localMaxEdges=0) —
+    // the grid-ANN path inside the distributed loop (DriverRoute.distributed) —
     // the exact configuration the 100k+-midpoint regime runs, end to end.
     // Quality metric: the reference's own exact↔ANN trade, ρ(radius,
     // degree) of the LSH run vs the exact-kNN run on the same graph.
@@ -301,14 +275,18 @@ class EmbeddingSpec extends SparkSpec {
     val init = EigenInit.init(spark, g, 400, 3, seed = 42).cache()
     init.count()
     val base = LayoutConfig(nComponents = 3, LMin = 4.0, numIterations = 8,
-      sampleSize = 128, nNeighbors = 10, seed = 42, localMaxEdges = 0)
+      sampleSize = 128, nNeighbors = 10, seed = 42)
     def rhoOf(pos: org.apache.spark.sql.DataFrame): Double = {
       val radii = pos.select(col("id"), VecOps.norm(col("pos")).as("radius"))
       Correlation.spearman(
         radii.join(graft.model.GraphOps.degrees(g), "id"), "radius", "degree")
     }
-    val rhoExact = rhoOf(Layout.run(spark, g, init, base))
-    val rhoLsh = rhoOf(Layout.run(spark, g, init, base.copy(exactKnnMaxRef = 0)))
+    val (exact, ann) = graft.util.DriverRoute.distributed(spark) {
+      (Layout.run(spark, g, init, base),
+        Layout.run(spark, g, init, base.copy(exactKnnMaxRef = 0)))
+    }
+    val rhoExact = rhoOf(exact)
+    val rhoLsh = rhoOf(ann)
     assert(!rhoLsh.isNaN && !rhoExact.isNaN)
     assert(math.abs(rhoLsh - rhoExact) < 0.25,
       s"LSH layout quality drifted: rho_lsh=$rhoLsh vs rho_exact=$rhoExact")

@@ -210,14 +210,11 @@ class GraphFeaturesSpec extends SparkSpec {
         .filterNot(dist.contains)
       frontier.foreach(dist(_) = round)
     }
-    val got = GraphFeatures.bfsDistances(spark, g, Seq(0L, 1L)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // route parity: the distributed expansion (the 100 TB path) emits
+    // the identical frame as the size-guarded driver route
+    val (got, distRoute) = bothRoutes(GraphFeatures.bfsDistances(spark, g, Seq(0L, 1L))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(got == dist.toMap)
-    // route parity: the distributed expansion (cap 0, the 100 TB path)
-    // emits the identical frame as the size-guarded driver route above
-    val distRoute = GraphFeatures.bfsDistances(spark, g, Seq(0L, 1L),
-      driverEdgeCap = 0).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(distRoute == dist.toMap)
   }
 
@@ -295,12 +292,10 @@ class GraphFeaturesSpec extends SparkSpec {
       val base = Generators.erdosRenyi(spark, 80, p, 31)
       val g = base.union(base.filter((col("src") + col("dst")) % 3 === 0)
         .select(col("dst").as("src"), col("src").as("dst")))
-      // default cap → the driver-Tarjan route
-      val got = GraphFeatures.stronglyConnected(spark, g).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // cap 0 → the distributed forward/backward peel (the 100 TB path)
-      val dist = GraphFeatures.stronglyConnected(spark, g, driverEdgeCap = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // the driver-Tarjan route, then the distributed forward/backward
+      // peel (the 100 TB path)
+      val (got, dist) = bothRoutes(GraphFeatures.stronglyConnected(spark, g)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       val rdd = g.rdd.map(r => GxEdge(r.getLong(0), r.getLong(1), 1))
       val want = GxGraph.fromEdges(rdd, 0).stronglyConnectedComponents(20)
         .vertices.collect().toMap
@@ -365,18 +360,16 @@ class GraphFeaturesSpec extends SparkSpec {
   }
 
   test("mstBoruvka: driver-routed contraction equals the distributed CC route") {
-    // contractCap=0 forces every round's contraction through the
-    // distributed connectedComponentsDF path (the 100 TB early-round
+    // the distributed route sends every round's contraction through
+    // the distributed connectedComponentsDF path (the 100 TB early-round
     // posture); the default routes the small component-pair frame to
     // the driver union-find — the MST must be identical either way
     val g = Generators.erdosRenyi(spark, 90, 0.06, 5L)
       .withColumn("w", (xxhash64(col("src"), col("dst")) % 99991)
         .cast("double") / 99991.0)
-    def mstSet(cap: Long) =
-      GraphFeatures.mstBoruvka(spark, g, contractCap = cap).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val routed = mstSet(5000000L)
-    assert(routed == mstSet(0L))
+    val (routed, distributed) = bothRoutes(GraphFeatures.mstBoruvka(spark, g).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    assert(routed == distributed)
     val es = g.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(routed == kruskal(es))
   }

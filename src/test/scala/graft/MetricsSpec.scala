@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.gen.Generators
 import graft.model.GraphOps
 import graft.metrics.{Centralities, Correlation}
+import graft.util.DriverRoute
 
 /** Centrality and correlation invariants against closed-form values on
   * canonical small graphs (the reference validates the same measures
@@ -138,9 +139,7 @@ class MetricsSpec extends SparkSpec {
     val df = Seq((1.0, 2.0, 9.0, 5.0), (2.0, 2.0, 7.0, 5.0),
       (3.0, 4.0, 7.0, 5.0), (4.0, 1.0, 3.0, 5.0), (5.0, 8.0, 1.0, 5.0))
       .toDF("x", "a", "b", "c")
-    val local = Correlation.spearmanMany(df, "x", Seq("a", "b", "c"))
-    val dist = Correlation.spearmanMany(df, "x", Seq("a", "b", "c"),
-      localMaxRows = 0)
+    val (local, dist) = bothRoutes(Correlation.spearmanMany(df, "x", Seq("a", "b", "c")))
     for (c <- Seq("a", "b")) {
       assert(math.abs(local(c) - dist(c)) < 1e-12,
         s"$c: ${local(c)} vs ${dist(c)}")
@@ -171,7 +170,7 @@ class MetricsSpec extends SparkSpec {
         .select(col("x"), col("a").as("v")), "x", "v")
     assert(math.abs(expA - expAListwise) > 1e-9,
       "fixture too weak: pairwise == listwise")
-    val dist = Correlation.spearmanMany(df, "x", Seq("a", "b"), localMaxRows = 0)
+    val dist = DriverRoute.distributed(spark)(Correlation.spearmanMany(df, "x", Seq("a", "b")))
     assert(math.abs(dist("a") - expA) < 1e-12, s"a: ${dist("a")} vs $expA")
     assert(math.abs(dist("b") - expB) < 1e-12, s"b: ${dist("b")} vs $expB")
     // nulls in the probe fall back distributed on the DEFAULT route too
@@ -189,11 +188,10 @@ class MetricsSpec extends SparkSpec {
     df.collect().map(r => r.getLong(0) -> r).toMap
 
   /** The broadcast route of `all` (one source sweep) against the
-    * distributed route (broadcastEdgeMax 0) on the three BFS measures;
-    * every id in [0, n) has a row on both. */
+    * distributed route on the three BFS measures; every id in [0, n)
+    * has a row on both. */
   private def assertBfsRouteParity(edges: DataFrame, n: Int): Unit = {
-    val dist = byId(Centralities.all(spark, edges, n, broadcastEdgeMax = 0))
-    val csr = byId(Centralities.all(spark, edges, n))
+    val (csr, dist) = bothRoutes(byId(Centralities.all(spark, edges, n)))
     assert(csr.keySet == (0L until n).toSet && dist.keySet == csr.keySet)
     for (id <- 0L until n; c <- Seq("closeness", "betweenness", "load"))
       assert(math.abs(dist(id).getAs[Double](c) - csr(id).getAs[Double](c)) < 1e-9,
@@ -211,11 +209,11 @@ class MetricsSpec extends SparkSpec {
     val df = (1 to 200).map { i =>
       (i % 37 * 1.5 - 20, (i % 11).toDouble, if (i % 13 == 0) None else Some((i % 7).toDouble))
     }.toDF("x", "a", "b")
-    val window = Correlation.spearmanManyWithN(df, "x", Seq("a", "b"),
-      localMaxRows = 0)
-    // windowRankMaxRows=0 forces the distributed prefix-sum rank
-    val prefix = Correlation.spearmanManyWithN(df, "x", Seq("a", "b"),
-      localMaxRows = 0, windowRankMaxRows = 0)
+    val (window, prefix) = DriverRoute.distributed(spark) {
+      (Correlation.spearmanManyWithN(df, "x", Seq("a", "b")),
+        // windowRankMaxRows=0 forces the distributed prefix-sum rank
+        Correlation.spearmanManyWithN(df, "x", Seq("a", "b"), windowRankMaxRows = 0))
+    }
     for (c <- Seq("a", "b")) {
       assert(window(c)._2 == prefix(c)._2, s"$c n mismatch")
       assert(math.abs(window(c)._1 - prefix(c)._1) < 1e-12,
@@ -321,11 +319,10 @@ class MetricsSpec extends SparkSpec {
     assertBfsRouteParity(Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 4L),
       (4L, 5L)).toDF("src", "dst"), 7)
     assertBfsRouteParity(Generators.barabasiAlbert(spark, 60, 2, 7), 60)
-    // forces every measure through the distributed implementations
-    val all = byId(Centralities.all(spark, loadFixture, 6, broadcastEdgeMax = 0))
+    // every measure through the distributed implementations
+    val (csrAll, all) = bothRoutes(byId(Centralities.all(spark, loadFixture, 6)))
     def colOf(id: Long, c: String) =
       all(id).getAs[Double](c)
-    val csrAll = byId(Centralities.all(spark, loadFixture, 6))
     // eigenvector: same direction up to tolerance (same power iteration,
     // distributed matvec)
     for (id <- 0L until 6L)
@@ -343,10 +340,8 @@ class MetricsSpec extends SparkSpec {
     // isolated-vertex (dangling) handling matches the CSR recurrence:
     // a 2-path plus an isolated vertex
     val dangling = Seq((0L, 1L)).toDF("src", "dst")
-    val dcsr = Centralities.all(spark, dangling, 3).collect()
-      .map(r => r.getLong(0) -> r.getAs[Double]("pagerank")).toMap
-    val ddist = Centralities.all(spark, dangling, 3, broadcastEdgeMax = 0)
-      .collect().map(r => r.getLong(0) -> r.getAs[Double]("pagerank")).toMap
+    val (dcsr, ddist) = bothRoutes(Centralities.all(spark, dangling, 3).collect()
+      .map(r => r.getLong(0) -> r.getAs[Double]("pagerank")).toMap)
     for (id <- 0L until 3L)
       assert(math.abs(dcsr(id) - ddist(id)) < 1e-9,
         s"dangling pagerank($id): ${ddist(id)} vs ${dcsr(id)}")
@@ -506,11 +501,10 @@ class MetricsSpec extends SparkSpec {
     val h2 = Centralities.harmonicDistributed(spark, two, n = 4)
     assert(h2.collect().forall(_.getDouble(1) == 1.0))
     h2.unpersist()
-    // route parity: the distributed multi-source BFS (cap 0, the
-    // 100 TB path) emits the identical frame as the size-guarded
-    // driver route above (exact dyadic values on the path fixture)
-    val hd = Centralities.harmonicDistributed(spark, path, n = 3,
-      driverEdgeCap = 0)
+    // route parity: the distributed multi-source BFS (the 100 TB
+    // path) emits the identical frame as the size-guarded driver
+    // route above (exact dyadic values on the path fixture)
+    val hd = DriverRoute.distributed(spark)(Centralities.harmonicDistributed(spark, path, n = 3))
     val md = hd.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(md == Map(0L -> 1.5, 1L -> 2.0, 2L -> 1.5))
     hd.unpersist()

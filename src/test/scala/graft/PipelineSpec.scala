@@ -252,12 +252,10 @@ class PipelineSpec extends SparkSpec {
     val expected = Set(
       (10L, 10L, true), (20L, 10L, false), (30L, 10L, false),
       (50L, 50L, true), (60L, 50L, false))
-    val out = Dedup.dupClusters(spark, pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    // the driver union-find, then the GraphX route — output route-invariant
+    val (out, distributed) = bothRoutes(Dedup.dupClusters(spark, pairs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet)
     assert(out == expected)
-    // driverMaxPairs=0 forces the GraphX route — output route-invariant
-    val distributed = Dedup.dupClusters(spark, pairs, driverMaxPairs = 0).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(distributed == expected)
   }
 
@@ -1398,9 +1396,8 @@ class PipelineSpec extends SparkSpec {
         (100L + i, (0 until 25).map(j => s"w${i}_$j").mkString(" "))))
       .toDF("doc_id", "text")
     val feat = QualityClassifier.featurize(plant, col("repetition") < 0.5)
-    val (wD, lD) = QualityClassifier.train(feat, iters = 10)
-    val (wX, lX) = QualityClassifier.train(feat, iters = 10,
-      driverMaxRows = 0L) // force the distributed aggregate route
+    // the driver loop, then the distributed aggregate route
+    val ((wD, lD), (wX, lX)) = bothRoutes(QualityClassifier.train(feat, iters = 10))
     assert(wD.length == wX.length && lD.length == lX.length)
     wD.zip(wX).foreach { case (a, b) =>
       assert(math.abs(a - b) < 1e-9, s"weight route divergence: $a vs $b") }

@@ -53,6 +53,13 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
 
+  /** `body` at the default route caps, then inside
+    * [[graft.util.DriverRoute.distributed]]: (routed, distributed). The
+    * route is chosen when an operator is called, so a body may return a
+    * lazy frame. */
+  def bothRoutes[A](body: => A): (A, A) =
+    (body, graft.util.DriverRoute.distributed(spark)(body))
+
   /** `body`'s value and the number of Spark jobs it started (counted
     * by job group, so jobs of other threads do not count). */
   def countingJobs[A](body: => A): (A, Int) = {
