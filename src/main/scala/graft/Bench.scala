@@ -146,17 +146,7 @@ object Bench {
     // round over round or a regression there would be invisible.
     val dsDist = datasetTier("DISTRIBUTED", cfg.copy(LMin = 4.0), distributed = true)
 
-    // tier 2d: the ANN layout branch — the path that carries layout at
-    // 100k+ midpoints (the reference's cuVS envelope,
-    // embedder_cuvs.py:255-272). exactKnnMaxRef=0 forces every
-    // iteration's candidate search through the grid-bucketed kNN on
-    // the same dataset-scale graph, so the one 100 TB layout code path
-    // gets a recorded wall time round over round. Quality (ρ vs the
-    // exact-kNN run) is asserted in EmbeddingSpec.
-    val dsLsh = datasetTier("GRID-ANN DISTRIBUTED",
-      cfg.copy(LMin = 4.0, exactKnnMaxRef = 0), distributed = true)
-
-    // restore cluster-sized shuffling: tiers 2-2d run data-sized (4)
+    // restore cluster-sized shuffling: tiers 2-2c run data-sized (4)
     // for the tiny-graph loops, but the centralities tier shuffles
     // ~45M-row backward-accumulation joins — measured 80 s at 4
     // partitions vs ~45 s at the core count.
@@ -250,12 +240,10 @@ object Bench {
       // backend-comparison pivot (compare_backends.py:217-227): each
       // workload × each route's wall time, side by side.
       val cmpDf = Seq(
-        ("layout n=4039 m=88k 30it", f"${dsBench._3}%.2f", f"${dsDist._3}%.2f",
-          f"${dsLsh._3}%.2f"),
-        ("independent_cascade n=200", "(in influence tier)",
-          f"${icDist._2}%.2f", "-"),
-        ("centralities n=4039", f"$centRouted%.2f", f"${centDist._2}%.2f", "-")
-      ).toDF("workload", "routed_sec", "distributed_sec", "distributed_ann_sec")
+        ("layout n=4039 m=88k 30it", f"${dsBench._3}%.2f", f"${dsDist._3}%.2f"),
+        ("independent_cascade n=200", "(in influence tier)", f"${icDist._2}%.2f"),
+        ("centralities n=4039", f"$centRouted%.2f", f"${centDist._2}%.2f")
+      ).toDF("workload", "routed_sec", "distributed_sec")
       val dir = new java.io.File("bench_results"); dir.mkdirs()
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_results/generator_benchmark.md"),
@@ -294,7 +282,7 @@ object Bench {
       s"""{"type":"$t","method":"$meth","influence_spread":$spread,"time_sec":$dt}"""
     }.mkString("[", ",", "]")
     val total = results.map(_._2).sum + genRows.map(_._4).sum +
-      inflRows.map(_._4).sum + dsBench._3 + dsDist._3 + dsLsh._3 +
+      inflRows.map(_._4).sum + dsBench._3 + dsDist._3 +
       centRouted + centDist._2 + icDist._2
     // r1-comparable core: the query surface + the two tiers r1 ran
     // (ER layout, graphem-path influence). The grand total additionally
@@ -322,8 +310,6 @@ object Bench {
       s""""layout_time":${dsBench._3}}"""
     val dsD = s"""{"n":${dsDist._1},"m":${dsDist._2},"iters":30,""" +
       s""""layout_time":${dsDist._3}}"""
-    val dsL = s"""{"n":${dsLsh._1},"m":${dsLsh._2},"iters":30,""" +
-      s""""kind":"grid_ann","layout_time":${dsLsh._3}}"""
     val cD = s"""{"n":4039,"m":${centDist._1},"sources_cap":256,""" +
       s""""time":${centDist._2},"routed_time":$centRouted}"""
     val icD = s"""{"n":200,"spread":${icDist._1},"time":${icDist._2}}"""
@@ -343,7 +329,7 @@ object Bench {
       f""""queries_cpu_total":$queriesCpuTotal%.3f,""" +
       s""""layout_bench":$layout,"influence_bench":$infl,""" +
       s""""dataset_bench":$ds,""" +
-      s""""dataset_bench_distributed":$dsD,"layout_lsh":$dsL,""" +
+      s""""dataset_bench_distributed":$dsD,""" +
       s""""centralities_distributed":$cD,"ic_distributed":$icD,""" +
       s""""generator_sweep":$genSweepJson,"influence_sweep":$inflSweepJson,""" +
       s""""loadavg_start":$loadStart,"loadavg_end":${loadavg()},""" +

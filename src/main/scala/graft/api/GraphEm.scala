@@ -10,10 +10,11 @@ import graft.influence.Influence
   * (reference: __init__.py:78-136, backends/embedder_pytorch.py).
   *
   * Strategy selection follows backend_selection.py:142-206 in spirit:
-  * instead of cpu/pytorch/cuvs the axes here are driver-vs-distributed
-  * eigen-init and layout ([[graft.util.DriverRoute]]'s caps) and, in the
-  * distributed layout loop, exact-vs-grid kNN, all chosen by graph size
-  * (the same thresholds idea, re-expressed for a cluster).
+  * instead of cpu/pytorch/cuvs the axis here is driver-vs-distributed
+  * eigen-init and layout, chosen by graph size through
+  * [[graft.util.DriverRoute]]'s caps (the same thresholds idea,
+  * re-expressed for a cluster). Unlike the reference's brute-force→ANN
+  * switch, the layout's kNN is exact on both routes.
   *
   * Validation is eager (embedder_pytorch.py:127-147): empty edge sets
   * and non-positive dimensions are rejected at build time.

@@ -7,9 +7,8 @@ import graft.linalg.EigenInit
 
 /** One-off scale probe for the DISTRIBUTED code paths — the regime the
   * per-round bench's small graphs never reach: past
-  * `DriverRoute.LoopEdges` the layout runs the cluster loop, and past
-  * `exactKnnMaxRef` midpoints the
-  * kNN switches to the grid-bucketed ANN kernel. Run:
+  * `DriverRoute.LoopEdges` the layout runs the cluster loop, with its
+  * exact kNN as one cell grid per edge partition. Run:
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.bench.ScaleProbe 50000 22 5"
   *
@@ -39,19 +38,11 @@ object ScaleProbe {
     val (init, eigT) = time {
       val i = EigenInit.init(spark, g, n, 3, 42).cache(); i.count(); i
     }
-    // SCALE_PROBE_KNN=exact|grid overrides the natural size routing for
-    // A/B crossover measurements
-    val cfg0 = LayoutConfig(nComponents = 3, LMin = 4.0, numIterations = iters)
-    val cfg = sys.env.get("SCALE_PROBE_KNN") match {
-      case Some("exact") => cfg0.copy(exactKnnMaxRef = Long.MaxValue)
-      case Some("grid") => cfg0.copy(exactKnnMaxRef = 0)
-      case _ => cfg0
-    }
+    val cfg = LayoutConfig(nComponents = 3, LMin = 4.0, numIterations = iters)
     val (_, layT) = time { Layout.run(spark, g, init, cfg).count() }
     println(s"""{"probe":"distributed_layout","n":$n,"m":$m,"iters":$iters,""" +
       s""""gen_sec":$genT,"eigen_sec":$eigT,"layout_sec":$layT,""" +
-      s""""sec_per_iter":${layT / iters},""" +
-      s""""knn_path":"${if (m > cfg.exactKnnMaxRef) "grid_ann" else "exact"}"}""")
+      s""""sec_per_iter":${layT / iters}}""")
     spark.stop()
   }
 }

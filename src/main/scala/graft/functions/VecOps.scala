@@ -27,11 +27,6 @@ object VecOps {
     * (embedder_pytorch.py:622-623). */
   def norm(a: Column): Column = sqrt(sqNorm(a))
 
-  /** Squared Euclidean distance between two vectors (cdist kernel,
-    * embedder_pytorch.py:580). */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (s, v) => s + v)
-
   /** Dot product (used by cosine similarity over embeddings). */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, v) => s + v)
@@ -77,15 +72,6 @@ object VecOps {
 
   def assembleVec(dim: Int): Column =
     array((0 until dim).map(i => col(s"_s$i")): _*)
-
-  /** Fixed-dimension squared distance: plain per-component arithmetic,
-    * fully whole-stage-codegen'd (higher-order zip_with/aggregate are
-    * interpreted per row — measured ~10× slower in the kNN hot path). */
-  def sqDistFixed(dim: Int, a: Column, b: Column): Column =
-    (0 until dim).map { i =>
-      val d = element_at(a, i + 1) - element_at(b, i + 1)
-      d * d
-    }.reduce(_ + _)
 
   /** groupBy(key).sum over an array column, reassembled: ONE shuffle. */
   def sumVecBy(df: org.apache.spark.sql.DataFrame, key: String, dim: Int,

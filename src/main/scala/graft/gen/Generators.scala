@@ -2,7 +2,6 @@ package graft.gen
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.GraphOps
 
 /** Graph generators (reference: generators.py). Two implementation
   * families, chosen by the algorithm's data dependencies:
@@ -76,11 +75,6 @@ object Generators {
       .filter(hashUniform(seed, col("src"), col("dst")) <
         when(sameBlock, pIn).otherwise(pOut))
   }
-
-  /** SBM block labels: floor(id / nPerBlock) (generators.py:106). */
-  def sbmLabels(spark: SparkSession, nPerBlock: Long, numBlocks: Long): DataFrame =
-    range(spark, nPerBlock * numBlocks)
-      .withColumn("label", floor(col("id") / nPerBlock).cast("int"))
 
   /** 2D grid / road network, exact (generators.py:176-196): node (r,c) →
     * id r*w+c; right neighbor when c<w-1, down neighbor when r<h-1. */
@@ -292,7 +286,4 @@ object Generators {
     }
     toDf(spark, edges.toSeq)
   }
-
-  /** Structural invariant check shared with tests. */
-  def isValid(edges: DataFrame): Boolean = GraphOps.isCanonical(edges)
 }

@@ -16,23 +16,22 @@ case class LayoutConfig(
     nNeighbors: Int = 15,
     sampleSize: Int = 512,
     numIterations: Int = 30,
-    seed: Long = 42,
-    /** exact kNN (compiled broadcast kernel) below this many midpoints,
-      * grid-bucketed ANN above — mirrors the reference's
-      * brute-force→ANN switch (embedder_cuvs.py:255-272). */
-    exactKnnMaxRef: Long = 200000L)
+    seed: Long = 42)
 
 /** Force-directed layout with edge-crossing repulsion — the reference's
   * engine core (embedder_pytorch.py:595-833) as one declarative
   * DataFrame program per iteration.
   *
-  * Shuffle budget per iteration (SURVEY.md §4): 2 broadcast joins for
-  * the position gather (positions ≪ edges at scale), 1 shuffle for the
-  * spring scatter-add, 1 for the kNN window (exact path), 2 broadcast
-  * joins for pair expansion, 1 for the intersection scatter-add, 1
-  * global agg for normalization. Positions are cached and
-  * locally checkpointed each iteration to truncate lineage (the Spark
-  * failure mode the reference doesn't have, SURVEY.md §7 risk 2).
+  * Per iteration (SURVEY.md §4): the sampled kNN queries (≤ sampleSize
+  * midpoints) are collected and broadcast; positions are gathered
+  * through broadcast joins (positions ≪ edges at scale); the kNN runs
+  * as one cell grid per edge partition; and three shuffles remain: the
+  * kNN merge window, the fused spring + intersection scatter-add, and
+  * the join of the forces onto the positions. The normalization
+  * statistics ride in the job that materializes the moved positions.
+  * Positions are cached and locally checkpointed each iteration to
+  * truncate lineage (the Spark failure mode the reference doesn't have,
+  * SURVEY.md §7 risk 2).
   */
 object Layout {
 
@@ -110,86 +109,23 @@ object Layout {
     * per-query top-k by squared distance (embedder_pytorch.py:543-593),
     * self-match dropped (embedder_pytorch.py:420-421).
     *
-    * The query side (≤ sampleSize rows by contract) is collected and
-    * broadcast as primitive arrays; each ref partition streams ONCE
-    * through a compiled kernel holding a bounded worst-out buffer per
-    * query, then the tiny per-partition survivors (parts × |q| × k
-    * rows) merge through one window. The earlier join + window form
-    * materialized all |q|·m joined rows into WindowGroupLimit's
-    * per-partition SORT — 2.9 µs/pair vs ~10 ns here (measured 132 s
-    * of task time per iteration at m=88k). Tie-breaks ((d2, rid) asc)
-    * and the left-to-right d2 summation are identical, so results are
-    * bit-equal to the join form.
-    *
-    * Query sides above `kernelMaxQueries` (where the broadcast arrays
-    * and the O(|q|) inner scan stop being the fast plan) fall back to
-    * the fully-distributed join+window form — same exact semantics,
-    * never a thrown error (the internal run() path always samples
-    * first; the fallback keeps the public entry point total). */
-  def knnExact(queries: DataFrame, refs: DataFrame, k: Int, dim: Int = 3,
-               kernelMaxQueries: Int = 65536): DataFrame = {
+    * The query side is collected and broadcast, so it must be small
+    * (the loop passes its ≤ sampleSize sample). Each reference partition
+    * builds one [[CellGrid]] over its midpoints and emits its first k
+    * per query in (d2, rid) order; one window over those survivors
+    * (partitions × |q| × k rows) keeps the first k overall. A query's
+    * global top-k lies inside the union of the partitions' lists, so the
+    * result is exact and the same for any partitioning of the refs. d2
+    * sums the dimensions left to right, as on the driver route. */
+  def knnExact(queries: DataFrame, refs: DataFrame, k: Int, dim: Int = 3): DataFrame = {
     val spark = refs.sparkSession
     import spark.implicits._
-    // kernelMaxQueries == Int.MaxValue means the CALLER guarantees a
-    // small query side (the loop samples first): plain one-job collect.
-    // Otherwise probe via limit — CollectLimit scans partitions
-    // incrementally, costing 2-3 mini-jobs, but never materializes an
-    // unsampled query side on the driver.
-    val qSel = queries.select(col("eid"), col("src"), col("dst"), col("mid"))
+    def rows(df: DataFrame) = df.select(col("eid"), col("src"), col("dst"), col("mid"))
       .as[(Long, Long, Long, Array[Double])]
-    val qArr =
-      if (kernelMaxQueries == Int.MaxValue) qSel.collect()
-      else qSel.limit(kernelMaxQueries + 1).collect()
-    // the kernel is O(|q|) per ref row and the buffers O(|q|·k) per
-    // task — an unsampled query side routes to the join+window plan
-    // (exact, distributed both sides) instead of a quadratic broadcast
-    if (qArr.length > kernelMaxQueries) {
-      System.err.println(s"[graft] knnExact query side exceeds " +
-        s"$kernelMaxQueries rows; using the distributed join+window plan")
-      return knnJoinWindow(queries, refs, k, dim)
-    }
-    val bc = spark.sparkContext.broadcast(qArr)
-    val partial = refs.select(col("eid"), col("src"), col("dst"), col("mid"))
-      .as[(Long, Long, Long, Array[Double])]
-      .mapPartitions { it =>
-        val qs = bc.value
-        val nq = qs.length
-        // per-query bounded buffers: parallel arrays of size k, slot of
-        // the current worst tracked for O(1) reject of non-candidates
-        val d2s = Array.fill(nq)(Array.fill(k)(Double.MaxValue))
-        val rids = Array.fill(nq)(Array.fill(k)(Long.MaxValue))
-        val rsrcs = Array.fill(nq)(new Array[Long](k))
-        val rdsts = Array.fill(nq)(new Array[Long](k))
-        def worse(a2: Double, ar: Long, b2: Double, br: Long): Boolean =
-          a2 > b2 || (a2 == b2 && ar > br)
-        it.foreach { case (rid, rsrc, rdst, rmid) =>
-          var qi = 0
-          while (qi < nq) {
-            val q = qs(qi)
-            if (q._1 != rid) {
-              val qm = q._4
-              var d2 = 0.0
-              var i = 0
-              while (i < dim) { val d = qm(i) - rmid(i); d2 += d * d; i += 1 }
-              // find the worst slot; replace if this candidate beats it
-              val ds = d2s(qi); val rs = rids(qi)
-              var wi = 0; var j = 1
-              while (j < k) { if (worse(ds(j), rs(j), ds(wi), rs(wi))) wi = j; j += 1 }
-              if (worse(ds(wi), rs(wi), d2, rid)) {
-                ds(wi) = d2; rs(wi) = rid
-                rsrcs(qi)(wi) = rsrc; rdsts(qi)(wi) = rdst
-              }
-            }
-            qi += 1
-          }
-        }
-        (0 until nq).iterator.flatMap { qi =>
-          val q = qs(qi)
-          (0 until k).iterator.filter(s => d2s(qi)(s) < Double.MaxValue).map { s =>
-            (q._1, q._2, q._3, rids(qi)(s), rsrcs(qi)(s), rdsts(qi)(s), d2s(qi)(s))
-          }
-        }
-      }.toDF("qid", "qsrc", "qdst", "rid", "rsrc", "rdst", "d2")
+    val bc = spark.sparkContext.broadcast(rows(queries).collect())
+    val partial = rows(refs)
+      .mapPartitions(it => partitionKnn(it.toArray, bc.value, k, dim))
+      .toDF("qid", "qsrc", "qdst", "rid", "rsrc", "rdst", "d2")
     val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("rid").asc)
     partial
       .withColumn("rn", row_number().over(w))
@@ -197,223 +133,31 @@ object Layout {
       .drop("rn")
   }
 
-  /** The pre-kernel exact form: |q|×m join, per-query top-k window.
-    * Same (d2, rid) asc tie-breaks and left-to-right d2 summation as
-    * the kernel, so the two routes are bit-equal; this one distributes
-    * BOTH sides, which is what an oversized query set needs. */
-  private def knnJoinWindow(queries: DataFrame, refs: DataFrame,
-                            k: Int, dim: Int): DataFrame = {
-    val q = queries.select(col("eid").as("qid"), col("src").as("qsrc"),
-      col("dst").as("qdst"), col("mid").as("qmid"))
-    val r = refs.select(col("eid").as("rid"), col("src").as("rsrc"),
-      col("dst").as("rdst"), col("mid").as("rmid"))
-    val d2 = (0 until dim).map { i =>
-      val df = element_at(col("qmid"), i + 1) - element_at(col("rmid"), i + 1)
-      df * df
-    }.reduce(_ + _)
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("rid").asc)
-    q.crossJoin(r)
-      .filter(col("qid") =!= col("rid"))
-      .withColumn("d2", d2)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("qsrc"), col("qdst"),
-        col("rid"), col("rsrc"), col("rdst"), col("d2"))
-  }
-
-  /** J3 approximate kNN via GRID BUCKETING — the scale path the layout
-    * loop uses past `exactKnnMaxRef` midpoints (the cuVS-ANN analog,
-    * embedder_cuvs.py:274-382).
-    *
-    * Shape: the (sampled, ≤ sampleSize) queries broadcast with a
-    * driver-built cell→queries index (each query registers under its
-    * 3^dim neighbor cells of side `cellSide`); refs stream ONCE through
-    * the same compiled bounded-buffer kernel as [[knnExact]], but each
-    * ref row is evaluated only against the queries probing ITS cell —
-    * an O(1) map lookup. Any neighbor within `cellSide` of a query is
-    * guaranteed probed, so with cellSide ≈ 2× the expected k-NN radius
-    * recall is high by construction; candidates beyond the shell are
-    * skipped without ever materializing a pair row.
-    *
-    * Why this shape and not a cell equi-join or MLlib
-    * BucketedRandomProjectionLSH: both materialize
-    * every candidate PAIR as a row. Midpoints are heavily skewed (BA
-    * hubs pile thousands of midpoints into a cell; iteration 0 runs on
-    * eigen-init positions with σ≈1/√n where ALL midpoints share one
-    * cell), and the measured cost on the m=88k bench tier was ~4 min/
-    * iter for the LSH join and ~17 s/iter for the cell join. Here the
-    * same skewed candidate set costs ~10 ns/eval inside the kernel with
-    * zero shuffle — sub-second/iter — and the degenerate all-in-one-
-    * cell case just degrades to the exact kernel's linear pass. Falls
-    * back to the distributed cell join for oversized query sides. */
-  def knnGrid(spark: SparkSession, queries: DataFrame, refs: DataFrame,
-              k: Int, dim: Int, cellSide: Double,
-              kernelMaxQueries: Int = 65536): DataFrame = {
-    require(cellSide > 0, s"cellSide must be positive, got $cellSide")
-    import spark.implicits._
-    // same collect/probe split as knnExact (see there)
-    val qSel = queries.select(col("eid"), col("src"), col("dst"), col("mid"))
-      .as[(Long, Long, Long, Array[Double])]
-    val qArr =
-      if (kernelMaxQueries == Int.MaxValue) qSel.collect()
-      else qSel.limit(kernelMaxQueries + 1).collect()
-    if (qArr.length > kernelMaxQueries) {
-      System.err.println(s"[graft] knnGrid query side exceeds " +
-        s"$kernelMaxQueries rows; using the distributed cell-join plan")
-      return knnGridJoin(queries, refs, k, dim, cellSide)
+  /** [[knnExact]] within one partition: the first k of `refs` for each
+    * query, as (qid, qsrc, qdst, rid, rsrc, rdst, d2) rows. */
+  private def partitionKnn(refs: Array[(Long, Long, Long, Array[Double])],
+                           queries: Array[(Long, Long, Long, Array[Double])],
+                           k: Int, d: Int): Iterator[(Long, Long, Long, Long, Long, Long, Double)] = {
+    if (k <= 0 || refs.isEmpty) return Iterator.empty
+    val mid = new Array[Double](refs.length * d)
+    val eids = new Array[Long](refs.length)
+    var j = 0
+    while (j < refs.length) {
+      System.arraycopy(refs(j)._4, 0, mid, j * d, d)
+      eids(j) = refs(j)._1
+      j += 1
     }
-    // Cell key from the dim floor coordinates via a splitmix64-style
-    // finalizer per step: XOR-multiply FNV collided 64 structured probe
-    // tuples down to 36 keys here (tiny coords barely perturb the
-    // state), and a query registered twice under one key gets evaluated
-    // twice per ref — the duplicate insert then wastes a top-k buffer
-    // slot. Strong mixing plus the per-query key dedup below keeps
-    // every (query, ref) evaluation exactly-once.
-    def mix64(z0: Long): Long = {
-      var z = z0 + -7046029254386353131L // golden-gamma increment
-      z = (z ^ (z >>> 30)) * -4658895280553007687L
-      z = (z ^ (z >>> 27)) * -7723592293110705685L
-      z ^ (z >>> 31)
-    }
-    def cellKey(coords: Array[Long]): Long = {
-      var h = 1469598103934665603L
-      var i = 0
-      while (i < coords.length) { h = mix64(h ^ mix64(coords(i))); i += 1 }
-      h
-    }
-    def coordsOf(mid: Array[Double]): Array[Long] =
-      Array.tabulate(dim)(i => math.floor(mid(i) / cellSide).toLong)
-    // driver index: cell key → indices of queries probing that cell
-    val probing = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-    val nOffsets = math.pow(3, dim).toInt
-    var qi = 0
-    while (qi < qArr.length) {
-      val base = coordsOf(qArr(qi)._4)
-      val seen = new java.util.HashSet[java.lang.Long](nOffsets * 2)
-      var code = 0
-      while (code < nOffsets) {
-        val c = new Array[Long](dim)
+    val grid = new CellGrid(mid, d, eids)
+    queries.iterator.flatMap { case (qid, qsrc, qdst, qm) =>
+      grid.knn(qm, 0, qid, k).iterator.map { r =>
+        val (rid, rsrc, rdst, rm) = refs(r)
+        var d2 = 0.0
         var i = 0
-        var rem = code
-        while (i < dim) { c(i) = base(i) + rem % 3 - 1; rem /= 3; i += 1 }
-        val key = cellKey(c)
-        if (seen.add(key))
-          probing.computeIfAbsent(key,
-            _ => scala.collection.mutable.ArrayBuffer.empty[Int]) += qi
-        code += 1
+        while (i < d) { val df = qm(i) - rm(i); d2 += df * df; i += 1 }
+        (qid, qsrc, qdst, rid, rsrc, rdst, d2)
       }
-      qi += 1
     }
-    val probeIdx: java.util.HashMap[Long, Array[Int]] = {
-      val m = new java.util.HashMap[Long, Array[Int]](probing.size * 2)
-      probing.forEach((k, v) => m.put(k, v.toArray))
-      m
-    }
-    val bcQ = spark.sparkContext.broadcast(qArr)
-    val bcIdx = spark.sparkContext.broadcast(probeIdx)
-    val bcSide = cellSide
-    val partial = refs.select(col("eid"), col("src"), col("dst"), col("mid"))
-      .as[(Long, Long, Long, Array[Double])]
-      .mapPartitions { it =>
-        val qs = bcQ.value
-        val idx = bcIdx.value
-        val nq = qs.length
-        val d2s = Array.fill(nq)(Array.fill(k)(Double.MaxValue))
-        val rids = Array.fill(nq)(Array.fill(k)(Long.MaxValue))
-        val rsrcs = Array.fill(nq)(new Array[Long](k))
-        val rdsts = Array.fill(nq)(new Array[Long](k))
-        def worse(a2: Double, ar: Long, b2: Double, br: Long): Boolean =
-          a2 > b2 || (a2 == b2 && ar > br)
-        def mix64(z0: Long): Long = {
-          var z = z0 + -7046029254386353131L
-          z = (z ^ (z >>> 30)) * -4658895280553007687L
-          z = (z ^ (z >>> 27)) * -7723592293110705685L
-          z ^ (z >>> 31)
-        }
-        it.foreach { case (rid, rsrc, rdst, rmid) =>
-          var h = 1469598103934665603L
-          var i = 0
-          while (i < dim) {
-            h = mix64(h ^ mix64(math.floor(rmid(i) / bcSide).toLong))
-            i += 1
-          }
-          val cands = idx.get(h)
-          if (cands != null) {
-            var ci = 0
-            while (ci < cands.length) {
-              val qi = cands(ci)
-              val q = qs(qi)
-              if (q._1 != rid) {
-                val qm = q._4
-                var d2 = 0.0
-                var j = 0
-                while (j < dim) { val d = qm(j) - rmid(j); d2 += d * d; j += 1 }
-                val ds = d2s(qi); val rs = rids(qi)
-                var wi = 0; var s = 1
-                while (s < k) { if (worse(ds(s), rs(s), ds(wi), rs(wi))) wi = s; s += 1 }
-                if (worse(ds(wi), rs(wi), d2, rid)) {
-                  ds(wi) = d2; rs(wi) = rid
-                  rsrcs(qi)(wi) = rsrc; rdsts(qi)(wi) = rdst
-                }
-              }
-              ci += 1
-            }
-          }
-        }
-        (0 until nq).iterator.flatMap { qi =>
-          val q = qs(qi)
-          (0 until k).iterator.filter(s => d2s(qi)(s) < Double.MaxValue).map { s =>
-            (q._1, q._2, q._3, rids(qi)(s), rsrcs(qi)(s), rdsts(qi)(s), d2s(qi)(s))
-          }
-        }
-      }.toDF("qid", "qsrc", "qdst", "rid", "rsrc", "rdst", "d2")
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("rid").asc)
-    partial
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
   }
-
-  /** Distributed cell-join form of [[knnGrid]] for oversized query
-    * sides: refs key by cell, queries explode over their 3^dim probe
-    * cells, codegen'd distances, one top-k window. Materializes
-    * candidate pairs as rows — only the fallback, not the loop path. */
-  private def knnGridJoin(queries: DataFrame, refs: DataFrame,
-                          k: Int, dim: Int, cellSide: Double): DataFrame = {
-    def cellCoord(c: String, i: Int) =
-      floor(element_at(col(c), i + 1) / cellSide).cast("long")
-    val r = refs.select(col("eid").as("rid"), col("src").as("rsrc"),
-      col("dst").as("rdst"), col("mid").as("rmid"),
-      xxhash64((0 until dim).map(i => cellCoord("rmid", i)): _*).as("cell"))
-    val offsets = (0 until math.pow(3, dim).toInt).map { code =>
-      (0 until dim).map(i => (code / math.pow(3, i).toInt) % 3 - 1)
-    }
-    val q = queries.select(col("eid").as("qid"), col("src").as("qsrc"),
-      col("dst").as("qdst"), col("mid").as("qmid"))
-      .withColumn("cell", explode(array(offsets.map(o =>
-        xxhash64((0 until dim).map(i =>
-          cellCoord("qmid", i) + lit(o(i).toLong)): _*)): _*)))
-    val d2 = (0 until dim).map { i =>
-      val df = element_at(col("qmid"), i + 1) - element_at(col("rmid"), i + 1)
-      df * df
-    }.reduce(_ + _)
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("rid").asc)
-    q.join(r, "cell")
-      .filter(col("qid") =!= col("rid"))
-      .withColumn("d2", d2)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("qsrc"), col("qdst"),
-        col("rid"), col("rsrc"), col("rdst"), col("d2"))
-  }
-
-  /** Cell side for [[knnGrid]] under the loop's A4 normalization
-    * (positions re-scaled to std 1 per dim every iteration, so σ ≈ 1
-    * needs no stats pass): ~2× the uniform-density estimate of the
-    * k-NN radius, 4σ(k/n)^(1/d). */
-  def gridCellSide(nRefs: Long, k: Int, dim: Int): Double =
-    math.max(1e-6,
-      8.0 * math.pow((k + 1).toDouble / math.max(nRefs, 1L), 1.0 / dim))
 
   /** A3 intersection repulsion contributions (unaggregated): for each
     * candidate edge pair from kNN that properly intersects (P4/P5/P6),
@@ -450,9 +194,6 @@ object Layout {
         col(s"d$i") * lit(cfg.kInter) / (col("dist") * col("dist"))): _*).as("f"))
   }
 
-  /** Aggregated intersection forces (kept for direct use/tests). */
-  def intersectionForces(pairs: DataFrame, pos: DataFrame, cfg: LayoutConfig): DataFrame =
-    VecOps.sumVecBy(intersectionContrib(pairs, pos, cfg), "id", cfg.nComponents, "f")
 
   /** A4 center-and-scale per dimension (embedder_pytorch.py:800-804);
     * torch.std is the SAMPLE std (ddof=1) → stddev_samp. The 2·d
@@ -475,7 +216,7 @@ object Layout {
     * Spring and intersection contributions are unioned RAW and fused
     * into one scatter-add hash aggregate — a single force shuffle per
     * iteration instead of three. */
-  def step(spark: SparkSession, edgesWithId: DataFrame, pos: DataFrame,
+  def step(edgesWithId: DataFrame, pos: DataFrame,
            cfg: LayoutConfig, iter: Int, refCount: Long,
            nVertices: Long = 0L): DataFrame = {
     val bcast = nVertices <= BroadcastPosMax
@@ -485,26 +226,7 @@ object Layout {
       else {
         val mids = midpoints(edgesWithId, pos, bcast)
         val sampled = sampleMidpoints(mids, cfg.sampleSize, cfg.seed + iter, refCount)
-        val pairs =
-          if (refCount <= cfg.exactKnnMaxRef) {
-            // the BNLJ evaluates |sampled|·m distance rows — compute-
-            // bound, unlike every other (scheduling-bound) stage of the
-            // loop, so its stream side is repartitioned for the CORES,
-            // not for the data size (~250k pair-evals per task). With
-            // the loop's data-sized coalesce alone, a 10k-edge graph
-            // ran 5M evals on one task (13 s/iter single-threaded).
-            val cores = spark.sparkContext.defaultParallelism
-            val q = math.min(cfg.sampleSize.toLong, refCount)
-            val parts = math.max(1L,
-              math.min(cores.toLong, q * refCount / 250000L + 1L)).toInt
-            val refs = if (parts > 1) mids.repartition(parts) else mids
-            // Int.MaxValue: the query side is sampled two lines up —
-            // skip the incremental limit-probe's extra per-iter jobs
-            knnExact(sampled, refs, cfg.nNeighbors, cfg.nComponents,
-              kernelMaxQueries = Int.MaxValue)
-          } else knnGrid(spark, sampled, mids, cfg.nNeighbors, cfg.nComponents,
-            gridCellSide(refCount, cfg.nNeighbors, cfg.nComponents),
-            kernelMaxQueries = Int.MaxValue)
+        val pairs = knnExact(sampled, mids, cfg.nNeighbors, cfg.nComponents)
         spring.unionByName(intersectionContrib(pairs, pos, cfg, bcast))
       }
     val forcesRaw = VecOps.sumVecBy(contrib, "id", cfg.nComponents, "f")
@@ -524,23 +246,17 @@ object Layout {
   }
 
   /** L3 driver loop (run_layout, embedder_pytorch.py:808-833).
-    * Routes to [[runLocal]] up to `DriverRoute.LoopEdges` edges (long/long
-    * edge schema only — eids must hash identically on both routes);
-    * the distributed loop above. Both routes implement the same
-    * dynamics; they differ only in floating-point summation order, so
+    * Routes to [[runLocal]] up to `DriverRoute.LoopEdges` edges for
+    * every config (long/long edge schema only — eids must hash
+    * identically on both routes); the distributed loop above. Both
+    * routes implement the same dynamics with the same exact kNN kernel
+    * ([[CellGrid]]); they differ only in floating-point summation order, so
     * trajectories agree to ~1e-6 over a few iterations (asserted by
     * EmbeddingSpec) and statistically thereafter. */
   def run(spark: SparkSession, edges: DataFrame, initial: DataFrame,
           cfg: LayoutConfig): DataFrame = {
-    // The driver cap also respects exactKnnMaxRef when intersection
-    // forces are on: past it the distributed loop switches to grid-ANN
-    // kNN, so a driver run (always exact kNN) would diverge
-    // structurally, not just in FP order — parity holds only under the
-    // joint cap.
-    import graft.util.DriverRoute.LoopEdges
-    val localCap =
-      if (cfg.kInter == 0.0) LoopEdges else math.min(LoopEdges, cfg.exactKnnMaxRef)
-    graft.util.DriverRoute.probePairs(edges, "src", "dst", localCap) match {
+    import graft.util.DriverRoute.{LoopEdges, probePairs}
+    probePairs(edges, "src", "dst", LoopEdges) match {
       case Some(eArr) => return runLocal(spark, eArr, initial, cfg)
       case None => // over threshold or non-long schema → distributed
     }
@@ -705,41 +421,44 @@ object Layout {
     * eids(j) != eids(query) that come first in (d2, eid, index) order,
     * listed in that order. That is the (d2, rid) order of the
     * distributed kNN; the index only decides between duplicate edges,
-    * whose forces are identical.
-    *
-    * Cell grid: each dimension is cut into g slabs at the quantiles of
-    * a strided sample of its coordinates (g^d ≈ m/2 cells, so a packed
-    * cloud still spreads over them), the midpoints are counting-sorted
-    * by cell, and each
-    * query scans rings of cells outward from its own. The ring bound
-    * comes from the actual coordinate extents: a point in a slab below
-    * (above) the scanned box has a coordinate no larger (smaller) than
-    * the largest (smallest) one in those slabs, and the slab of a
-    * coordinate is monotone in it, so the bound holds in floating
-    * point with no slack. The scan stops once the bound exceeds the
-    * current k-th d2; on a tie it goes on, since a point at equal d2
-    * may have a smaller eid. */
+    * whose forces are identical. */
   private[graft] def knnCells(mid: Array[Double], d: Int, eids: Array[Long],
                               queries: Array[Int], k: Int): Array[Array[Int]] = {
     if (k <= 0 || eids.isEmpty) return queries.map(_ => Array.emptyIntArray)
     val grid = new CellGrid(mid, d, eids)
     val out = new Array[Array[Int]](queries.length)
     java.util.stream.IntStream.range(0, queries.length).parallel()
-      .forEach(qi => out(qi) = grid.knn(queries(qi), k))
+      .forEach(qi => out(qi) = grid.knn(mid, queries(qi) * d, eids(queries(qi)), k))
     out
   }
 
-  /** (d2, eid, index) order of [[knnCells]]. */
+  /** (d2, eid, index) order of [[CellGrid]]. */
   private def before(d2: Double, e: Long, j: Int, d2b: Double, eb: Long, jb: Int): Boolean =
     d2 < d2b || (d2 == d2b && (e < eb || (e == eb && j < jb)))
 
-  /** The cell grid of [[knnCells]] over m > 0 midpoints. */
-  private final class CellGrid(mid: Array[Double], d: Int, eids: Array[Long]) {
+  /** The exact kNN kernel of both layout routes: a cell grid over m > 0
+    * reference midpoints (row j of `mid` at j*d) that answers queries
+    * at any coordinates.
+    *
+    * Each dimension is cut into g slabs at the quantiles of a strided
+    * sample of its coordinates (g^d ≈ m/2 cells, so a packed cloud still
+    * spreads over them), and the midpoints are counting-sorted by cell.
+    * A query's slab in each dimension is the number of cuts at or below
+    * its coordinate, found by binary search; it scans rings of cells
+    * outward from its own. The ring bound comes from the actual
+    * coordinate extents: a reference in a slab below (above) the scanned
+    * box has a coordinate no larger (smaller) than the largest (smallest)
+    * one in those slabs, and the slab of a coordinate is monotone in it,
+    * so the bound holds in floating point with no slack, for a query
+    * inside or outside the references' extent alike. The scan stops once
+    * the bound exceeds the current k-th d2; on a tie it goes on, since a
+    * point at equal d2 may have a smaller eid. */
+  private[graft] final class CellGrid(mid: Array[Double], d: Int, eids: Array[Long]) {
     private val m = eids.length
     private val g = math.max(1, math.pow(m / 2.0, 1.0 / d).toInt)
     private val stride = Array.iterate(1, d)(_ * g)
-    private val slabs = new Array[Int](m * d)
-    private val cellOf = new Array[Int](m)
+    // cuts(i*(g-1) + t): the t-th cut of dimension i, ascending
+    private val cuts = new Array[Double](d * (g - 1))
     // maxBelow(i*(g+1) + t): largest coordinate of dimension i in slabs
     // < t; minFrom(i*(g+1) + t): smallest in slabs >= t
     private val maxBelow = new Array[Double](d * (g + 1))
@@ -753,32 +472,40 @@ object Layout {
 
     build()
 
+    /** Slab of coordinate x in dimension i: the number of its cuts <= x,
+      * so monotone in x. */
+    private def slab(i: Int, x: Double): Int = {
+      val b = i * (g - 1)
+      var lo = 0; var hi = g - 1
+      while (lo < hi) { val h = (lo + hi) >>> 1; if (cuts(b + h) <= x) lo = h + 1 else hi = h }
+      lo
+    }
+
     // a method, not a block in the constructor: a loop inside an
     // expression cannot be compiled on stack replacement, and the
     // constructor runs too rarely to be compiled whole
     private def build(): Unit = {
+      val cellOf = new Array[Int](m)
       // cuts at the quantiles of a strided sample (any sorted cuts keep
       // the search exact; the sample keeps the sort small)
       val step = math.max(1, m / (64 * g))
       val xs = new Array[Double]((m + step - 1) / step)
-      val cut = new Array[Double](g - 1)
       var i = 0
       while (i < d) {
         var j = 0
         while (j < xs.length) { xs(j) = mid(j * step * d + i); j += 1 }
         java.util.Arrays.sort(xs)
         var t = 0
-        while (t < g - 1) { cut(t) = xs(((t + 1).toLong * xs.length / g).toInt); t += 1 }
+        while (t < g - 1) {
+          cuts(i * (g - 1) + t) = xs(((t + 1).toLong * xs.length / g).toInt); t += 1
+        }
         val b = i * (g + 1)
         java.util.Arrays.fill(maxBelow, b, b + g + 1, Double.NegativeInfinity)
         java.util.Arrays.fill(minFrom, b, b + g + 1, Double.PositiveInfinity)
         j = 0
         while (j < m) {
-          // slab = #cuts <= x: monotone in x
           val x = mid(j * d + i)
-          var lo = 0; var hi = g - 1
-          while (lo < hi) { val h = (lo + hi) >>> 1; if (cut(h) <= x) lo = h + 1 else hi = h }
-          slabs(j * d + i) = lo
+          val lo = slab(i, x)
           cellOf(j) += lo * stride(i)
           // math.max/min keep a NaN, which disables the early stop
           maxBelow(b + lo + 1) = math.max(maxBelow(b + lo + 1), x)
@@ -807,10 +534,14 @@ object Layout {
       }
     }
 
-    /** Up to k neighbours of midpoint q in (d2, eid, index) order. */
-    def knn(q: Int, k: Int): Array[Int] = {
-      val qb = q * d
-      val qe = eids(q)
+    /** Up to k references with an eid other than `qe` nearest to the
+      * query at q(qb) until q(qb+d), as indices in (d2, eid, index)
+      * order. */
+    def knn(q: Array[Double], qb: Int, qe: Long, k: Int): Array[Int] = {
+      val qs = new Array[Int](d)
+      var qcell = 0
+      var l0 = 0
+      while (l0 < d) { qs(l0) = slab(l0, q(qb + l0)); qcell += qs(l0) * stride(l0); l0 += 1 }
       // best-k buffer; `worst` is its last slot in order once full.
       // A d2 of Double.MaxValue or more (or NaN) is never admitted.
       val bd = new Array[Double](k); val be = new Array[Long](k); val bj = new Array[Int](k)
@@ -823,21 +554,21 @@ object Layout {
       while (!done) {
         // the cells of ring r: those whose first dimension at offset ±r is f
         var nc = 0
-        if (r == 0) { cells(0) = cellOf(q); nc = 1 }
+        if (r == 0) { cells(0) = qcell; nc = 1 }
         else {
           var f = 0
           while (f < d) {
             var sgn = -1
             while (sgn <= 1) {
-              val cf = slabs(qb + f) + sgn * r
+              val cf = qs(f) + sgn * r
               if (cf >= 0 && cf < g) {
                 var l = 0
                 while (l < d) {
                   if (l == f) { lo(l) = cf; hi(l) = cf }
                   else {
                     val reach = if (l < f) r - 1 else r
-                    lo(l) = math.max(0, slabs(qb + l) - reach)
-                    hi(l) = math.min(g - 1, slabs(qb + l) + reach)
+                    lo(l) = math.max(0, qs(l) - reach)
+                    hi(l) = math.min(g - 1, qs(l) + reach)
                   }
                   cur(l) = lo(l)
                   l += 1
@@ -871,7 +602,7 @@ object Layout {
             if (e != qe) {
               var d2 = 0.0
               var i = 0
-              while (i < d) { val df = mid(qb + i) - cm(p * d + i); d2 += df * df; i += 1 }
+              while (i < d) { val df = q(qb + i) - cm(p * d + i); d2 += df * df; i += 1 }
               if (d2 < Double.MaxValue && (size < k || (d2 <= bd(worst) &&
                   before(d2, e, order(p), bd(worst), be(worst), bj(worst))))) {
                 val s = if (size < k) { size += 1; size - 1 } else worst
@@ -895,9 +626,9 @@ object Layout {
         var covered = true
         var i = 0
         while (i < d) {
-          val x = mid(qb + i)
-          val below = slabs(qb + i) - r
-          val above = slabs(qb + i) + r + 1
+          val x = q(qb + i)
+          val below = qs(i) - r
+          val above = qs(i) + r + 1
           if (below > 0) {
             covered = false
             val gap = x - maxBelow(i * (g + 1) + below)
@@ -948,7 +679,7 @@ object Layout {
       // treeAggregate's completion-order combine makes float sums
       // run-dependent and breaks bit-reproducibility of the layout.
       val (moved, mh, partialsRaw) = graft.util.Iterate.checkpointWith(
-        spark, step(spark, e, pos, cfg, it, m, n)) { rdd =>
+        spark, step(e, pos, cfg, it, m, n)) { rdd =>
         rdd.mapPartitionsWithIndex { (idx, rows) =>
           val s = new Array[Double](d); val q = new Array[Double](d); var c = 0L
           rows.foreach { row =>

@@ -70,30 +70,6 @@ class EmbeddingSpec extends SparkSpec {
     assert(maxDiff < 0.05, s"subspace mismatch: max radius diff $maxDiff")
   }
 
-  test("grid kNN: bounded lists, high overlap with exact kNN at sane cell size") {
-    val g = Layout.withEdgeIds(Generators.erdosRenyi(spark, 80, 0.08, 5))
-    val pos = EigenInit.init(spark, g.select("src", "dst"), 80, 3, seed = 5)
-    val mids = Layout.midpoints(g, pos).cache()
-    val m = mids.count()
-    val exact = Layout.knnExact(mids, mids, 5, dim = 3)
-      .select("qid", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val grid = Layout.knnGrid(spark, mids, mids, 5, dim = 3,
-      cellSide = Layout.gridCellSide(m, 5, 3)).cache()
-    assert(grid.groupBy("qid").count().filter(col("count") > 5).isEmpty)
-    assert(grid.filter(col("qid") === col("rid")).isEmpty)
-    val gset = grid.select("qid", "rid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (gset & exact).size.toDouble / exact.size
-    assert(recall > 0.7, s"grid kNN recall too low: $recall")
-    // oversized query side falls back to the distributed cell join —
-    // same cells, same tie-breaks, identical rows
-    val viaJoin = Layout.knnGrid(spark, mids, mids, 5, dim = 3,
-      cellSide = Layout.gridCellSide(m, 5, 3), kernelMaxQueries = 4)
-      .select("qid", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaJoin == gset)
-    grid.unpersist(); mids.unpersist()
-  }
-
   test("random fallback positions: shape and determinism") {
     val p1 = EigenInit.randomPositions(spark, 20, 3, 7)
     assert(p1.count() == 20)
@@ -179,18 +155,52 @@ class EmbeddingSpec extends SparkSpec {
     assert(knn.filter(col("qid") === col("rid")).isEmpty)
   }
 
+  test("knn exact: refs in 1, 3 and 7 partitions give identical rows, equal to the brute scan") {
+    import spark.implicits._
+    // a 6x6 grid graph at integer coordinates: most midpoints tie in d2
+    // with others, so the rid tie-break decides which ones are kept
+    val g = Layout.withEdgeIds(Generators.roadNetwork(spark, 6, 6))
+    val pos = (0L until 36L).map(v => (v, Array((v % 6).toDouble, (v / 6).toDouble)))
+      .toDF("id", "pos")
+    val mids = Layout.midpoints(g, pos).cache()
+    val rows = mids.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[Double](3).toArray))
+    val mid = rows.flatMap(_._4)
+    val eids = rows.map(_._1)
+    type Row7 = (Long, Long, Long, Long, Long, Long, Double)
+    def ordered(xs: Seq[Row7]): Seq[Row7] = xs.sortBy(t => (t._1, t._4))
+    val want = ordered(rows.indices.flatMap { q =>
+      val (qid, qsrc, qdst, qm) = rows(q)
+      bruteKnn(mid, 2, eids, qm, 0, qid, 4).map { r =>
+        val d2 = (0 until 2).map(i => (qm(i) - rows(r)._4(i)) * (qm(i) - rows(r)._4(i))).sum
+        (qid, qsrc, qdst, rows(r)._1, rows(r)._2, rows(r)._3, d2)
+      }
+    })
+    for (parts <- Seq(1, 3, 7)) {
+      val got = ordered(Layout.knnExact(mids, mids.repartition(parts), 4, dim = 2)
+        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))))
+      assert(got == want, s"$parts partitions differ from the brute scan")
+    }
+    mids.unpersist()
+  }
+
   test("knn exact: oversized query side falls back to join+window, identical rows") {
     val g = Layout.withEdgeIds(Generators.roadNetwork(spark, 5, 5)).cache()
     val pos = EigenInit.init(spark, g.select("src", "dst"), 25, 2, seed = 6)
     val mids = Layout.midpoints(g, pos).cache()
-    mids.count()
-    val kernel = Layout.knnExact(mids, mids, 4, dim = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(3), r.getDouble(6))).toSet
-    // kernelMaxQueries below |q| forces the distributed join+window
-    // route — no throw (the r2 API regression), bit-equal output
-    val fallback = Layout.knnExact(mids, mids, 4, dim = 2, kernelMaxQueries = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(3), r.getDouble(6))).toSet
-    assert(fallback == kernel)
+    val m = mids.count()
+    def knnRows(refs: org.apache.spark.sql.DataFrame) =
+      Layout.knnExact(mids, refs, 4, dim = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(3), r.getDouble(6))).toSet
+    val whole = knnRows(mids.coalesce(1))
+    // all m midpoints queried against 16 partitions of refs: the query
+    // side outnumbers every partition's refs, some hold fewer than k, so
+    // each query's k rows come from the window over several partials —
+    // no throw (the r2 API regression), bit-equal output
+    val split = knnRows(mids.repartition(16))
+    assert(whole.size == m * 4)
+    assert(split == whole)
     mids.unpersist(); g.unpersist()
   }
 
@@ -263,36 +273,6 @@ class EmbeddingSpec extends SparkSpec {
       s"duplicate seeds: ${picked.mkString(",")}")
   }
 
-  test("ANN layout branch: full distributed loop, quality tracks the exact run") {
-    // exactKnnMaxRef=0 forces EVERY iteration's candidate search through
-    // the grid-ANN path inside the distributed loop (DriverRoute.distributed) —
-    // the exact configuration the 100k+-midpoint regime runs, end to end.
-    // Quality metric: the reference's own exact↔ANN trade, ρ(radius,
-    // degree) of the LSH run vs the exact-kNN run on the same graph.
-    import graft.metrics.Correlation
-    val g = Generators.barabasiAlbert(spark, 400, 3, 42).cache()
-    g.count()
-    val init = EigenInit.init(spark, g, 400, 3, seed = 42).cache()
-    init.count()
-    val base = LayoutConfig(nComponents = 3, LMin = 4.0, numIterations = 8,
-      sampleSize = 128, nNeighbors = 10, seed = 42)
-    def rhoOf(pos: org.apache.spark.sql.DataFrame): Double = {
-      val radii = pos.select(col("id"), VecOps.norm(col("pos")).as("radius"))
-      Correlation.spearman(
-        radii.join(graft.model.GraphOps.degrees(g), "id"), "radius", "degree")
-    }
-    val (exact, ann) = graft.util.DriverRoute.distributed(spark) {
-      (Layout.run(spark, g, init, base),
-        Layout.run(spark, g, init, base.copy(exactKnnMaxRef = 0)))
-    }
-    val rhoExact = rhoOf(exact)
-    val rhoLsh = rhoOf(ann)
-    assert(!rhoLsh.isNaN && !rhoExact.isNaN)
-    assert(math.abs(rhoLsh - rhoExact) < 0.25,
-      s"LSH layout quality drifted: rho_lsh=$rhoLsh vs rho_exact=$rhoExact")
-    init.unpersist(); g.unpersist()
-  }
-
   test("end-to-end facade: grid layout, seeds, influence, radius-degree correlation") {
     val g = Generators.roadNetwork(spark, 5, 5)
     val em = GraphEm(spark, g, LayoutConfig(nComponents = 2, LMin = 1.0,
@@ -355,21 +335,22 @@ class EmbeddingSpec extends SparkSpec {
   }
 
   /** The brute scan the driver loop ran before the cell grid — every
-    * reference for every query into a worst-out buffer, (d2, rid) ties
-    * — with its survivors listed in (d2, rid, index) order. */
+    * reference for the query at q(qb) until q(qb+d), with eid qe, into a
+    * worst-out buffer, (d2, rid) ties — with its survivors listed in
+    * (d2, rid, index) order. */
   private def bruteKnn(mid: Array[Double], d: Int, eids: Array[Long],
-                       qj: Int, k: Int): Seq[Int] = {
-    def dist2(a: Int, b: Int): Double = {
+                       q: Array[Double], qb: Int, qe: Long, k: Int): Seq[Int] = {
+    def dist2(b: Int): Double = {
       var d2 = 0.0; var i = 0
-      while (i < d) { val df = mid(a * d + i) - mid(b * d + i); d2 += df * df; i += 1 }
+      while (i < d) { val df = q(qb + i) - mid(b * d + i); d2 += df * df; i += 1 }
       d2
     }
     val ds = Array.fill(k)(Double.MaxValue)
     val rs = Array.fill(k)(Long.MaxValue)
     val ridx = new Array[Int](k)
     var wi = 0
-    for (rj <- eids.indices if eids(rj) != eids(qj)) {
-      val d2 = dist2(qj, rj); val rid = eids(rj)
+    for (rj <- eids.indices if eids(rj) != qe) {
+      val d2 = dist2(rj); val rid = eids(rj)
       if (d2 < ds(wi) || (d2 == ds(wi) && rid < rs(wi))) {
         ds(wi) = d2; rs(wi) = rid; ridx(wi) = rj
         wi = 0
@@ -378,15 +359,29 @@ class EmbeddingSpec extends SparkSpec {
       }
     }
     (0 until k).filter(s => ds(s) < Double.MaxValue).map(ridx)
-      .sortBy(j => (dist2(qj, j), eids(j), j))
+      .sortBy(j => (dist2(j), eids(j), j))
   }
 
+  /** The cell grid equals the brute scan twice: for every midpoint as a
+    * query of the driver kNN over all of them, and for held-out queries
+    * (every third midpoint, as it is and pushed outside the references'
+    * extent) against a grid over the rest. */
   private def assertExactKnn(mid: Array[Double], d: Int, eids: Array[Long], k: Int): Unit = {
     val queries = eids.indices.toArray
     val grid = Layout.knnCells(mid, d, eids, queries, k)
     queries.foreach { q =>
-      val want = bruteKnn(mid, d, eids, q, k)
+      val want = bruteKnn(mid, d, eids, mid, q * d, eids(q), k)
       assert(grid(q).toSeq == want, s"query $q: grid ${grid(q).toSeq} vs brute $want")
+    }
+    val (held, kept) = eids.indices.partition(_ % 3 == 1)
+    val refMid = kept.flatMap(j => mid.slice(j * d, (j + 1) * d)).toArray
+    val refEids = kept.map(eids).toArray
+    val refGrid = new Layout.CellGrid(refMid, d, refEids)
+    for (j <- held; shift <- Seq(0.0, 1.0)) {
+      val q = mid.slice(j * d, (j + 1) * d).map(x => x * (1 + 2 * shift) + shift)
+      val want = bruteKnn(refMid, d, refEids, q, 0, eids(j), k)
+      val got = refGrid.knn(q, 0, eids(j), k).toSeq
+      assert(got == want, s"held-out query $j (shift $shift): grid $got vs brute $want")
     }
   }
 

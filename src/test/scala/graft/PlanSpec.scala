@@ -211,7 +211,7 @@ class PlanSpec extends SparkSpec {
       spark, EigenInit.init(spark, g, 36, 2, seed = 1))
     val cfg = LayoutConfig(nComponents = 2, LMin = 1.0, sampleSize = 16,
       nNeighbors = 4, seed = 1)
-    val p = Layout.step(spark, e, pos, cfg, 0, m, 36)
+    val p = Layout.step(e, pos, cfg, 0, m, 36)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"cartesian in step plan:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"BNLJ in step plan:\n$p")

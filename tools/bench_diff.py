@@ -18,7 +18,9 @@ on the cpu basis only a >1.3x per-query move is flagged as a
 regression; anything below that is counted (and, with --noise, listed)
 as noise, not reported as movement. Wall keeps the historical 1.5x.
 Sub-100ms rows are ignored on either basis — scheduling noise
-dominates them. Exit code 0 always — this is a diagnostic, the
+dominates them. The scalar tier rows (TIERS) are diffed by their wall
+time, and every top-level field present in only one file is listed, so
+a tier the bench stopped emitting shows as REMOVED. Exit code 0 always — this is a diagnostic, the
 correctness gate is check_oracle.py.
 """
 import json
@@ -26,6 +28,15 @@ import sys
 
 CPU_THR = 1.3   # calm-host cpu band is ±3.6%; 1.3x is far outside it
 WALL_THR = 1.5  # wall swings with ambient load — keep the looser gate
+
+# graft.Bench's scalar tier rows and the field holding each one's time
+TIERS = {
+    "layout_bench": "layout_time",
+    "dataset_bench": "layout_time",
+    "dataset_bench_distributed": "layout_time",
+    "centralities_distributed": "time",
+    "ic_distributed": "time",
+}
 
 def load(p):
     # Bench emits two JSON lines since r12 (per-query totals + a
@@ -43,6 +54,24 @@ def wall(v):
 
 def cpu(v):
     return v.get("cpu_sec") if isinstance(v, dict) else None
+
+def tier_time(j, name):
+    row = j.get(name)
+    return row.get(TIERS[name]) if isinstance(row, dict) else None
+
+def diff_tiers(a, b):
+    print(f"tiers (wall, threshold {WALL_THR:.2f}x):")
+    for name in TIERS:
+        ta, tb = tier_time(a, name), tier_time(b, name)
+        if ta is None or tb is None:
+            continue  # a missing row is listed with the one-sided fields
+        flag = ""
+        if max(ta, tb) >= 0.1 and (tb > ta * WALL_THR or ta > tb * WALL_THR):
+            flag = "  SLOWER" if tb > ta else "  FASTER"
+        ratio = f"{tb / ta:5.2f}x" if ta > 0 else "  infx"
+        print(f"  {name:<28} {ta:8.2f}s -> {tb:8.2f}s ({ratio}){flag}")
+    for key in sorted(set(a) ^ set(b)):
+        print(f"  {'REMOVED' if key in a else 'NEW':<7} field {key}")
 
 def main():
     args = [a for a in sys.argv[1:] if a != "--noise"]
@@ -63,6 +92,7 @@ def main():
     if "queries_cpu_total" in a or "queries_cpu_total" in b:
         print(f"queries_cpu_total: {a.get('queries_cpu_total', float('nan')):.1f}s"
               f" -> {b.get('queries_cpu_total', float('nan')):.1f}s")
+    diff_tiers(a, b)
     noise = []
     for name in sorted(set(qa) | set(qb)):
         ta = val(qa[name]) if name in qa else None
