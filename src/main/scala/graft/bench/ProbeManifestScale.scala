@@ -17,11 +17,14 @@ import graft.streaming.IndexManifest
   *  - delta_commit_sec / delta_bytes — the per-trigger O(Δ) commit
   *    (averaged over a full fullEvery cycle, re-anchor included);
   *  - resolve_sec — `current()` at the deepest delta chain
-  *    (fullEvery−1 replays), the read-side price of O(Δ) writes.
+  *    (fullEvery−1 replays), the read-side price of O(Δ) writes;
+  *  - crc_files — `.crc` checksum sidecars under `_manifests` (0 on a
+  *    local filesystem, where [[graft.util.SmallFiles]] writes the
+  *    manifests without Hadoop's checksummed `create`).
   *
   * Pure manifest arithmetic: leaf names are synthetic (no data files —
   * commit never stats leaves; only commitBatch's listing does, and
-  * that is O(new batch) by design).
+  * that is O(new batch) by design). The temp root is deleted at exit.
   *
   * Usage: runMain graft.bench.ProbeManifestScale [nLeaves] [nTriggers]
   */
@@ -83,6 +86,12 @@ object ProbeManifestScale {
       (1 to reps).foreach(_ => IndexManifest.current(spark, dir))
     }
 
+    // java.io: a checksummed Hadoop listing hides the sidecars
+    val crcFiles = new java.io.File(s"$dir/_manifests").list()
+      .count(_.endsWith(".crc"))
+    val resolved = IndexManifest.current(spark, dir).get.leaves.size
+    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+
     println(
       s"""{"metric":"manifest_scale","n_leaves":$nLeaves,""" +
       s""""n_triggers":$nTriggers,""" +
@@ -91,8 +100,7 @@ object ProbeManifestScale {
       f""""delta_bytes_avg":${if (nDeltaFiles == 0) 0.0
         else deltaBytes.toDouble / nDeltaFiles}%.1f,""" +
       f""""resolve_sec":${tResolve / reps}%.4f,""" +
-      s""""resolved_leaves":${IndexManifest.current(spark, dir)
-        .get.leaves.size}}""")
+      s""""resolved_leaves":$resolved,"crc_files":$crcFiles}""")
     spark.stop()
   }
 }

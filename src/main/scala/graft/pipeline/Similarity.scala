@@ -968,8 +968,8 @@ object Similarity extends Serializable {
                                     dir: String): Unit = {
     import spark.implicits._
     val marker = modelMirrorMarker(dir)
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.create(marker, true).close()
+    val fs = graft.util.SmallFiles.fsOf(spark, marker)
+    graft.util.SmallFiles.touch(fs, marker)
     val rotP = new org.apache.hadoop.fs.Path(s"$dir/rotation")
     model.rotation match {
       case Some(r) =>

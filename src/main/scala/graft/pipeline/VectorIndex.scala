@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, slice}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.{IndexDelete, IndexManifest, IvfStream}
+import graft.util.SmallFiles
 
 /** ONE façade over the vector-index tier matrix (r12 verdict #6): the
   * four codec tiers — float, SQ8 (4×), BQ (32×, asymmetric scoring),
@@ -149,21 +150,16 @@ object VectorIndex {
     p.metaCols.zipWithIndex.foreach { case (c, i) =>
       props.setProperty(s"metaCols.$i", c)
     }
+    val bytes = new java.io.ByteArrayOutputStream()
+    props.store(bytes, "graft VectorIndex params")
     val path = paramsPath(indexDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(indexDir,
-      "._vectorindex.properties.tmp")
-    val out = fs.create(tmp, true)
-    try props.store(out, "graft VectorIndex params") finally out.close()
-    if (fs.exists(path)) { fs.delete(path, false); () }
-    require(fs.rename(tmp, path),
-      s"VectorIndex.save: rename of params failed for $indexDir")
+    SmallFiles.replace(SmallFiles.fsOf(spark, path), path, bytes.toByteArray)
   }
 
   private[pipeline] def readParams(spark: SparkSession,
                                    indexDir: String): Option[Params] = {
     val path = paramsPath(indexDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = SmallFiles.fsOf(spark, path)
     if (!fs.exists(path)) return None
     val props = new java.util.Properties()
     val in = fs.open(path)

@@ -211,77 +211,81 @@ object PipelineSimilarityQueries {
       val root = java.nio.file.Files
         .createTempDirectory("graft_q217").toString
       val dir = s"$root/idx"
-      val fs = new Path(dir).getFileSystem(s.sessionState.newHadoopConf())
-      val md = s"$dir/_manifests"
-      def has(n: String) = fs.exists(new Path(md, n))
-      val base = (0 until 500).map(i => f"batch=0/list=$i")
-      var snap = IndexManifest.commitAt(s, dir, 0L, base)
-      var expected = base.toSet
-      var deltaResolves = true
-      (1 to 30).foreach { b =>
-        val adds = Seq(s"batch=$b/list=0", s"batch=$b/list=1")
-        snap = IndexManifest.commitDelta(s, dir, snap, adds, Seq.empty)
-        expected ++= adds
-        deltaResolves &&= snap.leaves.toSet == expected &&
-          IndexManifest.current(s, dir).get.leaves.toSet == expected
-      }
-      val deltaLen = fs.getFileStatus(
-        new Path(md, "gen-000000001.delta.txt")).getLen
-      val fullLen = fs.getFileStatus(new Path(md, "gen-000000000.txt"))
-        .getLen
-      val rewrite = IndexManifest.commitDelta(s, dir, snap,
-        adds = Seq("batch=99/list=0"), removes = snap.leaves)
-      val reanchorOk = has("gen-000000016.txt") &&
-        !has("gen-000000016.delta.txt") &&
-        has("gen-000000017.delta.txt") && deltaLen * 10 < fullLen &&
-        has("gen-000000031.txt") && !has("gen-000000031.delta.txt") &&
-        rewrite.leaves == Seq("batch=99/list=0")
-      val replayed = IndexManifest.commitDelta(s, dir, rewrite,
-        adds = Seq("batch=99/list=0"), removes = Seq("batch=99/list=0"))
-      val replayReaddOk =
-        replayed.leaves == Seq("batch=99/list=0") &&
-          IndexManifest.current(s, dir).get.leaves ==
-            Seq("batch=99/list=0")
-      var s2 = replayed
-      (1 to 3).foreach { i =>
-        s2 = IndexManifest.commitDelta(s, dir, s2,
-          Seq(s"batch=${100 + i}/list=0"), Seq.empty)
-      }
-      // minAge FIRST (everything is seconds old → nothing reclaimed,
-      // every GENERATION file still present — the r15 tombstone file
-      // vacuum writes alongside them is bookkeeping, not a reclaim)...
-      def genFiles() = fs.listStatus(new Path(md))
-        .count(_.getPath.getName.startsWith("gen-"))
-      val before = genFiles()
-      IndexManifest.vacuum(s, dir, keepGens = 1,
-        minAgeMs = 3600L * 1000L)
-      val minAgeOk = genFiles() == before &&
-        IndexManifest.current(s, dir).get.leaves.toSet ==
-          s2.leaves.toSet
-      // ...then the real vacuum: keep gen 35 and its chain back to
-      // the nearest full anchor (gen 32 — the replayed commit's
-      // 2-line delta was no smaller than its 1-leaf set, so it
-      // re-anchored full)
-      IndexManifest.vacuum(s, dir, keepGens = 1)
-      val names = fs.listStatus(new Path(md))
-        .map(_.getPath.getName).filter(_.startsWith("gen-")).sorted.toSeq
-      val chainVacuumOk = names == Seq("gen-000000032.txt",
-        "gen-000000033.delta.txt", "gen-000000034.delta.txt",
-        "gen-000000035.delta.txt") &&
-        IndexManifest.current(s, dir).get.leaves.toSet ==
-          s2.leaves.toSet
-      val cur = IndexManifest.pin(s, dir)
-      val dupCommitLoud =
-        try { IndexManifest.commitAt(s, dir, cur.gen, Seq("batch=7"))
-              false }
-        catch { case e: IllegalStateException =>
-          e.getMessage.contains("single-writer") &&
-            IndexManifest.pin(s, dir) == cur }
-      import s.implicits._
-      Seq((deltaResolves, reanchorOk, replayReaddOk, chainVacuumOk,
-        minAgeOk, dupCommitLoud))
-        .toDF("delta_resolves", "reanchor_ok", "replay_readd_ok",
-          "chain_vacuum_ok", "min_age_ok", "dup_commit_loud")
+      val fs = graft.util.SmallFiles.fsOf(s, new Path(dir))
+      // the result is a local one-row frame, so nothing reads the
+      // directory after the booleans are computed
+      try {
+        val md = s"$dir/_manifests"
+        def has(n: String) = fs.exists(new Path(md, n))
+        val base = (0 until 500).map(i => f"batch=0/list=$i")
+        var snap = IndexManifest.commitAt(s, dir, 0L, base)
+        var expected = base.toSet
+        var deltaResolves = true
+        (1 to 30).foreach { b =>
+          val adds = Seq(s"batch=$b/list=0", s"batch=$b/list=1")
+          snap = IndexManifest.commitDelta(s, dir, snap, adds, Seq.empty)
+          expected ++= adds
+          deltaResolves &&= snap.leaves.toSet == expected &&
+            IndexManifest.current(s, dir).get.leaves.toSet == expected
+        }
+        val deltaLen = fs.getFileStatus(
+          new Path(md, "gen-000000001.delta.txt")).getLen
+        val fullLen = fs.getFileStatus(new Path(md, "gen-000000000.txt"))
+          .getLen
+        val rewrite = IndexManifest.commitDelta(s, dir, snap,
+          adds = Seq("batch=99/list=0"), removes = snap.leaves)
+        val reanchorOk = has("gen-000000016.txt") &&
+          !has("gen-000000016.delta.txt") &&
+          has("gen-000000017.delta.txt") && deltaLen * 10 < fullLen &&
+          has("gen-000000031.txt") && !has("gen-000000031.delta.txt") &&
+          rewrite.leaves == Seq("batch=99/list=0")
+        val replayed = IndexManifest.commitDelta(s, dir, rewrite,
+          adds = Seq("batch=99/list=0"), removes = Seq("batch=99/list=0"))
+        val replayReaddOk =
+          replayed.leaves == Seq("batch=99/list=0") &&
+            IndexManifest.current(s, dir).get.leaves ==
+              Seq("batch=99/list=0")
+        var s2 = replayed
+        (1 to 3).foreach { i =>
+          s2 = IndexManifest.commitDelta(s, dir, s2,
+            Seq(s"batch=${100 + i}/list=0"), Seq.empty)
+        }
+        // minAge FIRST (everything is seconds old → nothing reclaimed,
+        // every GENERATION file still present — the r15 tombstone file
+        // vacuum writes alongside them is bookkeeping, not a reclaim)...
+        def genFiles() = fs.listStatus(new Path(md))
+          .count(_.getPath.getName.startsWith("gen-"))
+        val before = genFiles()
+        IndexManifest.vacuum(s, dir, keepGens = 1,
+          minAgeMs = 3600L * 1000L)
+        val minAgeOk = genFiles() == before &&
+          IndexManifest.current(s, dir).get.leaves.toSet ==
+            s2.leaves.toSet
+        // ...then the real vacuum: keep gen 35 and its chain back to
+        // the nearest full anchor (gen 32 — the replayed commit's
+        // 2-line delta was no smaller than its 1-leaf set, so it
+        // re-anchored full)
+        IndexManifest.vacuum(s, dir, keepGens = 1)
+        val names = fs.listStatus(new Path(md))
+          .map(_.getPath.getName).filter(_.startsWith("gen-")).sorted.toSeq
+        val chainVacuumOk = names == Seq("gen-000000032.txt",
+          "gen-000000033.delta.txt", "gen-000000034.delta.txt",
+          "gen-000000035.delta.txt") &&
+          IndexManifest.current(s, dir).get.leaves.toSet ==
+            s2.leaves.toSet
+        val cur = IndexManifest.pin(s, dir)
+        val dupCommitLoud =
+          try { IndexManifest.commitAt(s, dir, cur.gen, Seq("batch=7"))
+                false }
+          catch { case e: IllegalStateException =>
+            e.getMessage.contains("single-writer") &&
+              IndexManifest.pin(s, dir) == cur }
+        import s.implicits._
+        Seq((deltaResolves, reanchorOk, replayReaddOk, chainVacuumOk,
+          minAgeOk, dupCommitLoud))
+          .toDF("delta_resolves", "reanchor_ok", "replay_readd_ok",
+            "chain_vacuum_ok", "min_age_ok", "dup_commit_loud")
+      } finally { fs.delete(new Path(root), true); () }
     }),
 
     // identity rotation fails the gate (the q210/q211 posture);
@@ -692,12 +696,12 @@ object PipelineSimilarityQueries {
         val compactOk =
           codeRows(IvfStream.readCodesIndex(s, s"$root/idx")) == beforeCompact
         // crash between the two renames self-heals on the next read
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sessionState.newHadoopConf())
+        val fs = graft.util.SmallFiles.fsOf(s,
+          new org.apache.hadoop.fs.Path(root))
         fs.rename(new org.apache.hadoop.fs.Path(s"$root/idx"),
           new org.apache.hadoop.fs.Path(s"$root/idx.old"))
-        fs.create(new org.apache.hadoop.fs.Path(s"$root/idx.old.complete"),
-          true).close()
+        graft.util.SmallFiles.touch(fs,
+          new org.apache.hadoop.fs.Path(s"$root/idx.old.complete"))
         val healOk =
           codeRows(IvfStream.readCodesIndex(s, s"$root/idx")) == beforeCompact
         (refreshEq, valveOk, compactOk, healOk)

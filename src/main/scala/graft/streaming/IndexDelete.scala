@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import graft.util.SmallFiles
 
 /** Targeted ID DELETION from an accrued parquet index — the
   * takedown / right-to-be-forgotten / bad-batch-rollback path every
@@ -119,7 +120,7 @@ object IndexDelete {
                                ids: DataFrame, idCol: String,
                                maxExactLeafPredicates: Int): DeleteReport = {
     val live = new Path(indexDir)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = SmallFiles.fsOf(spark, live)
 
     val df = spark.read.parquet(indexDir)
     val idColIn = idColumnOf(ids, idCol)
@@ -163,7 +164,7 @@ object IndexDelete {
 
     val deleting = new Path(indexDir + ".deleting")
     val tmpRoot = indexDir + ".delete"
-    fs.create(deleting, true).close()
+    SmallFiles.touch(fs, deleting)
     // ONE partition-pruned job writes every affected leaf's survivors
     // into the temp tree (r12 probe: per-leaf jobs cost ~0.25 s of
     // driver latency EACH, so a spread delete paid N job walls — one
@@ -196,7 +197,7 @@ object IndexDelete {
       val leafTmpP = new Path(s"$tmpRoot/$rel")
       // a leaf whose every row is deleted produces no partition dir in
       // the dynamic write — its replacement is an EMPTY directory
-      if (!fs.exists(leafTmpP)) { fs.mkdirs(leafTmpP); () }
+      SmallFiles.mkdirs(fs, leafTmpP)
       // install each replacement under the standard marker protocol:
       // a crash between any leaf's renames heals on the next read
       IndexSwap.swap(spark, s"$indexDir/$rel", s"$tmpRoot/$rel")

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.util.SmallFiles
+import graft.util.SmallFiles.fsOf
 
 /** SNAPSHOT manifests for the accrued parquet indexes — the last
   * object-store gap in the maintenance story (r12 verdict #1): the
@@ -22,9 +24,10 @@ import org.apache.hadoop.fs.Path
   * underscore, so Spark's parquet discovery ignores it — a legacy
   * whole-directory read of a never-rewritten manifested index still
   * sees exactly the data. Manifest files are immutable: a commit
-  * writes `.tmp-gen-N` and renames it to its final name (atomic
-  * visibility on HDFS/local; on S3 the copy of one small object is a
-  * single atomic PUT), and the CURRENT manifest is simply the highest
+  * stages the file and installs it create-exclusive under its final
+  * name through [[graft.util.SmallFiles]] (atomic visibility on
+  * HDFS/local; on S3 the copy of one small object is a single atomic
+  * PUT), and the CURRENT manifest is simply the highest
   * generation present — no pointer file to flip, so there is no
   * pointer-flip window to race.
   *
@@ -75,9 +78,6 @@ object IndexManifest {
     def rewriteBatchId: Long = -(gen + 2)
   }
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def manifestDir(dir: String) = new Path(dir, "_manifests")
 
   /** Full-snapshot cadence for incremental commits: every fullEvery-th
@@ -112,8 +112,7 @@ object IndexManifest {
   /** gen → isDelta for every committed manifest file. A generation
     * with BOTH kinds (a crash between two retry shapes) resolves as
     * FULL — the self-contained one. */
-  private def kinds(fs: org.apache.hadoop.fs.FileSystem,
-                    md: Path): Map[Long, Boolean] =
+  private def kinds(fs: FileSystem, md: Path): Map[Long, Boolean] =
     if (!fs.exists(md)) Map.empty
     else fs.listStatus(md).toSeq
       .flatMap(s => kindOf(s.getPath.getName))
@@ -122,7 +121,7 @@ object IndexManifest {
   /** Resolve generation `gen`'s live leaf set: nearest full snapshot
     * at or below it + the delta replay. Loud on a broken chain (a
     * vacuum bug or hand-deleted file), never a silent partial set. */
-  private def resolveLeaves(fs: org.apache.hadoop.fs.FileSystem, md: Path,
+  private def resolveLeaves(fs: FileSystem, md: Path,
                             ks: Map[Long, Boolean],
                             gen: Long): Seq[String] = {
     val deltaChain = Iterator.iterate(gen)(_ - 1)
@@ -153,8 +152,8 @@ object IndexManifest {
   def isManifested(spark: SparkSession, dir: String): Boolean =
     current(spark, dir).nonEmpty
 
-  private def readManifestLines(fs: org.apache.hadoop.fs.FileSystem,
-                                md: Path, name: String): Seq[String] = {
+  private def readManifestLines(fs: FileSystem, md: Path,
+                                name: String): Seq[String] = {
     val in = fs.open(new Path(md, name))
     val txt = try {
       val out = new java.io.ByteArrayOutputStream()
@@ -166,9 +165,11 @@ object IndexManifest {
 
   /** The current snapshot — the highest committed generation — or
     * None when the index is not enrolled. */
-  def current(spark: SparkSession, dir: String): Option[Snapshot] = {
+  def current(spark: SparkSession, dir: String): Option[Snapshot] =
+    current(fsOf(spark, new Path(dir)), dir)
+
+  private def current(fs: FileSystem, dir: String): Option[Snapshot] = {
     val md = manifestDir(dir)
-    val fs = fsOf(spark, md)
     val ks = kinds(fs, md)
     if (ks.isEmpty) None
     else {
@@ -188,9 +189,12 @@ object IndexManifest {
     * those lines is exact. O(retained manifest files) small-file reads
     * — called only on the crash-replay path, never per trigger. */
   def everReferenced(spark: SparkSession, dir: String,
-                     prefix: String): Boolean = {
+                     prefix: String): Boolean =
+    everReferenced(fsOf(spark, new Path(dir)), dir, prefix)
+
+  private def everReferenced(fs: FileSystem, dir: String,
+                             prefix: String): Boolean = {
     val md = manifestDir(dir)
-    val fs = fsOf(spark, md)
     if (!fs.exists(md)) return false
     fs.listStatus(md).toSeq.map(_.getPath.getName)
       .filter(n => kindOf(n).nonEmpty)
@@ -232,9 +236,12 @@ object IndexManifest {
     * leave max HIGH, never low) falls back to the full read —
     * correct, just slower. */
   private[graft] def tombstoned(spark: SparkSession, dir: String,
-                                prefix: String): Boolean = {
+                                prefix: String): Boolean =
+    tombstoned(fsOf(spark, new Path(dir)), dir, prefix)
+
+  private def tombstoned(fs: FileSystem, dir: String,
+                         prefix: String): Boolean = {
     val md = manifestDir(dir)
-    val fs = fsOf(spark, md)
     prefix match {
       case BatchPrefix(n) =>
         readTombstoneMax(fs, md) match {
@@ -250,22 +257,20 @@ object IndexManifest {
   private def tombstoneMaxPath(md: Path) =
     new Path(md, "committed-batches.max")
 
-  private def readTombstoneMax(fs: org.apache.hadoop.fs.FileSystem,
-                               md: Path): Option[Long] = {
+  private def readTombstoneMax(fs: FileSystem, md: Path): Option[Long] = {
     val p = tombstoneMaxPath(md)
     if (!fs.exists(p)) None
     else readManifestLines(fs, md, p.getName).headOption.map(_.toLong)
   }
 
-  private def readTombstones(fs: org.apache.hadoop.fs.FileSystem,
-                             md: Path): Set[String] = {
+  private def readTombstones(fs: FileSystem, md: Path): Set[String] = {
     val p = tombstonePath(md)
     if (!fs.exists(p)) Set.empty
     else readManifestLines(fs, md, p.getName).toSet
   }
 
-  private def writeTombstones(fs: org.apache.hadoop.fs.FileSystem,
-                              md: Path, prefixes: Set[String]): Unit = {
+  private def writeTombstones(fs: FileSystem, md: Path,
+                              prefixes: Set[String]): Unit = {
     // max FIRST: tombstoned()'s fast path is only sound while the max
     // file is ≥ the list's max id, so a crash between the two writes
     // must leave max high (skips nothing wrongly), never low
@@ -275,22 +280,11 @@ object IndexManifest {
         case Some(old) => math.max(old, newMax.max)
         case None => newMax.max
       }
-      val tmpM = new Path(md, ".tmp-committed-batches.max")
-      val outM = fs.create(tmpM, true)
-      try outM.write(keep.toString.getBytes("UTF-8")) finally outM.close()
-      val dstM = tombstoneMaxPath(md)
-      if (fs.exists(dstM)) { fs.delete(dstM, false); () }
-      require(fs.rename(tmpM, dstM),
-        s"IndexManifest: rename of $tmpM -> $dstM failed")
+      SmallFiles.replace(fs, tombstoneMaxPath(md),
+        keep.toString.getBytes("UTF-8"))
     }
-    val tmp = new Path(md, ".tmp-committed-batches.txt")
-    val out = fs.create(tmp, true)
-    try out.write(prefixes.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = tombstonePath(md)
-    if (fs.exists(dst)) { fs.delete(dst, false); () }
-    require(fs.rename(tmp, dst),
-      s"IndexManifest: rename of $tmp -> $dst failed")
+    SmallFiles.replace(fs, tombstonePath(md),
+      prefixes.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
   }
 
   /** [[current]] that REQUIRES enrollment — the pin a concurrent
@@ -305,9 +299,11 @@ object IndexManifest {
     * children when it has them, else the batch directory itself (the
     * band/fp single-level layouts). One or two directory listings per
     * batch — no data read. */
-  def listLeafDirs(spark: SparkSession, dir: String): Seq[String] = {
+  def listLeafDirs(spark: SparkSession, dir: String): Seq[String] =
+    listLeafDirs(fsOf(spark, new Path(dir)), dir)
+
+  private def listLeafDirs(fs: FileSystem, dir: String): Seq[String] = {
     val p = new Path(dir)
-    val fs = fsOf(spark, p)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
@@ -326,8 +322,8 @@ object IndexManifest {
     * copy-on-write + commit. */
   def enroll(spark: SparkSession, dir: String): Snapshot = {
     IndexSwap.restoreIfInterrupted(spark, dir)
-    commit(spark, dir,
-      listLeafDirs(spark, dir).filter(hasDataFile(spark, dir, _)))
+    val fs = fsOf(spark, new Path(dir))
+    commit(fs, dir, listLeafDirs(fs, dir).filter(hasDataFile(fs, dir, _)))
   }
 
   /** Commit the next generation with exactly `leaves` live. Single
@@ -339,16 +335,23 @@ object IndexManifest {
     * win or clobber depending on the filesystem. */
   def commit(spark: SparkSession, dir: String,
              leaves: Seq[String]): Snapshot =
-    commitAt(spark, dir,
-      current(spark, dir).map(_.gen + 1).getOrElse(0L), leaves)
+    commit(fsOf(spark, new Path(dir)), dir, leaves)
+
+  private def commit(fs: FileSystem, dir: String,
+                     leaves: Seq[String]): Snapshot =
+    commitAt(fs, dir, current(fs, dir).map(_.gen + 1).getOrElse(0L), leaves)
 
   /** [[commit]] at an EXPLICIT generation — package-private so specs
     * can forge the duplicate-generation race the loud-fail guards. */
   private[graft] def commitAt(spark: SparkSession, dir: String,
                               gen: Long,
-                              leaves: Seq[String]): Snapshot = {
+                              leaves: Seq[String]): Snapshot =
+    commitAt(fsOf(spark, new Path(dir)), dir, gen, leaves)
+
+  private def commitAt(fs: FileSystem, dir: String, gen: Long,
+                       leaves: Seq[String]): Snapshot = {
     val sorted = leaves.distinct.sorted
-    writeManifest(spark, dir, gen, delta = false, sorted)
+    writeManifest(fs, dir, gen, delta = false, sorted)
     Snapshot(gen, sorted)
   }
 
@@ -387,26 +390,24 @@ object IndexManifest {
       (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
         .parquet(target)
     }
-    current(spark, dir) match {
+    val fs = fsOf(spark, new Path(dir))
+    current(fs, dir) match {
       case Some(snap) =>
         val prefix = s"batch=$batchId"
         val prior = snap.leaves
           .filter(l => l == prefix || l.startsWith(prefix + "/"))
-        lazy val dirExists = {
-          val p = new Path(dir, prefix)
-          fsOf(spark, p).exists(p)
-        }
+        lazy val dirExists = fs.exists(new Path(dir, prefix))
         if (prior.nonEmpty) {
           writeTo(s"$dir/batch=${snap.rewriteBatchId}")
-          commitRewrite(spark, dir, snap, prior)
+          commitRewrite(fs, dir, snap, prior)
           ()
-        } else if (dirExists && everReferenced(spark, dir, prefix)) {
+        } else if (dirExists && everReferenced(fs, dir, prefix)) {
           ()
-        } else if (tombstoned(spark, dir, prefix)) {
+        } else if (tombstoned(fs, dir, prefix)) {
           ()
         } else {
           writeTo(s"$dir/$prefix")
-          commitBatch(spark, dir, batchId)
+          commitBatch(fs, dir, batchId)
           ()
         }
       case None => writeTo(s"$dir/batch=$batchId")
@@ -421,7 +422,12 @@ object IndexManifest {
     * smaller than the full list, where it re-anchors a full snapshot.
     * The returned snapshot carries the fully-resolved new leaf set. */
   def commitDelta(spark: SparkSession, dir: String, base: Snapshot,
-                  adds: Seq[String], removes: Seq[String]): Snapshot = {
+                  adds: Seq[String], removes: Seq[String]): Snapshot =
+    commitDelta(fsOf(spark, new Path(dir)), dir, base, adds, removes)
+
+  private def commitDelta(fs: FileSystem, dir: String, base: Snapshot,
+                          adds: Seq[String],
+                          removes: Seq[String]): Snapshot = {
     val gen = base.gen + 1
     val addS = adds.distinct.sorted
     // drop removes of leaves not actually live (a replayed retry), and
@@ -462,73 +468,26 @@ object IndexManifest {
     val newLeaves: Seq[String] =
       scala.collection.immutable.ArraySeq.unsafeWrapArray(merged)
     if (gen % fullEvery == 0L || addNew.size + remS.size >= newLeaves.size)
-      writeManifest(spark, dir, gen, delta = false, newLeaves)
+      writeManifest(fs, dir, gen, delta = false, newLeaves)
     else
-      writeManifest(spark, dir, gen, delta = true,
+      writeManifest(fs, dir, gen, delta = true,
         remS.map("-" + _) ++ addNew.map("+" + _))
     Snapshot(gen, newLeaves)
   }
 
-  /** The one exclusive manifest writer: temp + rename, loud on a
-    * duplicate generation (either kind — generations are immutable). */
-  private def writeManifest(spark: SparkSession, dir: String, gen: Long,
+  /** The one exclusive manifest writer, loud on a duplicate generation
+    * of either kind: generation files are immutable, so a pre-existing
+    * target means a concurrent writer already committed this generation
+    * (CrossProcessSpec races two processes at it). Failing keeps the
+    * index intact and names the contract violated. */
+  private def writeManifest(fs: FileSystem, dir: String, gen: Long,
                             delta: Boolean, lines: Seq[String]): Unit = {
     val md = manifestDir(dir)
-    val fs = fsOf(spark, md)
-    if (!fs.exists(md)) { fs.mkdirs(md); () }
-    // UNIQUE staging name per writer (CrossProcessSpec finding): with
-    // a fixed `.tmp-gen-N` name, two processes racing the same
-    // generation collide on the STAGE file itself — the loser dies in
-    // filesystem noise instead of the contract message, and a racer
-    // could overwrite the winner's staged bytes between its write and
-    // its install. Unique names make the install link/rename the only
-    // contended step; orphaned stage files are vacuum's `.tmp-` litter.
-    val tmp = new Path(md, s".tmp-${java.util.UUID.randomUUID().toString
-      .take(8)}-${nameOf(gen, delta)}")
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(md, nameOf(gen, delta))
-    val twin = new Path(md, nameOf(gen, !delta))
-    // create-exclusive assertion: generation files are immutable, so a
-    // pre-existing target (either kind) means a concurrent writer
-    // already committed this generation — failing here keeps the index
-    // intact (the tmp file is litter vacuum sweeps) and names the
-    // contract violated
-    if (fs.exists(dest) || fs.exists(twin)) {
-      fs.delete(tmp, false)
+    SmallFiles.mkdirs(fs, md)
+    if (!SmallFiles.createExclusive(fs, new Path(md, nameOf(gen, delta)),
+        lines.mkString("\n").getBytes("UTF-8"),
+        new Path(md, nameOf(gen, !delta))))
       throw new IllegalStateException(duplicateGenMsg(dir, gen))
-    }
-    val isLocal = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    if (isLocal) {
-      // The exists-check above has a TOCTOU window, and beneath
-      // Hadoop's local rename sits POSIX rename(2), which silently
-      // REPLACES an existing destination — two simultaneous writers
-      // (separate processes; CrossProcessSpec drives the real race)
-      // could both "win" and the later one clobber the earlier.
-      // link(2) is atomic AND fails with EEXIST, which is exactly
-      // create-exclusive with full-content visibility.
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dest.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        fs.delete(tmp, false)
-        ()
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          fs.delete(tmp, false)
-          throw new IllegalStateException(duplicateGenMsg(dir, gen))
-      }
-    } else {
-      // HDFS rename fails on an existing destination (atomic
-      // create-exclusive already); object stores are covered by the
-      // documented single-writer contract plus the exists-check above
-      require(fs.rename(tmp, dest),
-        s"IndexManifest.commit: rename of generation $gen failed for " +
-          s"$dir — likely a concurrent commit won the race; the index " +
-          "manifest was left untouched")
-    }
   }
 
   private def duplicateGenMsg(dir: String, gen: Long): String =
@@ -545,10 +504,14 @@ object IndexManifest {
     * attach wire-ins call it unconditionally. */
   def commitBatch(spark: SparkSession, dir: String,
                   batchId: Long): Option[Snapshot] =
-    current(spark, dir).map { snap =>
+    commitBatch(fsOf(spark, new Path(dir)), dir, batchId)
+
+  private def commitBatch(fs: FileSystem, dir: String,
+                          batchId: Long): Option[Snapshot] =
+    current(fs, dir).map { snap =>
       val prefix = s"batch=$batchId"
-      val fresh = dataLeaves(spark, dir, prefix)
-      commitDelta(spark, dir, snap, adds = fresh,
+      val fresh = dataLeaves(fs, dir, prefix)
+      commitDelta(fs, dir, snap, adds = fresh,
         removes = snap.leaves
           .filter(l => l == prefix || l.startsWith(prefix + "/")))
     }
@@ -558,14 +521,13 @@ object IndexManifest {
     * away leaves only `_SUCCESS` litter, and committing that shell
     * would later fail schema inference on an otherwise-empty
     * snapshot. */
-  private def dataLeaves(spark: SparkSession, dir: String,
+  private def dataLeaves(fs: FileSystem, dir: String,
                          prefix: String): Seq[String] = {
     // list ONLY under the just-written batch prefix — a per-trigger
     // commit must cost O(new batch), not O(all leaves): at a million
     // accrued leaves a full listLeafDirs walk per trigger would be the
     // same small-files wall the manifest exists to avoid
     val p = new Path(dir, prefix)
-    val fs = fsOf(spark, p)
     if (!fs.exists(p)) Seq.empty
     else {
       val lists = fs.listStatus(p).toSeq
@@ -573,13 +535,13 @@ object IndexManifest {
       val cands =
         if (lists.isEmpty) Seq(prefix)
         else lists.map(l => s"$prefix/${l.getPath.getName}")
-      cands.filter(hasDataFile(spark, dir, _))
+      cands.filter(hasDataFile(fs, dir, _))
     }
   }
 
-  private def hasDataFile(spark: SparkSession, dir: String,
+  private def hasDataFile(fs: FileSystem, dir: String,
                           leaf: String): Boolean =
-    fsOf(spark, new Path(dir)).listStatus(new Path(dir, leaf)).exists { s =>
+    fs.listStatus(new Path(dir, leaf)).exists { s =>
       val n = s.getPath.getName
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
@@ -590,9 +552,13 @@ object IndexManifest {
     * `snap.leaves` as `replaced` for a full rewrite (compaction /
     * reassign). */
   def commitRewrite(spark: SparkSession, dir: String, snap: Snapshot,
-                    replaced: Seq[String]): Snapshot = {
-    val fresh = dataLeaves(spark, dir, s"batch=${snap.rewriteBatchId}")
-    commitDelta(spark, dir, snap, adds = fresh, removes = replaced)
+                    replaced: Seq[String]): Snapshot =
+    commitRewrite(fsOf(spark, new Path(dir)), dir, snap, replaced)
+
+  private def commitRewrite(fs: FileSystem, dir: String, snap: Snapshot,
+                            replaced: Seq[String]): Snapshot = {
+    val fresh = dataLeaves(fs, dir, s"batch=${snap.rewriteBatchId}")
+    commitDelta(fs, dir, snap, adds = fresh, removes = replaced)
   }
 
   /** Plan a read of the pinned snapshot: the listed leaf directories
@@ -703,7 +669,7 @@ object IndexManifest {
       (g - chainLen) to g
     }.toSet
     var removed = 0
-    listLeafDirs(spark, dir).foreach { leaf =>
+    listLeafDirs(fs, dir).foreach { leaf =>
       if (!live.contains(leaf)) {
         // a never-committed batch is a pending first attempt a restart
         // replay will complete — reclaiming it would race the replay
@@ -740,7 +706,7 @@ object IndexManifest {
       .filter(_.getPath.getName.startsWith(".tmp-"))
       .foreach(s => fs.delete(s.getPath, false))
     // model epochs no kept generation resolves to (r13 verdict #1)
-    ModelStore.vacuumModels(spark, dir, kept)
+    ModelStore.vacuumModels(fs, dir, kept)
     removed
   }
 }

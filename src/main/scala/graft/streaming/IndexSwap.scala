@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.util.SmallFiles
+import graft.util.SmallFiles.fsOf
 
 /** Crash-safe directory replacement shared by the accumulated-index
   * maintenance helpers ([[NearDupStream.compactIndex]],
@@ -29,17 +31,15 @@ import org.apache.hadoop.fs.Path
   * A crash BETWEEN the two renames (the common case: live moved aside,
   * replacement not yet installed) therefore self-heals on the next
   * read, exactly as before, and the markers are cleaned up with it.
-  * Everything goes through the Hadoop FileSystem API so an HDFS/S3
-  * index directory works like a local one.
+  * Everything goes through the Hadoop FileSystem API (the markers
+  * through [[graft.util.SmallFiles]]) so an HDFS/S3 index directory
+  * works like a local one.
   *
   * CONCURRENCY CONTRACT: swap runs while readers and the ingest stream
   * are QUIESCED (every call site documents it). The markers detect and
   * contain crashes; they do not make concurrent reader-vs-swap races
   * safe. */
 private[graft] object IndexSwap {
-
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
 
   def swap(spark: SparkSession, liveDir: String, tmpDir: String): Unit = {
     val live = new Path(liveDir)
@@ -50,17 +50,17 @@ private[graft] object IndexSwap {
     val inprog = new Path(liveDir + ".swapping")
     // heal (or fail loudly) BEFORE touching .old: a direct call on an
     // interrupted index must not delete the sole surviving copy
-    restoreIfInterrupted(spark, liveDir)
+    restoreIfInterrupted(fs, liveDir)
     require(fs.exists(live),
       s"IndexSwap: live index $liveDir does not exist — nothing to " +
         "swap (write the initial index directly)")
     require(fs.exists(tmpP),
       s"IndexSwap: replacement $tmpDir does not exist")
-    fs.create(inprog, true).close()
+    SmallFiles.touch(fs, inprog)
     if (fs.exists(oldP)) { fs.delete(oldP, true); () }
     require(fs.rename(live, oldP),
       s"IndexSwap: rename $liveDir -> $oldP failed")
-    fs.create(oldOk, true).close() // .old certified complete from here
+    SmallFiles.touch(fs, oldOk) // .old certified complete from here
     require(fs.rename(tmpP, live),
       s"IndexSwap: rename $tmpDir -> $liveDir failed")
     fs.delete(oldP, true)
@@ -75,9 +75,11 @@ private[graft] object IndexSwap {
     * when `.old` lacks its completion marker — a possibly-partial copy
     * is never silently installed — or when a crashed swap left neither
     * a live index nor a restorable `.old`. */
-  def restoreIfInterrupted(spark: SparkSession, liveDir: String): Unit = {
+  def restoreIfInterrupted(spark: SparkSession, liveDir: String): Unit =
+    restoreIfInterrupted(fsOf(spark, new Path(liveDir)), liveDir)
+
+  private def restoreIfInterrupted(fs: FileSystem, liveDir: String): Unit = {
     val live = new Path(liveDir)
-    val fs = fsOf(spark, live)
     val oldP = new Path(liveDir + ".old")
     val oldOk = new Path(liveDir + ".old.complete")
     val inprog = new Path(liveDir + ".swapping")
@@ -128,7 +130,7 @@ private[graft] object IndexSwap {
       fs.delete(inprog, false)
       ()
     }
-    healInterruptedDelete(spark, liveDir)
+    healInterruptedDelete(fs, liveDir)
   }
 
   /** Heal a [[graft.streaming.IndexDelete]] partition-scoped delete
@@ -141,10 +143,8 @@ private[graft] object IndexSwap {
     * read path never walks. Idempotent: re-running [[IndexDelete
     * .deleteIds]] with the same id set after the heal completes the
     * delete. */
-  private[graft] def healInterruptedDelete(spark: SparkSession,
-                                           liveDir: String): Unit = {
+  private def healInterruptedDelete(fs: FileSystem, liveDir: String): Unit = {
     val live = new Path(liveDir)
-    val fs = fsOf(spark, live)
     val deleting = new Path(liveDir + ".deleting")
     if (!fs.exists(deleting)) return
     if (fs.exists(live)) {
@@ -157,7 +157,7 @@ private[graft] object IndexSwap {
         if (f.getName.endsWith(".swapping"))
           marked += f.toString.stripSuffix(".swapping")
       }
-      marked.foreach(p => restoreIfInterrupted(spark, p))
+      marked.foreach(p => restoreIfInterrupted(fs, p))
     }
     val tmpRoot = new Path(liveDir + ".delete")
     if (fs.exists(tmpRoot)) { fs.delete(tmpRoot, true); () }
@@ -190,9 +190,10 @@ private[graft] object IndexSwap {
     * mid-swap rename failure AFTER the compact write — r10 ADVICE). */
   private[graft] def requireLive(spark: SparkSession, liveDir: String,
                                  op: String): Unit = {
-    restoreIfInterrupted(spark, liveDir)
     val live = new Path(liveDir)
-    require(fsOf(spark, live).exists(live),
+    val fs = fsOf(spark, live)
+    restoreIfInterrupted(fs, liveDir)
+    require(fs.exists(live),
       s"$op: index directory $liveDir does not exist — nothing to " +
         "maintain (build or attach the index first)")
   }
