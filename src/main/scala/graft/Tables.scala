@@ -14,9 +14,25 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The session confs that change what Parquet schema inference
+    * returns; a memoized schema is keyed by their values. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** Table `name` under `dir`. Inferring a Parquet schema runs one Spark
+    * job (a footer read) per load, even for one file, so the schema is
+    * inferred once per (session, dir, table, inference confs) and every
+    * later load passes it to the reader. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table $name")
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val confs = inferenceConfs.map(k => spark.conf.get(k)).mkString(",")
+    val schema = graft.util.SessionMemo.value(spark, s"schema/$name/$confs", dir)(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame   = apply(spark, dir, "lineitem")

@@ -4,9 +4,13 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Vector kernels over `array<double>` columns (reference F1–F5,
-  * SURVEY.md §2.6) expressed with Spark's codegen'd higher-order
-  * functions — no UDFs, so every kernel stays inside whole-stage
-  * codegen and works for runtime-chosen dimensionality.
+  * SURVEY.md §2.6) expressed with Spark's higher-order functions, so
+  * they work for runtime-chosen dimensionality. Those functions
+  * (`transform`, `zip_with`, `aggregate`, `filter`, `exists`) are
+  * `CodegenFallback` on Spark 4: whole-stage codegen calls them
+  * interpreted, one lambda evaluation per element. They suit small
+  * arrays and cold paths; a per-row hot loop belongs in a compiled
+  * Scala kernel (see `Similarity.cosineLoop`).
   */
 object VecOps {
 

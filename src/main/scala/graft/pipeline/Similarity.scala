@@ -39,6 +39,30 @@ object Similarity extends Serializable {
     dot / (sqrt(na) * sqrt(nb) + lit(1e-12))
   }
 
+  /** [[cosineFixed]] as a compiled loop over the first `dim` elements:
+    * bit-identical (each element widened to double, each sum taken left
+    * to right from its first term). Join consumers use it: the 192-term
+    * expression pushes the join's generated method past the JVM's
+    * 64 KB limit, and Spark then runs the whole stage interpreted. */
+  private[graft] def cosineLoop(a: Array[Float], b: Array[Float], dim: Int): Double = {
+    var dot = a(0).toDouble * b(0); var na = a(0).toDouble * a(0)
+    var nb = b(0).toDouble * b(0)
+    var i = 1
+    while (i < dim) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb) + 1e-12)
+  }
+
+  /** [[cosineLoop]] as a column; null when either vector is. */
+  private def cosineCol(dim: Int, a: Column, b: Column): Column =
+    udf { (x: Array[Float], y: Array[Float]) =>
+      if (x == null || y == null) null
+      else java.lang.Double.valueOf(cosineLoop(x, y, dim))
+    }.apply(a, b)
+
   /** Exact top-k cosine neighbors for each query id. Ordering ties are
     * broken by neighbor id so results are engine-independent. */
   def bruteForceTopK(queries: DataFrame, refs: DataFrame, k: Int,
@@ -170,14 +194,7 @@ object Similarity extends Serializable {
         col("rid").cast("long"), col("rv"))
       .as[(Long, Array[Float], Long, Array[Float])]
       .map { case (qid, qv, rid, rv) =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < qv.length) {
-          val a = qv(i).toDouble; val b = rv(i).toDouble
-          dot += a * b; na += a * a; nb += b * b
-          i += 1
-        }
-        (qid, rid, dot / (math.sqrt(na) * math.sqrt(nb) + 1e-12))
+        (qid, rid, cosineLoop(qv, rv, qv.length))
       }
       .toDF("qid", "rid", "cos_raw")
       .withColumn("cos", round(col("cos_raw"), 6))
@@ -2536,7 +2553,7 @@ object Similarity extends Serializable {
     val a = vectors.select(col(idCol).as("id_a"), col(vecCol).as("va"))
     val b = vectors.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cos", round(cosineFixed(dim, col("va"), col("vb")), 6))
+      .withColumn("cos", round(cosineCol(dim, col("va"), col("vb")), 6))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
   }
@@ -2702,7 +2719,7 @@ object Similarity extends Serializable {
       val b = assigned.select(col("cluster"), col("id").as("id_b"), col("v").as("vb"))
       val out = a.join(b, Seq("cluster"))
         .filter(col("id_a") < col("id_b"))
-        .withColumn("cos", round(cosineFixed(dim, col("va"), col("vb")), 6))
+        .withColumn("cos", round(cosineCol(dim, col("va"), col("vb")), 6))
         .filter(col("cos") >= threshold)
         .select(col("id_a"), col("id_b"), col("cos"), col("cluster"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -2,10 +2,13 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text analysis for training-data pipelines: token counting, quality
-  * scoring, language ID, fingerprinting. Pure column expressions —
-  * everything stays in whole-stage codegen, no UDFs.
+  * scoring, language ID, fingerprinting. Column expressions where they
+  * compile; a Scala kernel (a UDF, which whole-stage codegen calls
+  * directly) where a per-row loop would otherwise be higher-order
+  * array functions, which Spark runs interpreted.
   */
 object TextAnalysis {
 
@@ -216,14 +219,14 @@ object TextAnalysis {
     * classic cheap degenerate-text detector: base64 blobs and
     * one-char spam sit far from natural language's ~4 bits.
     *
-    * Computed entirely with higher-order functions on the char array
-    * (distinct chars → per-char counts → H = log2 n − Σ c·log2 c / n),
-    * so it is a pure NARROW map — no explode, no shuffle: a scan at
-    * 100 TB, like [[winnowFingerprints]]. Per-doc cost is
-    * O(|alphabet|·len); the alphabet is bounded, the corpus is not —
-    * the right side of that trade. Each array materializes as an
-    * attribute before the next lambda consumes it (the per-element
-    * re-evaluation trap documented on winnowFingerprints).
+    * H = log2 n − Σ c·log2 c / n over the per-character counts c. One
+    * compiled pass per document ([[charCounts]]) yields the distinct
+    * count, n and the sum, so it is a pure NARROW map — no explode, no
+    * shuffle: a scan at 100 TB, like [[winnowFingerprints]] — at
+    * O(len) per document. The same counts as higher-order functions
+    * (filter per distinct char inside a transform, then an aggregate)
+    * cost O(|alphabet|·len) lambda calls per document, and Spark runs
+    * every one of them interpreted (they are `CodegenFallback`).
     *
     * Rounded to 6dp: the sum over ≤|alphabet| well-scaled terms agrees
     * with DuckDB's entropy() aggregate to ~1 ulp regardless of
@@ -233,21 +236,90 @@ object TextAnalysis {
     * Returns (idCol, distinct_chars, entropy). */
   def charEntropy(df: DataFrame, idCol: String = "doc_id",
                   textCol: String = "text"): DataFrame = {
-    val chars = df.select(col(idCol),
-      filter(split(col(textCol), ""), c => length(c) > 0).as("_cs"))
-    val staged = chars
-      .withColumn("_d", array_distinct(col("_cs")))
-      .withColumn("_n", size(col("_cs")).cast("double"))
-      .withColumn("_cnts", transform(col("_d"),
-        c => size(filter(col("_cs"), x => x === c)).cast("double")))
     // Zero-character docs emit no row, mirroring a GROUP BY over
     // characters (a grouped aggregate has nothing to group): keeps
     // parity with the per-character oracle on corpora with empty text.
-    staged.filter(col("_n") > 0.0).select(col(idCol),
-      size(col("_d")).as("distinct_chars"),
-      round(log2(col("_n")) - aggregate(col("_cnts"), lit(0.0),
-        (acc, c) => acc + c * log2(c)) / col("_n"), 6).as("entropy"))
+    // The filter reads the text, never the kernel's result, so the
+    // kernel runs once per row and only on rows that emit.
+    val counted = df.filter(length(col(textCol)) > 0).select(col(idCol),
+      charCountsUdf(col(textCol).cast("binary")).as("_k"))
+    val n = col("_k._2").cast("double")
+    counted.select(col(idCol),
+      col("_k._1").as("distinct_chars"),
+      round(log2(n) - col("_k._3") / n, 6).as("entropy"))
   }
+
+  /** (distinct characters, characters, Σ c·log2 c) of one non-empty
+    * UTF-8 text, the sum taken in first-occurrence order from 0.0 with
+    * Spark's `log2` (`StrictMath.log(c) / StrictMath.log(2)`).
+    *
+    * A character is exactly what `split(text, "")` yields: the bytes
+    * one lead byte spans under `UTF8String.numBytesForFirstByte`, the
+    * last one cut at the end of the text. So a surrogate pair is one
+    * character, and invalid UTF-8 splits as Spark splits it. */
+  private[graft] def charCounts(bytes: Array[Byte]): (Int, Int, Double) = {
+    val table = new CharTable
+    var n = 0
+    var p = 0
+    while (p < bytes.length) {
+      val len = math.min(UTF8String.numBytesForFirstByte(bytes(p)), bytes.length - p)
+      var key = len.toLong
+      var i = 0
+      while (i < len) { key = (key << 8) | (bytes(p + i) & 0xff); i += 1 }
+      table.add(key)
+      n += 1
+      p += len
+    }
+    var acc = 0.0
+    var j = 0
+    while (j < table.distinct) {
+      val c = table.counts(j).toDouble
+      acc += c * (StrictMath.log(c) / StrictMath.log(2))
+      j += 1
+    }
+    (table.distinct, n, acc)
+  }
+
+  /** Character counts in first-occurrence order: an open-addressing
+    * table over keys packing (length, bytes) into a long, whose slots
+    * hold 1 + the key's index in that order (0 = empty). */
+  private final class CharTable {
+    var keys = new Array[Long](32)
+    var counts = new Array[Int](32)
+    var distinct = 0
+    private var slots = new Array[Int](64)
+
+    def add(key: Long): Unit = {
+      var s = find(key)
+      if (slots(s) != 0) counts(slots(s) - 1) += 1
+      else {
+        if (distinct == keys.length) { grow(); s = find(key) }
+        keys(distinct) = key
+        counts(distinct) = 1
+        distinct += 1
+        slots(s) = distinct
+      }
+    }
+
+    /** The slot holding `key`, or the empty slot where it goes. */
+    private def find(key: Long): Int = {
+      val mask = slots.length - 1
+      // Fibonacci hash onto the power-of-two table
+      var s = ((key * 0x9E3779B97F4A7C15L) >>> (64 - Integer.numberOfTrailingZeros(slots.length))).toInt
+      while (slots(s) != 0 && keys(slots(s) - 1) != key) s = (s + 1) & mask
+      s
+    }
+
+    private def grow(): Unit = {
+      keys = java.util.Arrays.copyOf(keys, distinct * 2)
+      counts = java.util.Arrays.copyOf(counts, distinct * 2)
+      slots = new Array[Int](keys.length * 2)
+      var j = 0
+      while (j < distinct) { slots(find(keys(j))) = j + 1; j += 1 }
+    }
+  }
+
+  private val charCountsUdf = udf(charCounts _).withName("char_counts")
 
   /** Per-source lexical statistics — the corpus-level audit table a
     * data curator reads before training: document and token counts,

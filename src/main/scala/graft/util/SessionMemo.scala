@@ -8,8 +8,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** The one registry for what several queries of a session share: the
   * lineitem graph and its triangles, the jaccard and winnow pair
-  * graphs, the brute top-k truth, scan split counts. Each consumer
-  * says at its call site why the value is worth sharing.
+  * graphs, the brute top-k truth, scan split counts, table schemas.
+  * Each consumer says at its call site why the value is worth sharing.
   *
   * An entry is keyed by (session UUID, memo name, table dir) and lives
   * only while

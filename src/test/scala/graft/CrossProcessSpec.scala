@@ -42,7 +42,7 @@ class CrossProcessSpec extends SparkSpec {
     "exactly one winner, the loser's error names the single-writer " +
     "contract, and a pinned cross-boundary reader stays byte-stable") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_xproc").toString
+    val root = tempDir("graft_xproc").toString
     val dir = s"$root/idx"
     val vi = VectorIndex.train(spark, e,
       VectorIndex.Params(VectorIndex.FloatTier, nLists = 4, nProbe = 4),

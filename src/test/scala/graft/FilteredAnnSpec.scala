@@ -107,7 +107,7 @@ class FilteredAnnSpec extends SparkSpec {
   test("metadata predicate on a DISK-BACKED codes index: the SQ and BQ " +
     "filtered rungs run a real label filter, ≡ pre-filtered route") {
     val e = Tables.embeddings(spark, sf)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fcodes").toString
+    val tmp = tempDir("graft_fcodes").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
     val pred = col("label") === 2

@@ -31,7 +31,7 @@ class IndexDeleteSpec extends SparkSpec {
   test("deleteIds on the streamed float IVF index: probes never return " +
     "deleted ids, survivors byte-identical, unaffected leaves untouched") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_del").toString
+    val tmp = tempDir("graft_del").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     // two trigger partitions, the attach layout
     IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 === 0), centers)
@@ -92,7 +92,7 @@ class IndexDeleteSpec extends SparkSpec {
 
   test("deleteIds on the SQ8 codes index: probe parity after delete") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delsq").toString
+    val tmp = tempDir("graft_delsq").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
     IvfStream.assignAndEncodeOnIngest(e, centers, codec)
@@ -116,7 +116,7 @@ class IndexDeleteSpec extends SparkSpec {
 
   test("deleteIds emptying a whole leaf leaves a readable index") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delall").toString
+    val tmp = tempDir("graft_delall").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val assigned = IvfStream.assignOnIngest(e, centers)
     assigned.write.partitionBy("list").mode("overwrite")
@@ -135,7 +135,7 @@ class IndexDeleteSpec extends SparkSpec {
 
   test("deleteIds on the band-key index: delete → no match → re-add") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delnd").toString
+    val tmp = tempDir("graft_delnd").toString
     val docs = Seq(
       (0L, "the quick brown fox jumps over the lazy dog again and again"),
       (1L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -170,7 +170,7 @@ class IndexDeleteSpec extends SparkSpec {
   test("a delete crashed mid-leaf-swap self-heals on the next read, " +
     "and re-running deleteIds completes it") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delcr").toString
+    val tmp = tempDir("graft_delcr").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IvfStream.assignOnIngest(e, centers)
       .write.partitionBy("list").mode("overwrite")
@@ -211,7 +211,7 @@ class IndexDeleteSpec extends SparkSpec {
     "re-admit the doc at the exact gate") {
     import spark.implicits._
     import graft.streaming.CurateStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delfp").toString
+    val tmp = tempDir("graft_delfp").toString
     val docs = Seq((0L, "alpha bravo charlie"), (1L, "delta echo foxtrot"))
       .toDF("doc_id", "text")
     docs.select(md5(col("text")).as("fp"))
@@ -237,7 +237,7 @@ class IndexDeleteSpec extends SparkSpec {
     "gates re-admit the forgotten document") {
     import spark.implicits._
     import graft.streaming.CurateStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft_forget").toString
+    val tmp = tempDir("graft_forget").toString
     val doomedText = "the quick brown fox jumps over the lazy dog again and again"
     val docs = Seq(
       (0L, doomedText),
@@ -269,7 +269,7 @@ class IndexDeleteSpec extends SparkSpec {
     "mapping; refuses vecIndexDirs without a mapping") {
     import spark.implicits._
     val e = Tables.embeddings(spark, sf)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_forgetv").toString
+    val tmp = tempDir("graft_forgetv").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
     IvfStream.assignOnIngest(e, centers)
@@ -303,7 +303,7 @@ class IndexDeleteSpec extends SparkSpec {
   test("past the exact-predicate valve the isin superset scan still " +
     "installs ONLY affected leaves — untouched leaves byte-identical") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delvalve").toString
+    val tmp = tempDir("graft_delvalve").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 === 0), centers)
       .write.partitionBy("list").mode("overwrite")
@@ -351,7 +351,7 @@ class IndexDeleteSpec extends SparkSpec {
     "layouts (<dir>/codes): probe parity, crash heals through the " +
     "persisted reader") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delpers").toString
+    val tmp = tempDir("graft_delpers").toString
     val doomed = Seq(3L, 4L, 7L)
 
     val (centersW, codecW) = Similarity.ivfSqWriteIndex(spark, e,
@@ -416,7 +416,7 @@ class IndexDeleteSpec extends SparkSpec {
 
   test("deleteIds refuses a flat (non-partitioned) directory") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delfl").toString
+    val tmp = tempDir("graft_delfl").toString
     Seq((1L, "x")).toDF("vec_id", "payload")
       .write.mode("overwrite").parquet(s"$tmp/flat")
     val err = intercept[IllegalArgumentException] {
@@ -431,7 +431,7 @@ class IndexDeleteSpec extends SparkSpec {
     // (doc_id, vec_id) mapping with the id NOT first used to delete by
     // doc_id silently, since the cast to the key type succeeds
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delcol").toString
+    val tmp = tempDir("graft_delcol").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IvfStream.assignOnIngest(e, centers)
       .write.partitionBy("list").mode("overwrite")

@@ -10,7 +10,7 @@ import graft.model.GraphOps
 class IoSpec extends SparkSpec {
 
   private def write(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft-io")
+    val dir = tempDir("graft-io")
     val p = dir.resolve(name)
     Files.writeString(p, content)
     p.toString
@@ -50,7 +50,7 @@ class IoSpec extends SparkSpec {
   test("dataset catalog: named entry resolves by canonical filename") {
     // gzipped fixture under the catalog's canonical name, loaded via the
     // one-call load_dataset UX (datasets.py:726-758)
-    val dir = Files.createTempDirectory("graft-catalog")
+    val dir = tempDir("graft-catalog")
     val gz = new java.util.zip.GZIPOutputStream(
       Files.newOutputStream(dir.resolve("facebook_combined.txt.gz")))
     gz.write("# fb fixture\n0 1\n1 2\n2 0\n1 0\n".getBytes)
@@ -110,7 +110,7 @@ class IoSpec extends SparkSpec {
   test("csv sink round-trips; markdown/latex/html render") {
     import spark.implicits._
     val df = Seq(("a", 1.0), ("b", 2.5)).toDF("name", "value")
-    val dir = Files.createTempDirectory("graft-sink").resolve("out").toString
+    val dir = tempDir("graft-sink").resolve("out").toString
     EdgeListReader.writeCsv(df, dir)
     val back = spark.read.option("header", "true").csv(dir)
     assert(back.count() == 2)
@@ -161,7 +161,7 @@ class IoSpec extends SparkSpec {
 
   test("fetch: download caches by existence; overwrite refetches (S17)") {
     import graft.io.Fetch
-    val dir = Files.createTempDirectory("graft-fetch")
+    val dir = tempDir("graft-fetch")
     val src = dir.resolve("remote.txt")
     Files.writeString(src, "v1")
     val dest = dir.resolve("cache/local.txt").toFile
@@ -180,7 +180,7 @@ class IoSpec extends SparkSpec {
 
   test("fetch: gz / zip / tar.gz extract round-trips (S17)") {
     import graft.io.Fetch
-    val dir = Files.createTempDirectory("graft-extract").toFile
+    val dir = tempDir("graft-extract").toFile
     // single-file .gz -> stem (datasets.py:108-113 semantics)
     val gzf = new java.io.File(dir, "edges.txt.gz")
     val gz = new java.util.zip.GZIPOutputStream(
@@ -221,7 +221,7 @@ class IoSpec extends SparkSpec {
 
   test("fetch: zip-slip traversal entry is refused (S17)") {
     import graft.io.Fetch
-    val dir = Files.createTempDirectory("graft-slip").toFile
+    val dir = tempDir("graft-slip").toFile
     val zipf = new java.io.File(dir, "evil.zip")
     val zos = new java.util.zip.ZipOutputStream(
       new java.io.FileOutputStream(zipf))
@@ -234,7 +234,7 @@ class IoSpec extends SparkSpec {
 
   test("fetch: fetchAndLoad downloads a catalog dataset then parses it (S17+S18)") {
     import graft.io.Fetch
-    val dir = Files.createTempDirectory("graft-fal")
+    val dir = tempDir("graft-fal")
     // stage a fake origin for the catalog's canonical file, then point
     // a file:// catalog clone at it by pre-seeding the cache path —
     // fetchAndLoad must skip the (network) fetch via cache-by-existence

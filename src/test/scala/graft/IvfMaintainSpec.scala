@@ -118,7 +118,7 @@ class IvfMaintainSpec extends SparkSpec {
   test("maintain: no-op without evidence or under threshold; fires on " +
     "breach, reassigns, returns new centers, clears the log") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_mnt").toString
+    val root = tempDir("graft_mnt").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val drifted = e.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
@@ -177,7 +177,7 @@ class IvfMaintainSpec extends SparkSpec {
   test("maintain miniBatch=true fires the one-pass refresh rung and " +
     "still resets the drift signal") {
     val e = Tables.embeddings(spark, sf)
-    val root = java.nio.file.Files.createTempDirectory("graft_mntmb").toString
+    val root = tempDir("graft_mntmb").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val drifted = e.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
@@ -205,7 +205,7 @@ class IvfMaintainSpec extends SparkSpec {
   test("maintainSq fires reassignSq: codes re-encoded under the " +
     "retrained (centers, codec), log cleared; maintainBq mirrors it") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_mntsq").toString
+    val root = tempDir("graft_mntsq").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
     val drifted = e.select(col("vec_id"),
@@ -251,7 +251,7 @@ class IvfMaintainSpec extends SparkSpec {
   test("fragmentation arm: healthy quantizer + batch litter past " +
     "maxBatches compacts WITHOUT firing; log kept; next call no-ops") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_mntfrag").toString
+    val root = tempDir("graft_mntfrag").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     // five trigger partitions of litter — the streamed-ingest shape
     (0 until 5).foreach { b =>
@@ -310,7 +310,7 @@ class IvfMaintainSpec extends SparkSpec {
     "past maxBatches, preserves gate state, no-ops when tidy") {
     import spark.implicits._
     import graft.streaming.{CurateStream, NearDupStream}
-    val root = java.nio.file.Files.createTempDirectory("graft_bfrag").toString
+    val root = tempDir("graft_bfrag").toString
     val docs = (0L until 40L).map(i =>
       (i, s"document number $i about topic ${i % 7} with shared filler"))
       .toDF("doc_id", "text")
@@ -358,7 +358,7 @@ class IvfMaintainSpec extends SparkSpec {
   test("maintainPq fires reassignPq with the retrained quantizer PAIR; " +
     "unit-space staleness drives the decision; healthy no-ops") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_mntpq").toString
+    val root = tempDir("graft_mntpq").toString
     val model = Similarity.ivfPqTrainModel(spark, e, nLists = 4, m = 8,
       nCodes = 16)
     // a constant offset barely moves unit-space mean_d2 (normalized
@@ -418,7 +418,7 @@ class IvfMaintainSpec extends SparkSpec {
     "one row preserving the volume-weighted decision inputs; the " +
     "fragmentation arm fires it past maxBatches") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_slog").toString
+    val root = tempDir("graft_slog").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IvfStream.assignOnIngest(e, centers)
       .write.partitionBy("list").mode("overwrite")
@@ -468,7 +468,7 @@ class IvfMaintainSpec extends SparkSpec {
     // the drifted reading, and the NEXT trigger's assignments use the
     // centers maintain returned (re-broadcast via the driver variable)
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cad").toString
+    val tmp = tempDir("graft_cad").toString
     val base = e.select("vec_id", "embedding")
     val centersA = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val healthy = IvfStream.quantizerStaleness(e, centersA)

@@ -1707,7 +1707,7 @@ class PipelineSpec extends SparkSpec {
     // r11 write/read trio, probed from disk — must equal the inline
     // route under shared centers (the ivfTopKFromIndex ≡ ivfTopK
     // pattern, prefix column)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mivf").toString
+    val tmp = tempDir("graft_mivf").toString
     val written = Similarity.matryoshkaIvfWriteIndex(spark, e, tmp,
       dims = 32, nLists = 8)
     val (centers, onDisk) = Similarity.matryoshkaIvfReadIndex(spark, tmp)
@@ -1869,7 +1869,7 @@ class PipelineSpec extends SparkSpec {
   test("CurateStream.attach: end-to-end stream maintains both indexes") {
     import graft.streaming.{CurateStream, NearDupStream}
     import graft.pipeline.QualityClassifier
-    val tmp = java.nio.file.Files.createTempDirectory("graft_curate").toString
+    val tmp = tempDir("graft_curate").toString
     val base = docs.select("doc_id", "text")
     val scorer = QualityClassifier.fit(base, col("keep"))
     base.filter(col("doc_id") < 40).coalesce(1)
@@ -1917,7 +1917,7 @@ class PipelineSpec extends SparkSpec {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfre").toString
+    val tmp = tempDir("graft_ivfre").toString
     // epoch 1: index accrued under centersA (two batch partitions, the
     // attach layout)
     val centersA = Similarity.ivfTrainCentroids(spark, e, nLists = 8,
@@ -1959,7 +1959,7 @@ class PipelineSpec extends SparkSpec {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqre").toString
+    val tmp = tempDir("graft_sqre").toString
     // epoch 1: codes accrued under (centersA, codecA) across two
     // trigger partitions (the attachSq layout)
     val centersA = Similarity.ivfTrainCentroids(spark, e, nLists = 8,
@@ -2015,7 +2015,7 @@ class PipelineSpec extends SparkSpec {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqc").toString
+    val tmp = tempDir("graft_sqc").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
     val codec = Similarity.sqTrain(spark, e)
     // three trigger partitions of litter
@@ -2055,7 +2055,7 @@ class PipelineSpec extends SparkSpec {
   test("ivfPqRefreshIndex: refresh ≡ fresh build under new params; mid-swap self-heals") {
     import graft.pipeline.Similarity
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pqre").toString
+    val tmp = tempDir("graft_pqre").toString
     val dir = s"$tmp/pq"
     Similarity.ivfPqWriteIndex(spark, e, dir, nLists = 8, m = 16,
       nCodes = 32, seed = 42)
@@ -2119,7 +2119,7 @@ class PipelineSpec extends SparkSpec {
 
   test("CurateStream.compactFpIndex: fp set preserved; crash mid-swap self-heals") {
     import graft.streaming.CurateStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fpc").toString
+    val tmp = tempDir("graft_fpc").toString
     val fp = docs.select(md5(col("text")).as("fp"))
     // three per-trigger partitions, the attach litter pattern
     fp.filter(col("fp") < lit("6")).write.parquet(s"$tmp/fp/batch=0")
@@ -2155,7 +2155,7 @@ class PipelineSpec extends SparkSpec {
   test("CurateStream.attachWithIvf: searchable vector set ≡ curated doc set per trigger") {
     import graft.streaming.{CurateStream, IvfStream}
     import graft.pipeline.{QualityClassifier, Similarity}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cvivf").toString
+    val tmp = tempDir("graft_cvivf").toString
     // documents carrying their embedding (doc_id aligned with vec_id)
     val e = Tables.embeddings(spark, sf)
     val base = docs.select("doc_id", "text")
@@ -2206,7 +2206,7 @@ class PipelineSpec extends SparkSpec {
   test("CurateStream.attachWithIvfSq: compressed searchable set ≡ curated set; zero cache leak") {
     import graft.streaming.{CurateStream, IvfStream}
     import graft.pipeline.{QualityClassifier, Similarity}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cvsq").toString
+    val tmp = tempDir("graft_cvsq").toString
     val e = Tables.embeddings(spark, sf)
     val base = docs.select("doc_id", "text")
       .join(e.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
@@ -2278,7 +2278,7 @@ class PipelineSpec extends SparkSpec {
     assert(viaIdx.exceptAll(inOne).isEmpty && inOne.exceptAll(viaIdx).isEmpty,
       "persisted-codes probe diverges from the in-one-call operator")
     // parquet roundtrip: codec envelope and codes reload exactly
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqidx").toString
+    val tmp = tempDir("graft_sqidx").toString
     val written = Similarity.sqWriteIndex(spark, e, tmp)
     val (codec2, codes2) = Similarity.sqReadIndex(spark, tmp)
     assert(codec2.mins.sameElements(written.mins) &&
@@ -2297,7 +2297,7 @@ class PipelineSpec extends SparkSpec {
     // must be search-equivalent to the batch build.
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mivfs").toString
+    val tmp = tempDir("graft_mivfs").toString
     val e = Tables.embeddings(spark, sf).cache()
     val (centers, batchIndex) = Similarity.matryoshkaIvfBuildIndex(spark, e,
       dims = 32, nLists = 8)
@@ -2329,7 +2329,7 @@ class PipelineSpec extends SparkSpec {
   test("IvfStream.attachSq: streamed codes index ≡ batch ivfSqBuildIndex") {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqstream").toString
+    val tmp = tempDir("graft_sqstream").toString
     val e = Tables.embeddings(spark, sf).cache()
     // quantizers frozen once (trained on the full corpus, the batch
     // route's own training), then the stream encodes arrivals
@@ -2379,7 +2379,7 @@ class PipelineSpec extends SparkSpec {
     "reassignPq refresh + valve; unit-space staleness flows") {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pqstream").toString
+    val tmp = tempDir("graft_pqstream").toString
     val e = Tables.embeddings(spark, sf).cache()
     val (model, batchIndex) = Similarity.ivfPqBuildIndex(spark, e,
       nLists = 8, m = 8, nCodes = 16)
@@ -2476,7 +2476,7 @@ class PipelineSpec extends SparkSpec {
     "carries the metadata and serves a filtered probe directly") {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sqmeta").toString
+    val tmp = tempDir("graft_sqmeta").toString
     val e = Tables.embeddings(spark, sf).cache()
     val (centers, codec, _) = Similarity.ivfSqBuildIndex(spark, e,
       nLists = 8)
@@ -2545,7 +2545,7 @@ class PipelineSpec extends SparkSpec {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_opq").toString
+    val tmp = tempDir("graft_opq").toString
     val pq = Similarity.ivfPqTrainModel(spark, e, nLists = 4, m = 8,
       nCodes = 16)
     val opq = Similarity.ivfOpqTrainModel(spark, e, nLists = 4, m = 8,
@@ -2650,7 +2650,7 @@ class PipelineSpec extends SparkSpec {
     // documenting it as an exclusion (r12 verdict #7)
     import graft.streaming.{IndexDelete, IvfStream}
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mrlfam").toString
+    val tmp = tempDir("graft_mrlfam").toString
     val e = Tables.embeddings(spark, sf).cache()
     val dims = 32
     val pref = e.select(col("vec_id"),
@@ -2731,7 +2731,7 @@ class PipelineSpec extends SparkSpec {
     // hand; this pins the documented attach route end-to-end
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_flmeta").toString
+    val tmp = tempDir("graft_flmeta").toString
     val e = Tables.embeddings(spark, sf).cache()
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
     val cols = Seq("vec_id", "embedding", "label")
@@ -2773,7 +2773,7 @@ class PipelineSpec extends SparkSpec {
   test("IvfStream.attachBq: streamed 1-bit index ≡ batch ivfBqBuildIndex; reassignBq refresh + valve") {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bqstream").toString
+    val tmp = tempDir("graft_bqstream").toString
     val e = Tables.embeddings(spark, sf).cache()
     val (centers, batchIndex) = Similarity.ivfBqBuildIndex(spark, e,
       nLists = 8)
@@ -2850,7 +2850,7 @@ class PipelineSpec extends SparkSpec {
       "pre-built-index probe diverges from the one-call operator")
     // parquet roundtrip: model and codes reload exactly, and a probe
     // over the list-partitioned on-disk codes matches
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pqidx").toString
+    val tmp = tempDir("graft_pqidx").toString
     val written = Similarity.ivfPqWriteIndex(spark, e, tmp, nLists = 8,
       m = 8, nCodes = 32)
     val (model2, codes2) = Similarity.ivfPqReadIndex(spark, tmp)
@@ -2890,7 +2890,7 @@ class PipelineSpec extends SparkSpec {
       "index codes diverge from sqEncode under the same codec")
     // disk roundtrip: centers + codec + list-partitioned codes reload
     // and probe identically to the in-memory build
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfsqidx").toString
+    val tmp = tempDir("graft_ivfsqidx").toString
     val (wc, wcodec) = Similarity.ivfSqWriteIndex(spark, e, tmp, nLists = 8)
     val (rc, rcodec, rcodes) = Similarity.ivfSqReadIndex(spark, tmp)
     assert(rc.zip(wc).forall(p => p._1.sameElements(p._2)))
@@ -2932,7 +2932,7 @@ class PipelineSpec extends SparkSpec {
     assert(got(9001L)._1 == false)
     assert(got.size == neu.count())
     // and probing a COMPACTED on-disk index is the same decision set
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dai").toString
+    val tmp = tempDir("graft_dai").toString
     index.write.mode("overwrite").parquet(s"$tmp/idx/batch=0")
     NearDupStream.compactIndex(spark, s"$tmp/idx", 64, partitions = 2)
     val viaDir = NearDupStream.dedupAgainstIndex(spark, neu, s"$tmp/idx",
@@ -2972,7 +2972,7 @@ class PipelineSpec extends SparkSpec {
   test("IvfStream.attach: vectors accrue across triggers; probe sees them all") {
     import graft.streaming.IvfStream
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val tmp = tempDir("graft_ivf").toString
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding").cache()
     // quantizer trained on the corpus the batch twin will train on, so
     // the two routes share centroids exactly
@@ -3004,7 +3004,7 @@ class PipelineSpec extends SparkSpec {
 
   test("NearDupStream.attach: end-to-end file stream maintains the index") {
     import graft.streaming.NearDupStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ndup").toString
+    val tmp = tempDir("graft_ndup").toString
     val base = docs.select("doc_id", "text")
     base.filter(col("doc_id") < 40).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/in")
@@ -3057,7 +3057,7 @@ class PipelineSpec extends SparkSpec {
 
   test("NearDupStream: batch replay is idempotent (no self-drop, no dup survivors)") {
     import graft.streaming.NearDupStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ndup_rp").toString
+    val tmp = tempDir("graft_ndup_rp").toString
     val base = docs.select("doc_id", "text")
     // the attach foreachBatch body, inlined (the unit under test is the
     // replay semantics of the per-batch writes, not the stream driver)
@@ -3624,7 +3624,7 @@ class PipelineSpec extends SparkSpec {
 
   test("stateful transitions stream equals the batch lag, across batches") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("trans_stream").toString
+    val tmp = tempDir("trans_stream").toString
     // raw read keeps ts in its on-disk form (TIMESTAMP_NTZ) so the
     // re-written halves match the stream's rawSchema exactly; the
     // helper column ts_us gives a numeric handle for the split
@@ -3672,7 +3672,7 @@ class PipelineSpec extends SparkSpec {
   test("throttleOnIngest equals the batch debounce across micro-batches") {
     import spark.implicits._
     import graft.queries.Temporal
-    val tmp = java.nio.file.Files.createTempDirectory("graft_thr").toString
+    val tmp = tempDir("graft_thr").toString
     val raw = spark.read.parquet(s"$sf/events.parquet")
       .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
     val rawCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -3730,7 +3730,7 @@ class PipelineSpec extends SparkSpec {
       banded.toDF("err_id", "p_id").exceptAll(bp).isEmpty)
     // streamed in two time-split micro-batches: matches that straddle
     // the file boundary exercise the buffered join state
-    val tmp = java.nio.file.Files.createTempDirectory("sj_stream").toString
+    val tmp = tempDir("sj_stream").toString
     val raw = spark.read.parquet(s"$sf/events.parquet")
       .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
     val rawCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -3759,7 +3759,7 @@ class PipelineSpec extends SparkSpec {
     // Three micro-batches (one file each, ingest-time ordered): doc 2
     // duplicates doc 0's text one batch later (inside the watermark),
     // doc 3 is fresh. Batch twin: Dedup.exact keep_id = min doc_id.
-    val dir = java.nio.file.Files.createTempDirectory("docs_stream").toString
+    val dir = tempDir("docs_stream").toString
     def ts(min: Int) = new java.sql.Timestamp(3600000L * 24 + min * 60000L)
     val batches = Seq(
       Seq((0L, "alpha beta gamma delta", ts(0)), (1L, "unrelated text one", ts(1))),
@@ -3804,7 +3804,7 @@ class PipelineSpec extends SparkSpec {
       .filter(abs(col("score") - col("s2")) > 1e-12)
     assert(diff.isEmpty, s"routes diverge on ${diff.count()} docs")
     // streaming: the SAME transform over a file stream scores identically
-    val dir = java.nio.file.Files.createTempDirectory("docs_clf").toString
+    val dir = tempDir("docs_clf").toString
     def ts(min: Int) = new java.sql.Timestamp(3600000L * 24 + min * 60000L)
     val fixture = docs.limit(60).select(col("doc_id"), col("text"),
       lit(ts(0)).as("ingest_ts"))
@@ -3838,7 +3838,7 @@ class PipelineSpec extends SparkSpec {
       viaBatch.exceptAll(viaStreamOp).isEmpty,
       "row-local and gram-join routes diverge")
     // and it runs as an actual file stream
-    val dir = java.nio.file.Files.createTempDirectory("docs_despan").toString
+    val dir = tempDir("docs_despan").toString
     def ts(min: Int) = new java.sql.Timestamp(3600000L * 24 + min * 60000L)
     train.limit(30).select(col("doc_id"), col("text"), lit(ts(0)).as("ingest_ts"))
       .coalesce(1).write.parquet(s"$dir/b0.parquet")
@@ -3858,7 +3858,7 @@ class PipelineSpec extends SparkSpec {
     import graft.streaming.DocsStream
     val evalSet = Seq((100L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("docs_contam").toString
+    val dir = tempDir("docs_contam").toString
     def ts(min: Int) = new java.sql.Timestamp(3600000L * 24 + min * 60000L)
     val rows = Seq(
       (1L, "we say quick brown fox jumps over and more", ts(0)),
@@ -3889,7 +3889,7 @@ class PipelineSpec extends SparkSpec {
   test("streaming passage filter agrees with batch dedupPassages keep set") {
     import spark.implicits._
     import graft.streaming.DocsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_pass").toString
+    val dir = tempDir("docs_pass").toString
     def ts(min: Int) = new java.sql.Timestamp(3600000L * 24 + min * 60000L)
     // window=2 passages: doc1 [a b][c d], doc2 [a b][x y] (arrives
     // later, loses "a b"), doc3 [a b][c d] (loses everything)
@@ -3923,7 +3923,7 @@ class PipelineSpec extends SparkSpec {
   test("streaming quality gate equals batch scrub+keep+langid, row for row") {
     import spark.implicits._
     import graft.streaming.DocsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_gate").toString
+    val dir = tempDir("docs_gate").toString
     def ts(min: Int) = new java.sql.Timestamp(3600000L * 24 + min * 60000L)
     val rows = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again today", ts(0)),
@@ -3960,7 +3960,7 @@ class PipelineSpec extends SparkSpec {
   test("streaming split routing equals the batch split assignment, row for row") {
     import spark.implicits._
     import graft.streaming.DocsStream
-    val dir = java.nio.file.Files.createTempDirectory("docs_split").toString
+    val dir = tempDir("docs_split").toString
     def ts(min: Int) = new java.sql.Timestamp(3600000L * 24 + min * 60000L)
     val rows = (1L to 200L).map(i => (i, s"doc number $i", ts(i.toInt % 60)))
     rows.toDF("doc_id", "text", "ingest_ts").coalesce(2)
@@ -4005,7 +4005,7 @@ class PipelineSpec extends SparkSpec {
   test("streaming trending terms equals the batch windowed count") {
     import spark.implicits._
     import graft.streaming.DocsStream
-    val dir = java.nio.file.Files.createTempDirectory("trend_stream").toString
+    val dir = tempDir("trend_stream").toString
     def ts(hour: Int, min: Int) =
       new java.sql.Timestamp((hour * 3600L + min * 60L) * 1000L + 86400000L)
     // hour 0: "spam" surges (4x across two docs), "rare" stays hapax;
@@ -4097,7 +4097,7 @@ class PipelineSpec extends SparkSpec {
       "full-probe IVF-BQ diverges from the flat BQ rung")
     // list-partitioned disk layout (written through the trio) probes
     // identically to the in-memory build (the pruning layout contract)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfbq").toString
+    val tmp = tempDir("graft_ivfbq").toString
     val written = Similarity.ivfBqWriteIndex(spark, e, s"$tmp/idx",
       nLists = 8)
     val (centers, onDisk) = Similarity.ivfBqReadIndex(spark, s"$tmp/idx")
@@ -4193,7 +4193,7 @@ class PipelineSpec extends SparkSpec {
   test("IndexSwap: partial-.old refusal, reader fail-fast, litter cleanup, missing-live precondition") {
     import spark.implicits._
     import graft.streaming.IndexSwap
-    val tmp = java.nio.file.Files.createTempDirectory("graft_swap").toString
+    val tmp = tempDir("graft_swap").toString
     val fs = new org.apache.hadoop.fs.Path(tmp)
       .getFileSystem(spark.sessionState.newHadoopConf())
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$tmp/$s")
@@ -4261,7 +4261,7 @@ class PipelineSpec extends SparkSpec {
   test("IndexSwap: live + .swapping + UNMARKED .old is ambiguous — refuse, never delete .old") {
     import spark.implicits._
     import graft.streaming.IndexSwap
-    val tmp = java.nio.file.Files.createTempDirectory("graft_swap2").toString
+    val tmp = tempDir("graft_swap2").toString
     val fs = new org.apache.hadoop.fs.Path(tmp)
       .getFileSystem(spark.sessionState.newHadoopConf())
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$tmp/$s")
@@ -4289,7 +4289,7 @@ class PipelineSpec extends SparkSpec {
 
   test("legacy array<int> codes layout fails loudly at read time with a rebuild message") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_legacy").toString
+    val tmp = tempDir("graft_legacy").toString
     // the pre-r11 on-disk layout: codes as array<int>
     Seq((0L, Seq(1, 2, 3), 0), (1L, Seq(4, 5, 6), 1))
       .toDF("vec_id", "codes", "list")

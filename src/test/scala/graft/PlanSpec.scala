@@ -13,6 +13,15 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  test("q62 compiles every stage: it runs with codegen fallback off") {
+    // the pair joins once ran a 192-term cosine expression whose
+    // generated method passed 64 KB; Spark then ran them interpreted
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    val out = SparkEntry.queries("q62_semdedup")(s, sf).collect()
+    assert(out.nonEmpty)
+  }
+
   test("q01 pushes filters and prunes columns at the parquet scan") {
     val p = plan("q01_filter_project")
     assert(p.contains("PushedFilters: ["), s"no pushed filters in:\n$p")
@@ -441,7 +450,7 @@ class PlanSpec extends SparkSpec {
     // probe reads nProbe/nLists of the index bytes, not all of them
     import graft.pipeline.Similarity
     import graft.streaming.IvfStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfplan").toString
+    val tmp = tempDir("graft_ivfplan").toString
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
     IvfStream.assignOnIngest(e, centers)
@@ -465,7 +474,7 @@ class PlanSpec extends SparkSpec {
     // then-search, never scan-then-post-filter
     import graft.pipeline.Similarity
     import graft.streaming.IvfStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fplan").toString
+    val tmp = tempDir("graft_fplan").toString
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
     IvfStream.assignOnIngestWithMeta(e, centers, metaCols = Seq("label"))
@@ -493,7 +502,7 @@ class PlanSpec extends SparkSpec {
     // scan never reads disallowed codes
     import graft.pipeline.Similarity
     import graft.streaming.IvfStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fcplan").toString
+    val tmp = tempDir("graft_fcplan").toString
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
     val codec = Similarity.sqTrain(spark, e)
@@ -522,7 +531,7 @@ class PlanSpec extends SparkSpec {
     // shortlist and the stage-2 re-rank windows must plan as
     // WindowGroupLimit (rank-limit pushdown) partitioned by qid
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mivfplan").toString
+    val tmp = tempDir("graft_mivfplan").toString
     val e = Tables.embeddings(spark, sf)
     // the layout comes from the shipped writer (r11): the pruning pin
     // reads through the write/read trio, not a hand-rolled partitionBy
@@ -549,7 +558,7 @@ class PlanSpec extends SparkSpec {
     // the probe's ≤nLists list set must land as PartitionFilters so a
     // probe reads nProbe/nLists of the m-byte codes
     import graft.pipeline.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pqplan").toString
+    val tmp = tempDir("graft_pqplan").toString
     val e = Tables.embeddings(spark, sf)
     val model = Similarity.ivfPqWriteIndex(spark, e, tmp, nLists = 8,
       m = 8, nCodes = 32)

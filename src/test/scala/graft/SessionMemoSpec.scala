@@ -78,7 +78,7 @@ class SessionMemoSpec extends SparkSpec {
   }
 
   test("spread: a table with more splits than the quantum keeps its partitioning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    val dir = tempDir("graft_spread").toString
     spark.range(0, 1200).select(col("id").as("doc_id"))
       .repartition(12).write.parquet(s"$dir/documents.parquet")
     // one split per (small) file: a split closes once it holds a
@@ -90,5 +90,34 @@ class SessionMemoSpec extends SparkSpec {
     val df = Tables.spread(s, dir, "documents", "doc_id")
     assert(df.rdd.getNumPartitions == raw)
     assert(!df.queryExecution.executedPlan.toString.contains("Exchange"))
+  }
+
+  test("Tables: a schema is inferred once per session, dir and inference confs") {
+    val s = spark.newSession()
+    val (first, firstJobs) = countingJobs(Tables.documents(s, sf))
+    assert(firstJobs >= 1)
+    val (again, againJobs) = countingJobs(Tables.documents(s, sf))
+    assert(againJobs == 0)
+    assert(again.schema == first.schema)
+    assert(first.schema == s.read.parquet(s"$sf/documents.parquet").schema)
+    // a fresh session infers its own
+    assert(countingJobs(Tables.documents(spark.newSession(), sf))._2 >= 1)
+    // a conf that shapes inference gets its own entry, and the old one stays
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val was = s.conf.get(nanos)
+    s.conf.set(nanos, (!was.toBoolean).toString)
+    try assert(countingJobs(Tables.documents(s, sf))._2 >= 1)
+    finally s.conf.set(nanos, was)
+    assert(countingJobs(Tables.documents(s, sf))._2 == 0)
+  }
+
+  test("Tables.events: ts is normalized to a timestamp over the memoized schema") {
+    val s = spark.newSession()
+    val raw = s.read.parquet(s"$sf/events.parquet")
+    assert(Tables(s, sf, "events").schema == raw.schema)
+    val ev = Tables.events(s, sf)
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(Tables.events(s, sf).exceptAll(ev).isEmpty)
+    assert(ev.count() == raw.count())
   }
 }

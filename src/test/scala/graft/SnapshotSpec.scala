@@ -40,7 +40,7 @@ class SnapshotSpec extends SparkSpec {
     "pre-delete snapshot stays byte-stable while the delete installs; " +
     "the current snapshot excludes the deleted ids") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     floatFixture(root, e, centers)
     val pinned = IndexManifest.pin(spark, s"$root/idx")
@@ -87,8 +87,8 @@ class SnapshotSpec extends SparkSpec {
   test("superset (isin) regime on a manifested index ≡ the exact " +
     "OR-chain regime: same survivors, no duplicated rows") {
     val e = Tables.embeddings(spark, sf).cache()
-    val rootA = java.nio.file.Files.createTempDirectory("graft_snapA").toString
-    val rootB = java.nio.file.Files.createTempDirectory("graft_snapB").toString
+    val rootA = tempDir("graft_snapA").toString
+    val rootB = tempDir("graft_snapB").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     floatFixture(rootA, e, centers)
     floatFixture(rootB, e, centers)
@@ -111,7 +111,7 @@ class SnapshotSpec extends SparkSpec {
     "copy-on-write: pinned reader stable, row set preserved, manifest " +
     "collapses to the rewrite batch") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapc").toString
+    val root = tempDir("graft_snapc").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     floatFixture(root, e, centers)
     val pinned = IndexManifest.pin(spark, s"$root/idx")
@@ -144,7 +144,7 @@ class SnapshotSpec extends SparkSpec {
     "(pending replays) unless pendingOk, keeps the current " +
     "generation intact") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapv").toString
+    val root = tempDir("graft_snapv").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     floatFixture(root, e, centers)
     IndexDelete.deleteIds(spark, s"$root/idx", Seq(1L, 2L, 5L), "vec_id")
@@ -176,7 +176,7 @@ class SnapshotSpec extends SparkSpec {
   test("streamed attach on an enrolled index commits per trigger; a " +
     "reader pinned between triggers holds its generation") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_snaps").toString
+    val tmp = tempDir("graft_snaps").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     // enroll BEFORE any data: gen 0 is the empty index
     IndexManifest.enroll(spark, s"$tmp/idx")
@@ -211,7 +211,7 @@ class SnapshotSpec extends SparkSpec {
   test("manifested CODES tier: deleteIds + compactCodesIndex + " +
     "reassignSq all run copy-on-write with stable pinned reads") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapq").toString
+    val root = tempDir("graft_snapq").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
     IvfStream.assignAndEncodeOnIngest(e, centers, codec)
@@ -247,7 +247,7 @@ class SnapshotSpec extends SparkSpec {
   test("manifested band-key index (single-level leaves): takedown " +
     "keeps a pinned gate stable; the current gate re-admits") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text").cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapb").toString
+    val root = tempDir("graft_snapb").toString
     NearDupStream.bandKeys(docs).select("doc_id", "band", "bucket", "sig")
       .write.mode("overwrite").parquet(s"$root/band/batch=0")
     IndexManifest.enroll(spark, s"$root/band")
@@ -290,7 +290,7 @@ class SnapshotSpec extends SparkSpec {
     "type-generic cast path, pinned gate stable, current re-admits") {
     import graft.streaming.CurateStream
     val docs = Tables.documents(spark, sf).select("doc_id", "text").cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapg").toString
+    val root = tempDir("graft_snapg").toString
     docs.select(md5(col("text")).as("fp"))
       .write.mode("overwrite").parquet(s"$root/fp/batch=0")
     IndexManifest.enroll(spark, s"$root/fp")
@@ -320,7 +320,7 @@ class SnapshotSpec extends SparkSpec {
   test("manifested probe keeps the PartitionFilters pruning of the " +
     "listing-based read — on the live route AND the pinned route") {
     import graft.pipeline.VectorIndex
-    val tmp = java.nio.file.Files.createTempDirectory("graft_snapp").toString
+    val tmp = tempDir("graft_snapp").toString
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
     IvfStream.assignOnIngest(e, centers)
@@ -362,7 +362,7 @@ class SnapshotSpec extends SparkSpec {
     // reader must equal that generation's expected row set, computed
     // by replaying the writer's deterministic op sequence afterwards.
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapx").toString
+    val root = tempDir("graft_snapx").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     floatFixture(root, e, centers)
     val allIds = e.select("vec_id").collect().map(_.getLong(0)).toSet
@@ -423,7 +423,7 @@ class SnapshotSpec extends SparkSpec {
     "copy-on-write (committed leaves never mutate, rows never " +
     "duplicate); a replay of already-folded rows is a no-op") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapi").toString
+    val root = tempDir("graft_snapi").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IndexManifest.enroll(spark, s"$root/idx")
     val b0 = e.filter(col("vec_id") < 100)
@@ -485,7 +485,7 @@ class SnapshotSpec extends SparkSpec {
     "copy-on-write with a versioned model epoch: a pre-refresh pin " +
     "replays byte-identically while the current pair is the new one") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapr").toString
+    val root = tempDir("graft_snapr").toString
     val dir = s"$root/pq"
     Similarity.ivfPqWriteIndex(spark, e, dir, nLists = 4, m = 8,
       nCodes = 16)
@@ -571,7 +571,7 @@ class SnapshotSpec extends SparkSpec {
     import graft.pipeline.VectorIndex
     import graft.streaming.ModelStore
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapm").toString
+    val root = tempDir("graft_snapm").toString
     val params = VectorIndex.Params(VectorIndex.FloatTier, nLists = 4,
       nProbe = 2)
     val vi = VectorIndex.train(spark, e, params, s"$root/idx")
@@ -626,7 +626,7 @@ class SnapshotSpec extends SparkSpec {
     "the full quantizer pair (centers + codebooks + rotation)") {
     import graft.pipeline.VectorIndex
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapn").toString
+    val root = tempDir("graft_snapn").toString
     val params = VectorIndex.Params(
       VectorIndex.PqTier(m = 8, nCodes = 16, opq = true), nLists = 4,
       nProbe = 2, refine = 4)
@@ -658,7 +658,7 @@ class SnapshotSpec extends SparkSpec {
     "index reads ≡ the batch twin through it all") {
     val e = Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 1800).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_snapt").toString
+    val tmp = tempDir("graft_snapt").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IndexManifest.enroll(spark, s"$tmp/idx") // gen 0 (empty, full)
     val cols = e.select("vec_id", "embedding")
@@ -706,7 +706,7 @@ class SnapshotSpec extends SparkSpec {
   test("delta manifests: incremental commits write O(changed) bytes, " +
     "a full snapshot re-anchors every fullEvery generations, " +
     "resolution is exact, and vacuum keeps whole chains") {
-    val root = java.nio.file.Files.createTempDirectory("graft_snapd").toString
+    val root = tempDir("graft_snapd").toString
     val dir = s"$root/idx"
     val base = (0 until 1000).map(i => f"batch=0/list=$i")
     var snap = IndexManifest.commitAt(spark, dir, 0L, base)
@@ -776,7 +776,7 @@ class SnapshotSpec extends SparkSpec {
   test("vacuum minAgeMs spares generations inside the pin horizon; " +
     "a duplicate-generation commit fails loudly, index intact") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapa").toString
+    val root = tempDir("graft_snapa").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     floatFixture(root, e, centers)
     val g0 = IndexManifest.pin(spark, s"$root/idx")
@@ -810,7 +810,7 @@ class SnapshotSpec extends SparkSpec {
     "batches: retained dead leaves must not re-trigger compaction " +
     "before vacuum") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapf").toString
+    val root = tempDir("graft_snapf").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IndexManifest.enroll(spark, s"$root/idx")
     (0 until 5).foreach { b =>
@@ -848,7 +848,7 @@ class SnapshotSpec extends SparkSpec {
   test("persisted IVF-SQ layout: enrolling <dir>/codes routes " +
     "ivfSqReadIndex through the manifest; delete-while-pinned holds") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapw").toString
+    val root = tempDir("graft_snapw").toString
     val dir = s"$root/sq"
     Similarity.ivfSqWriteIndex(spark, e, dir, nLists = 4)
     IndexManifest.enroll(spark, s"$dir/codes")
@@ -868,7 +868,7 @@ class SnapshotSpec extends SparkSpec {
     "uncommitted orphan leaf survives the vacuum and the replay then " +
     "completes correctly") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapp").toString
+    val root = tempDir("graft_snapp").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IndexManifest.enroll(spark, s"$root/idx")
     val b0 = e.filter(col("vec_id") < 100)
@@ -904,7 +904,7 @@ class SnapshotSpec extends SparkSpec {
     "then history-pruned and dir-vacuumed must replay as a no-op, " +
     "not re-add folded rows") {
     val e = Tables.embeddings(spark, sf).cache()
-    val root = java.nio.file.Files.createTempDirectory("graft_snapt").toString
+    val root = tempDir("graft_snapt").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IndexManifest.enroll(spark, s"$root/idx")
     val b0 = e.filter(col("vec_id") < 100)

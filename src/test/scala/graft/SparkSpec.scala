@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
@@ -49,9 +52,35 @@ object TestSpark {
   *    single-partition formulation (these fixtures define a constant
   *    partition where possible — the partitionBy(lit(0)) idiom).
   */
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** This suite's temp root, made on first use; `afterAll` deletes it. */
+  private var tempRoot: Option[java.nio.file.Path] = None
+
+  /** A new directory under the suite's temp root. */
+  def tempDir(prefix: String): java.nio.file.Path = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory(s"graft_${getClass.getSimpleName}_")
+      tempRoot = Some(r)
+      r
+    }
+    java.nio.file.Files.createTempDirectory(root, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try synchronized {
+      tempRoot.foreach(r => org.apache.commons.io.FileUtils.deleteDirectory(r.toFile))
+      tempRoot = None
+    } finally super.afterAll()
+
+  /** The `CodegenFallback` expressions (by class name) in `df`'s executed
+    * plan, AQE stages included: whole-stage codegen evaluates each of
+    * them interpreted. */
+  def codegenFallbacks(df: DataFrame): Seq[String] =
+    SparkSpec.planHelper.flatMap(df.queryExecution.executedPlan)(
+      _.expressions.flatMap(_.collect { case e: CodegenFallback => e.getClass.getSimpleName }))
 
   /** `body` at the default route caps, then inside
     * [[graft.util.DriverRoute.distributed]]: (routed, distributed). The
@@ -92,4 +121,8 @@ abstract class SparkSpec extends AnyFunSuite {
       (out, jobs.size)
     } finally sc.removeSparkListener(listener)
   }
+}
+
+object SparkSpec {
+  private val planHelper = new AdaptiveSparkPlanHelper {}
 }

@@ -44,8 +44,7 @@ class VectorIndexSpec extends SparkSpec {
         opqIters = 3)),
       ("matryoshka", VectorIndex.MatryoshkaTier(prefixDims = 32)))
     tiers.foreach { case (name, tier) =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft_vi_$name").toString
+      val tmp = tempDir(s"graft_vi_$name").toString
       val params = VectorIndex.Params(tier, nLists = 4, nProbe = 4,
         shortlist = 30, refine = 6, metaCols = Seq("label"))
       val vi0 = VectorIndex.train(spark, e, params, s"$tmp/idx")
@@ -146,7 +145,7 @@ class VectorIndexSpec extends SparkSpec {
   test("facade delegation is exact: facade topK ≡ the direct per-tier " +
     "operator call on the same directory") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vieq").toString
+    val tmp = tempDir("graft_vieq").toString
     val params = VectorIndex.Params(VectorIndex.Sq8Tier, nLists = 4,
       nProbe = 4, shortlist = 30)
     val vi = VectorIndex.train(spark, e, params, s"$tmp/idx")
@@ -164,7 +163,7 @@ class VectorIndexSpec extends SparkSpec {
   test("Matryoshka tier facade ≡ the direct matryoshkaIvf* operator: " +
     "stored rows are the prefix index, topK matches exactly") {
     val e = Tables.embeddings(spark, sf).cache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vim").toString
+    val tmp = tempDir("graft_vim").toString
     val dims = 32
     val params = VectorIndex.Params(VectorIndex.MatryoshkaTier(dims),
       nLists = 4, nProbe = 4, shortlist = 30)
@@ -207,8 +206,7 @@ class VectorIndexSpec extends SparkSpec {
       ("matryoshka", VectorIndex.MatryoshkaTier(prefixDims = 32)))
     val qs = e.filter(col("vec_id") < 10)
     tiers.foreach { case (name, tier) =>
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft_vl_$name").toString
+      val tmp = tempDir(s"graft_vl_$name").toString
       val params = VectorIndex.Params(tier, nLists = 4, nProbe = 4,
         shortlist = 30, refine = 6, metaCols = Seq("label"))
       val vi = VectorIndex.train(spark, e, params, s"$tmp/idx")
@@ -230,7 +228,7 @@ class VectorIndexSpec extends SparkSpec {
         wantF.exceptAll(gotF).isEmpty, s"$name: filtered probe parity")
     }
     // reload after a fired maintain: the newest epoch wins
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vlm").toString
+    val tmp = tempDir("graft_vlm").toString
     val vi = VectorIndex.train(spark, e,
       VectorIndex.Params(VectorIndex.FloatTier, nLists = 4, nProbe = 4),
       s"$tmp/idx")
@@ -312,7 +310,7 @@ class VectorIndexSpec extends SparkSpec {
       "auto must pick plain on isotropic blobs (the r13g finding: the " +
         "rotation is a noise fit there)")
     // and the facade constructor routes through it
-    val tmp = java.nio.file.Files.createTempDirectory("graft_viauto").toString
+    val tmp = tempDir("graft_viauto").toString
     val viC = VectorIndex.train(spark, correlated,
       VectorIndex.Params(VectorIndex.PqTier(m = 8, nCodes = 16,
         opqIters = 3, opqAuto = true), nLists = 8,

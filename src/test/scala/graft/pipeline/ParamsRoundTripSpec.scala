@@ -10,7 +10,7 @@ package graft.pipeline
 class ParamsRoundTripSpec extends graft.SparkSpec {
 
   private def roundTrip(p: VectorIndex.Params): VectorIndex.Params = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vp").toString
+    val tmp = tempDir("graft_vp").toString
     VectorIndex.writeParams(spark, tmp, p)
     VectorIndex.readParams(spark, tmp).getOrElse(
       fail("params file written but not readable back"))
@@ -37,7 +37,7 @@ class ParamsRoundTripSpec extends graft.SparkSpec {
   }
 
   test("the r14 comma-joined legacy format still loads") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vpl").toString
+    val tmp = tempDir("graft_vpl").toString
     // forge an r14-era properties file: comma-joined metaCols, no
     // metaCols.count key
     val props = new java.util.Properties()

@@ -11,7 +11,7 @@ import graft.streaming.{IndexManifest, IndexSwap}
 class SmallFilesSpec extends graft.SparkSpec {
 
   private def tmpRoot(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def fsFor(p: String) =
     new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
