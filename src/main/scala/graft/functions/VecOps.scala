@@ -39,33 +39,6 @@ object VecOps {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(sqNorm(a)) * sqrt(sqNorm(b)) + lit(1e-12))
 
-  /** Midpoint of two points (embedder_pytorch.py:784-785). */
-  def midpoint(a: Column, b: Column): Column =
-    zip_with(a, b, (x, y) => (x + y) / 2.0)
-
-  /** 4-point centroid (embedder_pytorch.py:722). */
-  def centroid4(a: Column, b: Column, c: Column, d: Column): Column =
-    zip_with(zip_with(a, b, (x, y) => x + y), zip_with(c, d, (x, y) => x + y),
-      (s1, s2) => (s1 + s2) / 4.0)
-
-  /** 2D orientation determinant sign on the first two coordinates
-    * (embedder_pytorch.py:760-763): sign((b-a) × (c-a)). */
-  def orient2d(ax: Column, ay: Column, bx: Column, by: Column,
-               cx: Column, cy: Column): Column =
-    signum((bx - ax) * (cy - ay) - (by - ay) * (cx - ax))
-
-  /** Proper segment intersection p1-p2 vs q1-q2 on first two dims
-    * (embedder_pytorch.py:738-774): o1*o2<0 && o3*o4<0. */
-  def segmentsIntersect(p1: Column, p2: Column, q1: Column, q2: Column): Column = {
-    def x(c: Column) = element_at(c, 1)
-    def y(c: Column) = element_at(c, 2)
-    val o1 = orient2d(x(p1), y(p1), x(p2), y(p2), x(q1), y(q1))
-    val o2 = orient2d(x(p1), y(p1), x(p2), y(p2), x(q2), y(q2))
-    val o3 = orient2d(x(q1), y(q1), x(q2), y(q2), x(p1), y(p1))
-    val o4 = orient2d(x(q1), y(q1), x(q2), y(q2), x(p2), y(p2))
-    (o1 * o2 < 0) && (o3 * o4 < 0)
-  }
-
   /** Per-dimension sum aggregate for a groupBy over an array column:
     * builds d scalar `sum` columns (partial+final hash agg — ONE
     * shuffle) and reassembles the array. Beats posexplode+collect_list

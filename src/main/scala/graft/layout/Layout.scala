@@ -1,10 +1,11 @@
 package graft.layout
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.VecOps
-import graft.gen.Generators.hashUniform
+import graft.util.DriverRoute.{foldLong, hashStart, toUniform}
+import graft.util.Iterate
 
 /** Layout configuration mirroring the reference defaults
   * (benchmark.py:18-19, embedder_pytorch.py:56-103). */
@@ -19,20 +20,16 @@ case class LayoutConfig(
     seed: Long = 42)
 
 /** Force-directed layout with edge-crossing repulsion — the reference's
-  * engine core (embedder_pytorch.py:595-833) as one declarative
-  * DataFrame program per iteration.
-  *
-  * Per iteration (SURVEY.md §4): the sampled kNN queries (≤ sampleSize
-  * midpoints) are collected and broadcast; positions are gathered
-  * through broadcast joins (positions ≪ edges at scale); the kNN runs
-  * as one cell grid per edge partition; and three shuffles remain: the
-  * kNN merge window, the fused spring + intersection scatter-add, and
-  * the join of the forces onto the positions. The normalization
-  * statistics ride in the job that materializes the moved positions.
-  * Positions are cached and locally checkpointed each iteration to
-  * truncate lineage (the Spark failure mode the reference doesn't have,
-  * SURVEY.md §7 risk 2).
-  */
+  * engine core (embedder_pytorch.py:595-833). An iteration's dynamics
+  * are written once, as Scala kernels over a [[PartGraph]]: [[spring]]
+  * (A2), [[midpoints]], [[sampled]] (W4), the exact kNN [[CellGrid]]
+  * (J3) and [[crossings]] (A3 with P4–P6). Two placements run them:
+  * [[runLocal]] on one partition graph of the whole graph, on the
+  * driver; [[runLoop]] on every edge partition after a gather of the
+  * endpoint positions (J1), merging the partitions' kNN candidates on
+  * the driver, where the crossing forces are computed. Positions are
+  * locally checkpointed each iteration to truncate lineage (the Spark
+  * failure mode the reference doesn't have, SURVEY.md §7 risk 2). */
 object Layout {
 
   /** Broadcast the positions table into gathers up to this vertex
@@ -41,6 +38,9 @@ object Layout {
     * (unbounded) size estimate, so without the explicit hint Catalyst
     * picks sort-merge even for 500 rows. */
   private val BroadcastPosMax = 5000000L
+
+  /** An edge with its endpoints' positions: (eid, src, dst, p1, p2). */
+  private[graft] type Gathered = (Long, Long, Long, Array[Double], Array[Double])
 
   /** Stable deterministic edge id (hash of endpoints; canonical edges). */
   def withEdgeIds(edges: DataFrame): DataFrame =
@@ -54,205 +54,114 @@ object Layout {
       .join(side(pos.select(col("id").as("dst"), col("pos").as("p2"))), "dst")
   }
 
-  /** A2 spring force contributions: per-edge force emitted for
-    * both endpoints with opposite signs (embedder_pytorch.py:595-636).
-    * The reference's magnitude is -k_attr·(dist-L_min) applied along
+  /** A partition graph: edge j joins the local vertices src(j) and
+    * dst(j) and has id eids(j); pos(v) is vertex v's position. */
+  private[graft] final class PartGraph(val src: Array[Int], val dst: Array[Int],
+                                       val eids: Array[Long], val pos: Array[Array[Double]])
+
+  /** The partition graph of `rows` and the id of each local vertex;
+    * vertices are numbered, and keep their position, in order of first
+    * appearance. */
+  private[graft] def partGraph(rows: Iterator[Gathered]): (PartGraph, Array[Long]) = {
+    val local = new java.util.HashMap[Long, Integer]()
+    val ids = Array.newBuilder[Long]; val pos = Array.newBuilder[Array[Double]]
+    def vertex(v: Long, p: Array[Double]): Int = {
+      val i = local.get(v)
+      if (i != null) i.intValue else { local.put(v, local.size); ids += v; pos += p; local.size - 1 }
+    }
+    val (src, dst, eids) =
+      rows.map { case (e, s, t, p1, p2) => (vertex(s, p1), vertex(t, p2), e) }.toArray.unzip3
+    (new PartGraph(src, dst, eids, pos.result()), ids.result())
+  }
+
+  /** A2 springs (embedder_pytorch.py:595-636), edge by edge in order:
+    * each edge's force is added to force(src) and subtracted from
+    * force(dst). The reference's magnitude is -k_attr·(dist-L_min) along
     * (p2-p1)/dist to src (embedder_pytorch.py:626-635): edges SHORTER
     * than L_min attract, longer repel — the sign the layout dynamics
-    * (and the radius-vs-centrality correlations) depend on.
-    * Returns UNAGGREGATED (id, f) rows — step() fuses all force streams
-    * into a single scatter-add shuffle.
-    *
-    * Emission uses explode(array(struct..)) — ONE pass over the edge
-    * pipeline. A union of two selects re-executes the whole gather
-    * subtree per branch (Catalyst plans are trees, not DAGs); with the
-    * kNN inside, that multiplied iteration cost ~4×. Force math is
-    * fixed-dimension column arithmetic, fully codegen'd. */
-  def springContrib(edges: DataFrame, pos: DataFrame, cfg: LayoutConfig,
-                    bcast: Boolean = true): DataFrame = {
+    * (and the radius-vs-centrality correlations) depend on. */
+  private[graft] def spring(g: PartGraph, cfg: LayoutConfig,
+                            force: Array[Array[Double]]): Unit = {
     val d = cfg.nComponents
-    val diffs = (0 until d).map(i =>
-      (element_at(col("p2"), i + 1) - element_at(col("p1"), i + 1)).as(s"d$i"))
-    val dist = sqrt((0 until d).map(i => col(s"d$i") * col(s"d$i")).reduce(_ + _)) + lit(1e-6)
-    val g = gather(edges, pos, bcast)
-      .select(Seq(col("src"), col("dst")) ++ diffs: _*)
-      .withColumn("coef", lit(-cfg.kAttr) * (dist - lit(cfg.LMin)) / dist)
-    val fPos = array((0 until d).map(i => col(s"d$i") * col("coef")): _*)
-    val fNeg = array((0 until d).map(i => -col(s"d$i") * col("coef")): _*)
-    g.select(explode(array(
-      struct(col("src").as("id"), fPos.as("f")),
-      struct(col("dst").as("id"), fNeg.as("f")))).as("c"))
-      .select(col("c.id").as("id"), col("c.f").as("f"))
-  }
-
-  /** Aggregated spring forces (kept for direct use/tests). */
-  def springForces(edges: DataFrame, pos: DataFrame, cfg: LayoutConfig): DataFrame =
-    VecOps.sumVecBy(springContrib(edges, pos, cfg), "id", cfg.nComponents, "f")
-
-  /** Edge midpoints (embedder_pytorch.py:784-785): (eid, src, dst, mid). */
-  def midpoints(edgesWithId: DataFrame, pos: DataFrame,
-                bcast: Boolean = true): DataFrame =
-    gather(edgesWithId, pos, bcast)
-      .select(col("eid"), col("src"), col("dst"),
-        VecOps.midpoint(col("p1"), col("p2")).as("mid"))
-
-  /** W4 deterministic sample of ~s midpoints (embedder_pytorch.py:406-413)
-    * via hash thresholding: expected s rows, exactly reproducible for a
-    * (seed, iter), and NO global sort — a pure narrow filter, unlike
-    * orderBy().limit() which shuffles every midpoint each iteration.
-    * `refCount` is the midpoint population m. */
-  def sampleMidpoints(mids: DataFrame, s: Int, seed: Long, refCount: Long): DataFrame =
-    if (refCount <= s) mids
-    else mids.filter(hashUniform(seed, col("eid")) < s.toDouble / refCount)
-
-  /** J3 exact kNN: sampled query midpoints × all reference midpoints,
-    * per-query top-k by squared distance (embedder_pytorch.py:543-593),
-    * self-match dropped (embedder_pytorch.py:420-421).
-    *
-    * The query side is collected and broadcast, so it must be small
-    * (the loop passes its ≤ sampleSize sample). Each reference partition
-    * builds one [[CellGrid]] over its midpoints and emits its first k
-    * per query in (d2, rid) order; one window over those survivors
-    * (partitions × |q| × k rows) keeps the first k overall. A query's
-    * global top-k lies inside the union of the partitions' lists, so the
-    * result is exact and the same for any partitioning of the refs. d2
-    * sums the dimensions left to right, as on the driver route. */
-  def knnExact(queries: DataFrame, refs: DataFrame, k: Int, dim: Int = 3): DataFrame = {
-    val spark = refs.sparkSession
-    import spark.implicits._
-    def rows(df: DataFrame) = df.select(col("eid"), col("src"), col("dst"), col("mid"))
-      .as[(Long, Long, Long, Array[Double])]
-    val bc = spark.sparkContext.broadcast(rows(queries).collect())
-    val partial = rows(refs)
-      .mapPartitions(it => partitionKnn(it.toArray, bc.value, k, dim))
-      .toDF("qid", "qsrc", "qdst", "rid", "rsrc", "rdst", "d2")
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("rid").asc)
-    partial
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .drop("rn")
-  }
-
-  /** [[knnExact]] within one partition: the first k of `refs` for each
-    * query, as (qid, qsrc, qdst, rid, rsrc, rdst, d2) rows. */
-  private def partitionKnn(refs: Array[(Long, Long, Long, Array[Double])],
-                           queries: Array[(Long, Long, Long, Array[Double])],
-                           k: Int, d: Int): Iterator[(Long, Long, Long, Long, Long, Long, Double)] = {
-    if (k <= 0 || refs.isEmpty) return Iterator.empty
-    val mid = new Array[Double](refs.length * d)
-    val eids = new Array[Long](refs.length)
+    val diff = new Array[Double](d)
     var j = 0
-    while (j < refs.length) {
-      System.arraycopy(refs(j)._4, 0, mid, j * d, d)
-      eids(j) = refs(j)._1
+    while (j < g.eids.length) {
+      val a = g.src(j); val b = g.dst(j)
+      var d2 = 0.0
+      var i = 0
+      while (i < d) { diff(i) = g.pos(b)(i) - g.pos(a)(i); d2 += diff(i) * diff(i); i += 1 }
+      val dist = math.sqrt(d2) + 1e-6
+      val coef = -cfg.kAttr * (dist - cfg.LMin) / dist
+      i = 0
+      while (i < d) { val f = diff(i) * coef; force(a)(i) += f; force(b)(i) -= f; i += 1 }
       j += 1
     }
-    val grid = new CellGrid(mid, d, eids)
-    queries.iterator.flatMap { case (qid, qsrc, qdst, qm) =>
-      grid.knn(qm, 0, qid, k).iterator.map { r =>
-        val (rid, rsrc, rdst, rm) = refs(r)
-        var d2 = 0.0
-        var i = 0
-        while (i < d) { val df = qm(i) - rm(i); d2 += df * df; i += 1 }
-        (qid, qsrc, qdst, rid, rsrc, rdst, d2)
-      }
-    }
   }
 
-  /** A3 intersection repulsion contributions (unaggregated): for each
-    * candidate edge pair from kNN that properly intersects (P4/P5/P6),
-    * push all 4 endpoints away from the pair centroid with k_inter/d²
-    * (embedder_pytorch.py:638-736). One explode pass — see
-    * springContrib for why unions of selects are forbidden here. */
-  def intersectionContrib(pairs: DataFrame, pos: DataFrame, cfg: LayoutConfig,
-                          bcast: Boolean = true): DataFrame = {
+  /** Edge midpoints (embedder_pytorch.py:784-785), edge j's at j*d. */
+  private[graft] def midpoints(g: PartGraph, d: Int): Array[Double] =
+    Array.tabulate(g.eids.length * d)(x =>
+      (g.pos(g.src(x / d))(x % d) + g.pos(g.dst(x / d))(x % d)) / 2.0)
+
+  /** W4 (embedder_pytorch.py:406-413): whether edge `eid` is one of the
+    * about sampleSize kNN queries of iteration `it` among m edges. A hash
+    * threshold, hashUniform(seed + it, eid) < s/m: exactly reproducible
+    * for a (seed, iteration), and no sort. */
+  private[graft] def sampled(eid: Long, cfg: LayoutConfig, it: Int, m: Long): Boolean =
+    m <= cfg.sampleSize ||
+      toUniform(foldLong(hashStart(cfg.seed + it), eid)) < cfg.sampleSize.toDouble / m
+
+  /** A3 (embedder_pytorch.py:638-774): for each query edge qs(a) and
+    * each of its neighbours nbrs(a) in order, a pair that passes P4 (the
+    * query's eid is the smaller), P5 (no shared vertex) and P6 (a proper
+    * crossing in the first two dimensions, o1·o2 < 0 and o3·o4 < 0)
+    * pushes its four endpoints away from their centroid by k_inter/d². */
+  private[graft] def crossings(g: PartGraph, qs: Array[Int], nbrs: Array[Array[Int]],
+                               cfg: LayoutConfig, force: Array[Array[Double]]): Unit = {
     val d = cfg.nComponents
-    def side(df: DataFrame) = if (bcast) broadcast(df) else df
-    val p = pairs
-      .filter(col("qid") < col("rid")) // P4 i<j
-      .filter(!(col("qsrc") === col("rsrc") || col("qsrc") === col("rdst") ||
-        col("qdst") === col("rsrc") || col("qdst") === col("rdst"))) // P5
-    val withPos = p
-      .join(side(pos.select(col("id").as("qsrc"), col("pos").as("p1"))), "qsrc")
-      .join(side(pos.select(col("id").as("qdst"), col("pos").as("p2"))), "qdst")
-      .join(side(pos.select(col("id").as("rsrc"), col("pos").as("q1"))), "rsrc")
-      .join(side(pos.select(col("id").as("rdst"), col("pos").as("q2"))), "rdst")
-      .filter(VecOps.segmentsIntersect(col("p1"), col("p2"), col("q1"), col("q2"))) // P6
-      .withColumn("c4", VecOps.centroid4(col("p1"), col("p2"), col("q1"), col("q2")))
-    val exploded = withPos.select(col("c4"), explode(array(
-      struct(col("qsrc").as("id"), col("p1").as("pt")),
-      struct(col("qdst").as("id"), col("p2").as("pt")),
-      struct(col("rsrc").as("id"), col("q1").as("pt")),
-      struct(col("rdst").as("id"), col("q2").as("pt")))).as("c"))
-      .select(col("c.id").as("id"), col("c.pt").as("pt"), col("c4"))
-    val diffs = (0 until d).map(i =>
-      (element_at(col("pt"), i + 1) - element_at(col("c4"), i + 1)).as(s"d$i"))
-    val dsq = (0 until d).map(i => col(s"d$i") * col(s"d$i")).reduce(_ + _)
-    exploded.select(Seq(col("id")) ++ diffs: _*)
-      .withColumn("dist", sqrt(dsq) + lit(1e-6))
-      .select(col("id"), array((0 until d).map(i =>
-        col(s"d$i") * lit(cfg.kInter) / (col("dist") * col("dist"))): _*).as("f"))
-  }
-
-
-  /** A4 center-and-scale per dimension (embedder_pytorch.py:800-804);
-    * torch.std is the SAMPLE std (ddof=1) → stddev_samp. The 2·d
-    * statistics collapse to one row collected on the driver. */
-  def normalize(pos: DataFrame, dim: Int): DataFrame = {
-    val statCols = (0 until dim).flatMap(i => Seq(
-      avg(element_at(col("pos"), i + 1)).as(s"m$i"),
-      stddev_samp(element_at(col("pos"), i + 1)).as(s"s$i")))
-    val st = pos.agg(statCols.head, statCols.tail: _*).collect()(0)
-    val comps = (0 until dim).map { i =>
-      val m = st.getAs[Double](s"m$i")
-      val sRaw = st.getAs[Double](s"s$i")
-      val s = if (sRaw.isNaN) 0.0 else sRaw
-      (element_at(col("pos"), i + 1) - lit(m)) / lit(s + 1e-6)
+    // sign((b-a) × (c-a)) on the first two coordinates
+    def o(a: Array[Double], b: Array[Double], c: Array[Double]): Double =
+      math.signum((b(0) - a(0)) * (c(1) - a(1)) - (b(1) - a(1)) * (c(0) - a(0)))
+    def push(v: Int, c4: Array[Double]): Unit = {
+      val pt = g.pos(v)
+      var d2 = 0.0; var i = 0
+      while (i < d) { val df = pt(i) - c4(i); d2 += df * df; i += 1 }
+      val dist = math.sqrt(d2) + 1e-6
+      i = 0
+      while (i < d) { force(v)(i) += (pt(i) - c4(i)) * cfg.kInter / (dist * dist); i += 1 }
     }
-    pos.select(col("id"), array(comps: _*).as("pos"))
+    for (a <- qs.indices; rj <- nbrs(a)) {
+      val qj = qs(a)
+      val s1 = g.src(qj); val t1 = g.dst(qj); val s2 = g.src(rj); val t2 = g.dst(rj)
+      if (g.eids(qj) < g.eids(rj) && s1 != s2 && s1 != t2 && t1 != s2 && t1 != t2) {
+        val p1 = g.pos(s1); val p2 = g.pos(t1); val q1 = g.pos(s2); val q2 = g.pos(t2)
+        if (o(p1, p2, q1) * o(p1, p2, q2) < 0 && o(q1, q2, p1) * o(q1, q2, p2) < 0) {
+          val c4 = Array.tabulate(d)(i => (p1(i) + p2(i) + q1(i) + q2(i)) / 4.0)
+          push(s1, c4); push(t1, c4); push(s2, c4); push(t2, c4)
+        }
+      }
+    }
   }
 
-  /** One layout iteration (update_positions, embedder_pytorch.py:776-806).
-    * Spring and intersection contributions are unioned RAW and fused
-    * into one scatter-add hash aggregate — a single force shuffle per
-    * iteration instead of three. */
-  def step(edgesWithId: DataFrame, pos: DataFrame,
-           cfg: LayoutConfig, iter: Int, refCount: Long,
-           nVertices: Long = 0L): DataFrame = {
-    val bcast = nVertices <= BroadcastPosMax
-    val spring = springContrib(edgesWithId, pos, cfg, bcast)
-    val contrib =
-      if (cfg.kInter == 0.0) spring
-      else {
-        val mids = midpoints(edgesWithId, pos, bcast)
-        val sampled = sampleMidpoints(mids, cfg.sampleSize, cfg.seed + iter, refCount)
-        val pairs = knnExact(sampled, mids, cfg.nNeighbors, cfg.nComponents)
-        spring.unionByName(intersectionContrib(pairs, pos, cfg, bcast))
-      }
-    val forcesRaw = VecOps.sumVecBy(contrib, "id", cfg.nComponents, "f")
-    // forces join pos WITHOUT a broadcast hint: a broadcast build is a
-    // separate driver-blocking job per iteration, while the shuffle
-    // join folds into the main job (both sides are loop-state-sized).
-    // At cluster scale forces ~ n rows — not broadcastable anyway, so
-    // the shuffle plan is also the one that survives 100× data.
-    val forces = forcesRaw
-    // Unnormalized move; run() checkpoints this, then applies A4
-    // normalization as a lazy projection over the cached rows so the
-    // force pipeline executes exactly once per iteration.
-    pos.join(forces, Seq("id"), "left")
-      .select(col("id"),
-        when(col("f").isNull, col("pos"))
-          .otherwise(VecOps.add(col("pos"), col("f"))).as("pos"))
+  /** A4 (embedder_pytorch.py:800-804): per dimension, the mean and the
+    * scale (sample std, ddof=1 as torch.std, plus 1e-6) of n positions
+    * with coordinate sums `sums` and sums of squares `sqs`. */
+  private def meanScale(sums: Array[Double], sqs: Array[Double],
+                        n: Long): (Array[Double], Array[Double]) = {
+    val mean = sums.map(_ / n)
+    (mean, Array.tabulate(sums.length) { i =>
+      val variance =
+        if (n > 1) math.max(0.0, (sqs(i) - n * mean(i) * mean(i)) / (n - 1)) else 0.0
+      math.sqrt(variance) + 1e-6
+    })
   }
 
   /** L3 driver loop (run_layout, embedder_pytorch.py:808-833).
     * Routes to [[runLocal]] up to `DriverRoute.LoopEdges` edges for
     * every config (long/long edge schema only — eids must hash
-    * identically on both routes); the distributed loop above. Both
-    * routes implement the same dynamics with the same exact kNN kernel
-    * ([[CellGrid]]); they differ only in floating-point summation order, so
-    * trajectories agree to ~1e-6 over a few iterations (asserted by
-    * EmbeddingSpec) and statistically thereafter. */
+    * identically in both placements); to [[runLoop]] above. The two
+    * placements run the same kernels and differ only in the order the
+    * springs and the A4 statistics are summed in. */
   def run(spark: SparkSession, edges: DataFrame, initial: DataFrame,
           cfg: LayoutConfig): DataFrame = {
     import graft.util.DriverRoute.{LoopEdges, probePairs}
@@ -267,156 +176,57 @@ object Layout {
     // partitions (64 for a 264-row grid), and every per-iteration stage
     // inherits that task count. coalesce is narrow over the cache and
     // never increases the partition count, so big inputs keep theirs.
-    val eSized = e.coalesce(graft.util.Iterate.sizedPartitions(spark, m))
-    graft.util.Iterate.withSizedShuffle(spark, m) {
+    val eSized = e.coalesce(Iterate.sizedPartitions(spark, m))
+    Iterate.withSizedShuffle(spark, m) {
       runLoop(spark, eSized, initial, cfg, m)
     }
   }
 
-  /** Driver-local twin of the distributed loop — identical dynamics
-    * (same eid hashing, same hash-threshold midpoint sampling, same
-    * exact kNN with (d2, rid) tie-breaks, same P4/P5/P6 intersection
-    * predicate, same ddof=1 normalization), executed on collected
-    * arrays. The kNN is [[knnCells]]: one exact cell-grid search per
-    * iteration, its queries fanned out across cores, and each query's
-    * neighbours applied in (d2, rid) order. The edges come sorted from
-    * the probe, so the spring sums do not depend on the partition order
-    * of the collect. The reference runs this entire regime single-node
-    * (NumPy/PyTorch); routing small graphs to the driver is the
-    * Spark-honest version of that, with [[runLoop]] carrying the 100 TB
-    * regime. */
+  /** The driver placement: the kernels on one partition graph of the
+    * collected arrays. The edges come sorted from the probe, so the
+    * springs sum in (src, dst) order whatever the partitioning of the
+    * collect; the crossing forces follow, by query, then neighbour in
+    * (d2, eid, index) order from [[knnCells]]. The reference runs this
+    * entire regime single-node (NumPy/PyTorch); routing small graphs to
+    * the driver is the Spark-honest version of that. */
   private def runLocal(spark: SparkSession, eArrAll: Array[(Long, Long)],
                        initial: DataFrame, cfg: LayoutConfig): DataFrame = {
-    import graft.util.DriverRoute.{hashStart, foldLong, toUniform}
     val d = cfg.nComponents
     val init = initial.select(col("id"), col("pos")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val n = init.length
-    val ids = init.map(_._1)
+    val ids = init.map(_.getLong(0))
     val idIdx = new java.util.HashMap[Long, Int](n * 2)
-    var vi = 0
-    while (vi < n) { idIdx.put(ids(vi), vi); vi += 1 }
-    var pos = init.map(_._2.clone())
+    ids.indices.foreach(v => idIdx.put(ids(v), v))
     // Edges with an endpoint absent from `initial` are DROPPED, exactly
     // like the distributed gather's inner join (a null from idIdx.get
     // would otherwise silently unbox to vertex 0). The sampling
     // denominator stays the FULL edge count, matching the distributed
     // loop, which counts edges before the gather.
-    val eArr = eArrAll.filter { case (s, t) =>
-      idIdx.containsKey(s) && idIdx.containsKey(t) }
-    val mFull = eArrAll.length
-    val m = eArr.length
-    // eid = xxhash64(src, dst): seed 42, fold each long
-    val eids = new Array[Long](m)
-    val esrc = new Array[Int](m); val edst = new Array[Int](m)
-    var ei = 0
-    while (ei < m) {
-      val (s, t) = eArr(ei)
-      eids(ei) = foldLong(foldLong(42L, s), t)
-      esrc(ei) = idIdx.get(s); edst(ei) = idIdx.get(t)
-      ei += 1
-    }
-    // hashUniform(seed, eid) = xxhash64(lit(seed), eid) >>> 11 / 2^53
-    def hashU(seed: Long, x: Long): Double =
-      toUniform(foldLong(hashStart(seed), x))
-    var it = 0
-    while (it < cfg.numIterations) {
+    val eArr = eArrAll.filter { case (s, t) => idIdx.containsKey(s) && idIdx.containsKey(t) }
+    val g = new PartGraph(eArr.map(e => idIdx.get(e._1)), eArr.map(e => idIdx.get(e._2)),
+      eArr.map { case (s, t) => foldLong(foldLong(42L, s), t) }, // withEdgeIds' xxhash64
+      init.map(_.getSeq[Double](1).toArray))
+    val pos = g.pos
+    for (it <- 0 until cfg.numIterations) {
       val force = Array.fill(n)(new Array[Double](d))
-      ei = 0
-      while (ei < m) { // A2 spring, same sign/eps as springContrib
-        val a = esrc(ei); val b = edst(ei)
-        val pa = pos(a); val pb = pos(b)
-        var d2 = 0.0; val diff = new Array[Double](d)
-        var i = 0
-        while (i < d) { diff(i) = pb(i) - pa(i); d2 += diff(i) * diff(i); i += 1 }
-        val dist = math.sqrt(d2) + 1e-6
-        val coef = -cfg.kAttr * (dist - cfg.LMin) / dist
-        i = 0
-        while (i < d) {
-          val f = diff(i) * coef; force(a)(i) += f; force(b)(i) -= f; i += 1
-        }
-        ei += 1
-      }
+      spring(g, cfg, force)
       if (cfg.kInter != 0.0) {
-        val mids = new Array[Double](m * d)
-        var j = 0
-        while (j < m) {
-          val pa = pos(esrc(j)); val pb = pos(edst(j))
-          var i = 0
-          while (i < d) { mids(j * d + i) = (pa(i) + pb(i)) / 2.0; i += 1 }
-          j += 1
-        }
-        val thr = cfg.sampleSize.toDouble / mFull
-        val sampled =
-          if (mFull <= cfg.sampleSize) Array.range(0, m)
-          else Array.range(0, m).filter(j => hashU(cfg.seed + it, eids(j)) < thr)
-        val nbrs = knnCells(mids, d, eids, sampled, cfg.nNeighbors)
-        // A3 intersection repulsion over surviving (P4/P5/P6) pairs
-        var si = 0
-        while (si < sampled.length) {
-          val qj = sampled(si)
-          for (rj <- nbrs(si)) {
-            if (eids(qj) < eids(rj)) { // P4
-              val qs = esrc(qj); val qd = edst(qj)
-              val rsrc = esrc(rj); val rdst = edst(rj)
-              if (qs != rsrc && qs != rdst && qd != rsrc && qd != rdst) { // P5
-                val p1 = pos(qs); val p2 = pos(qd)
-                val q1 = pos(rsrc); val q2 = pos(rdst)
-                def o(ax: Double, ay: Double, bx: Double, by: Double,
-                      cx: Double, cy: Double): Double =
-                  math.signum((bx - ax) * (cy - ay) - (by - ay) * (cx - ax))
-                val o1 = o(p1(0), p1(1), p2(0), p2(1), q1(0), q1(1))
-                val o2 = o(p1(0), p1(1), p2(0), p2(1), q2(0), q2(1))
-                val o3 = o(q1(0), q1(1), q2(0), q2(1), p1(0), p1(1))
-                val o4 = o(q1(0), q1(1), q2(0), q2(1), p2(0), p2(1))
-                if (o1 * o2 < 0 && o3 * o4 < 0) { // P6
-                  val c4 = Array.tabulate(d)(i =>
-                    (p1(i) + p2(i) + q1(i) + q2(i)) / 4.0)
-                  for ((v, pt) <- Seq((qs, p1), (qd, p2), (rsrc, q1), (rdst, q2))) {
-                    var d2 = 0.0; var i = 0
-                    while (i < d) { val df = pt(i) - c4(i); d2 += df * df; i += 1 }
-                    val dist = math.sqrt(d2) + 1e-6
-                    i = 0
-                    while (i < d) {
-                      force(v)(i) += (pt(i) - c4(i)) * cfg.kInter / (dist * dist)
-                      i += 1
-                    }
-                  }
-                }
-              }
-            }
-          }
-          si += 1
-        }
+        val qs = g.eids.indices.toArray.filter(j => sampled(g.eids(j), cfg, it, eArrAll.length))
+        crossings(g, qs, knnCells(midpoints(g, d), d, g.eids, qs, cfg.nNeighbors), cfg, force)
       }
-      // move + A4 center-and-scale (ddof=1, same eps)
+      // move + A4 center-and-scale
       val sums = new Array[Double](d); val sqs = new Array[Double](d)
-      vi = 0
-      while (vi < n) {
-        val p = pos(vi); val f = force(vi)
-        var i = 0
-        while (i < d) {
-          p(i) += f(i); sums(i) += p(i); sqs(i) += p(i) * p(i); i += 1
-        }
-        vi += 1
+      for (v <- 0 until n; i <- 0 until d) {
+        val p = pos(v); p(i) += force(v)(i); sums(i) += p(i); sqs(i) += p(i) * p(i)
       }
-      var i = 0
-      while (i < d) {
-        val mean = sums(i) / n
-        val variance =
-          if (n > 1) math.max(0.0, (sqs(i) - n * mean * mean) / (n - 1)) else 0.0
-        val scale = math.sqrt(variance) + 1e-6
-        vi = 0
-        while (vi < n) { pos(vi)(i) = (pos(vi)(i) - mean) / scale; vi += 1 }
-        i += 1
-      }
-      it += 1
+      val (mean, scale) = meanScale(sums, sqs, n)
+      for (v <- 0 until n; i <- 0 until d) pos(v)(i) = (pos(v)(i) - mean(i)) / scale(i)
     }
     import spark.implicits._
     ids.zip(pos).toSeq.toDF("id", "pos")
   }
 
-  /** Exact kNN of the driver loop over the flat midpoints `mid` (row j
+  /** Exact kNN of the driver placement over the flat midpoints `mid` (row j
     * at j*d): for each query index, the (up to) k references j with
     * eids(j) != eids(query) that come first in (d2, eid, index) order,
     * listed in that order. That is the (d2, rid) order of the
@@ -436,7 +246,7 @@ object Layout {
   private def before(d2: Double, e: Long, j: Int, d2b: Double, eb: Long, jb: Int): Boolean =
     d2 < d2b || (d2 == d2b && (e < eb || (e == eb && j < jb)))
 
-  /** The exact kNN kernel of both layout routes: a cell grid over m > 0
+  /** The exact kNN kernel of both layout placements: a cell grid over m > 0
     * reference midpoints (row j of `mid` at j*d) that answers queries
     * at any coordinates.
     *
@@ -644,72 +454,143 @@ object Layout {
         done = covered || (size == k && bound > bd(worst))
         r += 1
       }
-      // insertion sort of the admitted slots into (d2, eid, index) order
-      val slot = Array.range(0, size)
-      var a = 1
-      while (a < size) {
-        val s = slot(a)
-        var b = a - 1
-        while (b >= 0 && before(bd(s), be(s), bj(s), bd(slot(b)), be(slot(b)), bj(slot(b)))) {
-          slot(b + 1) = slot(b); b -= 1
-        }
-        slot(b + 1) = s
-        a += 1
-      }
-      var a2 = 0
-      while (a2 < size) { slot(a2) = bj(slot(a2)); a2 += 1 }
-      slot
+      Array.range(0, size)
+        .sortWith((x, y) => before(bd(x), be(x), bj(x), bd(y), be(y), bj(y))).map(bj)
     }
   }
 
+  /** The distributed placement: per iteration the position broadcast,
+    * the kNN candidates' job ([[step]]) and the move. The move's action
+    * also returns the A4 statistics per partition, combined in PARTITION
+    * ORDER on the driver (treeAggregate's completion-order combine would
+    * make the float sums run-dependent), and the moved positions of the
+    * next iteration's query endpoints, so the queries take no job: the
+    * W4 samples of every iteration come from one pass before the loop. */
   private def runLoop(spark: SparkSession, e: DataFrame, initial: DataFrame,
                       cfg: LayoutConfig, m: Long): DataFrame = {
-    // Per iteration: ONE full execution (materializing the moved
-    // positions), then normalization stats + projection read the cache.
-    var (pos, handle) = graft.util.Iterate.checkpoint(spark,
-      initial.coalesce(graft.util.Iterate.sizedPartitions(spark, 0L)))
-    val n = pos.count()
+    import spark.implicits._
     val d = cfg.nComponents
-    var it = 0
-    while (it < cfg.numIterations) {
-      // ONE job per iteration: the A4 stats aggregate IS the
-      // materializing action of the checkpoint (the force pipeline
-      // executes inside it; the persisted rows back the next step).
-      // Partials are combined in PARTITION ORDER on the driver —
-      // treeAggregate's completion-order combine makes float sums
-      // run-dependent and breaks bit-reproducibility of the layout.
-      val (moved, mh, partialsRaw) = graft.util.Iterate.checkpointWith(
-        spark, step(e, pos, cfg, it, m, n)) { rdd =>
-        rdd.mapPartitionsWithIndex { (idx, rows) =>
-          val s = new Array[Double](d); val q = new Array[Double](d); var c = 0L
-          rows.foreach { row =>
-            val p = row.getSeq[Double](1)
-            var i = 0
-            while (i < d) { s(i) += p(i); q(i) += p(i) * p(i); i += 1 }
-            c += 1
-          }
-          Iterator((idx, (s, q, c)))
+    // queries(it): iteration it's sampled (eid, src, dst), in (src, dst) order
+    val queries = {
+      val rows = if (cfg.kInter == 0.0) Array.empty[(Int, Long, Long, Long)]
+        else e.select("eid", "src", "dst").as[(Long, Long, Long)].flatMap { case (eid, s, t) =>
+          (0 until cfg.numIterations).filter(sampled(eid, cfg, _, m)).map((_, eid, s, t))
         }.collect()
-      }
+      Array.tabulate(cfg.numIterations)(it =>
+        rows.filter(_._1 == it).map(r => (r._2, r._3, r._4)).sortBy(r => (r._2, r._3)))
+    }
+    def endpoints(it: Int): Set[Long] =
+      if (it < cfg.numIterations) queries(it).flatMap(q => Seq(q._2, q._3)).toSet else Set.empty
+    // coordinate sums, sums of squares, count, and the rows of `want`
+    def scan(rdd: RDD[Row], want: Set[Long]) = {
+      val parts = rdd.mapPartitionsWithIndex { (idx, rows) =>
+        val s = new Array[Double](d); val q = new Array[Double](d); var c = 0L
+        val got = Array.newBuilder[(Long, Array[Double])]
+        rows.foreach { row =>
+          val p = row.getSeq[Double](1)
+          for (i <- 0 until d) { s(i) += p(i); q(i) += p(i) * p(i) }
+          c += 1
+          val id = row.getAs[Number](0).longValue // int or long vertex ids
+          if (want(id)) got += ((id, p.toArray))
+        }
+        Iterator((idx, (s, q, c, got.result())))
+      }.collect().sortBy(_._1).map(_._2)
+      val sums = new Array[Double](d); val sqs = new Array[Double](d)
+      for ((s, q, _, _) <- parts; i <- 0 until d) { sums(i) += s(i); sqs(i) += q(i) }
+      (sums, sqs, parts.map(_._3).sum, parts.flatMap(_._4))
+    }
+    var (pos, handle, (_, _, n, at)) = Iterate.checkpointWith(spark,
+      initial.coalesce(Iterate.sizedPartitions(spark, 0L)))(scan(_, endpoints(0)))
+    for (it <- 0 until cfg.numIterations) {
+      val atPos = at.toMap
+      val qs = queries(it).flatMap { case (eid, s, t) =>
+        for (pa <- atPos.get(s); pb <- atPos.get(t)) yield (eid, s, t, pa, pb) }
+      val (moved, mh, (sums, sqs, cnt, got)) = Iterate.checkpointWith(spark,
+        step(e, pos, cfg, qs, n <= BroadcastPosMax))(scan(_, endpoints(it + 1)))
       handle.unpersist(blocking = false)
-      val partials = partialsRaw.sortBy(_._1).map(_._2)
-      val sums = new Array[Double](d); val sqs = new Array[Double](d); var cnt = 0L
-      partials.foreach { case (s, q, c) =>
-        var i = 0
-        while (i < d) { sums(i) += s(i); sqs(i) += q(i); i += 1 }
-        cnt += c
-      }
-      val comps = (0 until d).map { i =>
-        val mean = sums(i) / cnt
-        // sample std (ddof=1) to match torch.std (embedder_pytorch.py:803)
-        val variance = if (cnt > 1) math.max(0.0, (sqs(i) - cnt * mean * mean) / (cnt - 1)) else 0.0
-        (element_at(col("pos"), i + 1) - lit(mean)) / lit(math.sqrt(variance) + 1e-6)
-      }
-      pos = moved.select(col("id"), array(comps: _*).as("pos"))
+      val (mean, scale) = meanScale(sums, sqs, cnt)
+      // the projection's arithmetic, so the queries see the positions' bits
+      at = got.map { case (id, p) => (id, Array.tabulate(d)(i => (p(i) - mean(i)) / scale(i))) }
+      pos = moved.select(col("id"), array((0 until d).map(i =>
+        (element_at(col("pos"), i + 1) - lit(mean(i))) / lit(scale(i))): _*).as("pos"))
       handle = mh
-      it += 1
     }
     e.unpersist()
     pos
+  }
+
+  /** One distributed iteration (update_positions,
+    * embedder_pytorch.py:776-806): the moved, unnormalized positions.
+    * `queries` are the iteration's sampled edges with their endpoints'
+    * positions, in (src, dst) order; their crossing forces are computed
+    * here, in the kNN candidates' job. The edge partitions' springs and
+    * those forces are summed per vertex in one scatter-add, joined onto
+    * the positions without a broadcast hint (a broadcast build would be
+    * one more job, and at cluster scale the forces are ~n rows). */
+  private[graft] def step(e: DataFrame, pos: DataFrame, cfg: LayoutConfig,
+                          queries: Array[Gathered], bcast: Boolean): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val d = cfg.nComponents
+    val g = gather(e, pos, bcast).select("eid", "src", "dst", "p1", "p2").as[Gathered].rdd
+    val cross = if (queries.isEmpty) Seq.empty else crossingForces(g, queries, cfg).toSeq
+    val springs = g.mapPartitions { rows =>
+      val (pg, ids) = partGraph(rows)
+      val force = Array.fill(ids.length)(new Array[Double](d))
+      spring(pg, cfg, force)
+      ids.iterator.zip(force.iterator)
+    }
+    val forces = VecOps.sumVecBy(
+      springs.union(spark.sparkContext.parallelize(cross, 1)).toDF("id", "f"), "id", d, "f")
+    pos.join(forces, Seq("id"), "left")
+      .select(col("id"),
+        when(col("f").isNull, col("pos"))
+          .otherwise(VecOps.add(col("pos"), col("f"))).as("pos"))
+  }
+
+  /** A3 in the distributed placement: [[crossings]] of the query edges
+    * against their [[knnPartitions]] neighbours, on the driver, over one
+    * partition graph of the queries followed by their neighbours:
+    * (vertex id, force) for every vertex pushed. */
+  private def crossingForces(g: RDD[Gathered], queries: Array[Gathered],
+                             cfg: LayoutConfig): Array[(Long, Array[Double])] = {
+    val d = cfg.nComponents
+    val nbrs = knnPartitions(g, midpoints(partGraph(queries.iterator)._1, d),
+      queries.map(_._1), cfg.nNeighbors, d)
+    val (pg, ids) = partGraph(queries.iterator ++ nbrs.iterator.flatten.map(_._2))
+    val ends = nbrs.scanLeft(queries.length)(_ + _.length)
+    val force = Array.fill(ids.length)(new Array[Double](d))
+    crossings(pg, queries.indices.toArray,
+      nbrs.indices.map(a => Array.range(ends(a), ends(a + 1))).toArray, cfg, force)
+    ids.indices.filter(v => force(v).exists(_ != 0.0)).map(v => (ids(v), force(v))).toArray
+  }
+
+  /** J3 in the distributed placement: for each query midpoint (row a of
+    * qm at a*d, edge id qe(a)) the first k edges of `g` other than qe(a)
+    * by midpoint d2, in (d2, rid) order, with their d2. Each partition
+    * builds one [[CellGrid]] over its midpoints and lists its first k for
+    * every query; the driver keeps the first k of each query's lists. A
+    * query's global top-k lies inside the union of the lists, so the
+    * result is exact and the same for any partitioning of `g`. */
+  private[graft] def knnPartitions(g: RDD[Gathered], qm: Array[Double], qe: Array[Long],
+                                   k: Int, d: Int): Array[Array[(Double, Gathered)]] = {
+    val bq = g.sparkContext.broadcast((qm, qe))
+    val cands = g.mapPartitions { rows =>
+      val es = rows.toArray
+      if (k <= 0 || es.isEmpty) Iterator.empty
+      else {
+        val mid = midpoints(partGraph(es.iterator)._1, d)
+        val grid = new CellGrid(mid, d, es.map(_._1))
+        val (qm, qe) = bq.value
+        Iterator.range(0, qe.length).flatMap(a => grid.knn(qm, a * d, qe(a), k).iterator.map { j =>
+          (a, (0 until d).foldLeft(0.0) { (s, i) =>
+            val df = qm(a * d + i) - mid(j * d + i); s + df * df }, es(j))
+        })
+      }
+    }.collect().groupBy(_._1)
+    bq.destroy()
+    val order = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    Array.tabulate(qe.length)(a => cands.getOrElse(a, Array.empty)
+      .map(c => (c._2, c._3)).sortBy(c => (c._1, c._2._1))(order).take(k))
   }
 }

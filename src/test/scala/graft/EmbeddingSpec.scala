@@ -78,24 +78,58 @@ class EmbeddingSpec extends SparkSpec {
   }
 
   test("spring force sign matches the reference: repel stretched, attract compressed") {
-    import spark.implicits._
     // reference magnitude is -k_attr·(dist-L_min) along (p2-p1)/dist to
     // src (embedder_pytorch.py:626-635): dist>L_min pushes apart,
     // dist<L_min pulls together. Pin both directions numerically.
-    val e = Seq((0L, 1L)).toDF("src", "dst")
     val cfg = LayoutConfig(nComponents = 3, LMin = 10.0, kAttr = 0.5, kInter = 0.0)
-    val far = Seq((0L, Array(0.0, 0.0, 0.0)), (1L, Array(20.0, 0.0, 0.0))).toDF("id", "pos")
-    val fFar = Layout.springForces(e, far, cfg).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    def forces(x: Double): Array[Array[Double]] = {
+      val g = new Layout.PartGraph(Array(0), Array(1), Array(edgeEid(0L, 1L)),
+        Array(Array(0.0, 0.0, 0.0), Array(x, 0.0, 0.0)))
+      val f = Array.fill(2)(new Array[Double](3))
+      Layout.spring(g, cfg, f)
+      f
+    }
+    val fFar = forces(20.0)
     // coef = -0.5·(20-10)/20 = -0.25 → f(src) = (-5,0,0): away from dst
-    assert(math.abs(fFar(0L)(0) + 5.0) < 1e-3, s"src force ${fFar(0L)}")
-    assert(math.abs(fFar(1L)(0) - 5.0) < 1e-3, s"dst force ${fFar(1L)}")
-    val near = Seq((0L, Array(0.0, 0.0, 0.0)), (1L, Array(4.0, 0.0, 0.0))).toDF("id", "pos")
-    val fNear = Layout.springForces(e, near, cfg).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    assert(math.abs(fFar(0)(0) + 5.0) < 1e-3, s"src force ${fFar(0).toSeq}")
+    assert(math.abs(fFar(1)(0) - 5.0) < 1e-3, s"dst force ${fFar(1).toSeq}")
+    val fNear = forces(4.0)
     // coef = -0.5·(4-10)/4 = +0.75 → f(src) = (3,0,0): toward dst
-    assert(math.abs(fNear(0L)(0) - 3.0) < 1e-3, s"src force ${fNear(0L)}")
-    assert(math.abs(fNear(1L)(0) + 3.0) < 1e-3, s"dst force ${fNear(1L)}")
+    assert(math.abs(fNear(0)(0) - 3.0) < 1e-3, s"src force ${fNear(0).toSeq}")
+    assert(math.abs(fNear(1)(0) + 3.0) < 1e-3, s"dst force ${fNear(1).toSeq}")
+    assert(Seq(fFar, fNear).forall(_.forall(f => f(1) == 0.0 && f(2) == 0.0)))
+  }
+
+  test("crossing predicate: only a proper crossing with the smaller query eid pushes") {
+    // two edges in 2-d, query edge 0 against neighbour edge 1: P4 (query
+    // eid < neighbour eid), P5 (no shared vertex), P6 (proper crossing of
+    // the first two dimensions); a pair that fails any of them adds nothing
+    val cfg = LayoutConfig(nComponents = 2, kInter = 0.1)
+    def push(src: Array[Int], dst: Array[Int], pts: Seq[(Double, Double)],
+             eids: Array[Long] = Array(1L, 2L)): Array[Array[Double]] = {
+      val g = new Layout.PartGraph(src, dst, eids, pts.map(p => Array(p._1, p._2)).toArray)
+      val f = Array.fill(pts.length)(new Array[Double](2))
+      Layout.crossings(g, Array(0), Array(Array(1)), cfg, f)
+      f
+    }
+    val x = Seq((0.0, 0.0), (2.0, 2.0), (0.0, 2.0), (2.0, 0.0))
+    val crossed = push(Array(0, 2), Array(1, 3), x)
+    // centroid (1,1); each endpoint at distance √2 is pushed by
+    // (pt - c)·k_inter/d² = ±0.05 per coordinate, away from the centroid
+    for ((v, (px, py)) <- x.indices.zip(x)) {
+      assert(math.abs(crossed(v)(0) - (px - 1) * 0.05) < 1e-6, s"vertex $v ${crossed(v).toSeq}")
+      assert(math.abs(crossed(v)(1) - (py - 1) * 0.05) < 1e-6, s"vertex $v ${crossed(v).toSeq}")
+    }
+    val none = Seq(
+      "P4: the query's eid is the larger" -> push(Array(0, 2), Array(1, 3), x, Array(2L, 1L)),
+      "P5: a shared endpoint" -> push(Array(0, 0), Array(1, 2), Seq((0.0, 0.0), (2.0, 2.0), (2.0, 0.0))),
+      "an endpoint touching the other edge" ->
+        push(Array(0, 2), Array(1, 3), Seq((0.0, 0.0), (2.0, 0.0), (1.0, 0.0), (1.0, 2.0))),
+      "collinear overlap" ->
+        push(Array(0, 2), Array(1, 3), Seq((0.0, 0.0), (2.0, 0.0), (1.0, 0.0), (3.0, 0.0))),
+      "parallel segments" ->
+        push(Array(0, 2), Array(1, 3), Seq((0.0, 0.0), (2.0, 0.0), (0.0, 1.0), (2.0, 1.0))))
+    for ((why, f) <- none) assert(f.forall(_.forall(_ == 0.0)), s"$why pushed")
   }
 
   test("layout: positions move, stay finite and normalized") {
@@ -126,10 +160,11 @@ class EmbeddingSpec extends SparkSpec {
   }
 
   test("layout driver route matches the distributed route to float tolerance") {
-    // Same dynamics, different FP summation order: trajectories agree
-    // to ~1e-9/iter, amplified by normalization — 1e-6 over 3 iters is
-    // a tight pin that any semantic divergence (sampling, kNN
-    // tie-breaks, intersection predicate, ddof) would blow through.
+    // The same kernels in both placements; only the springs and the A4
+    // statistics sum in a different order, so the routes differ by a few
+    // ulps (4.4e-16 measured over 3 iterations). Any semantic divergence
+    // (sampling, kNN tie-breaks, intersection predicate, ddof) would
+    // blow through 1e-14.
     val g = Generators.roadNetwork(spark, 5, 5)
     val cfg = LayoutConfig(nComponents = 2, LMin = 1.0, numIterations = 3,
       sampleSize = 16, nNeighbors = 5, seed = 7)
@@ -142,66 +177,66 @@ class EmbeddingSpec extends SparkSpec {
       abs(element_at(col("pl"), 1) - element_at(col("pd"), 1)),
       abs(element_at(col("pl"), 2) - element_at(col("pd"), 2)))))
       .collect()(0).getDouble(0)
-    assert(maxDiff < 1e-6, s"route divergence $maxDiff")
+    assert(maxDiff < 1e-14, s"route divergence $maxDiff")
   }
 
+  /** `pairs` under `pos` as gathered edge rows in `parts` partitions,
+    * with their flat midpoints and eids. */
+  private def gathered(pairs: Array[(Long, Long)], pos: Map[Long, Seq[Double]], d: Int,
+                       parts: Int) = {
+    val rows: Seq[Layout.Gathered] = pairs.toSeq.map { case (s, t) =>
+      (edgeEid(s, t), s, t, pos(s).toArray, pos(t).toArray) }
+    val (mid, eids) = midsOf(pairs, pos, d)
+    (spark.sparkContext.parallelize(rows, parts), mid, eids)
+  }
+
+  /** The kNN of every midpoint against `rdd`: per query, (d2, rid, rsrc,
+    * rdst) in merge order. */
+  private def mergedKnn(rdd: org.apache.spark.rdd.RDD[Layout.Gathered], mid: Array[Double],
+                        eids: Array[Long], k: Int, d: Int): Seq[Seq[(Double, Long, Long, Long)]] =
+    Layout.knnPartitions(rdd, mid, eids, k, d).toSeq
+      .map(_.toSeq.map { case (d2, r) => (d2, r._1, r._2, r._3) })
+
+  private def positions(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Double]] =
+    df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+
   test("knn exact: k neighbors per query, no self-match") {
-    val g = Layout.withEdgeIds(Generators.roadNetwork(spark, 4, 4))
-    val pos = EigenInit.init(spark, g.select("src", "dst"), 16, 2, seed = 6)
-    val mids = Layout.midpoints(g, pos)
-    val knn = Layout.knnExact(Layout.sampleMidpoints(mids, 5, 1, 24), mids, 3, dim = 2)
-    val counts = knn.groupBy("qid").count().select("count").distinct().collect()
-    assert(counts.length == 1 && counts(0).getLong(0) == 3)
-    assert(knn.filter(col("qid") === col("rid")).isEmpty)
+    val g = Generators.roadNetwork(spark, 4, 4)
+    val pairs = g.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val (rdd, mid, eids) = gathered(pairs, positions(EigenInit.init(spark, g, 16, 2, seed = 6)), 2, 3)
+    val knn = mergedKnn(rdd, mid, eids, 3, 2)
+    assert(knn.length == pairs.length && knn.forall(_.length == 3))
+    assert(knn.indices.forall(q => knn(q).forall(_._2 != eids(q))))
   }
 
   test("knn exact: refs in 1, 3 and 7 partitions give identical rows, equal to the brute scan") {
-    import spark.implicits._
     // a 6x6 grid graph at integer coordinates: most midpoints tie in d2
     // with others, so the rid tie-break decides which ones are kept
-    val g = Layout.withEdgeIds(Generators.roadNetwork(spark, 6, 6))
-    val pos = (0L until 36L).map(v => (v, Array((v % 6).toDouble, (v / 6).toDouble)))
-      .toDF("id", "pos")
-    val mids = Layout.midpoints(g, pos).cache()
-    val rows = mids.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[Double](3).toArray))
-    val mid = rows.flatMap(_._4)
-    val eids = rows.map(_._1)
-    type Row7 = (Long, Long, Long, Long, Long, Long, Double)
-    def ordered(xs: Seq[Row7]): Seq[Row7] = xs.sortBy(t => (t._1, t._4))
-    val want = ordered(rows.indices.flatMap { q =>
-      val (qid, qsrc, qdst, qm) = rows(q)
-      bruteKnn(mid, 2, eids, qm, 0, qid, 4).map { r =>
-        val d2 = (0 until 2).map(i => (qm(i) - rows(r)._4(i)) * (qm(i) - rows(r)._4(i))).sum
-        (qid, qsrc, qdst, rows(r)._1, rows(r)._2, rows(r)._3, d2)
+    val pairs = Generators.roadNetwork(spark, 6, 6).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pos = (0L until 36L).map(v => v -> Seq((v % 6).toDouble, (v / 6).toDouble)).toMap
+    val (_, mid, eids) = gathered(pairs, pos, 2, 1)
+    val want = eids.indices.map { q =>
+      bruteKnn(mid, 2, eids, mid, q * 2, eids(q), 4).map { r =>
+        val d2 = (0 until 2).map(i => (mid(q * 2 + i) - mid(r * 2 + i)) * (mid(q * 2 + i) - mid(r * 2 + i))).sum
+        (d2, eids(r), pairs(r)._1, pairs(r)._2)
       }
-    })
-    for (parts <- Seq(1, 3, 7)) {
-      val got = ordered(Layout.knnExact(mids, mids.repartition(parts), 4, dim = 2)
-        .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))))
-      assert(got == want, s"$parts partitions differ from the brute scan")
     }
-    mids.unpersist()
+    for (parts <- Seq(1, 3, 7))
+      assert(mergedKnn(gathered(pairs, pos, 2, parts)._1, mid, eids, 4, 2) == want,
+        s"$parts partitions differ from the brute scan")
   }
 
-  test("knn exact: oversized query side falls back to join+window, identical rows") {
-    val g = Layout.withEdgeIds(Generators.roadNetwork(spark, 5, 5)).cache()
-    val pos = EigenInit.init(spark, g.select("src", "dst"), 25, 2, seed = 6)
-    val mids = Layout.midpoints(g, pos).cache()
-    val m = mids.count()
-    def knnRows(refs: org.apache.spark.sql.DataFrame) =
-      Layout.knnExact(mids, refs, 4, dim = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(3), r.getDouble(6))).toSet
-    val whole = knnRows(mids.coalesce(1))
+  test("knn exact: more queries than refs per partition, some under k: same rows") {
+    val g = Generators.roadNetwork(spark, 5, 5)
+    val pairs = g.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pos = positions(EigenInit.init(spark, g, 25, 2, seed = 6))
     // all m midpoints queried against 16 partitions of refs: the query
     // side outnumbers every partition's refs, some hold fewer than k, so
-    // each query's k rows come from the window over several partials —
-    // no throw (the r2 API regression), bit-equal output
-    val split = knnRows(mids.repartition(16))
-    assert(whole.size == m * 4)
-    assert(split == whole)
-    mids.unpersist(); g.unpersist()
+    // each query's k rows come from the merge of several partitions' lists
+    val (whole, mid, eids) = gathered(pairs, pos, 2, 1)
+    val one = mergedKnn(whole, mid, eids, 4, 2)
+    assert(one.forall(_.length == 4))
+    assert(mergedKnn(gathered(pairs, pos, 2, 16)._1, mid, eids, 4, 2) == one)
   }
 
   test("independent cascade: p=1 floods the component, p=0 stays at seeds") {
@@ -334,6 +369,41 @@ class EmbeddingSpec extends SparkSpec {
     assert(a.length == 60 && a == b)
   }
 
+  test("driver layout positions are bit-identical to a pinned digest: BA n=400, attach 22, seed 42") {
+    // the embed_local graph and config: springs in (src, dst) order,
+    // crossing forces after them by query then neighbour, normalization
+    // over the initial collect order; any change to those orders or to a
+    // kernel's arithmetic moves a bit of the positions
+    val edges = GraphOps.undirect(Generators.barabasiAlbert(spark, 400, 22, 42)).persist()
+    try {
+      val init = EigenInit.init(spark, edges, 400, 3, 42)
+      val rows = Layout.run(spark, edges, init, LayoutConfig(LMin = 4.0, numIterations = 30, seed = 42))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val bb = java.nio.ByteBuffer.allocate(8)
+      def put(x: Long): Unit = { bb.clear(); bb.putLong(x); md.update(bb.array()) }
+      rows.foreach { case (id, p) => put(id); p.foreach(v => put(java.lang.Double.doubleToLongBits(v))) }
+      assert(rows.length == 400)
+      assert(md.digest().map("%02x".format(_)).mkString ==
+        "a904b1f919b698f6281c307be2a0b41be2b249139df8d96e2b3d3529b89a8308")
+    } finally edges.unpersist()
+  }
+
+  test("distributed layout runs at most 3 jobs an iteration") {
+    // 4 more iterations may add at most 12 jobs: per iteration the
+    // position broadcast, the kNN candidates and the move with its stats
+    val edges = GraphOps.undirect(Generators.barabasiAlbert(spark, 200, 5, 42)).persist()
+    val init = EigenInit.init(spark, edges, 200, 3, 42).persist()
+    try {
+      edges.count(); init.count()
+      def jobs(iters: Int): Int = countingJobs(graft.util.DriverRoute.distributed(spark)(
+        Layout.run(spark, edges, init, LayoutConfig(LMin = 4.0, numIterations = iters, seed = 42))
+          .count()))._2
+      val (four, eight) = (jobs(4), jobs(8))
+      assert(eight - four <= 12, s"4 iterations: $four jobs, 8 iterations: $eight jobs")
+    } finally { init.unpersist(); edges.unpersist() }
+  }
+
   /** The brute scan the driver loop ran before the cell grid — every
     * reference for the query at q(qb) until q(qb+d), with eid qe, into a
     * worst-out buffer, (d2, rid) ties — with its survivors listed in
@@ -405,8 +475,6 @@ class EmbeddingSpec extends SparkSpec {
     val edges = GraphOps.undirect(Generators.barabasiAlbert(spark, 400, 3, 13)).persist()
     try {
       val pairs = graft.util.DriverRoute.probePairs(edges, "src", "dst", 100000).get
-      def positions(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Double]] =
-        df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
       val init = EigenInit.init(spark, edges, 400, 3, seed = 13)
       val (mid0, eids) = midsOf(pairs, positions(init), 3)
       assertExactKnn(mid0, 3, eids, 15)

@@ -207,23 +207,29 @@ class PlanSpec extends SparkSpec {
   }
 
   test("layout step plans no cartesian product and no m×s sort") {
-    // regression guards for the two scale-killers fixed in round 2:
-    // the un-hinted kNN join planned a |q-parts|·|r-parts|-task
+    // regression guards for the two scale-killers fixed in round 2: the
+    // un-hinted kNN join planned a |q-parts|·|r-parts|-task
     // CartesianProduct, and the join+window kNN form sorted all |q|·m
-    // joined rows inside WindowGroupLimit.
+    // joined rows. The kNN now runs inside the edge partitions; the
+    // step's plan is the scatter-add and the equi-join onto positions.
     import graft.layout.{Layout, LayoutConfig}
     import graft.linalg.EigenInit
     val g = graft.gen.Generators.roadNetwork(spark, 6, 6)
     val e = Layout.withEdgeIds(g)
-    val m = e.count()
     val (pos, _) = graft.util.Iterate.checkpoint(
       spark, EigenInit.init(spark, g, 36, 2, seed = 1))
+    val at = pos.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    val queries = e.collect().take(16).map { r =>
+      val (s, t) = (r.getLong(0), r.getLong(1))
+      (r.getLong(2), s, t, at(s), at(t))
+    }
     val cfg = LayoutConfig(nComponents = 2, LMin = 1.0, sampleSize = 16,
       nNeighbors = 4, seed = 1)
-    val p = Layout.step(e, pos, cfg, 0, m, 36)
+    val p = Layout.step(e, pos, cfg, queries, bcast = true)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"cartesian in step plan:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"BNLJ in step plan:\n$p")
+    assert(!p.contains("Window"), s"window in step plan:\n$p")
   }
 
   test("q96 prefix-filtered similarity join: equi-joins only, partial+final aggs") {
