@@ -121,8 +121,8 @@ object ProbeAnnRecall {
       val idx = graft.streaming.IvfStream.assignOnIngestWithMeta(e,
         centers, metaCols = Seq("label"))
       for (np <- Seq(2, 3, 4, 6)) {
-        val f = Similarity.ivfTopKFromIndexFiltered(spark, q50, idx,
-          centers, 5, pred, nProbe = np)
+        val f = Similarity.ivfTopKFromIndex(spark, q50, idx.filter(pred),
+          centers, 5, nProbe = np)
         val nh = f.select("qid", "rid")
           .join(fb, Seq("qid", "rid"), "left_semi").count()
         println(f"fivf8x$np%-2s filtered recall@5 = " +
@@ -141,15 +141,16 @@ object ProbeAnnRecall {
         .assignAndBqEncodeOnIngestWithMeta(e, centers,
           metaCols = Seq("label"))
       for (np <- Seq(4, 6)) {
-        val fsq = Similarity.ivfSqTopKFromIndexFiltered(spark, q50,
-          sqIdx, centers, codec, e, 5, pred, shortlist = 30, nProbe = np)
+        val fsq = Similarity.ivfSqTopKFromIndex(spark, q50,
+          sqIdx.filter(pred), centers, codec, e.filter(pred), 5,
+          shortlist = 30, nProbe = np)
         val nhSq = fsq.select("qid", "rid")
           .join(fb, Seq("qid", "rid"), "left_semi").count()
         println(f"fivfsq8x$np%-2s filtered recall@5 = " +
           f"${nhSq.toDouble / nfb}%.4f ($nhSq/$nfb)")
-        val fbq = Similarity.ivfBqTopKFromIndexFiltered(spark, q50,
-          bqIdx, centers, e, 5, pred, shortlist = 50, nProbe = np,
-          asymmetric = true)
+        val fbq = Similarity.ivfBqTopKFromIndex(spark, q50,
+          bqIdx.filter(pred), centers, e.filter(pred), 5, shortlist = 50,
+          nProbe = np, asymmetric = true)
         val nhBq = fbq.select("qid", "rid")
           .join(fb, Seq("qid", "rid"), "left_semi").count()
         println(f"fivfbqa8x$np%-1s filtered recall@5 = " +

@@ -580,49 +580,16 @@ object Centralities {
     (levels.reverse, handles.toSeq)
   }
 
-  /** Distributed closeness from (possibly sampled) sources. Exact for
-    * |sources| = n; otherwise the Eppstein–Wang style estimate with
-    * reach and distance sums scaled by n/|S|. Returned frame is
-    * PERSISTED (it must outlive the BFS checkpoints released here);
-    * callers may unpersist when done. */
-  def closenessDistributed(spark: SparkSession, edges: DataFrame, n: Long,
-                           sourcesCap: Int = 256, seed: Long = 42): DataFrame = {
-    val sym = symmetrize(edges).persist()
-    val (sources, nS) = pickSources(spark, n, sourcesCap, seed)
-    val (levels, handles) = multiSourceBfs(spark, sym, sources)
-    val byDist = levels.zipWithIndex.map { case (l, d) =>
-      l.select(col("s"), col("v"), lit(d).as("dist")) }
-      .reduce(_ union _)
-    val scale = n.toDouble / nS
-    // per v: reach = #sources reaching v, sumD = Σ dist(s, v)
-    val agg = byDist.groupBy("v").agg(
-      count(lit(1)).as("reachS"), sum("dist").as("sumD"))
-    val out = spark.range(n).toDF("id")
-      .join(agg.withColumnRenamed("v", "id"), Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("reachS"), lit(0L)).cast("double").as("reachS"),
-        coalesce(col("sumD"), lit(0L)).cast("double").as("sumD"))
-      .select(col("id"),
-        when(col("sumD") > 0,
-          ((col("reachS") * scale - 1.0) / (n - 1.0)) *
-            ((col("reachS") * scale - 1.0) / (col("sumD") * scale)))
-          .otherwise(lit(0.0)).as("closeness"))
-    val result = out.select(col("id"), col("closeness")).persist()
-    result.count()
-    handles.foreach(_.unpersist(blocking = false))
-    sym.unpersist()
-    result
-  }
-
   /** Harmonic centrality h(v) = Σ_{s≠v} 1/d(s, v) (Marchiori–Latora;
     * the closeness variant that stays meaningful on DISCONNECTED
     * graphs — unreachable pairs contribute 0 instead of poisoning a
     * reciprocal-of-sum). Exact for n ≤ sourcesCap, else the sampled
-    * estimate scaled by n/|S| — the [[closenessDistributed]] frame
-    * with a reciprocal-sum accumulator over the same level-synchronous
-    * multi-source BFS; one extra aggregate over the already-computed
-    * (s, v, dist) levels, so the marginal cost over closeness is one
-    * job. Returned frame is PERSISTED; callers may unpersist. */
+    * estimate scaled by n/|S| — the closeness frame of
+    * [[bfsMeasuresDistributed]] with a reciprocal-sum accumulator over
+    * the same level-synchronous multi-source BFS; one extra aggregate
+    * over the already-computed (s, v, dist) levels, so the marginal
+    * cost over closeness is one job. Returned frame is PERSISTED;
+    * callers may unpersist. */
   def harmonicDistributed(spark: SparkSession, edges: DataFrame, n: Long,
                           sourcesCap: Int = 256, seed: Long = 42): DataFrame = {
     // Size-guarded driver route (r16; the bfsDistances/stronglyConnected
@@ -691,81 +658,16 @@ object Centralities {
     result
   }
 
-  /** Distributed Brandes / Newman-load: forward multi-source BFS, then
-    * level-by-level backward accumulation — each backward level is one
-    * join+agg, so work parallelizes over (source, vertex) pairs. Exact
-    * for |sources| = n; scaled pivot estimate otherwise. Returned frame
-    * is PERSISTED (it must outlive the BFS checkpoints released here);
-    * callers may unpersist when done. */
-  def brandesDistributed(spark: SparkSession, edges: DataFrame, n: Long,
-                         loadMode: Boolean, outCol: String,
-                         sourcesCap: Int = 256, seed: Long = 42): DataFrame = {
-    val sym = symmetrize(edges).persist()
-    val (sources, nS) = pickSources(spark, n, sourcesCap, seed)
-    val (levels, handles) = multiSourceBfs(spark, sym, sources)
-    val extraHandles = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-    val L = levels.length
-    var accum = List.empty[DataFrame]
-    // delta for the deepest level is all zeros
-    var deltaAbove: DataFrame = levels(L - 1)
-      .select(col("s"), col("v"), lit(0.0).as("delta"))
-    var lvl = L - 2
-    while (lvl >= 0) {
-      val wFrame = levels(lvl + 1)
-        .join(deltaAbove, Seq("s", "v"))
-        .select(col("s"), col("v").as("w"), col("sigma").as("sigma_w"),
-          col("delta").as("delta_w"))
-      // predecessor pairs: w at level l+1, v at level l, (v, w) an edge
-      val pairs = wFrame
-        .join(sym.withColumnRenamed("src", "w").withColumnRenamed("dst", "pv"), "w")
-        .join(levels(lvl).select(col("s"), col("v").as("pv"),
-          col("sigma").as("sigma_v")), Seq("s", "pv"))
-      val contribs =
-        if (loadMode) {
-          // equal split: (1+delta_w)/numPreds(w)
-          val np = pairs.groupBy("s", "w").agg(count(lit(1)).as("np"))
-          pairs.join(np, Seq("s", "w"))
-            .select(col("s"), col("pv").as("v"),
-              ((lit(1.0) + col("delta_w")) / col("np")).as("c"))
-        } else {
-          pairs.select(col("s"), col("pv").as("v"),
-            (col("sigma_v") / col("sigma_w") * (lit(1.0) + col("delta_w"))).as("c"))
-        }
-      val deltaRaw = levels(lvl).select(col("s"), col("v"))
-        .join(contribs.groupBy("s", "v").agg(sum("c").as("delta")),
-          Seq("s", "v"), "left")
-        .select(col("s"), col("v"), coalesce(col("delta"), lit(0.0)).as("delta"))
-      val (delta, dh) = graft.util.Iterate.checkpoint(spark, deltaRaw)
-      extraHandles += dh
-      accum ::= delta.filter(col("v") =!= col("s"))
-      deltaAbove = delta
-      lvl -= 1
-    }
-    val denom = if (n > 2) (n - 1.0) * (n - 2.0) else 1.0
-    val scale = n.toDouble / nS
-    val summed =
-      if (accum.isEmpty) spark.range(0).toDF("id").withColumn("d", lit(0.0))
-      else accum.reduce(_ union _).groupBy(col("v").as("id"))
-        .agg(sum("delta").as("d"))
-    val out = spark.range(n).toDF("id")
-      .join(summed, Seq("id"), "left")
-      .select(col("id"),
-        (coalesce(col("d"), lit(0.0)) * scale / denom).as(outCol))
-      .persist()
-    out.count()
-    (handles ++ extraHandles).foreach(_.unpersist(blocking = false))
-    sym.unpersist()
-    out
-  }
-
-  /** Fused distributed closeness + betweenness + load: ONE forward
-    * multi-source BFS and ONE backward accumulation computing the
-    * Brandes (σ-proportional) and Newman (equal-split) deltas as two
-    * columns of the same per-level frame. Semantics identical to the
-    * standalone [[closenessDistributed]]/[[brandesDistributed]]
-    * (asserted by the threshold-0 route-parity test). Returned frames
-    * are PERSISTED; callers may unpersist. */
+  /** Distributed closeness + betweenness + load from (possibly
+    * sampled) sources: ONE forward multi-source BFS and ONE backward
+    * accumulation computing the Brandes (σ-proportional) and Newman
+    * (equal-split) deltas as two columns of the same per-level frame.
+    * Exact for |sources| = n; otherwise closeness is the Eppstein–Wang
+    * style estimate (reach and distance sums scaled by n/|S|) and the
+    * deltas the scaled pivot estimate. MetricsSpec's threshold-0 test
+    * holds it to the driver-CSR closed forms. Returned
+    * frames are PERSISTED (they must outlive the BFS checkpoints
+    * released here); callers may unpersist. */
   def bfsMeasuresDistributed(spark: SparkSession, edges: DataFrame, n: Long,
                              sourcesCap: Int = 256, seed: Long = 42)
       : (DataFrame, DataFrame, DataFrame) = {

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VecOps
+import scala.reflect.runtime.universe.TypeTag
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -19,18 +19,12 @@ import graft.functions.VecOps
   */
 object Similarity extends Serializable {
 
-  /** Cosine over float arrays computed in double (both engines see the
-    * same float inputs → identical doubles → identical sums). */
-  def cosineD(a: Column, b: Column): Column = {
-    val ad = transform(a, x => x.cast("double"))
-    val bd = transform(b, x => x.cast("double"))
-    VecOps.dot(ad, bd) / (sqrt(VecOps.sqNorm(ad)) * sqrt(VecOps.sqNorm(bd)) + lit(1e-12))
-  }
-
-  /** Fixed-dimension cosine: identical value to cosineD (same
-    * left-to-right summation order) but plain codegen'd arithmetic —
-    * the higher-order-function form is interpreted per row and was the
-    * whole cost of the all-pairs queries (87s → seconds at sf0.1). */
+  /** Fixed-dimension cosine over float arrays, computed in double with
+    * each sum taken left to right (both engines see the same float
+    * inputs → identical doubles → identical sums), as plain codegen'd
+    * arithmetic: a higher-order-function form is interpreted per row
+    * and was the whole cost of the all-pairs queries (87s → seconds at
+    * sf0.1). */
   def cosineFixed(dim: Int, a: Column, b: Column): Column = {
     def at(c: Column, i: Int) = element_at(c, i + 1).cast("double")
     val dot = (0 until dim).map(i => at(a, i) * at(b, i)).reduce(_ + _)
@@ -173,11 +167,7 @@ object Similarity extends Serializable {
         Seq("band", "key"))
       .filter(col("qid") =!= col("rid"))
       .select("qid", "rid").distinct()
-    val vecs = vectors.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val joined = cands
-      .join(vecs.select(col("id").as("qid"), col("v").as("qv")), "qid")
-      .join(vecs.select(col("id").as("rid"), col("v").as("rv")), "rid")
-    padShortQueries(rerankTopK(joined, k), vecs, vecs, k)
+    rerank(cands, vectors, vectors, k, idCol, vecCol)
   }
 
   /** Exact-cosine re-rank of candidate pairs → per-query top-k. The
@@ -281,8 +271,8 @@ object Similarity extends Serializable {
       .toDF("qid", "qv", "list")
     // every ref sits in exactly one list, so a (qid, rid) pair appears
     // at most once — no dedupe needed before the re-rank.
-    padShortQueries(rerankTopK(qProbe.join(assigned, "list")
-      .filter(col("qid") =!= col("rid")), k), src, src, k)
+    rerank(qProbe.join(assigned, "list").filter(col("qid") =!= col("rid")),
+      vectors, vectors, k, idCol, vecCol)
   }
 
   /** Train the IVF coarse quantizer alone — extracted from [[ivfTopK]]
@@ -329,131 +319,126 @@ object Similarity extends Serializable {
     * parquet `PartitionFilters` and a probe READS nProbe/nLists of the
     * index bytes: the IVF contract made physical. PlanSpec pins the
     * pruned scan; route equality with [[ivfTopK]] under shared
-    * centroids is pinned by PipelineSpec. */
+    * centroids is pinned by PipelineSpec.
+    *
+    * Metadata-FILTERED search (r11 verdict #4), "top-k among refs
+    * WHERE <pred>", is this probe over `index.filter(pred)` — and, on
+    * every codes rung, `refs.filter(pred)` as well. Filter-then-search:
+    * the predicate reaches the index scan before the probed-list join
+    * (`PushedFilters` next to the `PartitionFilters` on a persisted
+    * index, metadata written alongside by
+    * [[graft.streaming.IvfStream.assignOnIngestWithMeta]]) and the
+    * under-fill pad brute-forces against the allowed refs only, so a
+    * selective predicate still returns exactly k whenever the filtered
+    * corpus holds k+1 vectors; with `nProbe = nLists` the result is
+    * [[bruteForceTopK]] over the allowed refs (spec-pinned). */
   def ivfTopKFromIndex(spark: SparkSession, queries: DataFrame,
                        index: DataFrame, centers: Array[Array[Double]],
                        k: Int, nProbe: Int = 2, idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
+                       vecCol: String = "embedding"): DataFrame =
+    probeRung[Array[Float]](spark, queries, index, index, k, idCol, vecCol,
+      v => v, Some(nearestLists(spark, centers, nProbe)), None)
+
+  /** A rung's stage 1 over stored codes: `score` rates one code, in its
+    * IVF list (0 on a flat rung), against the query as the probe's
+    * `prep` made it (once per query), and the shortlist keeps the first
+    * `cut` rows per query in `order` of the `score` column, ties to the
+    * lower rid. */
+  private final case class Stage1[P](score: (P, Int, Array[Byte]) => Double,
+                                     order: Column, cut: Int)
+
+  /** The probed-list expansion of the float, SQ8 and BQ rungs: a
+    * query's `nProbe` nearest coarse centers ([[ivfNearest]]). */
+  private def nearestLists(spark: SparkSession, centers: Array[Array[Double]],
+                           nProbe: Int): Array[Float] => Iterator[Int] = {
     val bc = spark.sparkContext.broadcast(centers)
-    val q = queries.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    // persist the probe before collecting the list set: the collected
-    // filter and the join below must see ONE materialization (a
-    // non-deterministic queries frame could otherwise diverge between
-    // the two evaluations, and the assignment pass would run twice
-    // regardless — r9 ADVICE)
-    val probe = q.as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        ivfNearest(bc.value, v, nProbe).iterator.map(l => (id, v, l)) }
-      .toDF("qid", "qv", "list")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lists = probe.select("list").distinct().as[Int].collect().toSeq
-    val idx = index.filter(col("list").isin(lists: _*))
-      .select(col(idCol).cast("long").as("rid"), col(vecCol).as("rv"),
-        col("list"))
-    val out = padShortQueries(rerankTopK(probe.join(idx, "list")
-      .filter(col("qid") =!= col("rid")), k), q,
-      index.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")), k)
-    // padShortQueries persisted + fully materialized its own output,
-    // so the probe cache has served both consumers by now. Caveat: the
-    // single-materialization guarantee holds only while that downstream
-    // cache survives — if its blocks are evicted AND the queries frame
-    // is non-deterministic, a late action recomputes the probe (r10
-    // ADVICE). Deterministic sources (parquet tables) are unaffected.
-    probe.unpersist()
-    out
+    v => ivfNearest(bc.value, v, nProbe).iterator
   }
 
-  /** Metadata-FILTERED IVF search (r11 verdict #4): "top-k among refs
-    * WHERE <pred>" — the filter-then-search side of the problem every
-    * production vector store solves (search-then-filter under-fills
-    * when the predicate is selective; post-filtering a top-k can
-    * return FEWER than k among the allowed refs).
+  /** THE probe of every index rung. Candidates are (query, stored row)
+    * pairs: with `nearest` (IVF) each query expands to its probed lists,
+    * that frame is persisted before the list set is collected (the
+    * collected filter and the join must see ONE materialization — a
+    * non-deterministic queries frame could otherwise diverge between
+    * the two evaluations; r9 ADVICE), and the index is filtered to the
+    * ≤nLists set before the join, so a list-partitioned index (the
+    * [[graft.streaming.IvfStream.attach]] layout) prunes to it as
+    * parquet `PartitionFilters` and a probe reads nProbe/nLists of the
+    * index bytes; a metadata predicate the caller applied to `index`
+    * lands in the same scan as `PushedFilters` (PlanSpec pins both).
+    * Without `nearest` (flat) every stored row is a candidate.
     *
-    * `refFilter` is applied to the index frame BEFORE the probed-list
-    * join, so on a persisted index (the [[graft.streaming.IvfStream
-    * .attach]] layout, metadata columns written alongside via
-    * [[graft.streaming.IvfStream.assignOnIngestWithMeta]]) the
-    * predicate lands in the parquet scan as `PushedFilters` NEXT TO
-    * the probed-list `PartitionFilters` — a probe reads nProbe/nLists
-    * of the index bytes and row-group-skips the metadata miss inside
-    * them (PlanSpec pins both). The under-fill guarantee is
-    * [[padShortQueries]] running against the FILTERED universe:
-    * queries whose probed lists hold too few allowed refs are
-    * brute-forced over the allowed refs only — exactly k against the
-    * filtered corpus, always (when it holds ≥ k+1 vectors at all).
-    *
-    * Semantics: ≡ [[ivfTopKFromIndex]] over `index.filter(refFilter)`
-    * (this IS the implementation — one probe route, no twin to
-    * drift), and with `nProbe = nLists` ≡ [[bruteForceTopK]] over the
-    * allowed refs (spec-pinned). */
-  def ivfTopKFromIndexFiltered(spark: SparkSession, queries: DataFrame,
-                               index: DataFrame,
-                               centers: Array[Array[Double]], k: Int,
-                               refFilter: Column, nProbe: Int = 2,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding"): DataFrame =
-    ivfTopKFromIndex(spark, queries, index.filter(refFilter), centers, k,
-      nProbe, idCol, vecCol)
+    * With a `stage1` the index holds `codes`: a typed map scores each
+    * candidate and a window group-limit cuts the shortlist, which
+    * [[rerank]] joins back to the true vectors in `refs`. Without one
+    * (the float rung) the index holds the vectors themselves, every
+    * candidate re-ranks exactly and short queries pad against the
+    * index. */
+  private def probeRung[P: TypeTag](spark: SparkSession, queries: DataFrame,
+                                    index: DataFrame, refs: DataFrame,
+                                    k: Int, idCol: String, vecCol: String,
+                                    prep: Array[Float] => P,
+                                    nearest: Option[Array[Float] => Iterator[Int]],
+                                    stage1: Option[Stage1[P]]): DataFrame = {
+    import spark.implicits._
+    val q = refsFrame(queries, idCol, vecCol).as[(Long, Array[Float])]
+    val stored = (if (stage1.isEmpty) col(vecCol) else col("codes")).as("rc")
+    val (cands, probed) = nearest match {
+      case Some(lists) =>
+        val probe = q.flatMap { case (id, v) =>
+            val p = prep(v); lists(v).map(l => (id, p, l)) }
+          .toDF("qid", "qp", "list")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val ls = probe.select("list").distinct().as[Int].collect().toSeq
+        val idx = index.filter(col("list").isin(ls: _*))
+          .select(col(idCol).cast("long").as("rid"), stored, col("list"))
+        (probe.join(idx, "list").filter(col("qid") =!= col("rid")),
+          Some(probe))
+      case None =>
+        val qp = q.map { case (id, v) => (id, prep(v)) }.toDF("qid", "qp")
+        (qp.join(index.select(col(idCol).cast("long").as("rid"), stored),
+          col("qid") =!= col("rid")).withColumn("list", lit(0)), None)
+    }
+    val shortlist = stage1 match {
+      case None => cands.select(col("qid"), col("qp").as("qv"), col("rid"),
+        col("rc").as("rv"))
+      case Some(s) =>
+        val score = s.score
+        cands.select(col("qid"), col("qp"), col("list"), col("rid"), col("rc"))
+          .as[(Long, P, Int, Long, Array[Byte])]
+          .map { case (qid, p, l, rid, c) => (qid, rid, score(p, l, c)) }
+          .toDF("qid", "rid", "score")
+          .withColumn("rn", row_number().over(
+            Window.partitionBy("qid").orderBy(s.order, col("rid").asc)))
+          .filter(col("rn") <= s.cut)
+          .select("qid", "rid")
+    }
+    rerank(shortlist, queries, refs, k, idCol, vecCol, probed)
+  }
 
-  /** [[ivfTopKFromIndexFiltered]] for the IVF-SQ8 rung: the predicate
-    * must be evaluable on BOTH the codes index frame and the float
-    * `refs` frame (same metadata columns on each, or an id
-    * predicate) — stage 1 scans only allowed codes, the exact re-rank
-    * and the under-fill pad run against the allowed refs. */
-  def ivfSqTopKFromIndexFiltered(spark: SparkSession, queries: DataFrame,
-                                 index: DataFrame,
-                                 centers: Array[Array[Double]],
-                                 codec: SqCodec, refs: DataFrame, k: Int,
-                                 refFilter: Column, shortlist: Int = 30,
-                                 nProbe: Int = 2, idCol: String = "vec_id",
-                                 vecCol: String = "embedding"): DataFrame =
-    ivfSqTopKFromIndex(spark, queries, index.filter(refFilter), centers,
-      codec, refs.filter(refFilter), k, shortlist, nProbe, idCol, vecCol)
-
-  /** [[ivfTopKFromIndexFiltered]] for the IVF-PQ rung (same predicate
-    * contract as the SQ8 variant: evaluable on both the codes index
-    * frame and the float refs frame). */
-  def ivfPqTopKFromIndexFiltered(spark: SparkSession, queries: DataFrame,
-                                 index: DataFrame, model: IvfPqModel,
-                                 refs: DataFrame, k: Int,
-                                 refFilter: Column, nProbe: Int = 2,
-                                 refine: Int = 4, idCol: String = "vec_id",
-                                 vecCol: String = "embedding"): DataFrame =
-    ivfPqTopKFromIndex(spark, queries, index.filter(refFilter), model,
-      refs.filter(refFilter), k, nProbe, refine, idCol, vecCol)
-
-  /** [[ivfTopKFromIndexFiltered]] for the matryoshka-IVF rung (same
-    * predicate contract; the prefix index frame carries whatever
-    * metadata the caller built into it). */
-  def matryoshkaIvfTopKFromIndexFiltered(spark: SparkSession,
-                                         queries: DataFrame,
-                                         index: DataFrame,
-                                         centers: Array[Array[Double]],
-                                         refs: DataFrame, k: Int,
-                                         refFilter: Column, dims: Int = 32,
-                                         shortlist: Int = 50,
-                                         nProbe: Int = 2,
-                                         idCol: String = "vec_id",
-                                         vecCol: String = "embedding")
-      : DataFrame =
-    matryoshkaIvfTopKFromIndex(spark, queries, index.filter(refFilter),
-      centers, refs.filter(refFilter), k, dims, shortlist, nProbe,
-      idCol, vecCol)
-
-  /** [[ivfTopKFromIndexFiltered]] for the IVF-BQ rung (same predicate
-    * contract as the SQ8 variant). */
-  def ivfBqTopKFromIndexFiltered(spark: SparkSession, queries: DataFrame,
-                                 index: DataFrame,
-                                 centers: Array[Array[Double]],
-                                 refs: DataFrame, k: Int,
-                                 refFilter: Column, shortlist: Int = 50,
-                                 nProbe: Int = 2, idCol: String = "vec_id",
-                                 vecCol: String = "embedding",
-                                 asymmetric: Boolean = false): DataFrame =
-    ivfBqTopKFromIndex(spark, queries, index.filter(refFilter), centers,
-      refs.filter(refFilter), k, shortlist, nProbe, idCol, vecCol,
-      asymmetric)
+  /** Stage 2 of every rung: shortlisted (qid, rid) pairs join back to
+    * the true vectors (candidates that already carry `qv`/`rv` skip the
+    * joins), [[rerankTopK]] ranks them exactly and [[padShortQueries]]
+    * fills under-filled queries from `refs`. The padded output holds
+    * its own cache, so the probe frame `probed` is released here.
+    * Caveat: the single-materialization guarantee holds only while that
+    * downstream cache survives — if its blocks are evicted AND the
+    * queries frame is non-deterministic, a late action recomputes the
+    * probe (r10 ADVICE). Deterministic sources are unaffected. */
+  private def rerank(cands: DataFrame, queries: DataFrame, refs: DataFrame,
+                     k: Int, idCol: String, vecCol: String,
+                     probed: Option[DataFrame] = None): DataFrame = {
+    val qv = refsFrame(queries, idCol, vecCol)
+    val rv = refsFrame(refs, idCol, vecCol)
+    val joined =
+      if (cands.columns.contains("rv")) cands
+      else cands
+        .join(qv.select(col("id").as("qid"), col("v").as("qv")), "qid")
+        .join(rv.select(col("id").as("rid"), col("v").as("rv")), "rid")
+    val out = padShortQueries(rerankTopK(joined, k), qv, rv, k)
+    probed.foreach(_.unpersist())
+    out
+  }
 
   /** IVF-PQ: coarse inverted lists + product-quantized residuals +
     * exact refine — the top rung of the reference's ANN ladder
@@ -1125,43 +1110,15 @@ object Similarity extends Serializable {
                          refs: DataFrame, k: Int, nProbe: Int = 2,
                          refine: Int = 4, idCol: String = "vec_id",
                          vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
-    val src = refs.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val qsrc = queries.select(col(idCol).cast("long").as("id"),
-      col(vecCol).as("v"))
-    val qProbe = qsrc.as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        val mm = bc.value
-        val u = mm.unit(v)
-        mm.nearestCenters(u).iterator.take(nProbe).map(l => (id, u, l))
-      }.toDF("qid", "qu", "list")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lists = qProbe.select("list").distinct().as[Int].collect().toSeq
-    val idx = index.filter(col("list").isin(lists: _*))
-      .select(col(idCol).cast("long").as("rid"), col("list"), col("codes"))
     // ADC scan: exact normalized query vs (center + decoded residual);
     // only (qid, rid, approx) leaves the join — the shortlist window
     // then bounds what the refine join must rehydrate.
-    val adc = qProbe.join(idx, "list")
-      .filter(col("qid") =!= col("rid"))
-      .select(col("qid"), col("qu"), col("list"), col("rid"), col("codes"))
-      .as[(Long, Array[Double], Int, Long, Array[Byte])]
-      .map { case (qid, qu, list, rid, codes) =>
-        (qid, rid, bc.value.adc(qu, list, codes))
-      }.toDF("qid", "rid", "approx")
-    val wApprox = Window.partitionBy("qid").orderBy(col("approx").asc, col("rid").asc)
-    val shortlist = adc.withColumn("srn", row_number().over(wApprox))
-      .filter(col("srn") <= k * refine)
-      .select("qid", "rid")
-    val out = padShortQueries(rerankTopK(shortlist
-      .join(qsrc.select(col("id").as("qid"), col("v").as("qv")), "qid")
-      .join(src.select(col("id").as("rid"), col("v").as("rv")), "rid"), k),
-      qsrc, src, k)
-    // see ivfTopKFromIndex: safe while the padShortQueries cache
-    // survives; only non-deterministic query frames are exposed
-    qProbe.unpersist()
-    out
+    probeRung[Array[Double]](spark, queries, index, refs, k, idCol, vecCol,
+      v => bc.value.unit(v),
+      Some(v => bc.value.nearestCenters(bc.value.unit(v)).iterator.take(nProbe)),
+      Some(Stage1[Array[Double]]((qu, list, codes) => bc.value.adc(qu, list, codes),
+        col("score").asc, k * refine)))
   }
 
   /** IVF-PQ parameters derived from the corpus size — the
@@ -1514,12 +1471,7 @@ object Similarity extends Serializable {
       slice(col(vecCol), 1, dims).as("v"))
     val sl = bruteForceTopK(qPref, rPref, shortlist, "id", "v", dims)
       .select("qid", "rid")
-    val qv = refsFrame(queries, idCol, vecCol)
-    val rv = refsFrame(refs, idCol, vecCol)
-    val joined = sl
-      .join(qv.select(col("id").as("qid"), col("v").as("qv")), "qid")
-      .join(rv.select(col("id").as("rid"), col("v").as("rv")), "rid")
-    padShortQueries(rerankTopK(joined, k), qv, rv, k)
+    rerank(sl, queries, refs, k, idCol, vecCol)
   }
 
   /** Build the Matryoshka PREFIX IVF index: train a coarse quantizer
@@ -1624,12 +1576,7 @@ object Similarity extends Serializable {
     val sl = ivfTopKFromIndex(spark, qPref, prefixIndex, centers,
       k = shortlist, nProbe = nProbe, idCol = idCol, vecCol = vecCol)
       .select("qid", "rid")
-    val qv = refsFrame(queries, idCol, vecCol)
-    val rv = refsFrame(refs, idCol, vecCol)
-    val joined = sl
-      .join(qv.select(col("id").as("qid"), col("v").as("qv")), "qid")
-      .join(rv.select(col("id").as("rid"), col("v").as("rv")), "rid")
-    padShortQueries(rerankTopK(joined, k), qv, rv, k)
+    rerank(sl, queries, refs, k, idCol, vecCol)
   }
 
   /** [[matryoshkaIvfTopKFromIndex]] with the index built inline — the
@@ -1758,18 +1705,22 @@ object Similarity extends Serializable {
                       codes: DataFrame, codec: SqCodec, refs: DataFrame,
                       k: Int, shortlist: Int = 30,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
+                      vecCol: String = "embedding"): DataFrame =
+    sqRung(spark, queries, codes, codec, refs, k, shortlist, idCol, vecCol,
+      None)
+
+  /** The SQ8 probe of both placements: stage 1 is the asymmetric
+    * cosine of the full-precision query against `codec.decode(codes)`,
+    * cut by its 6-dp rounding DESC. */
+  private def sqRung(spark: SparkSession, queries: DataFrame,
+                     index: DataFrame, codec: SqCodec, refs: DataFrame,
+                     k: Int, shortlist: Int, idCol: String, vecCol: String,
+                     nearest: Option[Array[Float] => Iterator[Int]])
+      : DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     val bc = spark.sparkContext.broadcast(codec)
-    val q = queries.select(col(idCol).cast("long").as("qid"),
-      col(vecCol).as("qv"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("rid").asc)
-    val sl = q.join(codes.select(col(idCol).cast("long").as("rid"),
-        col("codes")), col("qid") =!= col("rid"))
-      .select(col("qid"), col("qv"), col("rid"), col("codes"))
-      .as[(Long, Array[Float], Long, Array[Byte])]
-      .map { case (qid, qv, rid, cs) =>
+    probeRung[Array[Float]](spark, queries, index, refs, k, idCol, vecCol,
+      v => v, nearest, Some(Stage1[Array[Float]]({ (qv, _, cs) =>
         val dv = bc.value.decode(cs)
         var dot = 0.0; var na = 0.0; var nb = 0.0
         var i = 0
@@ -1778,18 +1729,8 @@ object Similarity extends Serializable {
           dot += a * b; na += a * a; nb += b * b
           i += 1
         }
-        (qid, rid, dot / (math.sqrt(na) * math.sqrt(nb) + 1e-12))
-      }.toDF("qid", "rid", "cos_raw")
-      .withColumn("cos", round(col("cos_raw"), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= shortlist)
-      .select("qid", "rid")
-    val qv = refsFrame(queries, idCol, vecCol)
-    val rv = refsFrame(refs, idCol, vecCol)
-    val joined = sl
-      .join(qv.select(col("id").as("qid"), col("v").as("qv")), "qid")
-      .join(rv.select(col("id").as("rid"), col("v").as("rv")), "rid")
-    padShortQueries(rerankTopK(joined, k), qv, rv, k)
+        dot / (math.sqrt(na) * math.sqrt(nb) + 1e-12)
+      }, round(col("score"), 6).desc, shortlist)))
   }
 
   /** 1-bit binary quantization: the sign bit of every dimension,
@@ -1862,7 +1803,6 @@ object Similarity extends Serializable {
              k: Int, shortlist: Int = 30, idCol: String = "vec_id",
              vecCol: String = "embedding", asymmetric: Boolean = false,
              maxQueries: Int = 100000): DataFrame = {
-    import spark.implicits._
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     // limit-probe, never an unbounded count: cap+1 rows decide
     val nQ = queries.limit(maxQueries + 1).count()
@@ -1872,55 +1812,41 @@ object Similarity extends Serializable {
         "query batch, use ivfBqTopKFromIndex for the pruned " +
         "composition, or raise maxQueries explicitly to accept the " +
         "quadratic cost")
-    val rb = bqEncode(spark, refs, idCol, vecCol)
-      .select(col(idCol).as("rid"), col("codes").as("rc"))
-    val sl =
-      if (asymmetric) {
-        val w = Window.partitionBy("qid")
-          .orderBy(col("score").desc, col("rid").asc)
-        val qf = queries.select(col(idCol).cast("long").as("qid"),
-          col(vecCol).as("qv"))
-        qf.join(rb, col("qid") =!= col("rid"))
-          .select(col("qid"), col("qv"), col("rid"), col("rc"))
-          .as[(Long, Array[Float], Long, Array[Byte])]
-          .map { case (qid, qv, rid, rc) =>
-            var s = 0.0; var i = 0
-            while (i < qv.length) {
-              val plus = (rc(i / 8) & (1 << (i % 8))) != 0
-              s += (if (plus) qv(i).toDouble else -qv(i).toDouble)
-              i += 1
-            }
-            (qid, rid, round6(s))
-          }.toDF("qid", "rid", "score")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= shortlist)
-          .select("qid", "rid")
-      } else {
-        val w = Window.partitionBy("qid")
-          .orderBy(col("ham").asc, col("rid").asc)
-        val qb = bqEncode(spark, queries, idCol, vecCol)
-          .select(col(idCol).as("qid"), col("codes").as("qc"))
-        qb.join(rb, col("qid") =!= col("rid"))
-          .select(col("qid"), col("qc"), col("rid"), col("rc"))
-          .as[(Long, Array[Byte], Long, Array[Byte])]
-          .map { case (qid, qc, rid, rc) =>
-            var h = 0; var i = 0
-            while (i < qc.length) {
-              h += java.lang.Integer.bitCount((qc(i) ^ rc(i)) & 0xff)
-              i += 1
-            }
-            (qid, rid, h)
-          }.toDF("qid", "rid", "ham")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= shortlist)
-          .select("qid", "rid")
-      }
-    val qv = refsFrame(queries, idCol, vecCol)
-    val rv = refsFrame(refs, idCol, vecCol)
-    val joined = sl
-      .join(qv.select(col("id").as("qid"), col("v").as("qv")), "qid")
-      .join(rv.select(col("id").as("rid"), col("v").as("rv")), "rid")
-    padShortQueries(rerankTopK(joined, k), qv, rv, k)
+    bqRung(spark, queries, bqEncode(spark, refs, idCol, vecCol), refs, k,
+      shortlist, idCol, vecCol, asymmetric, None)
+  }
+
+  /** The BQ probe of both placements: stage 1 is the symmetric Hamming
+    * between the query's sign bits and the stored codes (ASC), or the
+    * asymmetric sign-dot dot(q, sign(r)) rounded by [[round6]] (DESC). */
+  private def bqRung(spark: SparkSession, queries: DataFrame,
+                     index: DataFrame, refs: DataFrame, k: Int,
+                     shortlist: Int, idCol: String, vecCol: String,
+                     asymmetric: Boolean,
+                     nearest: Option[Array[Float] => Iterator[Int]])
+      : DataFrame = {
+    require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
+    if (asymmetric)
+      probeRung[Array[Float]](spark, queries, index, refs, k, idCol, vecCol,
+        v => v, nearest, Some(Stage1[Array[Float]]({ (qv, _, rc) =>
+          var s = 0.0; var i = 0
+          while (i < qv.length) {
+            val plus = (rc(i / 8) & (1 << (i % 8))) != 0
+            s += (if (plus) qv(i).toDouble else -qv(i).toDouble)
+            i += 1
+          }
+          round6(s)
+        }, col("score").desc, shortlist)))
+    else
+      probeRung[Array[Byte]](spark, queries, index, refs, k, idCol, vecCol,
+        bqBits, nearest, Some(Stage1[Array[Byte]]({ (qc, _, rc) =>
+          var h = 0; var i = 0
+          while (i < qc.length) {
+            h += java.lang.Integer.bitCount((qc(i) ^ rc(i)) & 0xff)
+            i += 1
+          }
+          h.toDouble
+        }, col("score").asc, shortlist)))
   }
 
   /** Build the IVF-BQ index — inverted lists whose entries are the
@@ -1971,74 +1897,9 @@ object Similarity extends Serializable {
                          refs: DataFrame, k: Int, shortlist: Int = 50,
                          nProbe: Int = 2, idCol: String = "vec_id",
                          vecCol: String = "embedding",
-                         asymmetric: Boolean = false): DataFrame = {
-    import spark.implicits._
-    require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    val bc = spark.sparkContext.broadcast(centers)
-    // one probe row per (query, probed list), carrying BOTH the float
-    // vector (asymmetric scoring) and its sign bits (symmetric) so
-    // neither route re-derives per candidate pair
-    val probe = queries
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        val qc = bqBits(v)
-        ivfNearest(bc.value, v, nProbe).iterator.map(l => (id, v, qc, l)) }
-      .toDF("qid", "qv", "qc", "list")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lists = probe.select("list").distinct().as[Int].collect().toSeq
-    val idx = index.filter(col("list").isin(lists: _*))
-      .select(col(idCol).cast("long").as("rid"), col("codes"), col("list"))
-    val sl =
-      if (asymmetric) {
-        val w = Window.partitionBy("qid")
-          .orderBy(col("score").desc, col("rid").asc)
-        probe.join(idx, "list")
-          .filter(col("qid") =!= col("rid"))
-          .select(col("qid"), col("qv"), col("rid"), col("codes"))
-          .as[(Long, Array[Float], Long, Array[Byte])]
-          .map { case (qid, qv, rid, rc) =>
-            var s = 0.0; var i = 0
-            while (i < qv.length) {
-              val plus = (rc(i / 8) & (1 << (i % 8))) != 0
-              s += (if (plus) qv(i).toDouble else -qv(i).toDouble)
-              i += 1
-            }
-            (qid, rid, round6(s))
-          }.toDF("qid", "rid", "score")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= shortlist)
-          .select("qid", "rid")
-      } else {
-        val w = Window.partitionBy("qid")
-          .orderBy(col("ham").asc, col("rid").asc)
-        probe.join(idx, "list")
-          .filter(col("qid") =!= col("rid"))
-          .select(col("qid"), col("qc"), col("rid"), col("codes"))
-          .as[(Long, Array[Byte], Long, Array[Byte])]
-          .map { case (qid, qc, rid, rc) =>
-            var h = 0; var i = 0
-            while (i < qc.length) {
-              h += java.lang.Integer.bitCount((qc(i) ^ rc(i)) & 0xff)
-              i += 1
-            }
-            (qid, rid, h)
-          }.toDF("qid", "rid", "ham")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= shortlist)
-          .select("qid", "rid")
-      }
-    val qv = refsFrame(queries, idCol, vecCol)
-    val rv = refsFrame(refs, idCol, vecCol)
-    val joined = sl
-      .join(qv.select(col("id").as("qid"), col("v").as("qv")), "qid")
-      .join(rv.select(col("id").as("rid"), col("v").as("rv")), "rid")
-    val out = padShortQueries(rerankTopK(joined, k), qv, rv, k)
-    // see ivfTopKFromIndex: safe while the padShortQueries cache
-    // survives; only non-deterministic query frames are exposed
-    probe.unpersist()
-    out
-  }
+                         asymmetric: Boolean = false): DataFrame =
+    bqRung(spark, queries, index, refs, k, shortlist, idCol, vecCol,
+      asymmetric, Some(nearestLists(spark, centers, nProbe)))
 
   /** Persist the IVF-BQ index: 1-bit codes list-partitioned (the
     * pruning layout) and the coarse centers as plain rows — the
@@ -2131,52 +1992,9 @@ object Similarity extends Serializable {
                          codec: SqCodec, refs: DataFrame, k: Int,
                          shortlist: Int = 30, nProbe: Int = 2,
                          idCol: String = "vec_id",
-                         vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    val bcC = spark.sparkContext.broadcast(centers)
-    val bcQ = spark.sparkContext.broadcast(codec)
-    val q = queries.select(col(idCol).cast("long").as("qid"),
-      col(vecCol).as("qv"))
-    val probe = q.as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        ivfNearest(bcC.value, v, nProbe).iterator.map(l => (id, v, l)) }
-      .toDF("qid", "qv", "list")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lists = probe.select("list").distinct().as[Int].collect().toSeq
-    val idx = index.filter(col("list").isin(lists: _*))
-      .select(col(idCol).cast("long").as("rid"), col("codes"), col("list"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("rid").asc)
-    val sl = probe.join(idx, "list")
-      .filter(col("qid") =!= col("rid"))
-      .select(col("qid"), col("qv"), col("rid"), col("codes"))
-      .as[(Long, Array[Float], Long, Array[Byte])]
-      .map { case (qid, qv, rid, cs) =>
-        val dv = bcQ.value.decode(cs)
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < qv.length) {
-          val a = qv(i).toDouble; val b = dv(i)
-          dot += a * b; na += a * a; nb += b * b
-          i += 1
-        }
-        (qid, rid, dot / (math.sqrt(na) * math.sqrt(nb) + 1e-12))
-      }.toDF("qid", "rid", "cos_raw")
-      .withColumn("cos", round(col("cos_raw"), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= shortlist)
-      .select("qid", "rid")
-    val qv = refsFrame(queries, idCol, vecCol)
-    val rv = refsFrame(refs, idCol, vecCol)
-    val joined = sl
-      .join(qv.select(col("id").as("qid"), col("v").as("qv")), "qid")
-      .join(rv.select(col("id").as("rid"), col("v").as("rv")), "rid")
-    val out = padShortQueries(rerankTopK(joined, k), qv, rv, k)
-    // see ivfTopKFromIndex: safe while the padShortQueries cache
-    // survives; only non-deterministic query frames are exposed
-    probe.unpersist()
-    out
-  }
+                         vecCol: String = "embedding"): DataFrame =
+    sqRung(spark, queries, index, codec, refs, k, shortlist, idCol, vecCol,
+      Some(nearestLists(spark, centers, nProbe)))
 
   /** Persist the IVF-SQ8 index: codes list-partitioned (the pruning
     * layout), coarse centers and the codec envelope as plain rows. */

@@ -10,13 +10,18 @@ import graft.util.SmallFiles
   * four codec tiers — float, SQ8 (4×), BQ (32×, asymmetric scoring),
   * PQ (m bytes/vector, optionally OPQ-rotated) — share the same
   * lifecycle (train → ingest/attach → probe → filtered probe →
-  * maintain → delete → compact/vacuum) but historically spanned ~40
-  * entry points with per-tier call conventions. `VectorIndex` pins the
-  * conventions once: tier and parameters are chosen at [[VectorIndex
+  * maintain → delete → compact/vacuum) but each tier has its own
+  * build, ingest, maintain and probe entry points. `VectorIndex` pins
+  * the conventions once: tier and parameters are chosen at [[VectorIndex
   * .train]], and every subsequent call is tier-agnostic, so the whole
   * family is testable as ONE contract (VectorIndexSpec runs the same
   * scenario across all four tiers) and a deployment can switch
   * compression rungs by changing one constructor argument.
+  *
+  * The four probe doors (live or pinned, whole or filtered) resolve
+  * the index frame and the quantizer once and make ONE tier match onto
+  * the [[Similarity]] rung, whose stage-1 scan, shortlist cut, exact
+  * re-rank and under-fill pad are the one shared probe.
   *
   * NO new behavior lives here: every method delegates to the exact
   * operator the per-tier call sites use ([[Similarity]],
@@ -341,31 +346,16 @@ final class VectorIndex private (val params: VectorIndex.Params,
     * `refs` supplies the true vectors for the codes tiers' exact
     * re-rank (and the float tier ignores it). */
   def topK(spark: SparkSession, queries: DataFrame, refs: DataFrame,
-           k: Int): DataFrame = p.tier match {
-    case FloatTier =>
-      Similarity.ivfTopKFromIndex(spark, queries,
-        read(spark), centers, k, p.nProbe, p.idCol, p.vecCol)
-    case MatryoshkaTier(dims) =>
-      Similarity.matryoshkaIvfTopKFromIndex(spark, queries, read(spark),
-        centers, refs, k, dims, p.shortlist, p.nProbe, p.idCol, p.vecCol)
-    case Sq8Tier =>
-      Similarity.ivfSqTopKFromIndex(spark, queries, read(spark), centers,
-        codec, refs, k, p.shortlist, p.nProbe, p.idCol, p.vecCol)
-    case BqTier =>
-      Similarity.ivfBqTopKFromIndex(spark, queries, read(spark), centers,
-        refs, k, p.shortlist, p.nProbe, p.idCol, p.vecCol, p.asymmetric)
-    case _: PqTier =>
-      Similarity.ivfPqTopKFromIndex(spark, queries, read(spark), model,
-        refs, k, p.nProbe, p.refine, p.idCol, p.vecCol)
-  }
+           k: Int): DataFrame =
+    probe(spark, read(spark), quantizerModel, queries, refs, k)
 
   /** Metadata-FILTERED top-k: the predicate reaches the index scan
     * (PushedFilters next to the probed-list PartitionFilters) and the
-    * under-fill pad runs against the filtered universe — the per-tier
-    * *FromIndexFiltered contract. Requires the index to have been
-    * ingested with the predicate's columns in `params.metaCols` (the
-    * float tier evaluates it on the index alone; codes tiers also on
-    * `refs`). */
+    * under-fill pad runs against the filtered universe — the rung over
+    * `index.filter(refFilter)` and `refs.filter(refFilter)`. Requires
+    * the index to have been ingested with the predicate's columns in
+    * `params.metaCols` (the float tier evaluates it on the index alone;
+    * codes tiers also on `refs`). */
   def topKFiltered(spark: SparkSession, queries: DataFrame,
                    refs: DataFrame, k: Int, refFilter: Column)
       : DataFrame = {
@@ -381,25 +371,37 @@ final class VectorIndex private (val params: VectorIndex.Params,
         s"VectorIndex.topKFiltered: index data at $indexDir is " +
           "manifested and EMPTY (every row deleted) — rebuild or " +
           "re-ingest before probing"))
-    p.tier match {
-      case FloatTier =>
-        Similarity.ivfTopKFromIndexFiltered(spark, queries, idx, centers,
-          k, refFilter, p.nProbe, p.idCol, p.vecCol)
-      case MatryoshkaTier(dims) =>
-        Similarity.matryoshkaIvfTopKFromIndexFiltered(spark, queries,
-          idx, centers, refs, k, refFilter, dims, p.shortlist, p.nProbe,
+    probe(spark, idx.filter(refFilter), quantizerModel, queries,
+      refs.filter(refFilter), k)
+  }
+
+  /** The one tier dispatch of every topK* door: the tier's rung over
+    * the resolved index frame under the resolved quantizer. */
+  private def probe(spark: SparkSession, idx: DataFrame,
+                    m: graft.streaming.ModelStore.QuantizerModel,
+                    queries: DataFrame, refs: DataFrame, k: Int)
+      : DataFrame = {
+    import graft.streaming.ModelStore._
+    (p.tier, m) match {
+      case (FloatTier, FloatCenters(cs)) =>
+        Similarity.ivfTopKFromIndex(spark, queries, idx, cs, k, p.nProbe,
           p.idCol, p.vecCol)
-      case Sq8Tier =>
-        Similarity.ivfSqTopKFromIndexFiltered(spark, queries, idx,
-          centers, codec, refs, k, refFilter, p.shortlist, p.nProbe,
-          p.idCol, p.vecCol)
-      case BqTier =>
-        Similarity.ivfBqTopKFromIndexFiltered(spark, queries, idx,
-          centers, refs, k, refFilter, p.shortlist, p.nProbe, p.idCol,
-          p.vecCol, p.asymmetric)
-      case _: PqTier =>
-        Similarity.ivfPqTopKFromIndexFiltered(spark, queries, idx, model,
-          refs, k, refFilter, p.nProbe, p.refine, p.idCol, p.vecCol)
+      case (MatryoshkaTier(dims), FloatCenters(cs)) =>
+        Similarity.matryoshkaIvfTopKFromIndex(spark, queries, idx, cs, refs,
+          k, dims, p.shortlist, p.nProbe, p.idCol, p.vecCol)
+      case (Sq8Tier, SqQuantizer(cs, cc)) =>
+        Similarity.ivfSqTopKFromIndex(spark, queries, idx, cs, cc, refs, k,
+          p.shortlist, p.nProbe, p.idCol, p.vecCol)
+      case (BqTier, BqCenters(cs)) =>
+        Similarity.ivfBqTopKFromIndex(spark, queries, idx, cs, refs, k,
+          p.shortlist, p.nProbe, p.idCol, p.vecCol, p.asymmetric)
+      case (_: PqTier, PqQuantizer(mm)) =>
+        Similarity.ivfPqTopKFromIndex(spark, queries, idx, mm, refs, k,
+          p.nProbe, p.refine, p.idCol, p.vecCol)
+      case (tier, other) => throw new IllegalStateException(
+        s"VectorIndex: tier $tier cannot serve the stored model " +
+          s"${other.getClass.getSimpleName} of $indexDir — the index was " +
+          "written by a different tier's facade")
     }
   }
 
@@ -498,44 +500,8 @@ final class VectorIndex private (val params: VectorIndex.Params,
     * the float tier ignores it. */
   def topKPinned(spark: SparkSession, snap: IndexManifest.Snapshot,
                  queries: DataFrame, refs: DataFrame, k: Int): DataFrame = {
-    import graft.streaming.ModelStore
-    val m = ModelStore.readAt(spark, indexDir, snap.gen).getOrElse(
-      throw new IllegalArgumentException(
-        s"VectorIndex.topKPinned: no model epoch at or below generation " +
-          s"${snap.gen} for $indexDir — enroll through " +
-          "VectorIndex.enrollSnapshots (which persists the quantizer) " +
-          "rather than IndexManifest.enroll"))
-    val idx = IndexManifest.readSnapshot(spark, indexDir, snap).getOrElse(
-      throw new IllegalArgumentException(
-        s"VectorIndex.topKPinned: pinned generation ${snap.gen} of " +
-          s"$indexDir is EMPTY — nothing to probe"))
-    (p.tier, m) match {
-      case (FloatTier, ModelStore.FloatCenters(cs)) =>
-        Similarity.ivfTopKFromIndex(spark, queries,
-          idx.select(p.idCol, p.vecCol, "list"), cs, k, p.nProbe,
-          p.idCol, p.vecCol)
-      case (MatryoshkaTier(dims), ModelStore.FloatCenters(cs)) =>
-        Similarity.matryoshkaIvfTopKFromIndex(spark, queries,
-          idx.select(p.idCol, p.vecCol, "list"), cs, refs, k, dims,
-          p.shortlist, p.nProbe, p.idCol, p.vecCol)
-      case (Sq8Tier, ModelStore.SqQuantizer(cs, cc)) =>
-        Similarity.ivfSqTopKFromIndex(spark, queries,
-          idx.select(p.idCol, "codes", "list"), cs, cc, refs, k,
-          p.shortlist, p.nProbe, p.idCol, p.vecCol)
-      case (BqTier, ModelStore.BqCenters(cs)) =>
-        Similarity.ivfBqTopKFromIndex(spark, queries,
-          idx.select(p.idCol, "codes", "list"), cs, refs, k, p.shortlist,
-          p.nProbe, p.idCol, p.vecCol, p.asymmetric)
-      case (_: PqTier, ModelStore.PqQuantizer(mm)) =>
-        Similarity.ivfPqTopKFromIndex(spark, queries,
-          idx.select(p.idCol, "list", "codes"), mm, refs, k, p.nProbe,
-          p.refine, p.idCol, p.vecCol)
-      case (tier, other) => throw new IllegalStateException(
-        s"VectorIndex.topKPinned: tier $tier cannot serve the stored " +
-          s"model ${other.getClass.getSimpleName} at generation " +
-          s"${snap.gen} of $indexDir — the index was written by a " +
-          "different tier's facade")
-    }
+    val (idx, m) = pinned(spark, snap, "topKPinned")
+    probe(spark, idx, m, queries, refs, k)
   }
 
   /** [[topKFiltered]] AS OF a pinned generation — the filtered-probe
@@ -548,43 +514,26 @@ final class VectorIndex private (val params: VectorIndex.Params,
                          snap: IndexManifest.Snapshot,
                          queries: DataFrame, refs: DataFrame, k: Int,
                          refFilter: Column): DataFrame = {
-    import graft.streaming.ModelStore
-    val m = ModelStore.readAt(spark, indexDir, snap.gen).getOrElse(
-      throw new IllegalArgumentException(
-        s"VectorIndex.topKFilteredPinned: no model epoch at or below " +
-          s"generation ${snap.gen} for $indexDir — enroll through " +
+    val (idx, m) = pinned(spark, snap, "topKFilteredPinned")
+    probe(spark, idx.filter(refFilter), m, queries, refs.filter(refFilter), k)
+  }
+
+  /** The pinned generation's FULL frame (the metadata columns ride in
+    * it) and the quantizer epoch that listed its leaves. */
+  private def pinned(spark: SparkSession, snap: IndexManifest.Snapshot,
+                     door: String)
+      : (DataFrame, graft.streaming.ModelStore.QuantizerModel) = {
+    val m = graft.streaming.ModelStore.readAt(spark, indexDir, snap.gen)
+      .getOrElse(throw new IllegalArgumentException(
+        s"VectorIndex.$door: no model epoch at or below generation " +
+          s"${snap.gen} for $indexDir — enroll through " +
           "VectorIndex.enrollSnapshots (which persists the quantizer) " +
           "rather than IndexManifest.enroll"))
-    // the FULL pinned frame: the predicate needs the metadata columns
     val idx = IndexManifest.readSnapshot(spark, indexDir, snap).getOrElse(
       throw new IllegalArgumentException(
-        s"VectorIndex.topKFilteredPinned: pinned generation ${snap.gen} " +
-          s"of $indexDir is EMPTY — nothing to probe"))
-    (p.tier, m) match {
-      case (FloatTier, ModelStore.FloatCenters(cs)) =>
-        Similarity.ivfTopKFromIndexFiltered(spark, queries, idx, cs, k,
-          refFilter, p.nProbe, p.idCol, p.vecCol)
-      case (MatryoshkaTier(dims), ModelStore.FloatCenters(cs)) =>
-        Similarity.matryoshkaIvfTopKFromIndexFiltered(spark, queries,
-          idx, cs, refs, k, refFilter, dims, p.shortlist, p.nProbe,
-          p.idCol, p.vecCol)
-      case (Sq8Tier, ModelStore.SqQuantizer(cs, cc)) =>
-        Similarity.ivfSqTopKFromIndexFiltered(spark, queries, idx, cs,
-          cc, refs, k, refFilter, p.shortlist, p.nProbe, p.idCol,
-          p.vecCol)
-      case (BqTier, ModelStore.BqCenters(cs)) =>
-        Similarity.ivfBqTopKFromIndexFiltered(spark, queries, idx, cs,
-          refs, k, refFilter, p.shortlist, p.nProbe, p.idCol, p.vecCol,
-          p.asymmetric)
-      case (_: PqTier, ModelStore.PqQuantizer(mm)) =>
-        Similarity.ivfPqTopKFromIndexFiltered(spark, queries, idx, mm,
-          refs, k, refFilter, p.nProbe, p.refine, p.idCol, p.vecCol)
-      case (tier, other) => throw new IllegalStateException(
-        s"VectorIndex.topKFilteredPinned: tier $tier cannot serve the " +
-          s"stored model ${other.getClass.getSimpleName} at generation " +
-          s"${snap.gen} of $indexDir — the index was written by a " +
-          "different tier's facade")
-    }
+        s"VectorIndex.$door: pinned generation ${snap.gen} of " +
+          s"$indexDir is EMPTY — nothing to probe"))
+    (idx, m)
   }
 
   /** Reclaim leaves unreferenced by the kept generations. `minAgeMs`

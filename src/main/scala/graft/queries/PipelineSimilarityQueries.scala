@@ -622,8 +622,7 @@ object PipelineSimilarityQueries {
       // per-stage task counts (measured +15-17 cpu-s each) for no wall
       // gain — the opposite trade of the scan-heavy top-k family
       val e = Tables(s, d, "embeddings")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q207").toString
+      val root = graft.util.TempRoots.create(s, "graft_q207")
       def codeRows(df: DataFrame): Set[(Long, Seq[Byte], Int)] =
         df.collect().map(r => (r.getLong(0),
           r.getAs[Array[Byte]](1).toSeq, r.getInt(2))).toSet
@@ -838,8 +837,7 @@ object PipelineSimilarityQueries {
       // per-stage task counts (measured +15-17 cpu-s each) for no wall
       // gain — the opposite trade of the scan-heavy top-k family
       val e = Tables(s, d, "embeddings")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q212").toString
+      val root = graft.util.TempRoots.create(s, "graft_q212")
       // data-sized shuffles for the whole cycle (the q207 note): every
       // frame here is bounded by the embeddings table
       graft.util.Iterate.withSizedShuffle(s, e.count()) {
@@ -979,8 +977,7 @@ object PipelineSimilarityQueries {
       // per-stage task counts (measured +15-17 cpu-s each) for no wall
       // gain — the opposite trade of the scan-heavy top-k family
       val e = Tables(s, d, "embeddings").filter(col("vec_id") < 20000)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q215").toString
+      val root = graft.util.TempRoots.create(s, "graft_q215")
       // data-sized shuffles for the whole cycle (the q207 note): every
       // frame here is bounded by the embeddings slice
       graft.util.Iterate.withSizedShuffle(s, e.count()) {
@@ -1114,8 +1111,7 @@ object PipelineSimilarityQueries {
     "q214_doc_takedown" -> ((s, d) => {
       import graft.streaming.{CurateStream, IndexDelete, NearDupStream}
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q214").toString
+      val root = graft.util.TempRoots.create(s, "graft_q214")
       // data-sized shuffles for the whole cycle (the q207 note): every
       // frame here is bounded by the documents table; the k=64 band
       // map keeps its numbered spread below
@@ -1214,8 +1210,7 @@ object PipelineSimilarityQueries {
     // shortlist reads ≈0).
     "q213_filtered_ann" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q213").toString
+      val root = graft.util.TempRoots.create(s, "graft_q213")
       val centers = Similarity.ivfTrainCentroids(s, e, nLists = 8)
       graft.streaming.IvfStream
         .assignOnIngestWithMeta(e, centers, metaCols = Seq("label"))
@@ -1223,8 +1218,8 @@ object PipelineSimilarityQueries {
         .parquet(s"$root/idx/batch=0")
       val idx = s.read.parquet(s"$root/idx")
       val pred = col("label") === 2
-      val got = Similarity.ivfTopKFromIndexFiltered(s, e, idx, centers,
-        5, pred, nProbe = 6).cache()
+      val got = Similarity.ivfTopKFromIndex(s, e, idx.filter(pred),
+        centers, 5, nProbe = 6).cache()
       val labels = e.select(col("vec_id").as("rid"), col("label"))
       val filterOk = got.join(labels, "rid")
         .filter(col("label") =!= 2).count() == 0L

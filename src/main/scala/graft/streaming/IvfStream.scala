@@ -61,8 +61,8 @@ object IvfStream {
     * price).
     *
     * `metaCols`: extra columns to carry into the index rows
-    * ([[assignOnIngestWithMeta]]) so a
-    * [[graft.pipeline.Similarity.ivfTopKFromIndexFiltered]] probe gets
+    * ([[assignOnIngestWithMeta]]) so a filtered
+    * [[graft.pipeline.Similarity.ivfTopKFromIndex]] probe gets
     * `PushedFilters` on them — the same parameter the codec tiers
     * ([[attachSq]]/[[attachBq]]/[[attachPq]]) take (r12 ADVICE: the
     * float tier was the only wire-in without it).
@@ -192,8 +192,8 @@ object IvfStream {
     * (idCol, vecCol, metaCols…, list) — the frame shape a
     * metadata-FILTERED index needs. Written `partitionBy("list")`,
     * the metadata rides inside each list partition's parquet, so a
-    * [[graft.pipeline.Similarity.ivfTopKFromIndexFiltered]] probe
-    * gets `PartitionFilters` on the probed lists AND `PushedFilters`
+    * [[graft.pipeline.Similarity.ivfTopKFromIndex]] probe over
+    * `index.filter(pred)` gets `PartitionFilters` on the probed lists AND `PushedFilters`
     * on the predicate in ONE scan (PlanSpec pins both). Same
     * assignment arithmetic as [[assignOnIngest]]
     * ([[Similarity.ivfNearest]], spec-pinned equal), as a UDF so
@@ -239,8 +239,8 @@ object IvfStream {
   /** [[assignAndEncodeOnIngest]] KEEPING metadata columns — the codes
     * twin of [[assignOnIngestWithMeta]], closing the filtered-ANN
     * story for the COMPRESSED tiers: (idCol, codes, metaCols…, list)
-    * written `partitionBy("list")` gives an
-    * [[graft.pipeline.Similarity.ivfSqTopKFromIndexFiltered]] probe
+    * written `partitionBy("list")` gives a filtered
+    * [[graft.pipeline.Similarity.ivfSqTopKFromIndex]] probe
     * `PartitionFilters` on the probed lists AND `PushedFilters` on
     * the metadata predicate in one scan of the 4×-compressed index
     * (without this, a streamed codes index could only be filtered by
@@ -347,8 +347,8 @@ object IvfStream {
 
   /** [[assignAndBqEncodeOnIngest]] KEEPING metadata columns — the
     * 1-bit member of the WithMeta ingest family (see
-    * [[assignAndEncodeOnIngestWithMeta]]): the predicate of an
-    * [[graft.pipeline.Similarity.ivfBqTopKFromIndexFiltered]] probe
+    * [[assignAndEncodeOnIngestWithMeta]]): the predicate of a filtered
+    * [[graft.pipeline.Similarity.ivfBqTopKFromIndex]] probe
     * pushes into the scan of the 32×-compressed index. */
   def assignAndBqEncodeOnIngestWithMeta(vecs: DataFrame,
                                         centers: Array[Array[Double]],
@@ -483,8 +483,8 @@ object IvfStream {
 
   /** [[assignAndPqEncodeOnIngest]] KEEPING metadata columns — the PQ
     * member of the WithMeta ingest family (see
-    * [[assignAndEncodeOnIngestWithMeta]]): the predicate of an
-    * [[graft.pipeline.Similarity.ivfPqTopKFromIndexFiltered]] probe
+    * [[assignAndEncodeOnIngestWithMeta]]): the predicate of a filtered
+    * [[graft.pipeline.Similarity.ivfPqTopKFromIndex]] probe
     * pushes into the scan of the m-bytes-per-vector index. */
   def assignAndPqEncodeOnIngestWithMeta(vecs: DataFrame,
                                         model: Similarity.IvfPqModel,

@@ -128,20 +128,4 @@ object Iterate {
     spark.conf.set(key, raised)
     try body finally spark.conf.set(key, prev)
   }
-
-  /** Run `body` for `iters` iterations starting from `init`, with
-    * materialization and previous-state cleanup each step. */
-  def loop(spark: SparkSession, init: DataFrame, iters: Int)
-          (body: (DataFrame, Int) => DataFrame): DataFrame = {
-    var (state, handle) = checkpoint(spark, init)
-    var it = 0
-    while (it < iters) {
-      val (next, nh) = checkpoint(spark, body(state, it))
-      handle.unpersist(blocking = false)
-      state = next
-      handle = nh
-      it += 1
-    }
-    state
-  }
 }

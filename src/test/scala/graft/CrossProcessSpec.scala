@@ -17,26 +17,11 @@ class CrossProcessSpec extends SparkSpec {
   private def rowSet(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSet
 
-  /** Launch one CommitRaceChild JVM with this test JVM's classpath and
-    * the same JDK-17 --add-opens set sbt forks us with. */
-  private def launchChild(args: Seq[String]): Process = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.CommitRaceChild") ++ args
-    new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+  /** Launch one CommitRaceChild JVM. */
+  private def launchChild(args: Seq[String]): Process =
+    new ProcessBuilder(SparkSpec.childJvm("graft.CommitRaceChild",
+        Seq("-Xmx1g"), args): _*).redirectErrorStream(true)
       .redirectOutput(new java.io.File("/dev/null")).start()
-  }
 
   test("two separate JVMs racing a commit to the same generation: " +
     "exactly one winner, the loser's error names the single-writer " +

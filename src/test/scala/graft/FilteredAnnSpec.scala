@@ -28,7 +28,8 @@ class FilteredAnnSpec extends SparkSpec {
     assert(lbl.exceptAll(src).isEmpty && src.exceptAll(lbl).isEmpty)
   }
 
-  test("ivfTopKFromIndexFiltered: never a disallowed ref; nProbe=nLists " +
+  test("ivfTopKFromIndex over a filtered index: never a disallowed " +
+    "ref; nProbe=nLists " +
     "degenerates to brute-on-filtered exactly; pads to exactly k " +
     "against the FILTERED universe") {
     val e = Tables.embeddings(spark, sf).cache()
@@ -38,8 +39,8 @@ class FilteredAnnSpec extends SparkSpec {
     val pred = col("label") === 2
     val qs = e.filter(col("vec_id") < 30)
 
-    val got = Similarity.ivfTopKFromIndexFiltered(spark, qs, index,
-      centers, 3, pred, nProbe = 4).cache()
+    val got = Similarity.ivfTopKFromIndex(spark, qs, index.filter(pred),
+      centers, 3, nProbe = 4).cache()
     // the predicate guarantee post-filtering cannot give
     val labels = e.select(col("vec_id").as("rid"), col("label"))
     assert(got.join(labels, "rid").filter(col("label") =!= 2)
@@ -70,8 +71,8 @@ class FilteredAnnSpec extends SparkSpec {
     assert(allowedIds.size > 3 && allowedIds.size < 20,
       s"fixture expects a thin universe, got ${allowedIds.size}")
     val qs = e.filter(col("vec_id") < 10)
-    val got = Similarity.ivfTopKFromIndexFiltered(spark, qs, index,
-      centers, 3, pred, nProbe = 1).cache()
+    val got = Similarity.ivfTopKFromIndex(spark, qs, index.filter(pred),
+      centers, 3, nProbe = 1).cache()
     val perQ = got.groupBy("qid").count().collect()
     assert(perQ.length === 10 && perQ.forall(_.getLong(1) === 3L))
     assert(got.select("rid").collect()
@@ -107,22 +108,24 @@ class FilteredAnnSpec extends SparkSpec {
   test("metadata predicate on a DISK-BACKED codes index: the SQ and BQ " +
     "filtered rungs run a real label filter, ≡ pre-filtered route") {
     val e = Tables.embeddings(spark, sf)
+    // the pre-filtered route: the payload alone, cut to the allowed ids
     val tmp = tempDir("graft_fcodes").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
     val pred = col("label") === 2
     val qs = e.filter(col("vec_id") < 20)
+    val allowed = e.filter(pred).select("vec_id")
 
     IvfStream.assignAndEncodeOnIngestWithMeta(e, centers, codec,
         metaCols = Seq("label"))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/sq/batch=0")
     val sqIdx = spark.read.parquet(s"$tmp/sq")
-    val gotSq = Similarity.ivfSqTopKFromIndexFiltered(spark, qs, sqIdx,
-      centers, codec, e, 3, pred, shortlist = 10, nProbe = 4)
+    val gotSq = Similarity.ivfSqTopKFromIndex(spark, qs, sqIdx.filter(pred),
+      centers, codec, e.filter(pred), 3, shortlist = 10, nProbe = 4)
     val wantSq = Similarity.ivfSqTopKFromIndex(spark, qs,
-      sqIdx.filter(pred), centers, codec, e.filter(pred), k = 3,
-      shortlist = 10, nProbe = 4)
+      sqIdx.select("vec_id", "codes", "list").join(allowed, Seq("vec_id"), "left_semi"), centers,
+      codec, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, shortlist = 10, nProbe = 4)
     assert(gotSq.exceptAll(wantSq).isEmpty && wantSq.exceptAll(gotSq).isEmpty)
     val labels = e.select(col("vec_id").as("rid"), col("label"))
     assert(gotSq.join(labels, "rid").filter(col("label") =!= 2)
@@ -133,18 +136,19 @@ class FilteredAnnSpec extends SparkSpec {
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/bq/batch=0")
     val bqIdx = spark.read.parquet(s"$tmp/bq")
-    val gotBq = Similarity.ivfBqTopKFromIndexFiltered(spark, qs, bqIdx,
-      centers, e, 3, pred, shortlist = 10, nProbe = 4, asymmetric = true)
+    val gotBq = Similarity.ivfBqTopKFromIndex(spark, qs, bqIdx.filter(pred),
+      centers, e.filter(pred), 3, shortlist = 10, nProbe = 4,
+      asymmetric = true)
     val wantBq = Similarity.ivfBqTopKFromIndex(spark, qs,
-      bqIdx.filter(pred), centers, e.filter(pred), k = 3,
-      shortlist = 10, nProbe = 4, asymmetric = true)
+      bqIdx.select("vec_id", "codes", "list").join(allowed, Seq("vec_id"), "left_semi"), centers,
+      e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, shortlist = 10, nProbe = 4, asymmetric = true)
     assert(gotBq.exceptAll(wantBq).isEmpty && wantBq.exceptAll(gotBq).isEmpty)
     assert(gotBq.join(labels, "rid").filter(col("label") =!= 2)
       .count() === 0L)
   }
 
-  test("ivfSqTopKFromIndexFiltered / ivfBqTopKFromIndexFiltered: " +
-    "≡ the unfiltered rung over pre-filtered frames") {
+  test("SQ8 / BQ / PQ / Matryoshka IVF rungs over id-filtered frames " +
+    "≡ the same rungs over id-semi-joined frames") {
     val e = Tables.embeddings(spark, sf)
     val pred = col("label") === 2
     val (centers, codec, sqIdxAll) = Similarity.ivfSqBuildIndex(spark,
@@ -154,12 +158,15 @@ class FilteredAnnSpec extends SparkSpec {
     val allowed = e.filter(pred).select("vec_id").collect()
       .map(_.getLong(0)).toSeq
     val idPred = col("vec_id").isin(allowed: _*)
+    val ids = e.filter(pred).select("vec_id")
+    def semi(df: org.apache.spark.sql.DataFrame) =
+      df.join(ids, Seq("vec_id"), "left_semi")
     val qs = e.filter(col("vec_id") < 20)
-    val gotSq = Similarity.ivfSqTopKFromIndexFiltered(spark, qs,
-      sqIdxAll, centers, codec, e, 3, idPred, shortlist = 10, nProbe = 4)
-    val wantSq = Similarity.ivfSqTopKFromIndex(spark, qs,
+    val gotSq = Similarity.ivfSqTopKFromIndex(spark, qs,
       sqIdxAll.filter(idPred), centers, codec, e.filter(idPred), k = 3,
       shortlist = 10, nProbe = 4)
+    val wantSq = Similarity.ivfSqTopKFromIndex(spark, qs, semi(sqIdxAll),
+      centers, codec, semi(e), k = 3, shortlist = 10, nProbe = 4)
     assert(gotSq.exceptAll(wantSq).isEmpty &&
       wantSq.exceptAll(gotSq).isEmpty)
     assert(gotSq.select("rid").collect()
@@ -167,11 +174,11 @@ class FilteredAnnSpec extends SparkSpec {
 
     val (centersB, bqIdx) = Similarity.ivfBqBuildIndex(spark, e,
       nLists = 4)
-    val gotBq = Similarity.ivfBqTopKFromIndexFiltered(spark, qs, bqIdx,
-      centersB, e, 3, idPred, shortlist = 10, nProbe = 4)
-    val wantBq = Similarity.ivfBqTopKFromIndex(spark, qs,
+    val gotBq = Similarity.ivfBqTopKFromIndex(spark, qs,
       bqIdx.filter(idPred), centersB, e.filter(idPred), k = 3,
       shortlist = 10, nProbe = 4)
+    val wantBq = Similarity.ivfBqTopKFromIndex(spark, qs, semi(bqIdx),
+      centersB, semi(e), k = 3, shortlist = 10, nProbe = 4)
     assert(gotBq.exceptAll(wantBq).isEmpty &&
       wantBq.exceptAll(gotBq).isEmpty)
     assert(gotBq.select("rid").collect()
@@ -179,11 +186,11 @@ class FilteredAnnSpec extends SparkSpec {
 
     val (pqModel, pqIdx) = Similarity.ivfPqBuildIndex(spark, e,
       nLists = 4, m = 8, nCodes = 16)
-    val gotPq = Similarity.ivfPqTopKFromIndexFiltered(spark, qs, pqIdx,
-      pqModel, e, 3, idPred, nProbe = 4, refine = 4)
-    val wantPq = Similarity.ivfPqTopKFromIndex(spark, qs,
+    val gotPq = Similarity.ivfPqTopKFromIndex(spark, qs,
       pqIdx.filter(idPred), pqModel, e.filter(idPred), k = 3,
       nProbe = 4, refine = 4)
+    val wantPq = Similarity.ivfPqTopKFromIndex(spark, qs, semi(pqIdx),
+      pqModel, semi(e), k = 3, nProbe = 4, refine = 4)
     assert(gotPq.exceptAll(wantPq).isEmpty &&
       wantPq.exceptAll(gotPq).isEmpty)
     assert(gotPq.select("rid").collect()
@@ -191,11 +198,11 @@ class FilteredAnnSpec extends SparkSpec {
 
     val (mCenters, mIdx) = Similarity.matryoshkaIvfBuildIndex(spark, e,
       dims = 32, nLists = 4)
-    val gotM = Similarity.matryoshkaIvfTopKFromIndexFiltered(spark, qs,
-      mIdx, mCenters, e, 3, idPred, dims = 32, shortlist = 10, nProbe = 4)
-    val wantM = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
+    val gotM = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
       mIdx.filter(idPred), mCenters, e.filter(idPred), k = 3, dims = 32,
       shortlist = 10, nProbe = 4)
+    val wantM = Similarity.matryoshkaIvfTopKFromIndex(spark, qs, semi(mIdx),
+      mCenters, semi(e), k = 3, dims = 32, shortlist = 10, nProbe = 4)
     assert(gotM.exceptAll(wantM).isEmpty && wantM.exceptAll(gotM).isEmpty)
     assert(gotM.select("rid").collect()
       .forall(r => allowed.contains(r.getLong(0))))

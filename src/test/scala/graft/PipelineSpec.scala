@@ -2461,10 +2461,13 @@ class PipelineSpec extends SparkSpec {
     assert(a.exceptAll(p).isEmpty && p.exceptAll(a).isEmpty)
     val pred = col("label") === 2
     val qs = e.filter(col("vec_id") < 20)
-    val got = Similarity.ivfPqTopKFromIndexFiltered(spark, qs, meta,
-      model, e, 3, pred, nProbe = 4, refine = 4)
-    val want = Similarity.ivfPqTopKFromIndex(spark, qs, meta.filter(pred),
+    // the label-filtered meta frame ≡ the plain frame cut to the same ids
+    val allowed = e.filter(pred).select("vec_id")
+    val got = Similarity.ivfPqTopKFromIndex(spark, qs, meta.filter(pred),
       model, e.filter(pred), k = 3, nProbe = 4, refine = 4)
+    val want = Similarity.ivfPqTopKFromIndex(spark, qs,
+      plain.join(allowed, Seq("vec_id"), "left_semi"), model, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3,
+      nProbe = 4, refine = 4)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     val labels = e.select(col("vec_id").as("rid"), col("label"))
     assert(got.join(labels, "rid").filter(col("label") =!= 2)
@@ -2505,10 +2508,13 @@ class PipelineSpec extends SparkSpec {
     // a metadata-filtered probe runs DIRECTLY on the streamed index
     val qs = e.filter(col("vec_id") < 20)
     val pred = col("label") === 2
-    val got = Similarity.ivfSqTopKFromIndexFiltered(spark, qs, idx,
-      centers, codec, e, 3, pred, shortlist = 10, nProbe = 4)
-    val ref = Similarity.ivfSqTopKFromIndex(spark, qs, idx.filter(pred),
+    // ≡ the batch twin's payload cut to the allowed ids
+    val allowed = e.filter(pred).select("vec_id")
+    val got = Similarity.ivfSqTopKFromIndex(spark, qs, idx.filter(pred),
       centers, codec, e.filter(pred), k = 3, shortlist = 10, nProbe = 4)
+    val ref = Similarity.ivfSqTopKFromIndex(spark, qs, want.join(allowed, Seq("vec_id"), "left_semi"),
+      centers, codec, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, shortlist = 10,
+      nProbe = 4)
     assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty)
     val labels = e.select(col("vec_id").as("rid"), col("label"))
     assert(got.join(labels, "rid").filter(col("label") =!= 2)
@@ -2530,11 +2536,12 @@ class PipelineSpec extends SparkSpec {
     val refreshed = spark.read.parquet(s"$tmp/idx")
     assert(refreshed.columns.contains("label"),
       "reassignSq must re-attach the metadata columns")
-    val got2 = Similarity.ivfSqTopKFromIndexFiltered(spark, qs, refreshed,
-      centersB, codecB, e, 3, pred, shortlist = 10, nProbe = 4)
-    val ref2 = Similarity.ivfSqTopKFromIndex(spark, qs,
+    val got2 = Similarity.ivfSqTopKFromIndex(spark, qs,
       refreshed.filter(pred), centersB, codecB, e.filter(pred), k = 3,
       shortlist = 10, nProbe = 4)
+    val ref2 = Similarity.ivfSqTopKFromIndex(spark, qs,
+      refreshed.select("vec_id", "codes", "list").join(allowed, Seq("vec_id"), "left_semi"), centersB,
+      codecB, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, shortlist = 10, nProbe = 4)
     assert(got2.exceptAll(ref2).isEmpty && ref2.exceptAll(got2).isEmpty)
     e.unpersist()
   }
@@ -2668,14 +2675,17 @@ class PipelineSpec extends SparkSpec {
     val idx = spark.read.parquet(s"$tmp/idx")
     assert(idx.columns.contains("label"))
     // 2. metadata-FILTERED matryoshka probe directly on the streamed
-    //    prefix index ≡ the filter-then-probe twin
+    //    prefix index ≡ the filter-then-probe twin over the metadata-free
+    //    payload cut to the allowed ids
     val qs = e.filter(col("vec_id") < 20)
     val predQ = col("label") === 2
-    val got = Similarity.matryoshkaIvfTopKFromIndexFiltered(spark, qs,
-      idx, centers, e, 3, predQ, dims = dims, shortlist = 30, nProbe = 4)
-    val want = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
+    val allowed = e.filter(predQ).select("vec_id")
+    val got = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
       idx.filter(predQ), centers, e.filter(predQ), k = 3, dims = dims,
       shortlist = 30, nProbe = 4)
+    val want = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
+      idx.select("vec_id", "embedding", "list").join(allowed, Seq("vec_id"), "left_semi"), centers,
+      e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, dims = dims, shortlist = 30, nProbe = 4)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // 3. targeted deletion sweeps the prefix index like any other
     val doomed = Seq(3L, 7L)
@@ -2713,12 +2723,13 @@ class PipelineSpec extends SparkSpec {
     val idxAfter = spark.read.parquet(s"$tmp/idx")
     assert(idxAfter.columns.contains("label"),
       "reassign must carry the metadata columns through the rewrite")
-    val gotAfter = Similarity.matryoshkaIvfTopKFromIndexFiltered(spark,
-      qs, idxAfter, newC.get, e, 3, predQ, dims = dims, shortlist = 30,
-      nProbe = 4)
-    val wantAfter = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
+    val gotAfter = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
       idxAfter.filter(predQ), newC.get, e.filter(predQ), k = 3,
       dims = dims, shortlist = 30, nProbe = 4)
+    val wantAfter = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
+      idxAfter.select("vec_id", "embedding", "list").join(allowed, Seq("vec_id"), "left_semi"),
+      newC.get, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, dims = dims, shortlist = 30,
+      nProbe = 4)
     assert(gotAfter.exceptAll(wantAfter).isEmpty &&
       wantAfter.exceptAll(gotAfter).isEmpty)
     e.unpersist()
@@ -2759,9 +2770,11 @@ class PipelineSpec extends SparkSpec {
     // a metadata-filtered probe runs DIRECTLY on the streamed index
     val qs = e.filter(col("vec_id") < 20)
     val pred = col("label") === 2
-    val got = Similarity.ivfTopKFromIndexFiltered(spark, qs, idx,
-      centers, 3, pred, nProbe = 4)
-    val ref = Similarity.ivfTopKFromIndex(spark, qs, idx.filter(pred),
+    // ≡ the plain ingest's payload cut to the allowed ids
+    val allowed = e.filter(pred).select("vec_id")
+    val got = Similarity.ivfTopKFromIndex(spark, qs, idx.filter(pred),
+      centers, k = 3, nProbe = 4)
+    val ref = Similarity.ivfTopKFromIndex(spark, qs, want.join(allowed, Seq("vec_id"), "left_semi"),
       centers, k = 3, nProbe = 4)
     assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty)
     val labels = e.select(col("vec_id").as("rid"), col("label"))

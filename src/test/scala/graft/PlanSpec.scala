@@ -15,11 +15,17 @@ class PlanSpec extends SparkSpec {
 
   test("q62 compiles every stage: it runs with codegen fallback off") {
     // the pair joins once ran a 192-term cosine expression whose
-    // generated method passed 64 KB; Spark then ran them interpreted
+    // generated method passed 64 KB; Spark then ran them interpreted.
+    // Every query that reaches an ANN rung runs the same way: the
+    // shared probe's stage-1 scan, shortlist cut and re-rank compile.
     val s = spark.newSession()
     s.conf.set("spark.sql.codegen.fallback", "false")
-    val out = SparkEntry.queries("q62_semdedup")(s, sf).collect()
-    assert(out.nonEmpty)
+    for (q <- Seq("q62_semdedup", "q41_ivf_topk", "q56_ivfpq_topk",
+        "q202_matryoshka_topk", "q203_sq_topk", "q204_ivf_index_topk",
+        "q205_mrl_ivf_topk", "q206_ivfsq_topk", "q210_bq_topk",
+        "q211_ivfbq_topk", "q212_index_delete", "q213_filtered_ann",
+        "q215_snapshot_index", "q216_ivfopq_topk"))
+      assert(SparkEntry.queries(q)(s, sf).collect().nonEmpty, q)
   }
 
   test("q01 pushes filters and prunes columns at the parquet scan") {
@@ -471,7 +477,8 @@ class PlanSpec extends SparkSpec {
       s"index scan must carry a list partition filter:\n$p")
   }
 
-  test("ivfTopKFromIndexFiltered: metadata predicate pushed into the " +
+  test("ivfTopKFromIndex over a filtered index: metadata predicate " +
+    "pushed into the " +
     "SAME pruned scan as the probed-list partition filter") {
     // the filtered-ANN contract made physical (r11 verdict #4): one
     // scan carries BOTH PartitionFilters on the probed lists (reads
@@ -486,9 +493,9 @@ class PlanSpec extends SparkSpec {
     IvfStream.assignOnIngestWithMeta(e, centers, metaCols = Seq("label"))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/batch=0")
     val index = spark.read.parquet(tmp)
-    val p = Similarity.ivfTopKFromIndexFiltered(spark,
-        e.filter(col("vec_id") < 3), index, centers, 5,
-        col("label") === 2, nProbe = 2)
+    val p = Similarity.ivfTopKFromIndex(spark,
+        e.filter(col("vec_id") < 3), index.filter(col("label") === 2),
+        centers, 5, nProbe = 2)
       .queryExecution.executedPlan.toString
     val scanLines = p.linesIterator.filter(_.contains("PartitionFilters")).toSeq
     assert(scanLines.exists(l => l.contains("list") &&
@@ -500,7 +507,7 @@ class PlanSpec extends SparkSpec {
       s"metadata predicate must reach the parquet scan as PushedFilters:\n$p")
   }
 
-  test("ivfSqTopKFromIndexFiltered on a meta-carrying CODES index: " +
+  test("ivfSqTopKFromIndex over a filtered meta-carrying CODES index: " +
     "list PartitionFilters + label PushedFilters in the stage-1 scan") {
     // the compressed-tier member of the filtered-ANN physical
     // contract: the metadata predicate row-group-skips inside the
@@ -516,9 +523,10 @@ class PlanSpec extends SparkSpec {
         metaCols = Seq("label"))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/batch=0")
     val index = spark.read.parquet(tmp)
-    val p = Similarity.ivfSqTopKFromIndexFiltered(spark,
-        e.filter(col("vec_id") < 3), index, centers, codec, e, 5,
-        col("label") === 2, shortlist = 10, nProbe = 2)
+    val pred = col("label") === 2
+    val p = Similarity.ivfSqTopKFromIndex(spark,
+        e.filter(col("vec_id") < 3), index.filter(pred), centers, codec,
+        e.filter(pred), 5, shortlist = 10, nProbe = 2)
       .queryExecution.executedPlan.toString
     val scanLines = p.linesIterator.filter(_.contains("PartitionFilters")).toSeq
     assert(scanLines.exists(l => l.contains("list") &&

@@ -125,4 +125,22 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   private val planHelper = new AdaptiveSparkPlanHelper {}
+
+  /** The command that runs `main` in a fresh JVM with this test JVM's
+    * classpath and the JDK-17 --add-opens set sbt forks tests with. */
+  def childJvm(main: String, jvmArgs: Seq[String],
+               args: Seq[String]): Seq[String] = {
+    val addOpens = Seq(
+      "java.base/java.lang", "java.base/java.lang.invoke",
+      "java.base/java.lang.reflect", "java.base/java.io",
+      "java.base/java.net", "java.base/java.nio",
+      "java.base/java.util", "java.base/java.util.concurrent",
+      "java.base/java.util.concurrent.atomic",
+      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+      "java.base/sun.security.action", "java.base/sun.util.calendar",
+    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+    Seq(s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++
+      jvmArgs ++ Seq("-Dspark.ui.enabled=false",
+        "-cp", System.getProperty("java.class.path"), main) ++ args
+  }
 }
