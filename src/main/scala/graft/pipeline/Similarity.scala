@@ -350,13 +350,14 @@ object Similarity extends Serializable {
   /** The probed-list expansion of the float, SQ8 and BQ rungs: a
     * query's `nProbe` nearest coarse centers ([[ivfNearest]]). */
   private def nearestLists(spark: SparkSession, centers: Array[Array[Double]],
-                           nProbe: Int): Array[Float] => Iterator[Int] = {
+                           nProbe: Int): (Array[Float], Any) => Iterator[Int] = {
     val bc = spark.sparkContext.broadcast(centers)
-    v => ivfNearest(bc.value, v, nProbe).iterator
+    (v, _) => ivfNearest(bc.value, v, nProbe).iterator
   }
 
   /** THE probe of every index rung. Candidates are (query, stored row)
-    * pairs: with `nearest` (IVF) each query expands to its probed lists,
+    * pairs: with `nearest` (IVF) each query — its vector and what `prep`
+    * made of it — expands to its probed lists,
     * that frame is persisted before the list set is collected (the
     * collected filter and the join must see ONE materialization — a
     * non-deterministic queries frame could otherwise diverge between
@@ -378,7 +379,7 @@ object Similarity extends Serializable {
                                     index: DataFrame, refs: DataFrame,
                                     k: Int, idCol: String, vecCol: String,
                                     prep: Array[Float] => P,
-                                    nearest: Option[Array[Float] => Iterator[Int]],
+                                    nearest: Option[(Array[Float], P) => Iterator[Int]],
                                     stage1: Option[Stage1[P]]): DataFrame = {
     import spark.implicits._
     val q = refsFrame(queries, idCol, vecCol).as[(Long, Array[Float])]
@@ -386,7 +387,7 @@ object Similarity extends Serializable {
     val (cands, probed) = nearest match {
       case Some(lists) =>
         val probe = q.flatMap { case (id, v) =>
-            val p = prep(v); lists(v).map(l => (id, p, l)) }
+            val p = prep(v); lists(v, p).map(l => (id, p, l)) }
           .toDF("qid", "qp", "list")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val ls = probe.select("list").distinct().as[Int].collect().toSeq
@@ -1116,7 +1117,7 @@ object Similarity extends Serializable {
     // then bounds what the refine join must rehydrate.
     probeRung[Array[Double]](spark, queries, index, refs, k, idCol, vecCol,
       v => bc.value.unit(v),
-      Some(v => bc.value.nearestCenters(bc.value.unit(v)).iterator.take(nProbe)),
+      Some((_, qu) => bc.value.nearestCenters(qu).iterator.take(nProbe)),
       Some(Stage1[Array[Double]]((qu, list, codes) => bc.value.adc(qu, list, codes),
         col("score").asc, k * refine)))
   }
@@ -1715,7 +1716,7 @@ object Similarity extends Serializable {
   private def sqRung(spark: SparkSession, queries: DataFrame,
                      index: DataFrame, codec: SqCodec, refs: DataFrame,
                      k: Int, shortlist: Int, idCol: String, vecCol: String,
-                     nearest: Option[Array[Float] => Iterator[Int]])
+                     nearest: Option[(Array[Float], Any) => Iterator[Int]])
       : DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     val bc = spark.sparkContext.broadcast(codec)
@@ -1823,7 +1824,7 @@ object Similarity extends Serializable {
                      index: DataFrame, refs: DataFrame, k: Int,
                      shortlist: Int, idCol: String, vecCol: String,
                      asymmetric: Boolean,
-                     nearest: Option[Array[Float] => Iterator[Int]])
+                     nearest: Option[(Array[Float], Any) => Iterator[Int]])
       : DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     if (asymmetric)

@@ -193,8 +193,9 @@ object IvfStream {
     * metadata-FILTERED index needs. Written `partitionBy("list")`,
     * the metadata rides inside each list partition's parquet, so a
     * [[graft.pipeline.Similarity.ivfTopKFromIndex]] probe over
-    * `index.filter(pred)` gets `PartitionFilters` on the probed lists AND `PushedFilters`
-    * on the predicate in ONE scan (PlanSpec pins both). Same
+    * `index.filter(pred)` gets `PartitionFilters` on the probed lists
+    * AND `PushedFilters` on the predicate in ONE scan (PlanSpec pins
+    * both). Same
     * assignment arithmetic as [[assignOnIngest]]
     * ([[Similarity.ivfNearest]], spec-pinned equal), as a UDF so
     * arbitrary extra columns pass through untouched. */

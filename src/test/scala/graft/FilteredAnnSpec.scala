@@ -108,13 +108,15 @@ class FilteredAnnSpec extends SparkSpec {
   test("metadata predicate on a DISK-BACKED codes index: the SQ and BQ " +
     "filtered rungs run a real label filter, ≡ pre-filtered route") {
     val e = Tables.embeddings(spark, sf)
-    // the pre-filtered route: the payload alone, cut to the allowed ids
     val tmp = tempDir("graft_fcodes").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
     val pred = col("label") === 2
     val qs = e.filter(col("vec_id") < 20)
+    // the pre-filtered route: the payload alone, cut to the allowed ids
     val allowed = e.filter(pred).select("vec_id")
+    def semi(df: org.apache.spark.sql.DataFrame) =
+      df.join(allowed, Seq("vec_id"), "left_semi")
 
     IvfStream.assignAndEncodeOnIngestWithMeta(e, centers, codec,
         metaCols = Seq("label"))
@@ -124,8 +126,8 @@ class FilteredAnnSpec extends SparkSpec {
     val gotSq = Similarity.ivfSqTopKFromIndex(spark, qs, sqIdx.filter(pred),
       centers, codec, e.filter(pred), 3, shortlist = 10, nProbe = 4)
     val wantSq = Similarity.ivfSqTopKFromIndex(spark, qs,
-      sqIdx.select("vec_id", "codes", "list").join(allowed, Seq("vec_id"), "left_semi"), centers,
-      codec, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, shortlist = 10, nProbe = 4)
+      semi(sqIdx.select("vec_id", "codes", "list")), centers, codec, semi(e),
+      k = 3, shortlist = 10, nProbe = 4)
     assert(gotSq.exceptAll(wantSq).isEmpty && wantSq.exceptAll(gotSq).isEmpty)
     val labels = e.select(col("vec_id").as("rid"), col("label"))
     assert(gotSq.join(labels, "rid").filter(col("label") =!= 2)
@@ -140,8 +142,8 @@ class FilteredAnnSpec extends SparkSpec {
       centers, e.filter(pred), 3, shortlist = 10, nProbe = 4,
       asymmetric = true)
     val wantBq = Similarity.ivfBqTopKFromIndex(spark, qs,
-      bqIdx.select("vec_id", "codes", "list").join(allowed, Seq("vec_id"), "left_semi"), centers,
-      e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, shortlist = 10, nProbe = 4, asymmetric = true)
+      semi(bqIdx.select("vec_id", "codes", "list")), centers, semi(e), k = 3,
+      shortlist = 10, nProbe = 4, asymmetric = true)
     assert(gotBq.exceptAll(wantBq).isEmpty && wantBq.exceptAll(gotBq).isEmpty)
     assert(gotBq.join(labels, "rid").filter(col("label") =!= 2)
       .count() === 0L)

@@ -2463,11 +2463,12 @@ class PipelineSpec extends SparkSpec {
     val qs = e.filter(col("vec_id") < 20)
     // the label-filtered meta frame ≡ the plain frame cut to the same ids
     val allowed = e.filter(pred).select("vec_id")
+    def semi(df: org.apache.spark.sql.DataFrame) =
+      df.join(allowed, Seq("vec_id"), "left_semi")
     val got = Similarity.ivfPqTopKFromIndex(spark, qs, meta.filter(pred),
       model, e.filter(pred), k = 3, nProbe = 4, refine = 4)
-    val want = Similarity.ivfPqTopKFromIndex(spark, qs,
-      plain.join(allowed, Seq("vec_id"), "left_semi"), model, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3,
-      nProbe = 4, refine = 4)
+    val want = Similarity.ivfPqTopKFromIndex(spark, qs, semi(plain), model,
+      semi(e), k = 3, nProbe = 4, refine = 4)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     val labels = e.select(col("vec_id").as("rid"), col("label"))
     assert(got.join(labels, "rid").filter(col("label") =!= 2)
@@ -2510,11 +2511,12 @@ class PipelineSpec extends SparkSpec {
     val pred = col("label") === 2
     // ≡ the batch twin's payload cut to the allowed ids
     val allowed = e.filter(pred).select("vec_id")
+    def semi(df: org.apache.spark.sql.DataFrame) =
+      df.join(allowed, Seq("vec_id"), "left_semi")
     val got = Similarity.ivfSqTopKFromIndex(spark, qs, idx.filter(pred),
       centers, codec, e.filter(pred), k = 3, shortlist = 10, nProbe = 4)
-    val ref = Similarity.ivfSqTopKFromIndex(spark, qs, want.join(allowed, Seq("vec_id"), "left_semi"),
-      centers, codec, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, shortlist = 10,
-      nProbe = 4)
+    val ref = Similarity.ivfSqTopKFromIndex(spark, qs, semi(want),
+      centers, codec, semi(e), k = 3, shortlist = 10, nProbe = 4)
     assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty)
     val labels = e.select(col("vec_id").as("rid"), col("label"))
     assert(got.join(labels, "rid").filter(col("label") =!= 2)
@@ -2540,8 +2542,8 @@ class PipelineSpec extends SparkSpec {
       refreshed.filter(pred), centersB, codecB, e.filter(pred), k = 3,
       shortlist = 10, nProbe = 4)
     val ref2 = Similarity.ivfSqTopKFromIndex(spark, qs,
-      refreshed.select("vec_id", "codes", "list").join(allowed, Seq("vec_id"), "left_semi"), centersB,
-      codecB, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, shortlist = 10, nProbe = 4)
+      semi(refreshed.select("vec_id", "codes", "list")), centersB, codecB,
+      semi(e), k = 3, shortlist = 10, nProbe = 4)
     assert(got2.exceptAll(ref2).isEmpty && ref2.exceptAll(got2).isEmpty)
     e.unpersist()
   }
@@ -2680,12 +2682,14 @@ class PipelineSpec extends SparkSpec {
     val qs = e.filter(col("vec_id") < 20)
     val predQ = col("label") === 2
     val allowed = e.filter(predQ).select("vec_id")
+    def semi(df: org.apache.spark.sql.DataFrame) =
+      df.join(allowed, Seq("vec_id"), "left_semi")
     val got = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
       idx.filter(predQ), centers, e.filter(predQ), k = 3, dims = dims,
       shortlist = 30, nProbe = 4)
     val want = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
-      idx.select("vec_id", "embedding", "list").join(allowed, Seq("vec_id"), "left_semi"), centers,
-      e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, dims = dims, shortlist = 30, nProbe = 4)
+      semi(idx.select("vec_id", "embedding", "list")), centers, semi(e),
+      k = 3, dims = dims, shortlist = 30, nProbe = 4)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // 3. targeted deletion sweeps the prefix index like any other
     val doomed = Seq(3L, 7L)
@@ -2727,9 +2731,8 @@ class PipelineSpec extends SparkSpec {
       idxAfter.filter(predQ), newC.get, e.filter(predQ), k = 3,
       dims = dims, shortlist = 30, nProbe = 4)
     val wantAfter = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
-      idxAfter.select("vec_id", "embedding", "list").join(allowed, Seq("vec_id"), "left_semi"),
-      newC.get, e.join(allowed, Seq("vec_id"), "left_semi"), k = 3, dims = dims, shortlist = 30,
-      nProbe = 4)
+      semi(idxAfter.select("vec_id", "embedding", "list")), newC.get,
+      semi(e), k = 3, dims = dims, shortlist = 30, nProbe = 4)
     assert(gotAfter.exceptAll(wantAfter).isEmpty &&
       wantAfter.exceptAll(gotAfter).isEmpty)
     e.unpersist()
@@ -2772,9 +2775,11 @@ class PipelineSpec extends SparkSpec {
     val pred = col("label") === 2
     // ≡ the plain ingest's payload cut to the allowed ids
     val allowed = e.filter(pred).select("vec_id")
+    def semi(df: org.apache.spark.sql.DataFrame) =
+      df.join(allowed, Seq("vec_id"), "left_semi")
     val got = Similarity.ivfTopKFromIndex(spark, qs, idx.filter(pred),
       centers, k = 3, nProbe = 4)
-    val ref = Similarity.ivfTopKFromIndex(spark, qs, want.join(allowed, Seq("vec_id"), "left_semi"),
+    val ref = Similarity.ivfTopKFromIndex(spark, qs, semi(want),
       centers, k = 3, nProbe = 4)
     assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty)
     val labels = e.select(col("vec_id").as("rid"), col("label"))
