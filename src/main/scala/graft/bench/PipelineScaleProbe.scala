@@ -187,7 +187,7 @@ object PipelineScaleProbe {
     val (nSq, tSq) = time(graft.pipeline.Similarity
       .sqTopK(spark, q50, repE, k = 5, shortlist = 10).count())
     // matryoshka-IVF (r10): the index is built ONCE outside the timer
-    // (ingest-amortized in production — IvfStream.assignOnIngest is the
+    // (ingest-amortized in production — IvfStream.encode is the
     // streaming twin) and written list-partitioned; the timed probe
     // reads nProbe/nLists of the prefix bytes through partition
     // pruning. With nLists grown ~√n (the ivfPqParamsFor rule) the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.pipeline.Similarity
+import graft.streaming.ModelStore.{BqCenters, FloatCenters, SqQuantizer}
 
 /** One-off measurement of the capped-universe recall the q30/q41/q56
   * audits enforce — prints recall per tier for a given sf dir so the
@@ -118,8 +119,8 @@ object ProbeAnnRecall {
         .select("qid", "rid").cache()
       val nfb = fb.count()
       val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
-      val idx = graft.streaming.IvfStream.assignOnIngestWithMeta(e,
-        centers, metaCols = Seq("label"))
+      val idx = graft.streaming.IvfStream.encode(e,
+        FloatCenters(centers), metaCols = Seq("label"))
       for (np <- Seq(2, 3, 4, 6)) {
         val f = Similarity.ivfTopKFromIndex(spark, q50, idx.filter(pred),
           centers, 5, nProbe = np)
@@ -129,16 +130,16 @@ object ProbeAnnRecall {
           f"${nh.toDouble / nfb}%.4f ($nh/$nfb)")
       }
       // codes-tier filtered routes (r12g): the metadata rides inside
-      // the COMPRESSED index (assignAndEncodeOnIngestWithMeta /
-      // assignAndBqEncodeOnIngestWithMeta) — recall vs the same
+      // the COMPRESSED index (IvfStream.encode with metaCols) — recall
+      // vs the same
       // brute-on-filtered twin, so the filtered compressed rungs'
       // operating points are measured, not inferred from the float row
       val codec = Similarity.sqTrain(spark, e)
       val sqIdx = graft.streaming.IvfStream
-        .assignAndEncodeOnIngestWithMeta(e, centers, codec,
+        .encode(e, SqQuantizer(centers, codec),
           metaCols = Seq("label"))
       val bqIdx = graft.streaming.IvfStream
-        .assignAndBqEncodeOnIngestWithMeta(e, centers,
+        .encode(e, BqCenters(centers),
           metaCols = Seq("label"))
       for (np <- Seq(4, 6)) {
         val fsq = Similarity.ivfSqTopKFromIndex(spark, q50,

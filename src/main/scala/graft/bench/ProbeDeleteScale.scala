@@ -3,6 +3,7 @@ package graft.bench
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.{IndexDelete, IvfStream}
+import graft.streaming.ModelStore.FloatCenters
 
 /** Targeted-deletion cost at the REALISTIC regime (r12 verdict #4):
   * ProbeIndexMaint's delete arm tops out at 32 k vectors and q212's
@@ -73,9 +74,9 @@ object ProbeDeleteScale {
     // route.
     val (_, tBuild) = time {
       (0 until nBatches).foreach { b =>
-        IvfStream.assignOnIngest(
+        IvfStream.encode(
             vecs.filter((col("vec_id") / nLists).cast("long")
-              % nBatches === b), bcC.value)
+              % nBatches === b), FloatCenters(bcC.value))
           .repartition(col("list"))
           .write.partitionBy("list").mode("overwrite")
           .parquet(s"$root/idxA/batch=$b")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.{CurateStream, IvfStream}
 import graft.pipeline.Similarity
+import graft.streaming.ModelStore.{FloatCenters, SqQuantizer}
 
 /** Index-maintenance cost probe (r10): the two offline helpers a
   * long-running ingest schedules while quiesced, measured against
@@ -47,11 +48,11 @@ object ProbeIndexMaint {
         "/idx"
       val centersA = Similarity.ivfTrainCentroids(spark, repE, nLists = 32,
         seed = 42)
-      IvfStream.assignOnIngest(repE, centersA)
+      IvfStream.encode(repE, FloatCenters(centersA))
         .write.partitionBy("list").mode("overwrite").parquet(s"$dir/batch=0")
       val centersB = Similarity.ivfTrainCentroids(spark, repE, nLists = 32,
         seed = 7)
-      val (_, tRe) = time(IvfStream.reassign(spark, dir, centersB))
+      val (_, tRe) = time(IvfStream.reassign(spark, dir, FloatCenters(centersB)))
       println(f"[ivf-reassign] vecs=$n wall=$tRe%.2fs " +
         f"(${n / tRe}%.0f vecs/s)")
       repE.unpersist()
@@ -124,8 +125,8 @@ object ProbeIndexMaint {
       "(float array<float> rows vs binary byte-code rows)")
 
     // D) compressed-index maintenance costs (r11): the codes twins of
-    // section A — reassignSq re-encodes from the original corpus (the
-    // lossy-codes physics), compactCodesIndex merges trigger litter,
+    // section A — a codes-tier reassign re-encodes from the original
+    // corpus (the lossy-codes physics), compactIndex merges trigger litter,
     // ivfPqRefreshIndex rebuilds the persisted PQ layout atomically.
     Seq(1, 4, maxReps).distinct.filter(_ <= maxReps).foreach { reps =>
       val repE = (0 until reps).map { k =>
@@ -137,19 +138,19 @@ object ProbeIndexMaint {
       val centersA = Similarity.ivfTrainCentroids(spark, repE, nLists = 32,
         seed = 42)
       val codecA = Similarity.sqTrain(spark, repE)
-      IvfStream.assignAndEncodeOnIngest(repE, centersA, codecA)
+      IvfStream.encode(repE, SqQuantizer(centersA, codecA))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/idx/batch=0")
       val centersB = Similarity.ivfTrainCentroids(spark, repE, nLists = 32,
         seed = 7)
-      val (_, tSq) = time(IvfStream.reassignSq(spark, s"$root/idx", repE,
-        centersB, codecA))
-      val (_, tCmp) = time(IvfStream.compactCodesIndex(spark, s"$root/idx"))
+      val (_, tSq) = time(IvfStream.reassign(spark, s"$root/idx",
+        SqQuantizer(centersB, codecA), Some(repE)))
+      val (_, tCmp) = time(IvfStream.compactIndex(spark, s"$root/idx"))
       Similarity.ivfPqWriteIndex(spark, repE, s"$root/pq", nLists = 32,
         m = 16, nCodes = 32, seed = 42)
       val (_, tPq) = time(Similarity.ivfPqRefreshIndex(spark, repE,
         s"$root/pq", nLists = 32, m = 16, nCodes = 32, seed = 7))
-      println(f"[codes-maint] vecs=$n reassignSq=$tSq%.2fs " +
+      println(f"[codes-maint] vecs=$n reassign=$tSq%.2fs " +
         f"(${n / tSq}%.0f vecs/s) compactCodes=$tCmp%.2fs " +
         f"pqRefresh=$tPq%.2fs (${n / tPq}%.0f vecs/s)")
       repE.unpersist()
@@ -161,7 +162,7 @@ object ProbeIndexMaint {
     val centersH = Similarity.ivfTrainCentroids(spark, e, nLists = 32)
     def reading(df: org.apache.spark.sql.DataFrame,
                 cs: Array[Array[Double]], tag: String): Unit = {
-      val (r, dt) = time(IvfStream.quantizerStaleness(df, cs).collect()(0))
+      val (r, dt) = time(IvfStream.quantizerStaleness(df, FloatCenters(cs)).collect()(0))
       println(f"[staleness] $tag n=${r.getLong(0)} " +
         f"mean_d2=${r.getDouble(1)}%.4f max_list_frac=${r.getDouble(2)}%.4f " +
         f"wall=$dt%.2fs")
@@ -173,30 +174,10 @@ object ProbeIndexMaint {
     val centersR = Similarity.ivfTrainCentroids(spark, drifted, nLists = 32)
     reading(drifted, centersR, "after-retrain")
 
-    // E2) the cheap rung below a full retrain (r12): mini-batch
-    // centroid refresh (one narrow pass + nLists·dim agg) vs the
-    // driver Lloyd retrain, and how much drifted mean_d2 each buys
-    // back.
-    {
-      val (cFull, tFull) = time(Similarity.ivfTrainCentroids(spark,
-        drifted, nLists = 32))
-      val (cMini, tMini) = time(IvfStream.refreshCentroids(drifted,
-        centersH))
-      val dFull = IvfStream.quantizerStaleness(drifted, cFull)
-        .collect()(0).getDouble(1)
-      val dMini = IvfStream.quantizerStaleness(drifted, cMini)
-        .collect()(0).getDouble(1)
-      val dStale = IvfStream.quantizerStaleness(drifted, centersH)
-        .collect()(0).getDouble(1)
-      println(f"[minibatch] stale_d2=$dStale%.3f full-retrain: " +
-        f"wall=$tFull%.2fs d2=$dFull%.3f; minibatch-refresh: " +
-        f"wall=$tMini%.2fs d2=$dMini%.3f")
-    }
-
     // F) delete cost tracks the DELETED partitions, not the corpus
     // (r12): same delete-set size against a 1× and a maxReps× index —
     // a 1-list delete must stay near the single-leaf rewrite cost while
-    // the full-rewrite yardstick (compactCodesIndex) grows with the
+    // the full-rewrite yardstick (a reassign) grows with the
     // corpus.
     import graft.streaming.IndexDelete
     Seq(1, maxReps).distinct.foreach { reps =>
@@ -207,7 +188,7 @@ object ProbeIndexMaint {
       val n = repE.count()
       val root = java.nio.file.Files.createTempDirectory("del_pr").toString
       val centers = Similarity.ivfTrainCentroids(spark, repE, nLists = 32)
-      val assigned = IvfStream.assignOnIngest(repE, centers)
+      val assigned = IvfStream.encode(repE, FloatCenters(centers))
         .cache()
       assigned.write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/idx/batch=0")
@@ -221,7 +202,7 @@ object ProbeIndexMaint {
         oneList, "vec_id"))
       val (r2, t2) = time(IndexDelete.deleteIds(spark, s"$root/idx",
         spread, "vec_id"))
-      val (_, tFull) = time(IvfStream.reassign(spark, s"$root/idx", centers))
+      val (_, tFull) = time(IvfStream.reassign(spark, s"$root/idx", FloatCenters(centers)))
       println(f"[delete] vecs=$n one-list: wall=$t1%.2fs " +
         f"parts=${r1.partitionsRewritten}/${r1.partitionsTotal} " +
         f"rows=${r1.rowsDeleted}; spread: wall=$t2%.2fs " +
@@ -237,7 +218,7 @@ object ProbeIndexMaint {
     {
       val corpus = e.cache(); corpus.count()
       val centers = Similarity.ivfTrainCentroids(spark, corpus, nLists = 32)
-      val assigned = IvfStream.assignOnIngest(corpus, centers).cache()
+      val assigned = IvfStream.encode(corpus, FloatCenters(centers)).cache()
       assigned.count()
       val qs = corpus.limit(50)
       def probeWall(dir: String): Double = {

@@ -309,7 +309,7 @@ object Similarity extends Serializable {
   /** IVF search over a PRE-ASSIGNED index frame (idCol, vecCol, list)
     * — the query half of the accumulated-index pattern: the corpus was
     * assigned once (at ingest, by [[graft.streaming.IvfStream]], or by
-    * a one-off [[graft.streaming.IvfStream.assignOnIngest]] batch) and
+    * a one-off [[graft.streaming.IvfStream.encode]] batch) and
     * search never re-trains or re-assigns.
     *
     * The probed lists are a ≤nLists driver-side set (nLists is a
@@ -327,7 +327,7 @@ object Similarity extends Serializable {
     * the predicate reaches the index scan before the probed-list join
     * (`PushedFilters` next to the `PartitionFilters` on a persisted
     * index, metadata written alongside by
-    * [[graft.streaming.IvfStream.assignOnIngestWithMeta]]) and the
+    * [[graft.streaming.IvfStream.encode]] with `metaCols`) and the
     * under-fill pad brute-forces against the allowed refs only, so a
     * selective predicate still returns exactly k whenever the filtered
     * corpus holds k+1 vectors; with `nProbe = nLists` the result is
@@ -583,13 +583,13 @@ object Similarity extends Serializable {
                       trainCap: Int = 20000): (IvfPqModel, DataFrame) = {
     val model = ivfPqTrainModel(spark, refs, nLists, m, nCodes, seed,
       idCol, vecCol, dim, trainCap)
-    (model, ivfPqEncodeAll(spark, refs, model, idCol, vecCol))
+    (model, pqIndex(model, refs, idCol, vecCol))
   }
 
   /** Train ONLY the IVF-PQ quantizer pair (coarse k-means over unit
     * vectors + per-subspace residual codebooks) — the build's training
     * half factored out so a maintenance retrain
-    * ([[graft.streaming.IvfStream.maintainPq]]) doesn't pay a corpus
+    * ([[graft.streaming.IvfStream.maintain]]) doesn't pay a corpus
     * encode it immediately redoes on the index's id subset. */
   def ivfPqTrainModel(spark: SparkSession, refs: DataFrame,
                       nLists: Int = 16, m: Int = 8, nCodes: Int = 32,
@@ -639,9 +639,9 @@ object Similarity extends Serializable {
     * Each half-step is a coordinate descent on the shared
     * quantization error, so the objective is non-increasing. The
     * returned model carries the rotation INSIDE `unit` — every
-    * consumer (batch build, [[graft.streaming.IvfStream.attachPq]]
+    * consumer (batch build, [[graft.streaming.IvfStream.attach]]
     * ingest, probe, unit-space staleness) applies it with no second
-    * code path, and [[graft.streaming.IvfStream.maintainPq]] retrains
+    * code path, and [[graft.streaming.IvfStream.maintain]] retrains
     * WITH rotation when the live model has one. */
   def ivfOpqTrainModel(spark: SparkSession, refs: DataFrame,
                        nLists: Int = 16, m: Int = 8, nCodes: Int = 32,
@@ -813,27 +813,15 @@ object Similarity extends Serializable {
                        trainCap: Int = 20000): (IvfPqModel, DataFrame) = {
     val model = ivfOpqTrainModel(spark, refs, nLists, m, nCodes, iters,
       seed, idCol, vecCol, dim, trainCap)
-    (model, ivfPqEncodeAll(spark, refs, model, idCol, vecCol))
+    (model, pqIndex(model, refs, idCol, vecCol))
   }
 
-  /** One encode pass of `refs` under an existing model — the build's
-    * second half factored out so the PQ and OPQ builds share it
-    * byte-for-byte (and it IS [[graft.streaming.IvfStream
-    * .assignAndPqEncodeOnIngest]]'s map, spec-pinned equal). */
-  private def ivfPqEncodeAll(spark: SparkSession, refs: DataFrame,
-                             model: IvfPqModel, idCol: String,
-                             vecCol: String): DataFrame = {
-    import spark.implicits._
-    val src = refs.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val bc = spark.sparkContext.broadcast(model)
-    src.as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        val mm = bc.value
-        val u = mm.unit(v)
-        val list = mm.argminCenter(u)
-        (id, list, mm.encode(u, list))
-      }.toDF(idCol, "list", "codes")
-  }
+  /** `refs` encoded under a PQ model: (idCol, codes, list), the
+    * [[graft.streaming.IvfStream.encode]] rows of the PQ and OPQ builds. */
+  private def pqIndex(model: IvfPqModel, refs: DataFrame, idCol: String,
+                      vecCol: String): DataFrame =
+    graft.streaming.IvfStream.encode(refs,
+      graft.streaming.ModelStore.PqQuantizer(model), idCol, vecCol)
 
   /** Persist the IVF-PQ index: codes list-partitioned
     * (`dir/codes/batch=0/list=*` — the [[ivfTopKFromIndex]] pruning
@@ -846,7 +834,8 @@ object Similarity extends Serializable {
                       trainCap: Int = 20000): IvfPqModel = {
     val (model, index) = ivfPqBuildIndex(spark, refs, nLists, m, nCodes,
       seed, idCol, vecCol, dim, trainCap)
-    ivfPqWriteLayout(spark, model, index, dir)
+    writeLayout(spark, dir, "codes",
+      graft.streaming.ModelStore.PqQuantizer(model), index)
     model
   }
 
@@ -862,40 +851,49 @@ object Similarity extends Serializable {
                        trainCap: Int = 20000): IvfPqModel = {
     val (model, index) = ivfOpqBuildIndex(spark, refs, nLists, m, nCodes,
       iters, seed, idCol, vecCol, dim, trainCap)
-    ivfPqWriteLayout(spark, model, index, dir)
+    writeLayout(spark, dir, "codes",
+      graft.streaming.ModelStore.PqQuantizer(model), index)
     model
   }
 
-  /** One writer for the IVF-PQ on-disk layout (codes list-partitioned
-    * under `batch=0`, centers + codebooks as plain rows) — shared by
-    * the initial [[ivfPqWriteIndex]] and the [[ivfPqRefreshIndex]]
-    * temp-dir write so both produce byte-compatible directories. */
-  private def ivfPqWriteLayout(spark: SparkSession, model: IvfPqModel,
-                               index: DataFrame, dir: String): Unit = {
-    import spark.implicits._
+  /** One writer for every rung's on-disk layout: the index rows
+    * list-partitioned under `dir/<sub>/batch=0` (the pruning layout)
+    * and the quantizer's rows beside them
+    * ([[graft.streaming.ModelStore.writeRows]]). */
+  private def writeLayout(spark: SparkSession, dir: String, sub: String,
+                          q: graft.streaming.ModelStore.QuantizerModel,
+                          index: DataFrame): Unit = {
     index.write.partitionBy("list").mode("overwrite")
-      .parquet(s"$dir/codes/batch=0")
-    model.centers.indices.map(c => (c, model.centers(c)))
-      .toDF("list", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
-    (for (s <- model.codebooks.indices; c <- model.codebooks(s).indices)
-      yield (s, c, model.codebooks(s)(c)))
-      .toDF("s", "c", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/books")
-    // OPQ rotation rows (i, row) — absent for an unrotated model, so
-    // pre-r13 directories read back unchanged
-    model.rotation.foreach { r =>
-      r.indices.map(i => (i, r(i))).toDF("i", "row")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
-      ()
-    }
+      .parquet(s"$dir/$sub/batch=0")
+    graft.streaming.ModelStore.writeRows(spark, dir, q)
+  }
+
+  /** The persisted layout's rows under `dir/<sub>` (manifest-routed),
+    * as (idCol, payload, list); a `codes` payload passes the
+    * [[requireBinaryCodes]] guard. */
+  private def layoutRows(spark: SparkSession, dir: String, sub: String,
+                         op: String, idCol: String,
+                         payload: String = "codes"): DataFrame = {
+    val rows = routedIndexRead(spark, s"$dir/$sub", op)
+    (if (payload == "codes") requireBinaryCodes(rows, op) else rows)
+      .select(idCol, payload, "list")
+  }
+
+  /** Self-heal an interrupted maintenance swap of a persisted layout —
+    * at the directory (whole-layout refresh) AND at `sub` (an
+    * [[graft.streaming.IndexDelete.deleteIds]] on `<dir>/<sub>` leaves
+    * its markers one level down). */
+  private def healLayout(spark: SparkSession, dir: String,
+                         sub: String): Unit = {
+    graft.streaming.IndexSwap.restoreIfInterrupted(spark, dir)
+    graft.streaming.IndexSwap.restoreIfInterrupted(spark, s"$dir/$sub")
   }
 
   /** Quantizer refresh for a PERSISTED IVF-PQ index (the
     * [[ivfPqWriteIndex]] layout) — the compressed-tier maintenance
     * path (r10 verdict: PQ codes are lossy, so drift repair needs the
-    * ORIGINAL corpus, exactly like [[graft.streaming.IvfStream
-    * .reassignSq]]): retrain both quantizers on `refs` under the new
+    * ORIGINAL corpus, exactly like a codes-tier [[graft.streaming
+    * .IvfStream.reassign]]): retrain both quantizers on `refs` under the new
     * parameters/seed and re-encode in the one narrow build pass.
     *
     * Installation has two routes (r14, closing the last
@@ -922,75 +920,46 @@ object Similarity extends Serializable {
                         trainCap: Int = 20000): IvfPqModel = {
     graft.streaming.IndexSwap.requireLive(spark, dir, "ivfPqRefreshIndex")
     val codesDir = s"$dir/codes"
-    graft.streaming.IndexManifest.current(spark, codesDir) match {
-      case Some(snap) =>
-        val (model, index) = ivfPqBuildIndex(spark, refs, nLists, m,
-          nCodes, seed, idCol, vecCol, dim, trainCap)
-        index.write.partitionBy("list").mode("overwrite")
-          .parquet(s"$codesDir/batch=${snap.rewriteBatchId}")
-        graft.streaming.ModelStore.write(spark, codesDir, snap.gen + 1,
-          graft.streaming.ModelStore.PqQuantizer(model))
-        graft.streaming.IndexManifest.commitRewrite(spark, codesDir,
-          snap, snap.leaves)
-        ivfPqWriteModelMirror(spark, model, dir)
-        model
-      case None =>
-        val tmp = dir + ".compact"
-        val (model, index) = ivfPqBuildIndex(spark, refs, nLists, m,
-          nCodes, seed, idCol, vecCol, dim, trainCap)
-        ivfPqWriteLayout(spark, model, index, tmp)
-        graft.streaming.IndexSwap.swap(spark, dir, tmp)
-        model
+    val (model, index) = ivfPqBuildIndex(spark, refs, nLists, m, nCodes,
+      seed, idCol, vecCol, dim, trainCap)
+    val q = graft.streaming.ModelStore.PqQuantizer(model)
+    if (graft.streaming.IndexManifest.isManifested(spark, codesDir)) {
+      graft.streaming.IvfStream.fullRewrite(spark, codesDir, Some(q))(index)
+      // the top-level mirror, bracketed by its marker (see
+      // [[modelMirrorMarker]])
+      val marker = modelMirrorMarker(dir)
+      val fs = graft.util.SmallFiles.fsOf(spark, marker)
+      graft.util.SmallFiles.touch(fs, marker)
+      graft.streaming.ModelStore.writeRows(spark, dir, q)
+      fs.delete(marker, false)
+    } else {
+      val tmp = dir + ".compact"
+      writeLayout(spark, tmp, "codes", q, index)
+      graft.streaming.IndexSwap.swap(spark, dir, tmp)
     }
+    model
   }
 
-  /** Refresh the top-level centers/books/rotation rows in place — the
-    * legacy mirror an enrolled refresh keeps roughly current for
-    * tooling that inspects the layout; enrolled READERS resolve the
-    * model from the generation-keyed [[graft.streaming.ModelStore]]
-    * epoch instead, so the mirror's non-atomic update window never
-    * feeds a probe. A now-unrotated model removes the stale rotation
-    * dir.
+  /** The marker of the top-level centers/books/rotation mirror an
+    * enrolled [[ivfPqRefreshIndex]] keeps roughly current for tooling
+    * that inspects the layout; enrolled READERS resolve the model from
+    * the generation-keyed [[graft.streaming.ModelStore]] epoch instead,
+    * so the mirror's non-atomic update window never feeds a probe.
     *
-    * The three overwrites are sequential and independently non-atomic,
-    * so a crash mid-sequence would leave a TORN mirror (new centers
-    * with old books, or a stale rotation) that the legacy
+    * The mirror's part overwrites are sequential and independently
+    * non-atomic, so a crash mid-sequence would leave a TORN mirror (new
+    * centers with old books, or a stale rotation) that the legacy
     * [[ivfPqReadIndex]] fallback and external tooling would read as
-    * consistent. A marker file (`_modelmirror.inprogress`) brackets
+    * consistent. This marker file (`_modelmirror.inprogress`) brackets
     * the sequence: created before the first write, removed after the
     * last, and the legacy read path refuses — loudly — while it
-    * exists. Rotation is rewritten FIRST so even a pre-marker-aware
-    * reader sees rotation-vs-books skew (detectable: codebooks are
-    * trained in the rotated space) rather than the silent
-    * centers-vs-books tear. */
+    * exists. [[graft.streaming.ModelStore.writeRows]] rewrites the
+    * rotation FIRST (and removes a stale one) so even a
+    * pre-marker-aware reader sees rotation-vs-books skew (detectable:
+    * codebooks are trained in the rotated space) rather than the
+    * silent centers-vs-books tear. */
   private[pipeline] def modelMirrorMarker(dir: String) =
     new org.apache.hadoop.fs.Path(s"$dir/_modelmirror.inprogress")
-
-  private def ivfPqWriteModelMirror(spark: SparkSession,
-                                    model: IvfPqModel,
-                                    dir: String): Unit = {
-    import spark.implicits._
-    val marker = modelMirrorMarker(dir)
-    val fs = graft.util.SmallFiles.fsOf(spark, marker)
-    graft.util.SmallFiles.touch(fs, marker)
-    val rotP = new org.apache.hadoop.fs.Path(s"$dir/rotation")
-    model.rotation match {
-      case Some(r) =>
-        r.indices.map(i => (i, r(i))).toDF("i", "row")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
-        ()
-      case None => if (fs.exists(rotP)) { fs.delete(rotP, true); () }
-    }
-    model.centers.indices.map(c => (c, model.centers(c)))
-      .toDF("list", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
-    (for (s <- model.codebooks.indices; c <- model.codebooks(s).indices)
-      yield (s, c, model.codebooks(s)(c)))
-      .toDF("s", "c", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/books")
-    fs.delete(marker, false)
-    ()
-  }
 
   /** Opt a persisted IVF-PQ layout into snapshot reads WITH model
     * versioning: enroll `<dir>/codes` in [[graft.streaming
@@ -1018,8 +987,7 @@ object Similarity extends Serializable {
     * one level down). */
   def ivfPqReadIndex(spark: SparkSession, dir: String,
                      idCol: String = "vec_id"): (IvfPqModel, DataFrame) = {
-    graft.streaming.IndexSwap.restoreIfInterrupted(spark, dir)
-    graft.streaming.IndexSwap.restoreIfInterrupted(spark, s"$dir/codes")
+    healLayout(spark, dir, "codes")
     graft.streaming.IndexManifest.current(spark, s"$dir/codes")
       .foreach { snap =>
         graft.streaming.ModelStore.readAt(spark, s"$dir/codes", snap.gen)
@@ -1042,25 +1010,9 @@ object Similarity extends Serializable {
         "the ModelStore epoch and are unaffected; for this legacy " +
         "read, re-run the refresh (which rewrites the mirror) or " +
         "enroll via ivfPqEnrollIndex.")
-    val centers = spark.read.parquet(s"$dir/centers").orderBy("list")
-      .collect().map(_.getSeq[Double](1).toArray)
-    val bookRows = spark.read.parquet(s"$dir/books").orderBy("s", "c")
-      .collect().map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Double](2).toArray))
-    val m = bookRows.map(_._1).max + 1
-    val books = Array.tabulate(m)(s =>
-      bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
-    val dim = centers(0).length
-    val rotP = new org.apache.hadoop.fs.Path(s"$dir/rotation")
-    val rotation =
-      if (rotP.getFileSystem(spark.sessionState.newHadoopConf())
-          .exists(rotP))
-        Some(spark.read.parquet(s"$dir/rotation").orderBy("i")
-          .collect().map(_.getSeq[Double](1).toArray))
-      else None
-    (IvfPqModel(dim, m, centers, books, rotation),
-      routedIndexRead(spark, s"$dir/codes", "ivfPqReadIndex")
-        .select(idCol, "list", "codes"))
+    val graft.streaming.ModelStore.PqQuantizer(model) =
+      graft.streaming.ModelStore.readRows(spark, dir, "pq")
+    (model, layoutRows(spark, dir, "codes", "ivfPqReadIndex", idCol))
   }
 
   /** [[ivfPqReadIndex]] AS OF a pinned generation: the model epoch
@@ -1092,7 +1044,7 @@ object Similarity extends Serializable {
                            idCol: String): DataFrame =
     graft.streaming.IndexManifest
       .readSnapshot(spark, s"$dir/codes", snap)
-      .map(_.select(idCol, "list", "codes"))
+      .map(_.select(idCol, "codes", "list"))
       .getOrElse(throw new IllegalArgumentException(
         s"ivfPqReadIndex: generation ${snap.gen} of $dir/codes is " +
           "EMPTY (every row deleted) — rebuild or re-ingest before " +
@@ -1484,24 +1436,20 @@ object Similarity extends Serializable {
     * `PartitionFilters` (PlanSpec pins it). Training is the
     * [[ivfTrainCentroids]] sample design (bit-identical sample order);
     * assignment is one narrow map — the
-    * [[graft.streaming.IvfStream.assignOnIngest]] arithmetic over the
-    * prefix column, so the index can also accrue from a stream. */
+    * [[graft.streaming.IvfStream.encode]] arithmetic over the prefix
+    * column, so the index can also accrue from a stream. */
   def matryoshkaIvfBuildIndex(spark: SparkSession, refs: DataFrame,
                               dims: Int = 32, nLists: Int = 16,
                               seed: Long = 42, idCol: String = "vec_id",
                               vecCol: String = "embedding",
                               trainCap: Int = 20000)
       : (Array[Array[Double]], DataFrame) = {
-    import spark.implicits._
     val pref = refs.select(col(idCol).cast("long").as(idCol),
       slice(col(vecCol), 1, dims).as(vecCol))
     val centers = ivfTrainCentroids(spark, pref, nLists, seed, idCol,
       vecCol, trainCap)
-    val bc = spark.sparkContext.broadcast(centers)
-    val index = pref.as[(Long, Array[Float])]
-      .map { case (id, v) => (id, v, ivfNearest(bc.value, v, 1)(0)) }
-      .toDF(idCol, vecCol, "list")
-    (centers, index)
+    (centers, graft.streaming.IvfStream.encode(pref,
+      graft.streaming.ModelStore.FloatCenters(centers), idCol, vecCol))
   }
 
   /** Persist the Matryoshka prefix index: the (idCol, prefix, list)
@@ -1518,31 +1466,25 @@ object Similarity extends Serializable {
                               idCol: String = "vec_id",
                               vecCol: String = "embedding",
                               trainCap: Int = 20000): Array[Array[Double]] = {
-    import spark.implicits._
     val (centers, index) = matryoshkaIvfBuildIndex(spark, refs, dims,
       nLists, seed, idCol, vecCol, trainCap)
-    index.write.partitionBy("list").mode("overwrite")
-      .parquet(s"$dir/prefix/batch=0")
-    centers.indices.map(c => (c, centers(c))).toDF("list", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
+    writeLayout(spark, dir, "prefix",
+      graft.streaming.ModelStore.FloatCenters(centers), index)
     centers
   }
 
   /** Load a persisted Matryoshka prefix index: (centers, index frame).
     * Self-heals an interrupted maintenance swap first — at the
     * directory AND prefix levels (a delete on `<dir>/prefix` marks
-    * one level down). */
+    * one level down, [[healLayout]]). */
   def matryoshkaIvfReadIndex(spark: SparkSession, dir: String,
                              idCol: String = "vec_id",
                              vecCol: String = "embedding")
       : (Array[Array[Double]], DataFrame) = {
-    graft.streaming.IndexSwap.restoreIfInterrupted(spark, dir)
-    graft.streaming.IndexSwap.restoreIfInterrupted(spark, s"$dir/prefix")
-    val centers = spark.read.parquet(s"$dir/centers").orderBy("list")
-      .collect().map(_.getSeq[Double](1).toArray)
-    (centers,
-      routedIndexRead(spark, s"$dir/prefix", "matryoshkaIvfReadIndex")
-        .select(idCol, vecCol, "list"))
+    healLayout(spark, dir, "prefix")
+    (graft.streaming.ModelStore.readRows(spark, dir, "float").centers,
+      layoutRows(spark, dir, "prefix", "matryoshkaIvfReadIndex", idCol,
+        vecCol))
   }
 
   /** Matryoshka-IVF two-stage retrieval over a PRE-BUILT prefix index
@@ -1635,18 +1577,17 @@ object Similarity extends Serializable {
   }
 
   /** Persist the SQ8 index: int8 codes as parquet (`dir/codes`) and
-    * the codec envelope as `dim` (pos, mn, mx) rows (`dir/codec`) —
+    * the codec envelope as `dim` (pos, mn, mx) rows (`dir/codec`, a
+    * [[graft.streaming.ModelStore.SqQuantizer]] without centers) —
     * engine-neutral, so any reader can re-derive [[SqCodec.decode]].
     * Returns the trained codec. */
   def sqWriteIndex(spark: SparkSession, refs: DataFrame, dir: String,
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): SqCodec = {
-    import spark.implicits._
     val (codec, codes) = sqBuildIndex(spark, refs, idCol, vecCol)
     codes.write.mode("overwrite").parquet(s"$dir/codes")
-    codec.mins.indices.map(i => (i, codec.mins(i), codec.maxs(i)))
-      .toDF("pos", "mn", "mx")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codec")
+    graft.streaming.ModelStore.writeRows(spark, dir,
+      graft.streaming.ModelStore.SqQuantizer(Array.empty, codec))
     codec
   }
 
@@ -1681,7 +1622,7 @@ object Similarity extends Serializable {
           "4x shrink is real in memory, not just on disk) and cannot " +
           "read the old layout. Rebuild the index from the original " +
           "vectors with the current writer (sqWriteIndex / " +
-          "ivfSqWriteIndex / IvfStream.attachSq).")
+          "ivfSqWriteIndex / IvfStream.attach).")
       case other => throw new IllegalArgumentException(
         s"$where: `codes` column has unexpected type $other — not a " +
           "codes index directory?")
@@ -1692,8 +1633,9 @@ object Similarity extends Serializable {
     * interrupted maintenance swap first. */
   def sqReadIndex(spark: SparkSession, dir: String): (SqCodec, DataFrame) = {
     graft.streaming.IndexSwap.restoreIfInterrupted(spark, dir)
-    val stats = spark.read.parquet(s"$dir/codec").orderBy("pos").collect()
-    (SqCodec(stats.map(_.getDouble(1)), stats.map(_.getDouble(2))),
+    val graft.streaming.ModelStore.SqQuantizer(_, codec) =
+      graft.streaming.ModelStore.readRows(spark, dir, "sq")
+    (codec,
       requireBinaryCodes(spark.read.parquet(s"$dir/codes"), "sqReadIndex"))
   }
 
@@ -1861,17 +1803,10 @@ object Similarity extends Serializable {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding", trainCap: Int = 20000)
       : (Array[Array[Double]], DataFrame) = {
-    import spark.implicits._
     val centers = ivfTrainCentroids(spark, refs, nLists, seed, idCol,
       vecCol, trainCap)
-    val bc = spark.sparkContext.broadcast(centers)
-    val index = refs
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        (id, bqBits(v), ivfNearest(bc.value, v, 1)(0)) }
-      .toDF(idCol, "codes", "list")
-    (centers, index)
+    (centers, graft.streaming.IvfStream.encode(refs,
+      graft.streaming.ModelStore.BqCenters(centers), idCol, vecCol))
   }
 
   /** IVF-BQ search over a pre-built codes index: queries probe
@@ -1911,13 +1846,10 @@ object Similarity extends Serializable {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding", trainCap: Int = 20000)
       : Array[Array[Double]] = {
-    import spark.implicits._
     val (centers, index) = ivfBqBuildIndex(spark, refs, nLists, seed,
       idCol, vecCol, trainCap)
-    index.write.partitionBy("list").mode("overwrite")
-      .parquet(s"$dir/codes/batch=0")
-    centers.indices.map(c => (c, centers(c))).toDF("list", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
+    writeLayout(spark, dir, "codes",
+      graft.streaming.ModelStore.BqCenters(centers), index)
     centers
   }
 
@@ -1927,13 +1859,9 @@ object Similarity extends Serializable {
   def ivfBqReadIndex(spark: SparkSession, dir: String,
                      idCol: String = "vec_id")
       : (Array[Array[Double]], DataFrame) = {
-    graft.streaming.IndexSwap.restoreIfInterrupted(spark, dir)
-    graft.streaming.IndexSwap.restoreIfInterrupted(spark, s"$dir/codes")
-    val centers = spark.read.parquet(s"$dir/centers").orderBy("list")
-      .collect().map(_.getSeq[Double](1).toArray)
-    (centers,
-      requireBinaryCodes(routedIndexRead(spark, s"$dir/codes",
-        "ivfBqReadIndex"), "ivfBqReadIndex").select(idCol, "codes", "list"))
+    healLayout(spark, dir, "codes")
+    (graft.streaming.ModelStore.readRows(spark, dir, "bq").centers,
+      layoutRows(spark, dir, "codes", "ivfBqReadIndex", idCol))
   }
 
   /** [[ivfBqTopKFromIndex]] with the index built inline — the
@@ -1963,19 +1891,11 @@ object Similarity extends Serializable {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding", trainCap: Int = 20000)
       : (Array[Array[Double]], SqCodec, DataFrame) = {
-    import spark.implicits._
     val centers = ivfTrainCentroids(spark, refs, nLists, seed, idCol,
       vecCol, trainCap)
     val codec = sqTrain(spark, refs, vecCol)
-    val bcC = spark.sparkContext.broadcast(centers)
-    val bcQ = spark.sparkContext.broadcast(codec)
-    val index = refs
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        (id, bcQ.value.encode(v), ivfNearest(bcC.value, v, 1)(0)) }
-      .toDF(idCol, "codes", "list")
-    (centers, codec, index)
+    (centers, codec, graft.streaming.IvfStream.encode(refs,
+      graft.streaming.ModelStore.SqQuantizer(centers, codec), idCol, vecCol))
   }
 
   /** IVF-SQ8 search over a pre-built codes index: queries probe
@@ -2004,16 +1924,10 @@ object Similarity extends Serializable {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding", trainCap: Int = 20000)
       : (Array[Array[Double]], SqCodec) = {
-    import spark.implicits._
     val (centers, codec, index) = ivfSqBuildIndex(spark, refs, nLists,
       seed, idCol, vecCol, trainCap)
-    index.write.partitionBy("list").mode("overwrite")
-      .parquet(s"$dir/codes/batch=0")
-    centers.indices.map(c => (c, centers(c))).toDF("list", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
-    codec.mins.indices.map(i => (i, codec.mins(i), codec.maxs(i)))
-      .toDF("pos", "mn", "mx")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codec")
+    writeLayout(spark, dir, "codes",
+      graft.streaming.ModelStore.SqQuantizer(centers, codec), index)
     (centers, codec)
   }
 
@@ -2025,15 +1939,11 @@ object Similarity extends Serializable {
   def ivfSqReadIndex(spark: SparkSession, dir: String,
                      idCol: String = "vec_id")
       : (Array[Array[Double]], SqCodec, DataFrame) = {
-    graft.streaming.IndexSwap.restoreIfInterrupted(spark, dir)
-    graft.streaming.IndexSwap.restoreIfInterrupted(spark, s"$dir/codes")
-    val centers = spark.read.parquet(s"$dir/centers").orderBy("list")
-      .collect().map(_.getSeq[Double](1).toArray)
-    val stats = spark.read.parquet(s"$dir/codec").orderBy("pos").collect()
-    (centers,
-      SqCodec(stats.map(_.getDouble(1)), stats.map(_.getDouble(2))),
-      requireBinaryCodes(routedIndexRead(spark, s"$dir/codes",
-        "ivfSqReadIndex"), "ivfSqReadIndex").select(idCol, "codes", "list"))
+    healLayout(spark, dir, "codes")
+    val graft.streaming.ModelStore.SqQuantizer(centers, codec) =
+      graft.streaming.ModelStore.readRows(spark, dir, "sq")
+    (centers, codec,
+      layoutRows(spark, dir, "codes", "ivfSqReadIndex", idCol))
   }
 
   /** [[ivfSqTopKFromIndex]] with the index built inline — the

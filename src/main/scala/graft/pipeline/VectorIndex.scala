@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, slice}
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.streaming.{IndexDelete, IndexManifest, IvfStream}
+import graft.streaming.{IndexDelete, IndexManifest, IvfStream, ModelStore}
+import graft.streaming.ModelStore.{BqCenters, FloatCenters, PqQuantizer, QuantizerModel, SqQuantizer}
 import graft.util.SmallFiles
 
 /** ONE façade over the vector-index tier matrix (r12 verdict #6): the
@@ -11,7 +12,7 @@ import graft.util.SmallFiles
   * PQ (m bytes/vector, optionally OPQ-rotated) — share the same
   * lifecycle (train → ingest/attach → probe → filtered probe →
   * maintain → delete → compact/vacuum) but each tier has its own
-  * build, ingest, maintain and probe entry points. `VectorIndex` pins
+  * build and probe entry points. `VectorIndex` pins
   * the conventions once: tier and parameters are chosen at [[VectorIndex
   * .train]], and every subsequent call is tier-agnostic, so the whole
   * family is testable as ONE contract (VectorIndexSpec runs the same
@@ -23,17 +24,22 @@ import graft.util.SmallFiles
   * the [[Similarity]] rung, whose stage-1 scan, shortlist cut, exact
   * re-rank and under-fill pad are the one shared probe.
   *
+  * The write side needs no tier match at all: ingest, attach, read,
+  * maintain and compact are the one [[graft.streaming.IvfStream]] path
+  * over the facade's quantizer; only the Matryoshka tier slices its
+  * vectors to the prefix first.
+  *
   * NO new behavior lives here: every method delegates to the exact
   * operator the per-tier call sites use ([[Similarity]],
   * [[graft.streaming.IvfStream]], [[graft.streaming.IndexDelete]],
   * [[graft.streaming.IndexManifest]]), so the facade inherits their
   * specs, plans, and crash/snapshot discipline unchanged.
   *
-  * The quantizer state (coarse centers / SQ codec / PQ model) rides
-  * IN the immutable facade value; operations that retrain
+  * The quantizer state (a [[graft.streaming.ModelStore.QuantizerModel]])
+  * rides IN the immutable facade value; operations that retrain
   * ([[VectorIndex#maintain]]) return an UPDATED facade — the same
-  * convention as the underlying maintain* helpers, made unmissable by
-  * the type.
+  * convention as [[graft.streaming.IvfStream.maintain]], made
+  * unmissable by the type.
   */
 object VectorIndex {
 
@@ -87,7 +93,6 @@ object VectorIndex {
     * though every byte of it was on disk. Loud when either half is
     * missing. */
   def load(spark: SparkSession, indexDir: String): VectorIndex = {
-    import graft.streaming.ModelStore
     val p = readParams(spark, indexDir).getOrElse(
       throw new IllegalArgumentException(
         s"VectorIndex.load: no persisted params at $indexDir — save the " +
@@ -99,14 +104,10 @@ object VectorIndex {
           "through VectorIndex.enrollSnapshots (which persists the " +
           "quantizer)"))
     (p.tier, model) match {
-      case (FloatTier | _: MatryoshkaTier, ModelStore.FloatCenters(cs)) =>
-        new VectorIndex(p, indexDir, centers = cs)
-      case (Sq8Tier, ModelStore.SqQuantizer(cs, cc)) =>
-        new VectorIndex(p, indexDir, centers = cs, codec = cc)
-      case (BqTier, ModelStore.BqCenters(cs)) =>
-        new VectorIndex(p, indexDir, centers = cs)
-      case (_: PqTier, ModelStore.PqQuantizer(mm)) =>
-        new VectorIndex(p, indexDir, model = mm)
+      case (FloatTier | _: MatryoshkaTier, _: FloatCenters) |
+           (Sq8Tier, _: SqQuantizer) | (BqTier, _: BqCenters) |
+           (_: PqTier, _: PqQuantizer) =>
+        new VectorIndex(p, indexDir, model)
       case (tier, other) => throw new IllegalStateException(
         s"VectorIndex.load: persisted params say tier $tier but the " +
           s"stored model epoch is a ${other.getClass.getSimpleName} — " +
@@ -201,22 +202,15 @@ object VectorIndex {
   def train(spark: SparkSession, refs: DataFrame, params: Params,
             indexDir: String): VectorIndex = {
     val p = params
-    p.tier match {
-      case FloatTier =>
-        new VectorIndex(p, indexDir,
-          centers = Similarity.ivfTrainCentroids(spark, refs, p.nLists,
-            p.seed, p.idCol, p.vecCol, p.trainCap))
+    def centers(df: DataFrame) = Similarity.ivfTrainCentroids(spark, df,
+      p.nLists, p.seed, p.idCol, p.vecCol, p.trainCap)
+    new VectorIndex(p, indexDir, p.tier match {
+      case FloatTier => FloatCenters(centers(refs))
       case Sq8Tier =>
-        new VectorIndex(p, indexDir,
-          centers = Similarity.ivfTrainCentroids(spark, refs, p.nLists,
-            p.seed, p.idCol, p.vecCol, p.trainCap),
-          codec = Similarity.sqTrain(spark, refs, p.vecCol))
-      case BqTier =>
-        new VectorIndex(p, indexDir,
-          centers = Similarity.ivfTrainCentroids(spark, refs, p.nLists,
-            p.seed, p.idCol, p.vecCol, p.trainCap))
+        SqQuantizer(centers(refs), Similarity.sqTrain(spark, refs, p.vecCol))
+      case BqTier => BqCenters(centers(refs))
       case PqTier(m, nCodes, opq, opqIters, opqAuto) =>
-        val model =
+        PqQuantizer(
           if (opqAuto) Similarity.ivfPqTrainModelAuto(spark, refs,
             p.nLists, m, nCodes, opqIters, p.seed, p.idCol, p.vecCol,
             p.dim, p.trainCap)
@@ -224,130 +218,67 @@ object VectorIndex {
             m, nCodes, opqIters, p.seed, p.idCol, p.vecCol, p.dim,
             p.trainCap)
           else Similarity.ivfPqTrainModel(spark, refs, p.nLists, m,
-            nCodes, p.seed, p.idCol, p.vecCol, p.dim, p.trainCap)
-        new VectorIndex(p, indexDir, model = model)
+            nCodes, p.seed, p.idCol, p.vecCol, p.dim, p.trainCap))
       case MatryoshkaTier(dims) =>
         // the prefix tier's quantizer is a FLOAT coarse quantizer over
         // the first-`dims` slice (matryoshkaIvfBuildIndex's training)
-        new VectorIndex(p, indexDir,
-          centers = Similarity.ivfTrainCentroids(spark,
-            refs.select(col(p.idCol),
-              slice(col(p.vecCol), 1, dims).as(p.vecCol)),
-            p.nLists, p.seed, p.idCol, p.vecCol, p.trainCap))
-    }
+        FloatCenters(centers(refs.select(col(p.idCol),
+          slice(col(p.vecCol), 1, dims).as(p.vecCol))))
+    })
   }
 }
 
 final class VectorIndex private (val params: VectorIndex.Params,
                                  val indexDir: String,
-                                 val centers: Array[Array[Double]] = null,
-                                 val codec: Similarity.SqCodec = null,
-                                 val model: Similarity.IvfPqModel = null)
+                                 val quantizer: QuantizerModel)
     extends Serializable {
   import VectorIndex._
   private def p = params
 
-  private def copyWith(centers: Array[Array[Double]] = this.centers,
-                       codec: Similarity.SqCodec = this.codec,
-                       model: Similarity.IvfPqModel = this.model) =
-    new VectorIndex(params, indexDir, centers, codec, model)
-
-  /** The tier's per-batch encode/assign frame — the one arithmetic the
-    * batch write and the streamed attach share. */
-  /** The prefix-sliced twin of `batch` — the Matryoshka tier's stored
-    * shape (the index holds `prefixDims` floats per vector). */
-  private def sliced(batch: DataFrame, dims: Int): DataFrame =
-    batch.withColumn(p.vecCol, slice(col(p.vecCol), 1, dims))
-
-  private def encode(batch: DataFrame): DataFrame = p.tier match {
-    case FloatTier =>
-      if (p.metaCols.isEmpty)
-        IvfStream.assignOnIngest(batch, centers, p.idCol, p.vecCol)
-      else IvfStream.assignOnIngestWithMeta(batch, centers, p.idCol,
-        p.vecCol, p.metaCols)
+  /** The vectors as the index stores them: the Matryoshka tier keeps
+    * the `prefixDims`-float prefix, every other tier the vectors. */
+  private def prefixed(vecs: DataFrame): DataFrame = p.tier match {
     case MatryoshkaTier(dims) =>
-      if (p.metaCols.isEmpty)
-        IvfStream.assignOnIngest(sliced(batch, dims), centers, p.idCol,
-          p.vecCol)
-      else IvfStream.assignOnIngestWithMeta(sliced(batch, dims), centers,
-        p.idCol, p.vecCol, p.metaCols)
-    case Sq8Tier =>
-      if (p.metaCols.isEmpty)
-        IvfStream.assignAndEncodeOnIngest(batch, centers, codec, p.idCol,
-          p.vecCol)
-      else IvfStream.assignAndEncodeOnIngestWithMeta(batch, centers,
-        codec, p.idCol, p.vecCol, p.metaCols)
-    case BqTier =>
-      if (p.metaCols.isEmpty)
-        IvfStream.assignAndBqEncodeOnIngest(batch, centers, p.idCol,
-          p.vecCol)
-      else IvfStream.assignAndBqEncodeOnIngestWithMeta(batch, centers,
-        p.idCol, p.vecCol, p.metaCols)
-    case _: PqTier =>
-      if (p.metaCols.isEmpty)
-        IvfStream.assignAndPqEncodeOnIngest(batch, model, p.idCol,
-          p.vecCol)
-      else IvfStream.assignAndPqEncodeOnIngestWithMeta(batch, model,
-        p.idCol, p.vecCol, p.metaCols)
+      vecs.withColumn(p.vecCol, slice(col(p.vecCol), 1, dims))
+    case _ => vecs
   }
 
   /** Write one idempotent `batch=<id>` partition (the attach layout,
     * usable for batch backfills) and commit it to the snapshot
     * manifest when the index is enrolled. */
   def ingest(spark: SparkSession, batch: DataFrame, batchId: Long): Unit =
-    IvfStream.installBatch(spark, indexDir, batchId, encode(batch))
+    IvfStream.installBatch(spark, indexDir, batchId, IvfStream.encode(
+      prefixed(batch), quantizer, p.idCol, p.vecCol, p.metaCols))
 
-  /** Wire a stream into the index — the tier's attach* with the same
-    * staleness-log and hands-free-maintenance cadence options. For
-    * the codes tiers a firing cadence needs `maintainRefs` (codes are
-    * lossy); the float tier retrains from the index itself. */
+  /** Wire a stream into the index ([[graft.streaming.IvfStream.attach]])
+    * with the same staleness-log and hands-free-maintenance cadence
+    * options. For the codes tiers a firing cadence needs `maintainRefs`
+    * (codes are lossy); the float tiers retrain from the index itself.
+    * The Matryoshka tier slices BEFORE the wire-in: staleness,
+    * maintenance retrains and assignment all see the prefix space its
+    * quantizer lives in. */
   def attach(stream: DataFrame, checkpointDir: String,
              stalenessDir: Option[String] = None,
              maintainEvery: Option[Int] = None,
              maintainPolicy: Option[IvfStream.MaintainPolicy] = None,
              maintainRefs: Option[() => DataFrame] = None,
              onMaintain: IvfStream.MaintainReport => Unit = _ => ())
-      : StreamingQuery = p.tier match {
-    case FloatTier =>
-      IvfStream.attach(stream, centers, indexDir, checkpointDir, p.idCol,
-        p.vecCol, stalenessDir, p.metaCols, maintainEvery, maintainPolicy,
-        maintainSeed = p.seed, onMaintain = onMaintain)
-    case MatryoshkaTier(dims) =>
-      // slice BEFORE the wire-in: staleness, maintenance retrains, and
-      // assignment all see the prefix space the quantizer lives in
-      IvfStream.attach(sliced(stream, dims), centers, indexDir,
-        checkpointDir, p.idCol, p.vecCol, stalenessDir, p.metaCols,
-        maintainEvery, maintainPolicy, maintainSeed = p.seed,
-        onMaintain = onMaintain)
-    case Sq8Tier =>
-      IvfStream.attachSq(stream, centers, codec, indexDir, checkpointDir,
-        p.idCol, p.vecCol, stalenessDir, p.metaCols, maintainEvery,
-        maintainPolicy, maintainRefs, maintainSeed = p.seed,
-        onMaintain = onMaintain)
-    case BqTier =>
-      IvfStream.attachBq(stream, centers, indexDir, checkpointDir,
-        p.idCol, p.vecCol, stalenessDir, p.metaCols, maintainEvery,
-        maintainPolicy, maintainRefs, maintainSeed = p.seed,
-        onMaintain = onMaintain)
-    case _: PqTier =>
-      IvfStream.attachPq(stream, model, indexDir, checkpointDir, p.idCol,
-        p.vecCol, stalenessDir, p.metaCols, maintainEvery, maintainPolicy,
-        maintainRefs, maintainSeed = p.seed, onMaintain = onMaintain)
-  }
+      : StreamingQuery =
+    IvfStream.attach(prefixed(stream), quantizer, indexDir, checkpointDir,
+      p.idCol, p.vecCol, stalenessDir, p.metaCols, maintainEvery,
+      maintainPolicy, maintainRefs, p.seed, onMaintain)
 
   /** The accrued index frame (manifest-routed when enrolled). */
-  def read(spark: SparkSession): DataFrame = p.tier match {
-    case FloatTier | _: MatryoshkaTier =>
-      IvfStream.readIndex(spark, indexDir, p.idCol, p.vecCol)
-    case _ => IvfStream.readCodesIndex(spark, indexDir, p.idCol)
-  }
+  def read(spark: SparkSession): DataFrame =
+    IvfStream.readIndex(spark, indexDir, p.idCol,
+      IvfStream.payloadCol(quantizer, p.vecCol))
 
   /** Top-k over the accrued index at the params' operating point.
     * `refs` supplies the true vectors for the codes tiers' exact
     * re-rank (and the float tier ignores it). */
   def topK(spark: SparkSession, queries: DataFrame, refs: DataFrame,
            k: Int): DataFrame =
-    probe(spark, read(spark), quantizerModel, queries, refs, k)
+    probe(spark, read(spark), quantizer, queries, refs, k)
 
   /** Metadata-FILTERED top-k: the predicate reaches the index scan
     * (PushedFilters next to the probed-list PartitionFilters) and the
@@ -371,17 +302,16 @@ final class VectorIndex private (val params: VectorIndex.Params,
         s"VectorIndex.topKFiltered: index data at $indexDir is " +
           "manifested and EMPTY (every row deleted) — rebuild or " +
           "re-ingest before probing"))
-    probe(spark, idx.filter(refFilter), quantizerModel, queries,
+    probe(spark, idx.filter(refFilter), quantizer, queries,
       refs.filter(refFilter), k)
   }
 
   /** The one tier dispatch of every topK* door: the tier's rung over
     * the resolved index frame under the resolved quantizer. */
   private def probe(spark: SparkSession, idx: DataFrame,
-                    m: graft.streaming.ModelStore.QuantizerModel,
+                    m: QuantizerModel,
                     queries: DataFrame, refs: DataFrame, k: Int)
-      : DataFrame = {
-    import graft.streaming.ModelStore._
+      : DataFrame =
     (p.tier, m) match {
       case (FloatTier, FloatCenters(cs)) =>
         Similarity.ivfTopKFromIndex(spark, queries, idx, cs, k, p.nProbe,
@@ -403,35 +333,19 @@ final class VectorIndex private (val params: VectorIndex.Params,
           s"${other.getClass.getSimpleName} of $indexDir — the index was " +
           "written by a different tier's facade")
     }
-  }
 
-  /** Staleness-driven maintenance — the tier's maintain* consuming the
-    * drift log at `stalenessDir` against `policy`; `refs` feeds the
-    * lossy tiers' re-encode (the float tier retrains from the index).
-    * Returns the report and the facade to use from here on (updated
-    * quantizers when it fired, `this` otherwise). */
+  /** Staleness-driven maintenance ([[graft.streaming.IvfStream.maintain]])
+    * consuming the drift log at `stalenessDir` against `policy`; `refs`
+    * feeds the codes tiers' retrain and re-encode (the float tiers,
+    * Matryoshka's prefix index included, retrain from the index
+    * itself). Returns the report and the facade to use from here on
+    * (the updated quantizer when it fired, `this` otherwise). */
   def maintain(spark: SparkSession, stalenessDir: String, refs: DataFrame,
                policy: IvfStream.MaintainPolicy)
-      : (IvfStream.MaintainReport, VectorIndex) = p.tier match {
-    case FloatTier | _: MatryoshkaTier =>
-      // the Matryoshka index stores prefix vectors, so the float-tier
-      // maintain retrains the prefix quantizer from the index itself
-      val (r, c) = IvfStream.maintain(spark, indexDir, stalenessDir,
-        centers, policy, p.seed, p.idCol, p.vecCol)
-      (r, c.map(nc => copyWith(centers = nc)).getOrElse(this))
-    case Sq8Tier =>
-      val (r, q) = IvfStream.maintainSq(spark, indexDir, stalenessDir,
-        refs, centers, policy, p.seed, p.idCol, p.vecCol)
-      (r, q.map { case (nc, nq) => copyWith(centers = nc, codec = nq) }
-        .getOrElse(this))
-    case BqTier =>
-      val (r, c) = IvfStream.maintainBq(spark, indexDir, stalenessDir,
-        refs, centers, policy, p.seed, p.idCol, p.vecCol)
-      (r, c.map(nc => copyWith(centers = nc)).getOrElse(this))
-    case _: PqTier =>
-      val (r, nm) = IvfStream.maintainPq(spark, indexDir, stalenessDir,
-        refs, model, policy, p.seed, p.idCol, p.vecCol)
-      (r, nm.map(m2 => copyWith(model = m2)).getOrElse(this))
+      : (IvfStream.MaintainReport, VectorIndex) = {
+    val (r, fresh) = IvfStream.maintain(spark, indexDir, stalenessDir,
+      quantizer, policy, Some(refs), p.seed, p.idCol, p.vecCol)
+    (r, fresh.map(new VectorIndex(params, indexDir, _)).getOrElse(this))
   }
 
   /** Targeted deletion ([[graft.streaming.IndexDelete.deleteIds]] —
@@ -440,25 +354,10 @@ final class VectorIndex private (val params: VectorIndex.Params,
       : IndexDelete.DeleteReport =
     IndexDelete.deleteIds(spark, indexDir, ids, p.idCol)
 
-  /** Fold the per-trigger batch litter into one layout (the tier's
-    * pure compaction — quantizers untouched). */
-  def compact(spark: SparkSession): Unit = p.tier match {
-    case FloatTier | _: MatryoshkaTier =>
-      IvfStream.compactIndex(spark, indexDir, p.idCol, p.vecCol)
-    case _ => IvfStream.compactCodesIndex(spark, indexDir, p.idCol)
-  }
-
-  /** The facade's live quantizer state as a [[graft.streaming
-    * .ModelStore.QuantizerModel]] — what enrollment persists and a
-    * pinned probe resolves per generation. */
-  private def quantizerModel: graft.streaming.ModelStore.QuantizerModel =
-    p.tier match {
-      case FloatTier | _: MatryoshkaTier =>
-        graft.streaming.ModelStore.FloatCenters(centers)
-      case Sq8Tier => graft.streaming.ModelStore.SqQuantizer(centers, codec)
-      case BqTier => graft.streaming.ModelStore.BqCenters(centers)
-      case _: PqTier => graft.streaming.ModelStore.PqQuantizer(model)
-    }
+  /** Fold the per-trigger batch litter into one layout (the pure
+    * compaction — quantizer untouched). */
+  def compact(spark: SparkSession): Unit =
+    IvfStream.compactIndex(spark, indexDir)
 
   /** Opt into snapshot-manifest reads ([[IndexManifest.enroll]]):
     * rewrites become copy-on-write and concurrent probes hold their
@@ -469,8 +368,7 @@ final class VectorIndex private (val params: VectorIndex.Params,
     * quantizer refresh byte-identically. */
   def enrollSnapshots(spark: SparkSession): IndexManifest.Snapshot = {
     val snap = IndexManifest.enroll(spark, indexDir)
-    graft.streaming.ModelStore.write(spark, indexDir, snap.gen,
-      quantizerModel)
+    ModelStore.write(spark, indexDir, snap.gen, quantizer)
     save(spark) // params beside the epoch: VectorIndex.load needs both
     snap
   }
@@ -522,8 +420,8 @@ final class VectorIndex private (val params: VectorIndex.Params,
     * it) and the quantizer epoch that listed its leaves. */
   private def pinned(spark: SparkSession, snap: IndexManifest.Snapshot,
                      door: String)
-      : (DataFrame, graft.streaming.ModelStore.QuantizerModel) = {
-    val m = graft.streaming.ModelStore.readAt(spark, indexDir, snap.gen)
+      : (DataFrame, QuantizerModel) = {
+    val m = ModelStore.readAt(spark, indexDir, snap.gen)
       .getOrElse(throw new IllegalArgumentException(
         s"VectorIndex.$door: no model epoch at or below generation " +
           s"${snap.gen} for $indexDir — enroll through " +

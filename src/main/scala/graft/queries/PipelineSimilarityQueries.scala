@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.util.{Concurrent, SessionMemo}
 import graft.pipeline.{Multimodal, Similarity}
+import graft.streaming.ModelStore.{FloatCenters, SqQuantizer}
 
 /** Embedding / similarity-search query surface — the ANN family split
   * out of PipelineQueries (r7 verdict #8): the exact-to-IVF-PQ top-k
@@ -493,7 +494,7 @@ object PipelineSimilarityQueries {
     "q204_ivf_index_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val centers = Similarity.ivfTrainCentroids(s, e, nLists = 8)
-      val index = graft.streaming.IvfStream.assignOnIngest(e, centers)
+      val index = graft.streaming.IvfStream.encode(e, FloatCenters(centers))
       val ivf = Similarity.ivfTopKFromIndex(s, e, index, centers,
         k = 5, nProbe = 3).cache()
       val (bruteFull, nb) = BruteTruth.topK(s, d)
@@ -601,12 +602,12 @@ object PipelineSimilarityQueries {
     // long-running ingest schedules, gated per run as contract
     // booleans — the q204/q205 invariant-oracle posture applied to
     // the operational surface instead of a retrieval rung. One row:
-    //  - refresh_eq_fresh: reassignSq over a two-trigger accrued codes
+    //  - refresh_eq_fresh: reassign over a two-trigger accrued codes
     //    index ≡ a fresh encode under the epoch-B quantizers (codes
     //    are lossy, so the refresh re-encodes from the corpus);
     //  - refresh_valve_ok: refs missing an indexed id REFUSE loudly
     //    and leave the live index untouched;
-    //  - compact_preserves: compactCodesIndex keeps the exact code
+    //  - compact_preserves: compactIndex keeps the exact code
     //    set while collapsing trigger litter to batch=-1;
     //  - heal_ok: a crash between the swap's two renames (live moved
     //    aside with its completion marker) self-heals on next read;
@@ -642,9 +643,9 @@ object PipelineSimilarityQueries {
       // two independent one-row aggregates, read in ONE action (the
       // per-reading mean_d2 values are computed by the identical
       // subplans; only the job count changes)
-      val staleByTag = IvfStream.quantizerStaleness(e, centersA)
+      val staleByTag = IvfStream.quantizerStaleness(e, FloatCenters(centersA))
         .withColumn("_t", lit(0))
-        .unionByName(IvfStream.quantizerStaleness(drifted, centersA)
+        .unionByName(IvfStream.quantizerStaleness(drifted, FloatCenters(centersA))
           .withColumn("_t", lit(1)))
         .collect().map(r => r.getInt(4) -> r.getDouble(1)).toMap
       val healthy = staleByTag(0)
@@ -659,41 +660,41 @@ object PipelineSimilarityQueries {
       // ARM 1: the epoch-A→B codes-index maintenance cycle.
       def cycleArm(): (Boolean, Boolean, Boolean, Boolean) = {
         // epoch A: codes accrue across two triggers
-        IvfStream.assignAndEncodeOnIngest(
-            e.filter(col("vec_id") % 2 === 0), centersA, codecA)
+        IvfStream.encode(
+            e.filter(col("vec_id") % 2 === 0), SqQuantizer(centersA, codecA))
           .write.partitionBy("list").mode("overwrite")
           .parquet(s"$root/idx/batch=0")
-        IvfStream.assignAndEncodeOnIngest(
-            e.filter(col("vec_id") % 2 =!= 0), centersA, codecA)
+        IvfStream.encode(
+            e.filter(col("vec_id") % 2 =!= 0), SqQuantizer(centersA, codecA))
           .write.partitionBy("list").mode("overwrite")
           .parquet(s"$root/idx/batch=1")
         // the valve BEFORE the refresh: incomplete refs refuse and the
         // live index is untouched
-        val beforeValve = codeRows(IvfStream.readCodesIndex(s, s"$root/idx"))
+        val beforeValve = codeRows(IvfStream.readIndex(s, s"$root/idx", payload = "codes"))
         val centersB = Similarity.ivfTrainCentroids(s, e, nLists = 8,
           seed = 7)
         val codecB = Similarity.sqTrain(s, e)
         val valveOk = (try {
-          IvfStream.reassignSq(s, s"$root/idx",
-            e.filter(col("vec_id") =!= 3), centersB, codecB)
+          IvfStream.reassign(s, s"$root/idx", SqQuantizer(centersB, codecB),
+            Some(e.filter(col("vec_id") =!= 3)))
           false
         } catch { case _: IllegalArgumentException => true }) &&
-          codeRows(IvfStream.readCodesIndex(s, s"$root/idx")) == beforeValve
+          codeRows(IvfStream.readIndex(s, s"$root/idx", payload = "codes")) == beforeValve
         // epoch B refresh ≡ fresh encode
-        IvfStream.reassignSq(s, s"$root/idx", e, centersB, codecB)
+        IvfStream.reassign(s, s"$root/idx", SqQuantizer(centersB, codecB), Some(e))
         val refreshEq =
-          codeRows(IvfStream.readCodesIndex(s, s"$root/idx")) ==
-            codeRows(IvfStream.assignAndEncodeOnIngest(e, centersB, codecB))
+          codeRows(IvfStream.readIndex(s, s"$root/idx", payload = "codes")) ==
+            codeRows(IvfStream.encode(e, SqQuantizer(centersB, codecB)))
         // one more trigger of NEW arrivals, then compaction
-        IvfStream.assignAndEncodeOnIngest(
+        IvfStream.encode(
             e.select((col("vec_id") + 10000000L).as("vec_id"),
-              col("embedding")), centersB, codecB)
+              col("embedding")), SqQuantizer(centersB, codecB))
           .write.partitionBy("list").mode("overwrite")
           .parquet(s"$root/idx/batch=2")
-        val beforeCompact = codeRows(IvfStream.readCodesIndex(s, s"$root/idx"))
-        IvfStream.compactCodesIndex(s, s"$root/idx")
+        val beforeCompact = codeRows(IvfStream.readIndex(s, s"$root/idx", payload = "codes"))
+        IvfStream.compactIndex(s, s"$root/idx")
         val compactOk =
-          codeRows(IvfStream.readCodesIndex(s, s"$root/idx")) == beforeCompact
+          codeRows(IvfStream.readIndex(s, s"$root/idx", payload = "codes")) == beforeCompact
         // crash between the two renames self-heals on the next read
         val fs = graft.util.SmallFiles.fsOf(s,
           new org.apache.hadoop.fs.Path(root))
@@ -702,7 +703,7 @@ object PipelineSimilarityQueries {
         graft.util.SmallFiles.touch(fs,
           new org.apache.hadoop.fs.Path(s"$root/idx.old.complete"))
         val healOk =
-          codeRows(IvfStream.readCodesIndex(s, s"$root/idx")) == beforeCompact
+          codeRows(IvfStream.readIndex(s, s"$root/idx", payload = "codes")) == beforeCompact
         (refreshEq, valveOk, compactOk, healOk)
       }
       // ARM 2: persisted IVF-PQ refresh ≡ fresh build under the new
@@ -724,7 +725,7 @@ object PipelineSimilarityQueries {
       // distribution (pure frames, no directory state).
       def resetArm(): Double = {
         val centersR = Similarity.ivfTrainCentroids(s, drifted, nLists = 8)
-        IvfStream.quantizerStaleness(drifted, centersR)
+        IvfStream.quantizerStaleness(drifted, FloatCenters(centersR))
           .collect()(0).getDouble(1)
       }
       // ARM 4: staleness-DRIVEN policy (r11 verdict #5): the r11c
@@ -738,24 +739,24 @@ object PipelineSimilarityQueries {
           .getFileSystem(s.sessionState.newHadoopConf())
         val esub = e.filter(col("vec_id") < 2000)
         val dsub = drifted.filter(col("vec_id") < 2000)
-        IvfStream.assignOnIngest(dsub, centersA)
+        IvfStream.encode(dsub, FloatCenters(centersA))
           .write.partitionBy("list").mode("overwrite")
           .parquet(s"$root/p/idx/batch=0")
-        IvfStream.quantizerStaleness(esub, centersA).coalesce(1)
+        IvfStream.quantizerStaleness(esub, FloatCenters(centersA)).coalesce(1)
           .write.mode("overwrite").parquet(s"$root/p/log/batch=0")
         val policy = IvfStream.MaintainPolicy(meanD2Max = healthy * 2)
         val (repCalm, _) = IvfStream.maintain(s, s"$root/p/idx",
-          s"$root/p/log", centersA, policy)
-        IvfStream.quantizerStaleness(dsub, centersA).coalesce(1)
+          s"$root/p/log", FloatCenters(centersA), policy)
+        IvfStream.quantizerStaleness(dsub, FloatCenters(centersA)).coalesce(1)
           .write.mode("overwrite").parquet(s"$root/p/log/batch=1")
         val (repDrift, newC) = IvfStream.maintain(s, s"$root/p/idx",
-          s"$root/p/log", centersA, policy)
+          s"$root/p/log", FloatCenters(centersA), policy)
         val postD2 = newC.map(c => IvfStream.quantizerStaleness(dsub, c)
           .collect()(0).getDouble(1))
         val logCleared = !fs.exists(
           new org.apache.hadoop.fs.Path(s"$root/p/log"))
         val (repAfter, _) = IvfStream.maintain(s, s"$root/p/idx",
-          s"$root/p/log", newC.getOrElse(centersA), policy)
+          s"$root/p/log", newC.getOrElse(FloatCenters(centersA)), policy)
         !repCalm.fired && repDrift.fired && logCleared &&
           postD2.exists(_ < shiftedD2 / 2) && !repAfter.fired
       }
@@ -775,7 +776,7 @@ object PipelineSimilarityQueries {
         val q = IvfStream.attach(
           s.readStream.schema(base.schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$root/c/in"),
-          centersA, indexDir = s"$root/c/idx",
+          FloatCenters(centersA), indexDir = s"$root/c/idx",
           checkpointDir = s"$root/c/ckpt",
           stalenessDir = Some(s"$root/c/stale"),
           maintainEvery = Some(2),
@@ -792,8 +793,8 @@ object PipelineSimilarityQueries {
         // assigned under the refreshed quantizer
         val expectC = Similarity.ivfTrainCentroids(s, base, nLists = 8)
         val idx = IvfStream.readIndex(s, s"$root/c/idx")
-        val want = IvfStream.assignOnIngest(base.unionByName(dsub2),
-          expectC)
+        val want = IvfStream.encode(base.unionByName(dsub2),
+          FloatCenters(expectC))
         reports.toList.map(_.fired) == List(true) &&
           idx.exceptAll(want).unionByName(want.exceptAll(idx)).isEmpty
       }
@@ -842,10 +843,10 @@ object PipelineSimilarityQueries {
       // frame here is bounded by the embeddings table
       graft.util.Iterate.withSizedShuffle(s, e.count()) {
       val centers = Similarity.ivfTrainCentroids(s, e, nLists = 8)
-      IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 === 0), centers)
+      IvfStream.encode(e.filter(col("vec_id") % 2 === 0), FloatCenters(centers))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/idx/batch=0")
-      IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 =!= 0), centers)
+      IvfStream.encode(e.filter(col("vec_id") % 2 =!= 0), FloatCenters(centers))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/idx/batch=1")
       val doomed = Seq(1L, 2L, 5L, 8L, 13L)
@@ -877,7 +878,7 @@ object PipelineSimilarityQueries {
         Concurrent.all(s)(
           () => IndexDelete.deleteIds(s, s"$root/idx", doomed, "vec_id"),
           () => Similarity.ivfTopKFromIndex(s, qs,
-            IvfStream.assignOnIngest(e, centers)
+            IvfStream.encode(e, FloatCenters(centers))
               .filter(!col("vec_id").isin(doomed: _*)),
             centers, k = 5, nProbe = 3))
       val after = IvfStream.readIndex(s, s"$root/idx")
@@ -896,10 +897,10 @@ object PipelineSimilarityQueries {
       val costOk = report.rowsDeleted == doomed.length &&
         report.partitionsRewritten == doomedLeaves.size &&
         report.partitionsRewritten < report.partitionsTotal
-      IvfStream.assignOnIngest(
+      IvfStream.encode(
           e.filter(col("vec_id").isin(doomed: _*))
             .select((col("vec_id") + 20000000L).as("vec_id"),
-              col("embedding")), centers)
+              col("embedding")), FloatCenters(centers))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/idx/batch=2")
       val reProbe = Similarity.ivfTopKFromIndex(s,
@@ -988,10 +989,10 @@ object PipelineSimilarityQueries {
       // Paired emptiness probes collapse into ONE action each (a union
       // is empty iff every leg is).
       def manifestArm(): (Boolean, Boolean, Boolean, Boolean, Boolean) = {
-        IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 === 0), centers)
+        IvfStream.encode(e.filter(col("vec_id") % 2 === 0), FloatCenters(centers))
           .write.partitionBy("list").mode("overwrite")
           .parquet(s"$root/idx/batch=0")
-        IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 =!= 0), centers)
+        IvfStream.encode(e.filter(col("vec_id") % 2 =!= 0), FloatCenters(centers))
           .write.partitionBy("list").mode("overwrite")
           .parquet(s"$root/idx/batch=1")
         val g0 = IndexManifest.enroll(s, s"$root/idx")
@@ -1007,7 +1008,7 @@ object PipelineSimilarityQueries {
         IvfStream.compactIndex(s, s"$root/idx")
         val pinnedStable = stableAfterDelete && snapRows() == before
         val current = IvfStream.readIndex(s, s"$root/idx").cache()
-        val want = IvfStream.assignOnIngest(e, centers)
+        val want = IvfStream.encode(e, FloatCenters(centers))
           .filter(!col("vec_id").isin(doomed: _*))
         val currentExcludes =
           current.filter(col("vec_id").isin(doomed: _*))
@@ -1025,7 +1026,7 @@ object PipelineSimilarityQueries {
         val genMonotone = g0.gen == 0L && g2.gen == 2L &&
           g2.leaves.nonEmpty && g2.leaves.toSet != pinned.leaves.toSet
         // a forged crashed rewrite: data written, never committed
-        IvfStream.assignOnIngest(e.filter(col("vec_id") < 5), centers)
+        IvfStream.encode(e.filter(col("vec_id") < 5), FloatCenters(centers))
           .write.partitionBy("list").mode("overwrite")
           .parquet(s"$root/idx/batch=-777")
         val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
@@ -1069,10 +1070,10 @@ object PipelineSimilarityQueries {
         val beforeP = rows(vi.topKPinned(s, pinB, qs, pe, 5))
         val centersB = Similarity.ivfTrainCentroids(s, pe, nLists = 8,
           seed = 7)
-        IvfStream.reassign(s, s"$root/pin", centersB)
+        IvfStream.reassign(s, s"$root/pin", FloatCenters(centersB))
         val stablePin = rows(vi.topKPinned(s, pinB, qs, pe, 5)) == beforeP
         val wantNew = rows(Similarity.ivfTopKFromIndex(s, qs,
-          IvfStream.assignOnIngest(pe, centersB), centersB, k = 5,
+          IvfStream.encode(pe, FloatCenters(centersB)), centersB, k = 5,
           nProbe = 3))
         stablePin &&
           rows(vi.topKPinned(s, vi.pin(s), qs, pe, 5)) == wantNew
@@ -1194,7 +1195,7 @@ object PipelineSimilarityQueries {
     // WHERE label = 2" — the filter-then-search problem every
     // production vector store solves. The index is WRITTEN with the
     // label column riding inside the list partitions
-    // (assignOnIngestWithMeta), read back from disk, and probed with
+    // (IvfStream.encode with metaCols), read back from disk, and probed with
     // the predicate applied INSIDE the probed-list scan (PlanSpec pins
     // PartitionFilters + PushedFilters on this exact shape). Invariant
     // oracle (the q204 pattern) + filter_ok (no returned ref may
@@ -1213,7 +1214,7 @@ object PipelineSimilarityQueries {
       val root = graft.util.TempRoots.create(s, "graft_q213")
       val centers = Similarity.ivfTrainCentroids(s, e, nLists = 8)
       graft.streaming.IvfStream
-        .assignOnIngestWithMeta(e, centers, metaCols = Seq("label"))
+        .encode(e, FloatCenters(centers), metaCols = Seq("label"))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/idx/batch=0")
       val idx = s.read.parquet(s"$root/idx")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.pipeline.{QualityClassifier, TextAnalysis}
+import graft.streaming.ModelStore.{FloatCenters, SqQuantizer}
 
 /** The FULL curation chain as one streaming entry point — the live
   * twin of [[graft.pipeline.Curate.corpus]], composed from the same
@@ -137,7 +138,7 @@ object CurateStream {
     * make exactly the kept ones searchable: [[curateBatch]] curates
     * each arriving micro-batch and the SURVIVORS' embedding vectors
     * are assigned into the list-partitioned IVF index
-    * ([[IvfStream.assignOnIngest]] under the same frozen-model posture
+    * ([[IvfStream.encode]] under the same frozen-model posture
     * as the scorer: centroids trained offline, broadcast, stateless
     * narrow assignment). The embedding column rides the document
     * stream (`embedCol`); all four writes use the per-batch
@@ -176,8 +177,8 @@ object CurateStream {
         // indexes stay IN-PLACE — see the [[NearDupStream.attach]]
         // note on excludeBatch's self-gating defense
         graft.streaming.IvfStream.installBatch(batch.sparkSession,
-          ivfIndexDir, batchId, graft.streaming.IvfStream.assignOnIngest(
-            kept.select(col(idCol), col(embedCol)), centers, idCol,
+          ivfIndexDir, batchId, graft.streaming.IvfStream.encode(
+            kept.select(col(idCol), col(embedCol)), FloatCenters(centers), idCol,
             embedCol))
         fpAdd.select("fp")
           .write.mode("overwrite").parquet(s"$fpIndexDir/batch=$batchId")
@@ -194,15 +195,15 @@ object CurateStream {
 
   /** [[attachWithIvf]] writing the 4×-COMPRESSED index: survivors'
     * vectors are assigned AND int8-encoded in the one
-    * [[IvfStream.assignAndEncodeOnIngest]] narrow pass (both
+    * [[IvfStream.encode]] narrow pass (both
     * quantizers frozen broadcasts, the scorer posture), so the live
     * pipeline accrues the [[graft.pipeline.Similarity.ivfSqBuildIndex]]
     * codes layout instead of float vectors — at 100 TB of arriving
     * embeddings the difference between the searchable index fitting
     * the hot tier or not. Search the accrued directory with
     * [[graft.pipeline.Similarity.ivfSqTopKFromIndex]] over
-    * [[IvfStream.readCodesIndex]]; maintain it with
-    * [[IvfStream.reassignSq]] / [[IvfStream.compactCodesIndex]] while
+    * [[IvfStream.readIndex]]; maintain it with
+    * [[IvfStream.reassign]] / [[IvfStream.compactIndex]] while
     * quiesced. Same per-batch idempotent-partition pattern on all four
     * writes; searchable ids ≡ curated ids per trigger by construction
     * (PipelineSpec pins it end-to-end). */
@@ -237,8 +238,8 @@ object CurateStream {
         // [[NearDupStream.attach]] excludeBatch note
         graft.streaming.IvfStream.installBatch(batch.sparkSession,
           ivfIndexDir, batchId,
-          graft.streaming.IvfStream.assignAndEncodeOnIngest(
-            kept.select(col(idCol), col(embedCol)), centers, codec,
+          graft.streaming.IvfStream.encode(
+            kept.select(col(idCol), col(embedCol)), SqQuantizer(centers, codec),
             idCol, embedCol))
         fpAdd.select("fp")
           .write.mode("overwrite").parquet(s"$fpIndexDir/batch=$batchId")

@@ -15,9 +15,8 @@ import graft.util.SmallFiles
   * share one physical shape — a parquet directory tree partitioned by
   * `batch=<id>` and (for the IVF families) `list=<l>`:
   *
-  *  - the streamed IVF float index ([[IvfStream.attach]]) and its
-  *    SQ8 / BQ codes twins ([[IvfStream.attachSq]]/[[IvfStream
-  *    .attachBq]]), idCol `vec_id`;
+  *  - the streamed IVF index ([[IvfStream.attach]]) of every tier,
+  *    float or codes, idCol `vec_id`;
   *  - the persisted batch indexes (pass `<dir>/codes` of the
   *    [[graft.pipeline.Similarity.ivfSqWriteIndex]] /
   *    `ivfBqWriteIndex` / `ivfPqWriteIndex` /
@@ -36,7 +35,7 @@ import graft.util.SmallFiles
   * actually hold a deleted row. Unaffected leaves keep their exact
   * files (spec-pinned byte-identity). A delete set spanning most
   * partitions degenerates to a full rewrite — at that point run
-  * [[IvfStream.compactCodesIndex]]-style maintenance instead.
+  * [[IvfStream.compactIndex]]-style maintenance instead.
   *
   * Crash discipline (the [[IndexSwap]] markers, one level down): a
   * top-level `<dir>.deleting` marker scopes the run; each affected

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.pipeline.Similarity
 import graft.util.SmallFiles
@@ -29,13 +29,18 @@ import graft.util.SmallFiles.fsOf
   * generation) and [[IndexManifest.vacuum]] sweeps if never retried.
   * The `_models` name starts with an underscore, so parquet discovery
   * of the index directory ignores it. Serialization is plain parquet
-  * rows (the [[Similarity.ivfPqWriteIndex]] layout vocabulary):
+  * rows ([[writeRows]], the vocabulary of the rungs' `*WriteIndex`
+  * layouts too):
   * engine-neutral, humanly inspectable, a few KB per epoch.
   */
 object ModelStore {
 
-  /** One quantizer epoch — the tier-shaped state a probe needs. */
-  sealed trait QuantizerModel
+  /** One quantizer epoch — the tier-shaped state a probe needs.
+    * `centers` are the coarse lists' centers (over unit, rotated vectors
+    * for PQ); a flat SQ8 codec, which has no lists, has none. */
+  sealed trait QuantizerModel {
+    def centers: Array[Array[Double]]
+  }
   final case class FloatCenters(centers: Array[Array[Double]])
       extends QuantizerModel
   final case class BqCenters(centers: Array[Array[Double]])
@@ -44,7 +49,9 @@ object ModelStore {
                                codec: Similarity.SqCodec)
       extends QuantizerModel
   final case class PqQuantizer(model: Similarity.IvfPqModel)
-      extends QuantizerModel
+      extends QuantizerModel {
+    def centers: Array[Array[Double]] = model.centers
+  }
 
   private def modelsDir(dir: String) = new Path(dir, "_models")
 
@@ -69,8 +76,9 @@ object ModelStore {
   }
 
   /** Persist `model` as the quantizer installed AT manifest generation
-    * `gen` (call BEFORE committing that generation). Idempotent: a
-    * retry at the same generation replaces the orphan. */
+    * `gen` (call BEFORE committing that generation): its [[writeRows]]
+    * plus a `meta` row (kind, dim, m). Idempotent: a retry at the same
+    * generation replaces the orphan. */
   def write(spark: SparkSession, dir: String, gen: Long,
             model: QuantizerModel): Unit = {
     import spark.implicits._
@@ -79,45 +87,96 @@ object ModelStore {
     SmallFiles.mkdirs(fs, md)
     val tmp = new Path(md, s".tmp-${nameOf(gen)}")
     if (fs.exists(tmp)) { fs.delete(tmp, true); () }
-    val tmpS = tmp.toString
-    def writeCenters(cs: Array[Array[Double]]): Unit = {
-      cs.indices.map(c => (c, cs(c))).toDF("list", "center")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmpS/centers")
-      ()
+    writeRows(spark, tmp.toString, model)
+    val (kind, dim, m) = model match {
+      case _: FloatCenters => ("float", -1, -1)
+      case _: BqCenters => ("bq", -1, -1)
+      case _: SqQuantizer => ("sq", -1, -1)
+      case PqQuantizer(pq) => ("pq", pq.dim, pq.m)
     }
-    val kind = model match {
-      case FloatCenters(cs) => writeCenters(cs); "float"
-      case BqCenters(cs) => writeCenters(cs); "bq"
-      case SqQuantizer(cs, codec) =>
-        writeCenters(cs)
-        codec.mins.indices.map(i => (i, codec.mins(i), codec.maxs(i)))
-          .toDF("pos", "mn", "mx")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmpS/codec")
-        "sq"
-      case PqQuantizer(m) =>
-        writeCenters(m.centers)
-        (for (s <- m.codebooks.indices; c <- m.codebooks(s).indices)
-          yield (s, c, m.codebooks(s)(c))).toDF("s", "c", "vec")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmpS/books")
-        m.rotation.foreach { r =>
-          r.indices.map(i => (i, r(i))).toDF("i", "row")
-            .coalesce(1).write.mode("overwrite").parquet(s"$tmpS/rotation")
-          ()
-        }
-        "pq"
-    }
-    model match {
-      case PqQuantizer(m) =>
-        Seq((kind, m.dim, m.m)).toDF("kind", "dim", "m")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmpS/meta")
-      case _ =>
-        Seq((kind, -1, -1)).toDF("kind", "dim", "m")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmpS/meta")
-    }
+    Seq((kind, dim, m)).toDF("kind", "dim", "m")
+      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
     val dest = new Path(md, nameOf(gen))
     if (fs.exists(dest)) { fs.delete(dest, true); () }
     require(fs.rename(tmp, dest),
       s"ModelStore.write: rename of model generation $gen failed for $dir")
+  }
+
+  /** THE writer of a quantizer's parquet rows under `dir`, one part per
+    * subdirectory: an OPQ `rotation` (i, row), then `centers` (list,
+    * center), the SQ8 `codec` (pos, mn, mx) and the PQ `books` (s, c,
+    * vec). Model epochs, the rungs' `*WriteIndex` layouts and the IVF-PQ
+    * top-level mirror all write through here. The rotation goes first
+    * and a model without one deletes a stale one, so a reader that
+    * catches an in-place rewrite midway sees rotation-vs-books skew
+    * (detectable: codebooks are trained in the rotated space) rather
+    * than a silent centers-vs-books tear. */
+  private[graft] def writeRows(spark: SparkSession, dir: String,
+                               model: QuantizerModel): Unit = {
+    import spark.implicits._
+    def put(part: String, rows: DataFrame): Unit = {
+      rows.coalesce(1).write.mode("overwrite").parquet(s"$dir/$part"); ()
+    }
+    model match {
+      case PqQuantizer(m) if m.rotation.nonEmpty =>
+        val r = m.rotation.get
+        put("rotation", r.indices.map(i => (i, r(i))).toDF("i", "row"))
+      case _ =>
+        val rotP = new Path(dir, "rotation")
+        val fs = fsOf(spark, rotP)
+        if (fs.exists(rotP)) { fs.delete(rotP, true); () }
+    }
+    val cs = model.centers
+    if (cs.nonEmpty)
+      put("centers", cs.indices.map(c => (c, cs(c))).toDF("list", "center"))
+    model match {
+      case SqQuantizer(_, codec) =>
+        put("codec", codec.mins.indices
+          .map(i => (i, codec.mins(i), codec.maxs(i))).toDF("pos", "mn", "mx"))
+      case PqQuantizer(m) =>
+        put("books", (for (s <- m.codebooks.indices;
+                           c <- m.codebooks(s).indices)
+          yield (s, c, m.codebooks(s)(c))).toDF("s", "c", "vec"))
+      case _ => ()
+    }
+  }
+
+  /** THE reader of [[writeRows]]'s parts: the model of `kind` ("float",
+    * "bq", "sq" or "pq") under `dir`. PQ's dim and m follow from its
+    * rows; a `sq` model without centers is the flat SQ8 codec. */
+  private[graft] def readRows(spark: SparkSession, dir: String,
+                              kind: String): QuantizerModel = {
+    def rows(part: String) = spark.read.parquet(s"$dir/$part")
+    def has(part: String) = {
+      val p = new Path(dir, part)
+      fsOf(spark, p).exists(p)
+    }
+    def centers: Array[Array[Double]] = rows("centers").orderBy("list")
+      .collect().map(_.getSeq[Double](1).toArray)
+    kind match {
+      case "float" => FloatCenters(centers)
+      case "bq" => BqCenters(centers)
+      case "sq" =>
+        val cs = if (has("centers")) centers else Array.empty[Array[Double]]
+        val codec = rows("codec").orderBy("pos").collect()
+        SqQuantizer(cs, Similarity.SqCodec(codec.map(_.getDouble(1)),
+          codec.map(_.getDouble(2))))
+      case "pq" =>
+        val cs = centers
+        val bookRows = rows("books").orderBy("s", "c").collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+        val m = bookRows.map(_._1).max + 1
+        val books = Array.tabulate(m)(s =>
+          bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
+        val rotation =
+          if (has("rotation")) Some(rows("rotation").orderBy("i").collect()
+            .map(_.getSeq[Double](1).toArray))
+          else None
+        PqQuantizer(Similarity.IvfPqModel(cs(0).length, m, cs, books,
+          rotation))
+      case other => throw new IllegalStateException(
+        s"ModelStore.readRows: unknown model kind '$other' at $dir")
+    }
   }
 
   /** The model that governs reads of manifest generation `gen`: the
@@ -137,38 +196,8 @@ object ModelStore {
   private def read(spark: SparkSession, dir: String,
                    gen: Long): QuantizerModel = {
     val base = new Path(modelsDir(dir), nameOf(gen)).toString
-    val meta = spark.read.parquet(s"$base/meta").collect()(0)
-    val kind = meta.getString(0)
-    def centers: Array[Array[Double]] =
-      spark.read.parquet(s"$base/centers").orderBy("list")
-        .collect().map(_.getSeq[Double](1).toArray)
-    kind match {
-      case "float" => FloatCenters(centers)
-      case "bq" => BqCenters(centers)
-      case "sq" =>
-        val rows = spark.read.parquet(s"$base/codec").orderBy("pos")
-          .collect()
-        SqQuantizer(centers, Similarity.SqCodec(
-          rows.map(_.getDouble(1)), rows.map(_.getDouble(2))))
-      case "pq" =>
-        val cs = centers
-        val bookRows = spark.read.parquet(s"$base/books").orderBy("s", "c")
-          .collect().map(r => (r.getInt(0), r.getInt(1),
-            r.getSeq[Double](2).toArray))
-        val m = meta.getInt(2)
-        val books = Array.tabulate(m)(s =>
-          bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
-        val rotP = new Path(s"$base/rotation")
-        val rotation =
-          if (fsOf(spark, rotP).exists(rotP))
-            Some(spark.read.parquet(s"$base/rotation").orderBy("i")
-              .collect().map(_.getSeq[Double](1).toArray))
-          else None
-        PqQuantizer(Similarity.IvfPqModel(meta.getInt(1), m, cs, books,
-          rotation))
-      case other => throw new IllegalStateException(
-        s"ModelStore.read: unknown model kind '$other' at $base")
-    }
+    readRows(spark, base,
+      spark.read.parquet(s"$base/meta").collect()(0).getString(0))
   }
 
   /** Reclaim model generations no kept manifest generation resolves to

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.pipeline.Similarity
 import graft.streaming.IvfStream
+import graft.streaming.ModelStore.{BqCenters, FloatCenters, SqQuantizer}
 
 /** Metadata-FILTERED ANN (r11 verdict #4): the filtered rungs return
   * top-k AGAINST THE FILTERED UNIVERSE — never a disallowed ref,
@@ -14,9 +15,9 @@ class FilteredAnnSpec extends SparkSpec {
     "assignOnIngest, metadata rides along") {
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val plain = IvfStream.assignOnIngest(e, centers)
+    val plain = IvfStream.encode(e, FloatCenters(centers))
       .select("vec_id", "list")
-    val withMeta = IvfStream.assignOnIngestWithMeta(e, centers,
+    val withMeta = IvfStream.encode(e, FloatCenters(centers),
       metaCols = Seq("label"))
     assert(withMeta.columns.toSeq ===
       Seq("vec_id", "embedding", "label", "list"))
@@ -34,7 +35,7 @@ class FilteredAnnSpec extends SparkSpec {
     "against the FILTERED universe") {
     val e = Tables.embeddings(spark, sf).cache()
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val index = IvfStream.assignOnIngestWithMeta(e, centers,
+    val index = IvfStream.encode(e, FloatCenters(centers),
       metaCols = Seq("label"))
     val pred = col("label") === 2
     val qs = e.filter(col("vec_id") < 30)
@@ -60,7 +61,7 @@ class FilteredAnnSpec extends SparkSpec {
     "brute-forces against allowed refs only, still exactly k") {
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val index = IvfStream.assignOnIngestWithMeta(e, centers,
+    val index = IvfStream.encode(e, FloatCenters(centers),
       metaCols = Seq("label"))
     // a universe of barely more than k vectors: most probes come back
     // short and the padShortQueries fallback must fill from the
@@ -85,15 +86,14 @@ class FilteredAnnSpec extends SparkSpec {
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
 
-    val plainSq = IvfStream.assignAndEncodeOnIngest(e, centers, codec)
-    val metaSq = IvfStream.assignAndEncodeOnIngestWithMeta(e, centers,
-      codec, metaCols = Seq("label"))
+    val plainSq = IvfStream.encode(e, SqQuantizer(centers, codec))
+    val metaSq = IvfStream.encode(e, SqQuantizer(centers, codec), metaCols = Seq("label"))
     assert(metaSq.columns.toSeq === Seq("vec_id", "codes", "label", "list"))
     val aSq = metaSq.select("vec_id", "codes", "list")
     assert(aSq.exceptAll(plainSq).isEmpty && plainSq.exceptAll(aSq).isEmpty)
 
-    val plainBq = IvfStream.assignAndBqEncodeOnIngest(e, centers)
-    val metaBq = IvfStream.assignAndBqEncodeOnIngestWithMeta(e, centers,
+    val plainBq = IvfStream.encode(e, BqCenters(centers))
+    val metaBq = IvfStream.encode(e, BqCenters(centers),
       metaCols = Seq("label"))
     assert(metaBq.columns.toSeq === Seq("vec_id", "codes", "label", "list"))
     val aBq = metaBq.select("vec_id", "codes", "list")
@@ -118,7 +118,7 @@ class FilteredAnnSpec extends SparkSpec {
     def semi(df: org.apache.spark.sql.DataFrame) =
       df.join(allowed, Seq("vec_id"), "left_semi")
 
-    IvfStream.assignAndEncodeOnIngestWithMeta(e, centers, codec,
+    IvfStream.encode(e, SqQuantizer(centers, codec),
         metaCols = Seq("label"))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/sq/batch=0")
@@ -133,7 +133,7 @@ class FilteredAnnSpec extends SparkSpec {
     assert(gotSq.join(labels, "rid").filter(col("label") =!= 2)
       .count() === 0L)
 
-    IvfStream.assignAndBqEncodeOnIngestWithMeta(e, centers,
+    IvfStream.encode(e, BqCenters(centers),
         metaCols = Seq("label"))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/bq/batch=0")

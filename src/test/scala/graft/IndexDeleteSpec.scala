@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.Similarity
 import graft.streaming.{IndexDelete, IvfStream, NearDupStream}
+import graft.streaming.ModelStore.{FloatCenters, SqQuantizer}
 
 /** [[graft.streaming.IndexDelete]]: targeted id deletion from every
   * accrued index family — probe correctness, untouched-partition
@@ -34,10 +35,10 @@ class IndexDeleteSpec extends SparkSpec {
     val tmp = tempDir("graft_del").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     // two trigger partitions, the attach layout
-    IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 === 0), centers)
+    IvfStream.encode(e.filter(col("vec_id") % 2 === 0), FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=0")
-    IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 =!= 0), centers)
+    IvfStream.encode(e.filter(col("vec_id") % 2 =!= 0), FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=1")
 
@@ -77,7 +78,7 @@ class IndexDeleteSpec extends SparkSpec {
       k = 3, nProbe = 2)
     assert(got.filter(col("rid").isin(doomed: _*)).count() === 0L)
     val want = Similarity.ivfTopKFromIndex(spark, qs,
-      IvfStream.assignOnIngest(e, centers)
+      IvfStream.encode(e, FloatCenters(centers))
         .filter(!col("vec_id").isin(doomed: _*)),
       centers, k = 3, nProbe = 2)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
@@ -95,19 +96,19 @@ class IndexDeleteSpec extends SparkSpec {
     val tmp = tempDir("graft_delsq").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
-    IvfStream.assignAndEncodeOnIngest(e, centers, codec)
+    IvfStream.encode(e, SqQuantizer(centers, codec))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=0")
     val doomed = Seq(3L, 4L, 7L)
     IndexDelete.deleteIds(spark, s"$tmp/idx", doomed, "vec_id")
-    val after = IvfStream.readCodesIndex(spark, s"$tmp/idx")
+    val after = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes")
     assert(after.filter(col("vec_id").isin(doomed: _*)).count() === 0L)
     val qs = e.filter(col("vec_id") < 20)
     val refs = e.filter(!col("vec_id").isin(doomed: _*))
     val got = Similarity.ivfSqTopKFromIndex(spark, qs, after, centers,
       codec, refs, k = 3, shortlist = 10, nProbe = 2)
     val want = Similarity.ivfSqTopKFromIndex(spark, qs,
-      IvfStream.assignAndEncodeOnIngest(e, centers, codec)
+      IvfStream.encode(e, SqQuantizer(centers, codec))
         .filter(!col("vec_id").isin(doomed: _*)),
       centers, codec, refs, k = 3, shortlist = 10, nProbe = 2)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
@@ -118,7 +119,7 @@ class IndexDeleteSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = tempDir("graft_delall").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val assigned = IvfStream.assignOnIngest(e, centers)
+    val assigned = IvfStream.encode(e, FloatCenters(centers))
     assigned.write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=0")
     // every id in list 0 — the leaf is rewritten EMPTY, not dropped
@@ -172,7 +173,7 @@ class IndexDeleteSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = tempDir("graft_delcr").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    IvfStream.assignOnIngest(e, centers)
+    IvfStream.encode(e, FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=0")
     val total = e.count()
@@ -272,10 +273,10 @@ class IndexDeleteSpec extends SparkSpec {
     val tmp = tempDir("graft_forgetv").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
-    IvfStream.assignOnIngest(e, centers)
+    IvfStream.encode(e, FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/vf/batch=0")
-    IvfStream.assignAndEncodeOnIngest(e, centers, codec)
+    IvfStream.encode(e, SqQuantizer(centers, codec))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/vq/batch=0")
     // doc 0 chunks into vectors 0 and 1, doc 1 into vector 2 — a
@@ -288,7 +289,7 @@ class IndexDeleteSpec extends SparkSpec {
     assert(reports.keySet === Set(s"vec:$tmp/vf", s"vec:$tmp/vq"))
     assert(reports.values.forall(_.rowsDeleted === 2L))
     Seq(IvfStream.readIndex(spark, s"$tmp/vf"),
-        IvfStream.readCodesIndex(spark, s"$tmp/vq")).foreach { idx =>
+        IvfStream.readIndex(spark, s"$tmp/vq", payload = "codes")).foreach { idx =>
       assert(idx.filter(col("vec_id").isin(0L, 1L)).count() === 0L,
         "every vector of the forgotten doc must be gone")
       assert(idx.filter(col("vec_id") === 2L).count() === 1L,
@@ -305,10 +306,10 @@ class IndexDeleteSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = tempDir("graft_delvalve").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 === 0), centers)
+    IvfStream.encode(e.filter(col("vec_id") % 2 === 0), FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=0")
-    IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 =!= 0), centers)
+    IvfStream.encode(e.filter(col("vec_id") % 2 =!= 0), FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=1")
     val doomed = Seq(1L, 2L, 5L, 8L)
@@ -433,7 +434,7 @@ class IndexDeleteSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = tempDir("graft_delcol").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    IvfStream.assignOnIngest(e, centers)
+    IvfStream.encode(e, FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=0")
     import spark.implicits._

@@ -3,117 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.pipeline.Similarity
 import graft.streaming.IvfStream
+import graft.streaming.ModelStore.{BqCenters, FloatCenters, PqQuantizer, SqQuantizer}
 
-/** [[graft.streaming.IvfStream.refreshCentroids]] (the mini-batch
-  * k-means rung, r11 verdict #8) and the staleness-DRIVEN
-  * [[graft.streaming.IvfStream.maintain]] family (r11 verdict #5):
-  * the r11c drift/reset cycle replayed hands-free. */
+/** The staleness-DRIVEN [[graft.streaming.IvfStream.maintain]] (r11
+  * verdict #5) on every tier: the r11c drift/reset cycle replayed
+  * hands-free. */
 class IvfMaintainSpec extends SparkSpec {
-
-  private def d2(a: Array[Double], b: Array[Double]): Double =
-    a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
-
-  test("refreshCentroids with priorWeight=0 is one exact Lloyd step " +
-    "(per-list batch means); empty lists keep their centers") {
-    val e = Tables.embeddings(spark, sf).cache()
-    val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val refreshed = IvfStream.refreshCentroids(e, centers)
-    // expected: per-list mean of the assigned vectors, computed
-    // driver-side from the same assignment arithmetic
-    val rows = e.select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getSeq[Float](1).map(_.toDouble).toArray)
-    val byList = rows.groupBy(v =>
-      Similarity.ivfNearest(centers,
-        v.map(_.toFloat), 1)(0))
-    centers.indices.foreach { l =>
-      byList.get(l) match {
-        case Some(vs) =>
-          val mean = Array.tabulate(centers(l).length)(i =>
-            vs.map(_(i)).sum / vs.length)
-          assert(d2(refreshed(l), mean) < 1e-12,
-            s"list $l refreshed center is not the batch mean")
-        case None =>
-          assert(refreshed(l).sameElements(centers(l)),
-            s"empty list $l must keep its center")
-      }
-    }
-    // a positive prior damps the move toward the batch mean
-    val damped = IvfStream.refreshCentroids(e, centers,
-      priorWeight = 1e9)
-    centers.indices.foreach(l =>
-      assert(d2(damped(l), centers(l)) < 1e-6,
-        s"a huge prior must pin list $l near its old center"))
-    e.unpersist()
-  }
-
-  test("refreshCentroids reduces mean_d2 on drifted data (the cheap " +
-    "rung's job) at a fraction of a full retrain's information") {
-    val e = Tables.embeddings(spark, sf)
-    val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val drifted = e.select(col("vec_id"),
-      transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
-    val before = IvfStream.quantizerStaleness(drifted, centers)
-      .collect()(0).getDouble(1)
-    val refreshed = IvfStream.refreshCentroids(drifted, centers)
-    val after = IvfStream.quantizerStaleness(drifted, refreshed)
-      .collect()(0).getDouble(1)
-    assert(after < before / 2,
-      f"refresh must at least halve drifted mean_d2: $before%.3f -> $after%.3f")
-  }
-
-  test("stalenessAndRefresh: the one-pass fusion agrees with both " +
-    "standalone helpers; empty input short-circuits") {
-    val e = Tables.embeddings(spark, sf).cache()
-    val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val drifted = e.select(col("vec_id"),
-      transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
-    val (st, refreshed) = IvfStream.stalenessAndRefresh(drifted, centers)
-    val want = IvfStream.quantizerStaleness(drifted, centers).collect()(0)
-    val got = st.collect()(0)
-    assert(got.getLong(0) === want.getLong(0))
-    assert(math.abs(got.getDouble(1) - want.getDouble(1)) <=
-      1e-6 * math.max(1.0, want.getDouble(1)) + 2e-6,
-      s"mean_d2 ${got.getDouble(1)} vs ${want.getDouble(1)}")
-    assert(math.abs(got.getDouble(2) - want.getDouble(2)) <= 2e-6)
-    assert(got.getInt(3) === want.getInt(3))
-    val expect = IvfStream.refreshCentroids(drifted, centers)
-    refreshed.indices.foreach(l =>
-      assert(d2(refreshed(l), expect(l)) < 1e-9,
-        s"fused center $l diverges from refreshCentroids"))
-    // empty trigger: all-zero reading, centers unchanged
-    val (st0, c0) = IvfStream.stalenessAndRefresh(
-      e.filter(col("vec_id") < 0), centers)
-    val r0 = st0.collect()(0)
-    assert(r0.getLong(0) === 0L && r0.getDouble(1) === 0.0 &&
-      r0.getDouble(2) === 0.0)
-    c0.indices.foreach(l => assert(c0(l).sameElements(centers(l))))
-    e.unpersist()
-  }
-
-  test("stalenessAndRefresh counts rows, not cells: an under-length " +
-    "embedding in the batch must not skew n_vecs/max_list_frac") {
-    // ivfNearest accepts a short vector silently (it loops over
-    // v.length), so per-(list,pos) cell counts DIFFER within the
-    // short vector's list; nOf(l) must take the max over the list's
-    // cells to match quantizerStaleness's per-row count semantics
-    // (r12 ADVICE — the old code took an arbitrary cell's n).
-    val e = Tables.embeddings(spark, sf).cache()
-    val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    import org.apache.spark.sql.functions.slice
-    val mixed = e.filter(col("vec_id") < 100)
-      .select(col("vec_id"),
-        when(col("vec_id") === 0, slice(col("embedding"), 1, 8))
-          .otherwise(col("embedding")).as("embedding"))
-    val want = IvfStream.quantizerStaleness(mixed, centers).collect()(0)
-    val (st, _) = IvfStream.stalenessAndRefresh(mixed, centers)
-    val got = st.collect()(0)
-    assert(got.getLong(0) === want.getLong(0),
-      s"n_vecs ${got.getLong(0)} vs per-row ${want.getLong(0)}")
-    assert(got.getLong(0) === 100L)
-    assert(math.abs(got.getDouble(2) - want.getDouble(2)) <= 2e-6,
-      s"max_list_frac ${got.getDouble(2)} vs ${want.getDouble(2)}")
-    e.unpersist()
-  }
 
   test("maintain: no-op without evidence or under threshold; fires on " +
     "breach, reassigns, returns new centers, clears the log") {
@@ -122,31 +17,31 @@ class IvfMaintainSpec extends SparkSpec {
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val drifted = e.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
-    IvfStream.assignOnIngest(drifted, centers)
+    IvfStream.encode(drifted, FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/idx/batch=0")
-    val healthy = IvfStream.quantizerStaleness(e, centers)
+    val healthy = IvfStream.quantizerStaleness(e, FloatCenters(centers))
       .collect()(0).getDouble(1)
     val policy = IvfStream.MaintainPolicy(meanD2Max = healthy * 2)
 
     // no log at all → no-op
     val (r0, c0) = IvfStream.maintain(spark, s"$root/idx", s"$root/log",
-      centers, policy)
+      FloatCenters(centers), policy)
     assert(!r0.fired && c0.isEmpty && r0.reason.contains("no staleness"))
 
     // healthy reading → no-op, log kept
-    IvfStream.quantizerStaleness(e, centers).coalesce(1)
+    IvfStream.quantizerStaleness(e, FloatCenters(centers)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/log/batch=0")
     val (r1, c1) = IvfStream.maintain(spark, s"$root/idx", s"$root/log",
-      centers, policy)
+      FloatCenters(centers), policy)
     assert(!r1.fired && c1.isEmpty && r1.reason == "within thresholds")
 
     // drifted reading → fires: retrain on index contents, reassign,
     // clear the consumed log
-    IvfStream.quantizerStaleness(drifted, centers).coalesce(1)
+    IvfStream.quantizerStaleness(drifted, FloatCenters(centers)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/log/batch=1")
     val (r2, c2) = IvfStream.maintain(spark, s"$root/idx", s"$root/log",
-      centers, policy)
+      FloatCenters(centers), policy)
     assert(r2.fired && r2.reason.contains("mean_d2") && c2.nonEmpty)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -154,7 +49,7 @@ class IvfMaintainSpec extends SparkSpec {
       "firing must clear the consumed staleness log")
     // the rewritten index is listed under the NEW centers exactly
     val reassigned = IvfStream.readIndex(spark, s"$root/idx")
-    val want = IvfStream.assignOnIngest(drifted, c2.get)
+    val want = IvfStream.encode(drifted, c2.get)
     assert(reassigned.exceptAll(want).isEmpty &&
       want.exceptAll(reassigned).isEmpty)
     // post-refresh signal sits under threshold → next call no-ops
@@ -174,34 +69,6 @@ class IvfMaintainSpec extends SparkSpec {
     e.unpersist()
   }
 
-  test("maintain miniBatch=true fires the one-pass refresh rung and " +
-    "still resets the drift signal") {
-    val e = Tables.embeddings(spark, sf)
-    val root = tempDir("graft_mntmb").toString
-    val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val drifted = e.select(col("vec_id"),
-      transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
-    IvfStream.assignOnIngest(drifted, centers)
-      .write.partitionBy("list").mode("overwrite")
-      .parquet(s"$root/idx/batch=0")
-    IvfStream.quantizerStaleness(drifted, centers).coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/log/batch=0")
-    val before = IvfStream.quantizerStaleness(drifted, centers)
-      .collect()(0).getDouble(1)
-    val (rep, newC) = IvfStream.maintain(spark, s"$root/idx", s"$root/log",
-      centers, IvfStream.MaintainPolicy(meanD2Max = before / 10),
-      miniBatch = true)
-    assert(rep.fired && newC.nonEmpty)
-    val after = IvfStream.quantizerStaleness(drifted, newC.get)
-      .collect()(0).getDouble(1)
-    assert(after < before / 2)
-    // the refreshed centers ARE the one-Lloyd-step centers over the
-    // index contents (route pin vs the standalone rung)
-    val expect = IvfStream.refreshCentroids(drifted, centers)
-    newC.get.indices.foreach(l =>
-      assert(d2(newC.get(l), expect(l)) < 1e-9))
-  }
-
   test("maintainSq fires reassignSq: codes re-encoded under the " +
     "retrained (centers, codec), log cleared; maintainBq mirrors it") {
     val e = Tables.embeddings(spark, sf).cache()
@@ -211,20 +78,19 @@ class IvfMaintainSpec extends SparkSpec {
     val drifted = e.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
     // the index holds the DRIFTED corpus encoded under the stale pair
-    IvfStream.assignAndEncodeOnIngest(drifted, centers, codec)
+    IvfStream.encode(drifted, SqQuantizer(centers, codec))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/sq/batch=0")
-    IvfStream.quantizerStaleness(drifted, centers).coalesce(1)
+    IvfStream.quantizerStaleness(drifted, FloatCenters(centers)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/slog/batch=0")
-    val healthy = IvfStream.quantizerStaleness(e, centers)
+    val healthy = IvfStream.quantizerStaleness(e, FloatCenters(centers))
       .collect()(0).getDouble(1)
     val policy = IvfStream.MaintainPolicy(meanD2Max = healthy * 2)
-    val (rep, out) = IvfStream.maintainSq(spark, s"$root/sq",
-      s"$root/slog", drifted, centers, policy)
+    val (rep, out) = IvfStream.maintain(spark, s"$root/sq",
+      s"$root/slog", SqQuantizer(centers, codec), policy, Some(drifted))
     assert(rep.fired && out.nonEmpty)
-    val (newC, newQ) = out.get
-    val got = IvfStream.readCodesIndex(spark, s"$root/sq")
-    val want = IvfStream.assignAndEncodeOnIngest(drifted, newC, newQ)
+    val got = IvfStream.readIndex(spark, s"$root/sq", payload = "codes")
+    val want = IvfStream.encode(drifted, out.get)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0),
         r.getAs[Array[Byte]](1).toSeq, r.getInt(2))).toSet
@@ -234,16 +100,16 @@ class IvfMaintainSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/slog")))
 
     // BQ tier: same decision loop, sign codes need no codec
-    IvfStream.assignAndBqEncodeOnIngest(drifted, centers)
+    IvfStream.encode(drifted, BqCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/bq/batch=0")
-    IvfStream.quantizerStaleness(drifted, centers).coalesce(1)
+    IvfStream.quantizerStaleness(drifted, FloatCenters(centers)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/blog/batch=0")
-    val (repB, outB) = IvfStream.maintainBq(spark, s"$root/bq",
-      s"$root/blog", drifted, centers, policy)
+    val (repB, outB) = IvfStream.maintain(spark, s"$root/bq",
+      s"$root/blog", BqCenters(centers), policy, Some(drifted))
     assert(repB.fired && outB.nonEmpty)
-    val gotB = IvfStream.readCodesIndex(spark, s"$root/bq")
-    val wantB = IvfStream.assignAndBqEncodeOnIngest(drifted, outB.get)
+    val gotB = IvfStream.readIndex(spark, s"$root/bq", payload = "codes")
+    val wantB = IvfStream.encode(drifted, outB.get)
     assert(rows(gotB) == rows(wantB))
     e.unpersist()
   }
@@ -255,22 +121,22 @@ class IvfMaintainSpec extends SparkSpec {
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     // five trigger partitions of litter — the streamed-ingest shape
     (0 until 5).foreach { b =>
-      IvfStream.assignOnIngest(e.filter(col("vec_id") % 5 === b), centers)
+      IvfStream.encode(e.filter(col("vec_id") % 5 === b), FloatCenters(centers))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/idx/batch=$b")
     }
     assert(IvfStream.countBatches(spark, s"$root/idx") === 5)
     val beforeRows = IvfStream.readIndex(spark, s"$root/idx").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2))).toSet
-    IvfStream.quantizerStaleness(e, centers).coalesce(1)
+    IvfStream.quantizerStaleness(e, FloatCenters(centers)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/log/batch=0")
-    val healthy = IvfStream.quantizerStaleness(e, centers)
+    val healthy = IvfStream.quantizerStaleness(e, FloatCenters(centers))
       .collect()(0).getDouble(1)
     val policy = IvfStream.MaintainPolicy(meanD2Max = healthy * 2,
       maxBatches = 3)
 
     val (rep, newC) = IvfStream.maintain(spark, s"$root/idx", s"$root/log",
-      centers, policy)
+      FloatCenters(centers), policy)
     assert(!rep.fired && rep.compacted && newC.isEmpty,
       s"fragmentation must compact without a quantizer refresh: $rep")
     assert(rep.reason.contains("fragmentation"))
@@ -286,21 +152,21 @@ class IvfMaintainSpec extends SparkSpec {
       "a fragmentation-only compaction must not clear the drift log")
     // defragmented: the next call does nothing
     val (rep2, _) = IvfStream.maintain(spark, s"$root/idx", s"$root/log",
-      centers, policy)
+      FloatCenters(centers), policy)
     assert(!rep2.fired && !rep2.compacted)
 
-    // codes tier: same arm through maintainSq's compactCodesIndex
+    // codes tier: the same arm compacts the codes layout
     val codec = Similarity.sqTrain(spark, e)
     (0 until 5).foreach { b =>
-      IvfStream.assignAndEncodeOnIngest(
-          e.filter(col("vec_id") % 5 === b), centers, codec)
+      IvfStream.encode(
+          e.filter(col("vec_id") % 5 === b), SqQuantizer(centers, codec))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/sq/batch=$b")
     }
-    IvfStream.quantizerStaleness(e, centers).coalesce(1)
+    IvfStream.quantizerStaleness(e, FloatCenters(centers)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/slog/batch=0")
-    val (repSq, outSq) = IvfStream.maintainSq(spark, s"$root/sq",
-      s"$root/slog", e, centers, policy)
+    val (repSq, outSq) = IvfStream.maintain(spark, s"$root/sq",
+      s"$root/slog", SqQuantizer(centers, codec), policy, Some(e))
     assert(!repSq.fired && repSq.compacted && outSq.isEmpty)
     assert(IvfStream.countBatches(spark, s"$root/sq") === 1)
     e.unpersist()
@@ -367,12 +233,12 @@ class IvfMaintainSpec extends SparkSpec {
     // the drifted corpus — drive the max_list_frac arm of the policy
     val drifted = e.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
-    IvfStream.assignAndPqEncodeOnIngest(drifted, model)
+    IvfStream.encode(drifted, PqQuantizer(model))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/pq/batch=0")
     def skewOf(df: org.apache.spark.sql.DataFrame,
                m: Similarity.IvfPqModel): Double =
-      IvfStream.quantizerStalenessPq(df, m).collect()(0).getDouble(2)
+      IvfStream.quantizerStaleness(df, PqQuantizer(m)).collect()(0).getDouble(2)
     val healthySkew = skewOf(e, model)
     val driftedSkew = skewOf(drifted, model)
     assert(driftedSkew > (healthySkew + driftedSkew) / 2,
@@ -381,27 +247,26 @@ class IvfMaintainSpec extends SparkSpec {
       maxListFracMax = (healthySkew + driftedSkew) / 2)
 
     // healthy reading → no-op, index and log untouched
-    IvfStream.quantizerStalenessPq(e, model).coalesce(1)
+    IvfStream.quantizerStaleness(e, PqQuantizer(model)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/plog/batch=0")
-    val (r0, m0) = IvfStream.maintainPq(spark, s"$root/pq",
-      s"$root/plog", drifted, model, policy)
+    val (r0, m0) = IvfStream.maintain(spark, s"$root/pq",
+      s"$root/plog", PqQuantizer(model), policy, Some(drifted))
     assert(!r0.fired && m0.isEmpty)
 
     // drifted reading → fires: pair retrained on refs, codes
     // re-encoded under the NEW model, consumed log cleared
-    IvfStream.quantizerStalenessPq(drifted, model).coalesce(1)
+    IvfStream.quantizerStaleness(drifted, PqQuantizer(model)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/plog/batch=1")
-    val (rep, out) = IvfStream.maintainPq(spark, s"$root/pq",
-      s"$root/plog", drifted, model, policy)
+    val (rep, out) = IvfStream.maintain(spark, s"$root/pq",
+      s"$root/plog", PqQuantizer(model), policy, Some(drifted))
     assert(rep.fired && out.nonEmpty)
-    val newModel = out.get
+    val PqQuantizer(newModel) = out.get
     assert(newModel.m == model.m &&
       newModel.centers.length == model.centers.length &&
       newModel.codebooks(0).length == model.codebooks(0).length,
       "retrained pair must keep the index's geometry parameters")
-    val got = IvfStream.readCodesIndex(spark, s"$root/pq")
-      .select("vec_id", "list", "codes")
-    val want = IvfStream.assignAndPqEncodeOnIngest(drifted, newModel)
+    val got = IvfStream.readIndex(spark, s"$root/pq", payload = "codes")
+    val want = IvfStream.encode(drifted, PqQuantizer(newModel))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -420,7 +285,7 @@ class IvfMaintainSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val root = tempDir("graft_slog").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    IvfStream.assignOnIngest(e, centers)
+    IvfStream.encode(e, FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/idx/batch=0")
     // five trigger rows with DIFFERENT volumes, so a wrong aggregate
@@ -439,7 +304,7 @@ class IvfMaintainSpec extends SparkSpec {
     val policy = IvfStream.MaintainPolicy(meanD2Max = 1e9,
       maxBatches = 3)
     val (r1, none1) = IvfStream.maintain(spark, s"$root/idx",
-      s"$root/log", centers, policy)
+      s"$root/log", FloatCenters(centers), policy)
     assert(!r1.fired && none1.isEmpty)
     assert(r1.nVecs === n)
     assert(math.abs(r1.meanD2 - d2) < 1e-6)
@@ -450,7 +315,7 @@ class IvfMaintainSpec extends SparkSpec {
       "five trigger dirs must fold into one")
     // the folded row feeds the NEXT decision with identical inputs
     val (r2, _) = IvfStream.maintain(spark, s"$root/idx",
-      s"$root/log", centers, policy)
+      s"$root/log", FloatCenters(centers), policy)
     assert(r2.nVecs === r1.nVecs)
     assert(math.abs(r2.meanD2 - r1.meanD2) < 1e-6)
     assert(math.abs(r2.maxListFrac - r1.maxListFrac) < 1e-12)
@@ -471,7 +336,7 @@ class IvfMaintainSpec extends SparkSpec {
     val tmp = tempDir("graft_cad").toString
     val base = e.select("vec_id", "embedding")
     val centersA = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
-    val healthy = IvfStream.quantizerStaleness(e, centersA)
+    val healthy = IvfStream.quantizerStaleness(e, FloatCenters(centersA))
       .collect()(0).getDouble(1)
     val policy = IvfStream.MaintainPolicy(meanD2Max = healthy * 2)
     def drifted(offset: Long) = e.select(
@@ -485,7 +350,7 @@ class IvfMaintainSpec extends SparkSpec {
     val schema = base.schema
     val q = IvfStream.attach(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), centersA,
+        .parquet(s"$tmp/in"), FloatCenters(centersA),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt",
       stalenessDir = Some(s"$tmp/stale"),
       maintainEvery = Some(2),
@@ -511,14 +376,14 @@ class IvfMaintainSpec extends SparkSpec {
     // differently)
     val idx = IvfStream.readIndex(spark, s"$tmp/idx")
     val gotT3 = idx.filter(col("vec_id") >= 200000L)
-    val wantT3 = IvfStream.assignOnIngest(t3, expectCenters)
+    val wantT3 = IvfStream.encode(t3, FloatCenters(expectCenters))
     assert(gotT3.exceptAll(wantT3).isEmpty &&
       wantT3.exceptAll(gotT3).isEmpty,
       "post-fire trigger must assign with the returned quantizer")
     // and the whole index ≡ the batch twin under the new quantizer
     // (the fire re-listed trigger 1; triggers 2 and 3 arrived assigned)
-    val want = IvfStream.assignOnIngest(
-      base.unionByName(t2).unionByName(t3), expectCenters)
+    val want = IvfStream.encode(
+      base.unionByName(t2).unionByName(t3), FloatCenters(expectCenters))
     assert(idx.exceptAll(want).isEmpty && want.exceptAll(idx).isEmpty)
     // probe parity over the maintained directory vs the in-memory twin
     val qs = e.filter(col("vec_id") < 20)
@@ -536,14 +401,13 @@ class IvfMaintainSpec extends SparkSpec {
     // cadence argument valve: maintainEvery without policy or log
     intercept[IllegalArgumentException] {
       IvfStream.attach(
-        spark.readStream.schema(schema).parquet(s"$tmp/in"), centersA,
+        spark.readStream.schema(schema).parquet(s"$tmp/in"), FloatCenters(centersA),
         indexDir = s"$tmp/idx2", checkpointDir = s"$tmp/ckpt2",
         maintainEvery = Some(2))
     }
     intercept[IllegalArgumentException] {
-      IvfStream.attachSq(
-        spark.readStream.schema(schema).parquet(s"$tmp/in"), centersA,
-        Similarity.sqTrain(spark, e), indexDir = s"$tmp/idx3",
+      IvfStream.attach(
+        spark.readStream.schema(schema).parquet(s"$tmp/in"), SqQuantizer(centersA, Similarity.sqTrain(spark, e)), indexDir = s"$tmp/idx3",
         checkpointDir = s"$tmp/ckpt3",
         stalenessDir = Some(s"$tmp/stale3"),
         maintainEvery = Some(2),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.EventsStream
+import graft.streaming.ModelStore.{BqCenters, FloatCenters, PqQuantizer, SqQuantizer}
 
 /** Invariant specs for the training-data pipeline operators, including
   * planted-duplicate recall for every dedup family. */
@@ -1922,17 +1923,17 @@ class PipelineSpec extends SparkSpec {
     // attach layout)
     val centersA = Similarity.ivfTrainCentroids(spark, e, nLists = 8,
       seed = 42)
-    IvfStream.assignOnIngest(e.filter(col("vec_id") < 250), centersA)
+    IvfStream.encode(e.filter(col("vec_id") < 250), FloatCenters(centersA))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/idx/batch=0")
-    IvfStream.assignOnIngest(e.filter(col("vec_id") >= 250), centersA)
+    IvfStream.encode(e.filter(col("vec_id") >= 250), FloatCenters(centersA))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/idx/batch=1")
     // epoch 2: the corpus distribution "drifted" — re-train offline
     // under a different seed and refresh the accrued index in place
     val centersB = Similarity.ivfTrainCentroids(spark, e, nLists = 8,
       seed = 7)
-    IvfStream.reassign(spark, s"$tmp/idx", centersB)
+    IvfStream.reassign(spark, s"$tmp/idx", FloatCenters(centersB))
     val refreshed = IvfStream.readIndex(spark, s"$tmp/idx")
-    val fresh = IvfStream.assignOnIngest(e, centersB)
+    val fresh = IvfStream.encode(e, FloatCenters(centersB))
     assert(refreshed.exceptAll(fresh).isEmpty &&
       fresh.exceptAll(refreshed).isEmpty,
       "reassigned index rows diverge from a fresh build under centersB")
@@ -1961,24 +1962,24 @@ class PipelineSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = tempDir("graft_sqre").toString
     // epoch 1: codes accrued under (centersA, codecA) across two
-    // trigger partitions (the attachSq layout)
+    // trigger partitions (the streamed codes layout)
     val centersA = Similarity.ivfTrainCentroids(spark, e, nLists = 8,
       seed = 42)
     val codecA = Similarity.sqTrain(spark, e.filter(col("vec_id") < 250))
-    IvfStream.assignAndEncodeOnIngest(e.filter(col("vec_id") < 250),
-        centersA, codecA)
+    IvfStream.encode(e.filter(col("vec_id") < 250),
+        SqQuantizer(centersA, codecA))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/idx/batch=0")
-    IvfStream.assignAndEncodeOnIngest(e.filter(col("vec_id") >= 250),
-        centersA, codecA)
+    IvfStream.encode(e.filter(col("vec_id") >= 250),
+        SqQuantizer(centersA, codecA))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/idx/batch=1")
     // epoch 2: refresh BOTH quantizers offline (codes are lossy, so
     // the refresh re-encodes from the original corpus)
     val centersB = Similarity.ivfTrainCentroids(spark, e, nLists = 8,
       seed = 7)
     val codecB = Similarity.sqTrain(spark, e)
-    IvfStream.reassignSq(spark, s"$tmp/idx", e, centersB, codecB)
-    val refreshed = IvfStream.readCodesIndex(spark, s"$tmp/idx")
-    val fresh = IvfStream.assignAndEncodeOnIngest(e, centersB, codecB)
+    IvfStream.reassign(spark, s"$tmp/idx", SqQuantizer(centersB, codecB), Some(e))
+    val refreshed = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes")
+    val fresh = IvfStream.encode(e, SqQuantizer(centersB, codecB))
     assert(refreshed.exceptAll(fresh).isEmpty &&
       fresh.exceptAll(refreshed).isEmpty,
       "refreshed codes rows diverge from a fresh encode under the new model")
@@ -2000,13 +2001,13 @@ class PipelineSpec extends SparkSpec {
     def codeRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq,
         r.getInt(2))).toSet
-    val before = codeRows(IvfStream.readCodesIndex(spark, s"$tmp/idx"))
+    val before = codeRows(IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes"))
     val err = intercept[IllegalArgumentException] {
-      IvfStream.reassignSq(spark, s"$tmp/idx",
-        e.filter(col("vec_id") =!= 3), centersB, codecB)
+      IvfStream.reassign(spark, s"$tmp/idx", SqQuantizer(centersB, codecB),
+        Some(e.filter(col("vec_id") =!= 3)))
     }
     assert(err.getMessage.contains("absent from refs"))
-    assert(codeRows(IvfStream.readCodesIndex(spark, s"$tmp/idx"))
+    assert(codeRows(IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes"))
       == before, "failed refresh must leave the live index untouched")
     e.unpersist()
   }
@@ -2022,23 +2023,23 @@ class PipelineSpec extends SparkSpec {
     Seq(col("vec_id") < 150,
         col("vec_id") >= 150 && col("vec_id") < 300,
         col("vec_id") >= 300).zipWithIndex.foreach { case (f, i) =>
-      IvfStream.assignAndEncodeOnIngest(e.filter(f), centers, codec)
+      IvfStream.encode(e.filter(f), SqQuantizer(centers, codec))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$tmp/idx/batch=$i")
     }
     def codeRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq,
         r.getInt(2))).toSet
-    val before = codeRows(IvfStream.readCodesIndex(spark, s"$tmp/idx"))
+    val before = codeRows(IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes"))
     val qs = e.filter(col("vec_id") < 20)
     val probeBefore = Similarity.ivfSqTopKFromIndex(spark, qs,
-      IvfStream.readCodesIndex(spark, s"$tmp/idx"), centers, codec, e,
+      IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes"), centers, codec, e,
       k = 5, shortlist = 10, nProbe = 3)
-    IvfStream.compactCodesIndex(spark, s"$tmp/idx")
-    val after = codeRows(IvfStream.readCodesIndex(spark, s"$tmp/idx"))
+    IvfStream.compactIndex(spark, s"$tmp/idx")
+    val after = codeRows(IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes"))
     assert(after == before, "compaction changed the code set")
     val probeAfter = Similarity.ivfSqTopKFromIndex(spark, qs,
-      IvfStream.readCodesIndex(spark, s"$tmp/idx"), centers, codec, e,
+      IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes"), centers, codec, e,
       k = 5, shortlist = 10, nProbe = 3)
     assert(probeAfter.exceptAll(probeBefore).isEmpty &&
       probeBefore.exceptAll(probeAfter).isEmpty)
@@ -2096,7 +2097,7 @@ class PipelineSpec extends SparkSpec {
     import graft.pipeline.Similarity
     val e = Tables.embeddings(spark, sf).cache()
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
-    val base = IvfStream.quantizerStaleness(e, centers).collect()(0)
+    val base = IvfStream.quantizerStaleness(e, FloatCenters(centers)).collect()(0)
     assert(base.getLong(0) == e.count())
     assert(base.getDouble(2) <= 1.0 && base.getDouble(2) >= 1.0 / 8)
     // drifted arrivals: every coordinate shifted by a constant — the
@@ -2104,13 +2105,13 @@ class PipelineSpec extends SparkSpec {
     // rise strictly and the skew signal is free to move
     val drifted = e.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
-    val shifted = IvfStream.quantizerStaleness(drifted, centers).collect()(0)
+    val shifted = IvfStream.quantizerStaleness(drifted, FloatCenters(centers)).collect()(0)
     assert(shifted.getDouble(1) > base.getDouble(1),
       s"mean_d2 ${shifted.getDouble(1)} must exceed ${base.getDouble(1)} under shift")
     // refresh: retrain on the drifted distribution — the signal resets
     // to the healthy regime (the schedule-reassign decision loop)
     val centersB = Similarity.ivfTrainCentroids(spark, drifted, nLists = 8)
-    val reset = IvfStream.quantizerStaleness(drifted, centersB).collect()(0)
+    val reset = IvfStream.quantizerStaleness(drifted, FloatCenters(centersB)).collect()(0)
     assert(reset.getDouble(1) < shifted.getDouble(1) / 2,
       s"mean_d2 ${reset.getDouble(1)} must reset after retrain " +
         s"(was ${shifted.getDouble(1)})")
@@ -2246,8 +2247,8 @@ class PipelineSpec extends SparkSpec {
     assert(out.filter(col("doc_id") === 30001L).isEmpty)
     // the accrued payload is CODES (the 4x contract), searchable via
     // the IVF-SQ probe, and only curated docs ever surface
-    val streamed = IvfStream.readCodesIndex(spark, s"$tmp/ivf",
-      idCol = "doc_id")
+    val streamed = IvfStream.readIndex(spark, s"$tmp/ivf",
+      idCol = "doc_id", "codes")
     assert(streamed.schema("codes").dataType ==
       org.apache.spark.sql.types.BinaryType)
     val curatedIds = out.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -2308,7 +2309,7 @@ class PipelineSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/in")
     val q = IvfStream.attach(
       spark.readStream.schema(pref.schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), centers,
+        .parquet(s"$tmp/in"), FloatCenters(centers),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt")
     q.processAllAvailable()
     pref.filter(col("vec_id") >= 250).coalesce(1)
@@ -2338,9 +2339,9 @@ class PipelineSpec extends SparkSpec {
     e.select("vec_id", "embedding").filter(col("vec_id") < 250).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/in")
     val schema = e.select("vec_id", "embedding").schema
-    val q = IvfStream.attachSq(
+    val q = IvfStream.attach(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), centers, codec,
+        .parquet(s"$tmp/in"), SqQuantizer(centers, codec),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt",
       stalenessDir = Some(s"$tmp/stale"))
     q.processAllAvailable()
@@ -2349,7 +2350,7 @@ class PipelineSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     // accrued codes rows ≡ the batch build's frame, row for row
-    val streamed = IvfStream.readCodesIndex(spark, s"$tmp/idx")
+    val streamed = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes")
     assert(streamed.exceptAll(batchIndex).isEmpty &&
       batchIndex.exceptAll(streamed).isEmpty,
       "streamed codes index diverges from the batch build")
@@ -2386,9 +2387,9 @@ class PipelineSpec extends SparkSpec {
     e.select("vec_id", "embedding").filter(col("vec_id") < 250).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/in")
     val schema = e.select("vec_id", "embedding").schema
-    val q = IvfStream.attachPq(
+    val q = IvfStream.attach(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), model,
+        .parquet(s"$tmp/in"), PqQuantizer(model),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt",
       stalenessDir = Some(s"$tmp/stale"))
     q.processAllAvailable()
@@ -2397,8 +2398,8 @@ class PipelineSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     // accrued residual-code rows ≡ the batch build's frame, row for row
-    val streamed = IvfStream.readCodesIndex(spark, s"$tmp/idx")
-      .select("vec_id", "list", "codes")
+    val streamed = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes")
+      .select("vec_id", "codes", "list")
     assert(streamed.exceptAll(batchIndex).isEmpty &&
       batchIndex.exceptAll(streamed).isEmpty,
       "streamed PQ codes index diverges from the batch build")
@@ -2419,27 +2420,27 @@ class PipelineSpec extends SparkSpec {
       val d2 = r.getAs[Double]("mean_d2")
       assert(d2 > 0 && d2 <= 4.0, s"unit-sphere mean_d2 bound, got $d2")
     }
-    // reassignPq: refresh under a NEW model ≡ a fresh batch build
+    // reassign: refresh under a NEW PQ model ≡ a fresh batch build
     val (model7, fresh7) = Similarity.ivfPqBuildIndex(spark, e,
       nLists = 8, m = 8, nCodes = 16, seed = 7)
-    IvfStream.reassignPq(spark, s"$tmp/idx", e, model7)
-    val refreshed = IvfStream.readCodesIndex(spark, s"$tmp/idx")
-      .select("vec_id", "list", "codes")
+    IvfStream.reassign(spark, s"$tmp/idx", PqQuantizer(model7), Some(e))
+    val refreshed = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes")
+      .select("vec_id", "codes", "list")
     assert(refreshed.exceptAll(fresh7).isEmpty &&
       fresh7.exceptAll(refreshed).isEmpty,
-      "reassignPq diverges from a fresh build under the new model")
+      "reassign diverges from a fresh build under the new PQ model")
     // loud valve: refs missing an indexed id refuse, index untouched
     val before = refreshed.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq))
+      .map(r => (r.getLong(0), r.getInt(2), r.getAs[Array[Byte]](1).toSeq))
       .toSet
     val err = intercept[IllegalArgumentException] {
-      IvfStream.reassignPq(spark, s"$tmp/idx",
-        e.filter(col("vec_id") =!= 3), model)
+      IvfStream.reassign(spark, s"$tmp/idx", PqQuantizer(model),
+        Some(e.filter(col("vec_id") =!= 3)))
     }
     assert(err.getMessage.contains("absent from refs"))
-    val after = IvfStream.readCodesIndex(spark, s"$tmp/idx")
-      .select("vec_id", "list", "codes").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getAs[Array[Byte]](2).toSeq))
+    val after = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes")
+      .select("vec_id", "codes", "list").collect()
+      .map(r => (r.getLong(0), r.getInt(2), r.getAs[Array[Byte]](1).toSeq))
       .toSet
     assert(after == before, "refused refresh must leave the index untouched")
     e.unpersist()
@@ -2452,12 +2453,12 @@ class PipelineSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val (model, _) = Similarity.ivfPqBuildIndex(spark, e,
       nLists = 4, m = 8, nCodes = 16)
-    val plain = IvfStream.assignAndPqEncodeOnIngest(e, model)
-    val meta = IvfStream.assignAndPqEncodeOnIngestWithMeta(e, model,
+    val plain = IvfStream.encode(e, PqQuantizer(model))
+    val meta = IvfStream.encode(e, PqQuantizer(model),
       metaCols = Seq("label"))
     assert(meta.columns.toSeq === Seq("vec_id", "codes", "label", "list"))
-    val a = meta.select("vec_id", "list", "codes")
-    val p = plain.select("vec_id", "list", "codes")
+    val a = meta.select("vec_id", "codes", "list")
+    val p = plain.select("vec_id", "codes", "list")
     assert(a.exceptAll(p).isEmpty && p.exceptAll(a).isEmpty)
     val pred = col("label") === 2
     val qs = e.filter(col("vec_id") < 20)
@@ -2488,9 +2489,9 @@ class PipelineSpec extends SparkSpec {
     e.select(cols.map(col): _*).filter(col("vec_id") < 250).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/in")
     val schema = e.select(cols.map(col): _*).schema
-    val q = IvfStream.attachSq(
+    val q = IvfStream.attach(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), centers, codec,
+        .parquet(s"$tmp/in"), SqQuantizer(centers, codec),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt",
       metaCols = Seq("label"))
     q.processAllAvailable()
@@ -2503,7 +2504,7 @@ class PipelineSpec extends SparkSpec {
     assert(idx.columns.contains("label"))
     // ...and the (id, codes, list) payload ≡ the batch twin's
     val streamed = idx.select("vec_id", "codes", "list")
-    val want = IvfStream.assignAndEncodeOnIngest(e, centers, codec)
+    val want = IvfStream.encode(e, SqQuantizer(centers, codec))
     assert(streamed.exceptAll(want).isEmpty &&
       want.exceptAll(streamed).isEmpty)
     // a metadata-filtered probe runs DIRECTLY on the streamed index
@@ -2525,7 +2526,7 @@ class PipelineSpec extends SparkSpec {
     // passes every column through; a quantizer refresh re-encodes from
     // refs (codes are lossy) and re-attaches the metadata from the
     // index by id — filtered probes keep working after maintenance
-    IvfStream.compactCodesIndex(spark, s"$tmp/idx")
+    IvfStream.compactIndex(spark, s"$tmp/idx")
     val compacted = spark.read.parquet(s"$tmp/idx")
     assert(compacted.columns.contains("label"),
       "compaction must carry the metadata columns through")
@@ -2534,10 +2535,10 @@ class PipelineSpec extends SparkSpec {
     val centersB = Similarity.ivfTrainCentroids(spark, e, nLists = 8,
       seed = 7)
     val codecB = Similarity.sqTrain(spark, e)
-    IvfStream.reassignSq(spark, s"$tmp/idx", e, centersB, codecB)
+    IvfStream.reassign(spark, s"$tmp/idx", SqQuantizer(centersB, codecB), Some(e))
     val refreshed = spark.read.parquet(s"$tmp/idx")
     assert(refreshed.columns.contains("label"),
-      "reassignSq must re-attach the metadata columns")
+      "reassign must re-attach the metadata columns")
     val got2 = Similarity.ivfSqTopKFromIndex(spark, qs,
       refreshed.filter(pred), centersB, codecB, e.filter(pred), k = 3,
       shortlist = 10, nProbe = 4)
@@ -2615,37 +2616,40 @@ class PipelineSpec extends SparkSpec {
     assert(viaDisk.exceptAll(inMem).isEmpty &&
       inMem.exceptAll(viaDisk).isEmpty)
     // 4. streamed ingest under the OPQ model ≡ the batch encode (the
-    //    rotation rides inside unit, so attachPq needed no changes)
+    //    rotation rides inside unit, so attach needed no changes)
     val batch = Similarity.ivfOpqBuildIndex(spark, e, nLists = 4, m = 8,
       nCodes = 16, iters = 4)._2
-    val streamed = IvfStream.assignAndPqEncodeOnIngest(e,
-      Similarity.ivfOpqTrainModel(spark, e, nLists = 4, m = 8,
-        nCodes = 16, iters = 4)).select("vec_id", "list", "codes")
+    val streamed = IvfStream.encode(e,
+      PqQuantizer(Similarity.ivfOpqTrainModel(spark, e, nLists = 4, m = 8,
+        nCodes = 16, iters = 4))).select("vec_id", "codes", "list")
     assert(streamed.exceptAll(batch).isEmpty &&
       batch.exceptAll(streamed).isEmpty,
       "streamed OPQ ingest diverges from the batch build")
-    // 5. maintainPq on an OPQ index retrains WITH a rotation
-    IvfStream.assignAndPqEncodeOnIngest(e, opq)
+    // 5. maintain on an OPQ index retrains WITH a rotation
+    IvfStream.encode(e, PqQuantizer(opq))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=0")
     // drift in UNIT space shows as SKEW (the +3.0 shift funnels the
     // normalized vectors toward the all-ones direction and into few
-    // lists) — the existing maintainPq fixture's firing arm
+    // lists) — the existing PQ maintain fixture's firing arm
     val drifted = e.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
-    IvfStream.quantizerStalenessPq(drifted, opq).coalesce(1)
+    IvfStream.quantizerStaleness(drifted, PqQuantizer(opq)).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/stale/batch=0")
-    val healthySkew = IvfStream.quantizerStalenessPq(e, opq)
+    val healthySkew = IvfStream.quantizerStaleness(e, PqQuantizer(opq))
       .collect()(0).getDouble(2)
-    val driftedSkew = IvfStream.quantizerStalenessPq(drifted, opq)
+    val driftedSkew = IvfStream.quantizerStaleness(drifted, PqQuantizer(opq))
       .collect()(0).getDouble(2)
     assert(driftedSkew > healthySkew, "fixture: the shift must skew")
-    val (repM, newM) = IvfStream.maintainPq(spark, s"$tmp/idx",
-      s"$tmp/stale", drifted, opq,
+    val (repM, newM) = IvfStream.maintain(spark, s"$tmp/idx",
+      s"$tmp/stale", PqQuantizer(opq),
       IvfStream.MaintainPolicy(meanD2Max = 1e9,
-        maxListFracMax = (healthySkew + driftedSkew) / 2))
-    assert(repM.fired && newM.exists(_.rotation.nonEmpty),
-      "maintainPq on an OPQ model must retrain with a rotation")
+        maxListFracMax = (healthySkew + driftedSkew) / 2), Some(drifted))
+    assert(repM.fired && newM.exists {
+      case PqQuantizer(m) => m.rotation.nonEmpty
+      case _ => false
+    },
+      "maintain on an OPQ model must retrain with a rotation")
     e.unpersist()
   }
 
@@ -2669,7 +2673,7 @@ class PipelineSpec extends SparkSpec {
     // 1. metadata-carrying streamed ingest of the prefix column
     pref.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
     val q = IvfStream.attach(
-      spark.readStream.schema(pref.schema).parquet(s"$tmp/in"), centers,
+      spark.readStream.schema(pref.schema).parquet(s"$tmp/in"), FloatCenters(centers),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt",
       stalenessDir = Some(s"$tmp/stale"), metaCols = Seq("label"))
     q.processAllAvailable()
@@ -2701,14 +2705,14 @@ class PipelineSpec extends SparkSpec {
     assert(afterDel.filter(col("rid").isin(doomed: _*)).count() === 0L)
     // 4. staleness-driven maintain: drifted PREFIX arrivals breach the
     //    policy, the fire re-trains in prefix space and re-lists
-    val healthy = IvfStream.quantizerStaleness(pref, centers)
+    val healthy = IvfStream.quantizerStaleness(pref, FloatCenters(centers))
       .collect()(0).getDouble(1)
     val driftedPref = pref.select(col("vec_id"),
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"))
-    IvfStream.quantizerStaleness(driftedPref, centers).coalesce(1)
+    IvfStream.quantizerStaleness(driftedPref, FloatCenters(centers)).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/stale/batch=99")
     val (repM, newC) = IvfStream.maintain(spark, s"$tmp/idx",
-      s"$tmp/stale", centers,
+      s"$tmp/stale", FloatCenters(centers),
       IvfStream.MaintainPolicy(meanD2Max = healthy * 2))
     assert(repM.fired && newC.nonEmpty,
       s"drifted prefix log must fire maintain: $repM")
@@ -2716,7 +2720,7 @@ class PipelineSpec extends SparkSpec {
     // search-equivalent to a fresh assignment of the same rows
     val survivors = pref.filter(!col("vec_id").isin(doomed: _*))
       .select("vec_id", "embedding")
-    val wantIdx = IvfStream.assignOnIngest(survivors, newC.get)
+    val wantIdx = IvfStream.encode(survivors, newC.get)
     val gotIdx = IvfStream.readIndex(spark, s"$tmp/idx")
     assert(gotIdx.exceptAll(wantIdx).isEmpty &&
       wantIdx.exceptAll(gotIdx).isEmpty)
@@ -2728,10 +2732,10 @@ class PipelineSpec extends SparkSpec {
     assert(idxAfter.columns.contains("label"),
       "reassign must carry the metadata columns through the rewrite")
     val gotAfter = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
-      idxAfter.filter(predQ), newC.get, e.filter(predQ), k = 3,
+      idxAfter.filter(predQ), newC.get.centers, e.filter(predQ), k = 3,
       dims = dims, shortlist = 30, nProbe = 4)
     val wantAfter = Similarity.matryoshkaIvfTopKFromIndex(spark, qs,
-      semi(idxAfter.select("vec_id", "embedding", "list")), newC.get,
+      semi(idxAfter.select("vec_id", "embedding", "list")), newC.get.centers,
       semi(e), k = 3, dims = dims, shortlist = 30, nProbe = 4)
     assert(gotAfter.exceptAll(wantAfter).isEmpty &&
       wantAfter.exceptAll(gotAfter).isEmpty)
@@ -2754,7 +2758,7 @@ class PipelineSpec extends SparkSpec {
     val schema = e.select(cols.map(col): _*).schema
     val q = IvfStream.attach(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), centers,
+        .parquet(s"$tmp/in"), FloatCenters(centers),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt",
       metaCols = Seq("label"))
     q.processAllAvailable()
@@ -2767,7 +2771,7 @@ class PipelineSpec extends SparkSpec {
     assert(idx.columns.contains("label"))
     // ...and the (id, vec, list) payload ≡ the plain ingest's
     val streamed = idx.select("vec_id", "embedding", "list")
-    val want = IvfStream.assignOnIngest(e, centers)
+    val want = IvfStream.encode(e, FloatCenters(centers))
     assert(streamed.exceptAll(want).isEmpty &&
       want.exceptAll(streamed).isEmpty)
     // a metadata-filtered probe runs DIRECTLY on the streamed index
@@ -2798,9 +2802,9 @@ class PipelineSpec extends SparkSpec {
     e.select("vec_id", "embedding").filter(col("vec_id") < 250).coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/in")
     val schema = e.select("vec_id", "embedding").schema
-    val q = IvfStream.attachBq(
+    val q = IvfStream.attach(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), centers,
+        .parquet(s"$tmp/in"), BqCenters(centers),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt",
       stalenessDir = Some(s"$tmp/stale"))
     q.processAllAvailable()
@@ -2809,7 +2813,7 @@ class PipelineSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     // accrued sign-code rows ≡ the batch build's frame, row for row
-    val streamed = IvfStream.readCodesIndex(spark, s"$tmp/idx")
+    val streamed = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes")
     assert(streamed.exceptAll(batchIndex).isEmpty &&
       batchIndex.exceptAll(streamed).isEmpty,
       "streamed 1-bit codes index diverges from the batch build")
@@ -2824,27 +2828,27 @@ class PipelineSpec extends SparkSpec {
     val stale = spark.read.parquet(s"$tmp/stale")
     assert(stale.count() == 2L, "one staleness row per trigger")
     assert(stale.agg(sum("n_vecs")).head.getLong(0) == e.count())
-    // reassignBq: refresh under NEW centers ≡ a fresh batch build
+    // reassign: refresh under NEW BQ centers ≡ a fresh batch build
     // (sign codes are centroid-independent; only the listing moves)
     val centersB = Similarity.ivfTrainCentroids(spark, e, nLists = 8,
       seed = 7)
-    IvfStream.reassignBq(spark, s"$tmp/idx", e, centersB)
-    val refreshed = IvfStream.readCodesIndex(spark, s"$tmp/idx")
+    IvfStream.reassign(spark, s"$tmp/idx", BqCenters(centersB), Some(e))
+    val refreshed = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes")
     val (_, freshB) = Similarity.ivfBqBuildIndex(spark, e, nLists = 8,
       seed = 7)
     assert(refreshed.exceptAll(freshB).isEmpty &&
       freshB.exceptAll(refreshed).isEmpty,
-      "reassignBq diverges from a fresh build under the new centers")
+      "reassign diverges from a fresh build under the new BQ centers")
     // loud valve: refs missing an indexed id refuse, index untouched
     val before = refreshed.collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq, r.getInt(2)))
       .toSet
     val err = intercept[IllegalArgumentException] {
-      IvfStream.reassignBq(spark, s"$tmp/idx",
-        e.filter(col("vec_id") =!= 3), centers)
+      IvfStream.reassign(spark, s"$tmp/idx", BqCenters(centers),
+        Some(e.filter(col("vec_id") =!= 3)))
     }
     assert(err.getMessage.contains("absent from refs"))
-    val after = IvfStream.readCodesIndex(spark, s"$tmp/idx").collect()
+    val after = IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes").collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq, r.getInt(2)))
       .toSet
     assert(after == before, "refused refresh must leave the index untouched")
@@ -2979,7 +2983,7 @@ class PipelineSpec extends SparkSpec {
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
     // ingest-assigned index frame, probed — must equal the batch
     // operator row for row (one assignment arithmetic, one quantizer)
-    val index = IvfStream.assignOnIngest(e, centers)
+    val index = IvfStream.encode(e, FloatCenters(centers))
     val got = Similarity.ivfTopKFromIndex(spark, e, index, centers,
       k = 5, nProbe = 3)
     val want = Similarity.ivfTopK(spark, e, k = 5, nLists = 8, nProbe = 3)
@@ -3001,7 +3005,7 @@ class PipelineSpec extends SparkSpec {
     val schema = e.schema
     val q = IvfStream.attach(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), centers,
+        .parquet(s"$tmp/in"), FloatCenters(centers),
       indexDir = s"$tmp/index", checkpointDir = s"$tmp/ckpt")
     q.processAllAvailable()
     e.filter(col("vec_id") >= 100 && col("vec_id") < 200).coalesce(1)
@@ -4262,7 +4266,7 @@ class PipelineSpec extends SparkSpec {
     assert(!fs.exists(p("nofp.compact")), "no temp write before the check")
     val e5 = intercept[IllegalArgumentException] {
       graft.streaming.IvfStream.reassign(spark, s"$tmp/noivf",
-        Array(Array(0.0)))
+        FloatCenters(Array(Array(0.0))))
     }
     assert(e5.getMessage.contains("does not exist"))
     assert(!fs.exists(p("noivf.compact")))
@@ -4323,7 +4327,7 @@ class PipelineSpec extends SparkSpec {
     Seq((0L, Seq(1, 2), 0)).toDF("vec_id", "codes", "list")
       .write.parquet(s"$tmp/stream/batch=0")
     val e2 = intercept[IllegalArgumentException] {
-      graft.streaming.IvfStream.readCodesIndex(spark, s"$tmp/stream")
+      graft.streaming.IvfStream.readIndex(spark, s"$tmp/stream", payload = "codes")
     }
     assert(e2.getMessage.contains("pre-r11"))
   }
@@ -4332,7 +4336,7 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     val centers = Array(Array(0.0, 0.0), Array(1.0, 1.0))
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    val r = graft.streaming.IvfStream.quantizerStaleness(empty, centers)
+    val r = graft.streaming.IvfStream.quantizerStaleness(empty, FloatCenters(centers))
       .collect()
     assert(r.length == 1)
     // getLong/getDouble on a null would throw — the r11 ADVICE NPE class

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.streaming.ModelStore.{FloatCenters, SqQuantizer}
 
 /** Physical-plan assertions — the properties that decide whether these
   * operators survive a 1000-executor / 100 TB deployment: filters and
@@ -17,12 +18,14 @@ class PlanSpec extends SparkSpec {
     // the pair joins once ran a 192-term cosine expression whose
     // generated method passed 64 KB; Spark then ran them interpreted.
     // Every query that reaches an ANN rung runs the same way: the
-    // shared probe's stage-1 scan, shortlist cut and re-rank compile.
+    // shared probe's stage-1 scan, shortlist cut and re-rank compile,
+    // and so does the index write path q207's maintenance cycle runs.
     val s = spark.newSession()
     s.conf.set("spark.sql.codegen.fallback", "false")
     for (q <- Seq("q62_semdedup", "q41_ivf_topk", "q56_ivfpq_topk",
         "q202_matryoshka_topk", "q203_sq_topk", "q204_ivf_index_topk",
-        "q205_mrl_ivf_topk", "q206_ivfsq_topk", "q210_bq_topk",
+        "q205_mrl_ivf_topk", "q206_ivfsq_topk", "q207_index_maint",
+        "q210_bq_topk",
         "q211_ivfbq_topk", "q212_index_delete", "q213_filtered_ann",
         "q215_snapshot_index", "q216_ivfopq_topk"))
       assert(SparkEntry.queries(q)(s, sf).collect().nonEmpty, q)
@@ -465,7 +468,7 @@ class PlanSpec extends SparkSpec {
     val tmp = tempDir("graft_ivfplan").toString
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
-    IvfStream.assignOnIngest(e, centers)
+    IvfStream.encode(e, FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/batch=0")
     val index = IvfStream.readIndex(spark, tmp)
     val p = Similarity.ivfTopKFromIndex(spark,
@@ -490,7 +493,7 @@ class PlanSpec extends SparkSpec {
     val tmp = tempDir("graft_fplan").toString
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
-    IvfStream.assignOnIngestWithMeta(e, centers, metaCols = Seq("label"))
+    IvfStream.encode(e, FloatCenters(centers), metaCols = Seq("label"))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/batch=0")
     val index = spark.read.parquet(tmp)
     val p = Similarity.ivfTopKFromIndex(spark,
@@ -519,7 +522,7 @@ class PlanSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
     val codec = Similarity.sqTrain(spark, e)
-    IvfStream.assignAndEncodeOnIngestWithMeta(e, centers, codec,
+    IvfStream.encode(e, SqQuantizer(centers, codec),
         metaCols = Seq("label"))
       .write.partitionBy("list").mode("overwrite").parquet(s"$tmp/batch=0")
     val index = spark.read.parquet(tmp)

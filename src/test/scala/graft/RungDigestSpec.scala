@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Similarity, VectorIndex}
 import graft.streaming.IvfStream
+import graft.streaming.ModelStore.{BqCenters, FloatCenters, PqQuantizer, SqQuantizer}
 
 /** Every ANN rung's probe output pinned by digest: the SHA-256 of its
   * sorted (qid, rid, cos, rn) rows on the sf0.001 embeddings, each rung
@@ -132,19 +133,19 @@ class RungDigestSpec extends SparkSpec {
       nCodes = 16, iters = 3)
     val (mCenters, _) = Similarity.matryoshkaIvfBuildIndex(spark, e,
       dims = 32, nLists = 4)
-    val floatIdx = IvfStream.assignOnIngestWithMeta(e, centers,
+    val floatIdx = IvfStream.encode(e, FloatCenters(centers),
       metaCols = meta)
-    val sqIdx = IvfStream.assignAndEncodeOnIngestWithMeta(e, centers, codec,
+    val sqIdx = IvfStream.encode(e, SqQuantizer(centers, codec),
       metaCols = meta)
-    val bqIdx = IvfStream.assignAndBqEncodeOnIngestWithMeta(e, centers,
+    val bqIdx = IvfStream.encode(e, BqCenters(centers),
       metaCols = meta)
-    val pqIdx = IvfStream.assignAndPqEncodeOnIngestWithMeta(e, pq,
+    val pqIdx = IvfStream.encode(e, PqQuantizer(pq),
       metaCols = meta)
-    val opqIdx = IvfStream.assignAndPqEncodeOnIngestWithMeta(e, opq,
+    val opqIdx = IvfStream.encode(e, PqQuantizer(opq),
       metaCols = meta)
-    val mIdx = IvfStream.assignOnIngestWithMeta(
-      e.withColumn("embedding", slice(col("embedding"), 1, 32)), mCenters,
-      metaCols = meta)
+    val mIdx = IvfStream.encode(
+      e.withColumn("embedding", slice(col("embedding"), 1, 32)),
+      FloatCenters(mCenters), metaCols = meta)
     def both(name: String)(probe: (DataFrame, DataFrame) => DataFrame,
                            idx: DataFrame) = Seq(
       name -> (() => probe(idx, e)),
@@ -202,7 +203,7 @@ class RungDigestSpec extends SparkSpec {
     "jobs as before the probes were shared") {
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val (codec, codes) = Similarity.sqBuildIndex(spark, e)
-    val sqIdx = IvfStream.assignAndEncodeOnIngest(e, centers, codec)
+    val sqIdx = IvfStream.encode(e, SqQuantizer(centers, codec))
     val (_, ivfJobs) = countingJobs(Similarity.ivfSqTopKFromIndex(spark, qs,
       sqIdx, centers, codec, e, k, sl).collect())
     val (_, flatJobs) = countingJobs(Similarity.sqTopKFromIndex(spark, qs,

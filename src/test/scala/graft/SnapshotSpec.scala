@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.Similarity
 import graft.streaming.{IndexDelete, IndexManifest, IvfStream, NearDupStream}
+import graft.streaming.ModelStore.{FloatCenters, PqQuantizer, SqQuantizer}
 
 /** [[graft.streaming.IndexManifest]]: snapshot-isolated index reads —
   * the r12-verdict-#1 contract. A reader pinned to the pre-rewrite
@@ -26,10 +27,10 @@ class SnapshotSpec extends SparkSpec {
   /** Build the two-trigger float-IVF fixture and enroll it. */
   private def floatFixture(root: String, e: DataFrame,
                            centers: Array[Array[Double]]): Unit = {
-    IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 === 0), centers)
+    IvfStream.encode(e.filter(col("vec_id") % 2 === 0), FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/idx/batch=0")
-    IvfStream.assignOnIngest(e.filter(col("vec_id") % 2 =!= 0), centers)
+    IvfStream.encode(e.filter(col("vec_id") % 2 =!= 0), FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/idx/batch=1")
     IndexManifest.enroll(spark, s"$root/idx")
@@ -63,7 +64,7 @@ class SnapshotSpec extends SparkSpec {
     // 2. the current generation excludes the doomed ids and nothing else
     val after = IvfStream.readIndex(spark, s"$root/idx")
     assert(after.filter(col("vec_id").isin(doomed: _*)).count() === 0L)
-    val want = IvfStream.assignOnIngest(e, centers)
+    val want = IvfStream.encode(e, FloatCenters(centers))
       .filter(!col("vec_id").isin(doomed: _*))
     assert(after.exceptAll(want).isEmpty && want.exceptAll(after).isEmpty)
     // 3. probes over the current snapshot never return a deleted id and
@@ -130,8 +131,8 @@ class SnapshotSpec extends SparkSpec {
     // reassign: copy-on-write too, probe route equality preserved
     val centers7 = Similarity.ivfTrainCentroids(spark, e, nLists = 4,
       seed = 7)
-    IvfStream.reassign(spark, s"$root/idx", centers7)
-    val want = IvfStream.assignOnIngest(e, centers7)
+    IvfStream.reassign(spark, s"$root/idx", FloatCenters(centers7))
+    val want = IvfStream.encode(e, FloatCenters(centers7))
     val got = IvfStream.readIndex(spark, s"$root/idx")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // the compaction generation is STILL readable (not vacuumed)
@@ -152,7 +153,7 @@ class SnapshotSpec extends SparkSpec {
     val currentRows = rowSet(IvfStream.readIndex(spark, s"$root/idx"))
     // an orphan from a forged crashed rewrite: data written, no commit
     val fs = fsFor(root)
-    IvfStream.assignOnIngest(e.filter(col("vec_id") < 5), centers)
+    IvfStream.encode(e.filter(col("vec_id") < 5), FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/idx/batch=-777")
     val removed = IndexManifest.vacuum(spark, s"$root/idx", keepGens = 1)
@@ -187,7 +188,7 @@ class SnapshotSpec extends SparkSpec {
     val schema = e.select("vec_id", "embedding").schema
     val q = IvfStream.attach(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(s"$tmp/in"), centers,
+        .parquet(s"$tmp/in"), FloatCenters(centers),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt")
     q.processAllAvailable()
     val afterOne = IndexManifest.pin(spark, s"$tmp/idx")
@@ -202,7 +203,7 @@ class SnapshotSpec extends SparkSpec {
     assert(rowSet(IndexManifest.readSnapshot(spark, s"$tmp/idx", afterOne)
       .get.select("vec_id", "embedding", "list")) === oneRows)
     // the current generation carries both triggers ≡ the batch build
-    val want = IvfStream.assignOnIngest(e, centers)
+    val want = IvfStream.encode(e, FloatCenters(centers))
     val got = IvfStream.readIndex(spark, s"$tmp/idx")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     e.unpersist()
@@ -214,7 +215,7 @@ class SnapshotSpec extends SparkSpec {
     val root = tempDir("graft_snapq").toString
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     val codec = Similarity.sqTrain(spark, e)
-    IvfStream.assignAndEncodeOnIngest(e, centers, codec)
+    IvfStream.encode(e, SqQuantizer(centers, codec))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/idx/batch=0")
     IndexManifest.enroll(spark, s"$root/idx")
@@ -222,22 +223,22 @@ class SnapshotSpec extends SparkSpec {
     def codeRows(df: DataFrame): Set[(Long, Seq[Byte], Int)] =
       df.collect().map(r => (r.getLong(0),
         r.getAs[Array[Byte]](1).toSeq, r.getInt(2))).toSet
-    val before = codeRows(IvfStream.readCodesIndex(spark, s"$root/idx"))
+    val before = codeRows(IvfStream.readIndex(spark, s"$root/idx", payload = "codes"))
     IndexDelete.deleteIds(spark, s"$root/idx", Seq(3L, 4L), "vec_id")
     // pinned read still sees the pre-delete codes
     assert(codeRows(IndexManifest.readSnapshot(spark, s"$root/idx", pinned)
       .get.select("vec_id", "codes", "list")) === before)
-    assert(IvfStream.readCodesIndex(spark, s"$root/idx")
+    assert(IvfStream.readIndex(spark, s"$root/idx", payload = "codes")
       .filter(col("vec_id").isin(3L, 4L)).count() === 0L)
-    IvfStream.compactCodesIndex(spark, s"$root/idx")
+    IvfStream.compactIndex(spark, s"$root/idx")
     // refresh under epoch B ≡ fresh encode of the surviving ids
     val centersB = Similarity.ivfTrainCentroids(spark, e, nLists = 4,
       seed = 7)
     val codecB = Similarity.sqTrain(spark, e)
-    IvfStream.reassignSq(spark, s"$root/idx", e, centersB, codecB)
-    val want = codeRows(IvfStream.assignAndEncodeOnIngest(
-      e.filter(!col("vec_id").isin(3L, 4L)), centersB, codecB))
-    assert(codeRows(IvfStream.readCodesIndex(spark, s"$root/idx")) === want)
+    IvfStream.reassign(spark, s"$root/idx", SqQuantizer(centersB, codecB), Some(e))
+    val want = codeRows(IvfStream.encode(
+      e.filter(!col("vec_id").isin(3L, 4L)), SqQuantizer(centersB, codecB)))
+    assert(codeRows(IvfStream.readIndex(spark, s"$root/idx", payload = "codes")) === want)
     // the ORIGINAL pin still reads its bytes through all three rewrites
     assert(codeRows(IndexManifest.readSnapshot(spark, s"$root/idx", pinned)
       .get.select("vec_id", "codes", "list")) === before)
@@ -323,7 +324,7 @@ class SnapshotSpec extends SparkSpec {
     val tmp = tempDir("graft_snapp").toString
     val e = Tables.embeddings(spark, sf)
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 8)
-    IvfStream.assignOnIngest(e, centers)
+    IvfStream.encode(e, FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$tmp/idx/batch=0")
     IndexManifest.enroll(spark, s"$tmp/idx")
@@ -429,9 +430,9 @@ class SnapshotSpec extends SparkSpec {
     val b0 = e.filter(col("vec_id") < 100)
     val b1 = e.filter(col("vec_id") >= 100 && col("vec_id") < 200)
     IvfStream.installBatch(spark, s"$root/idx", 0L,
-      IvfStream.assignOnIngest(b0, centers))
+      IvfStream.encode(b0, FloatCenters(centers)))
     IvfStream.installBatch(spark, s"$root/idx", 1L,
-      IvfStream.assignOnIngest(b1, centers))
+      IvfStream.encode(b1, FloatCenters(centers)))
     val pinned = IndexManifest.pin(spark, s"$root/idx")
     val before = rowSet(IndexManifest
       .readSnapshot(spark, s"$root/idx", pinned).get
@@ -452,7 +453,7 @@ class SnapshotSpec extends SparkSpec {
     // live-referenced batch=1 leaves — the copy-on-write route must
     // leave them untouched and keep exactly one copy of the rows
     IvfStream.installBatch(spark, s"$root/idx", 1L,
-      IvfStream.assignOnIngest(b1, centers))
+      IvfStream.encode(b1, FloatCenters(centers)))
     assert(filesOf(s"$root/idx/batch=1") === batch1Files,
       "replay must never touch committed leaf files")
     assert(rowSet(IndexManifest.readSnapshot(spark, s"$root/idx", pinned)
@@ -464,18 +465,18 @@ class SnapshotSpec extends SparkSpec {
     // (neither a duplicate row nor a new generation)
     val genAfter = IndexManifest.pin(spark, s"$root/idx").gen
     IvfStream.installBatch(spark, s"$root/idx", 1L,
-      IvfStream.assignOnIngest(b1, centers))
+      IvfStream.encode(b1, FloatCenters(centers)))
     assert(IndexManifest.pin(spark, s"$root/idx").gen === genAfter,
       "an already-folded replay must not commit")
     assert(rowSet(IvfStream.readIndex(spark, s"$root/idx")) === before)
     // an UNCOMMITTED orphan (first attempt crashed before its commit):
     // plain overwrite is safe — no reader ever referenced the dir
-    IvfStream.assignOnIngest(b1.limit(3), centers)
+    IvfStream.encode(b1.limit(3), FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/idx/batch=7")
     IvfStream.installBatch(spark, s"$root/idx", 7L,
-      IvfStream.assignOnIngest(
-        e.filter(col("vec_id") >= 200 && col("vec_id") < 210), centers))
+      IvfStream.encode(
+        e.filter(col("vec_id") >= 200 && col("vec_id") < 210), FloatCenters(centers)))
     assert(IvfStream.readIndex(spark, s"$root/idx").count() ===
       before.size + 10L)
     e.unpersist()
@@ -584,14 +585,14 @@ class SnapshotSpec extends SparkSpec {
     // the pinned leaves would have been probed under the NEW model)
     val centersB = Similarity.ivfTrainCentroids(spark, e, nLists = 4,
       seed = 7)
-    IvfStream.reassign(spark, s"$root/idx", centersB)
+    IvfStream.reassign(spark, s"$root/idx", FloatCenters(centersB))
     // 1. the pinned probe replays byte-identically: old leaves AND the
     //    old model epoch, resolved by generation
     assert(rowSet(vi.topKPinned(spark, snap, qs, e, 5)) === before,
       "pinned probe must survive a refresh byte-identically")
     // ...and it equals the in-memory twin under the OLD quantizer
     val wantOld = Similarity.ivfTopKFromIndex(spark, qs,
-      IvfStream.assignOnIngest(e, vi.centers), vi.centers, k = 5,
+      IvfStream.encode(e, vi.quantizer), vi.quantizer.centers, k = 5,
       nProbe = 2)
     assert(rowSet(vi.topKPinned(spark, snap, qs, e, 5)) ===
       rowSet(wantOld))
@@ -600,7 +601,7 @@ class SnapshotSpec extends SparkSpec {
     val snap2 = vi.pin(spark)
     assert(snap2.gen > snap.gen)
     val wantNew = Similarity.ivfTopKFromIndex(spark, qs,
-      IvfStream.assignOnIngest(e, centersB), centersB, k = 5, nProbe = 2)
+      IvfStream.encode(e, FloatCenters(centersB)), centersB, k = 5, nProbe = 2)
     assert(rowSet(vi.topKPinned(spark, snap2, qs, e, 5)) ===
       rowSet(wantNew))
     // 3. a compaction commits a generation WITHOUT a model epoch — the
@@ -640,13 +641,13 @@ class SnapshotSpec extends SparkSpec {
     // rotation move together)
     val newModel = Similarity.ivfOpqTrainModel(spark, e, nLists = 4,
       m = 8, nCodes = 16, seed = 7)
-    IvfStream.reassignPq(spark, s"$root/idx", e, newModel)
+    IvfStream.reassign(spark, s"$root/idx", PqQuantizer(newModel), Some(e))
     assert(rowSet(vi.topKPinned(spark, snap, qs, e, 5)) === before,
       "pinned PQ probe must replay under the OLD pair")
     // the current epoch round-trips the rotation: probe ≡ the
     // in-memory twin under newModel
     val want = Similarity.ivfPqTopKFromIndex(spark, qs,
-      graft.streaming.IvfStream.assignAndPqEncodeOnIngest(e, newModel),
+      graft.streaming.IvfStream.encode(e, PqQuantizer(newModel)),
       newModel, e, k = 5, nProbe = 2, refine = 4)
     assert(rowSet(vi.topKPinned(spark, vi.pin(spark), qs, e, 5)) ===
       rowSet(want))
@@ -671,7 +672,7 @@ class SnapshotSpec extends SparkSpec {
     }
     val q = IvfStream.attach(
       spark.readStream.schema(cols.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in"), centers,
+        .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in"), FloatCenters(centers),
       indexDir = s"$tmp/idx", checkpointDir = s"$tmp/ckpt")
     q.processAllAvailable()
     q.stop()
@@ -685,7 +686,7 @@ class SnapshotSpec extends SparkSpec {
     assert(fs.exists(new Path(md, "gen-000000017.delta.txt")),
       "post-anchor triggers must go back to O(Δ) deltas")
     // the resolved index ≡ the batch build, through the whole chain
-    val want = IvfStream.assignOnIngest(e, centers)
+    val want = IvfStream.encode(e, FloatCenters(centers))
     val got = IvfStream.readIndex(spark, s"$tmp/idx")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // vacuum to one generation: the chain back to the gen-16 anchor
@@ -814,20 +815,20 @@ class SnapshotSpec extends SparkSpec {
     val centers = Similarity.ivfTrainCentroids(spark, e, nLists = 4)
     IndexManifest.enroll(spark, s"$root/idx")
     (0 until 5).foreach { b =>
-      IvfStream.assignOnIngest(e.filter(col("vec_id") % 5 === b), centers)
+      IvfStream.encode(e.filter(col("vec_id") % 5 === b), FloatCenters(centers))
         .write.partitionBy("list").mode("overwrite")
         .parquet(s"$root/idx/batch=$b")
       IndexManifest.commitBatch(spark, s"$root/idx", b.toLong)
     }
     // healthy reading, litter past maxBatches → compacts once
-    IvfStream.quantizerStaleness(e, centers).coalesce(1)
+    IvfStream.quantizerStaleness(e, FloatCenters(centers)).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/log/batch=0")
-    val healthy = IvfStream.quantizerStaleness(e, centers)
+    val healthy = IvfStream.quantizerStaleness(e, FloatCenters(centers))
       .collect()(0).getDouble(1)
     val policy = IvfStream.MaintainPolicy(meanD2Max = healthy * 2,
       maxBatches = 3)
     val (r1, _) = IvfStream.maintain(spark, s"$root/idx", s"$root/log",
-      centers, policy)
+      FloatCenters(centers), policy)
     assert(!r1.fired && r1.compacted, s"litter must compact: $r1")
     val genAfter = IndexManifest.pin(spark, s"$root/idx").gen
     // the five dead batch dirs are STILL on disk (no vacuum yet)...
@@ -838,7 +839,7 @@ class SnapshotSpec extends SparkSpec {
     // call must NOT compact again (each re-compaction would add a
     // generation forever until someone vacuums)
     val (r2, _) = IvfStream.maintain(spark, s"$root/idx", s"$root/log",
-      centers, policy)
+      FloatCenters(centers), policy)
     assert(!r2.compacted, s"dead leaves re-triggered compaction: $r2")
     assert(IndexManifest.pin(spark, s"$root/idx").gen === genAfter,
       "a no-op maintain must not commit a generation")
@@ -873,15 +874,15 @@ class SnapshotSpec extends SparkSpec {
     IndexManifest.enroll(spark, s"$root/idx")
     val b0 = e.filter(col("vec_id") < 100)
     IvfStream.installBatch(spark, s"$root/idx", 0L,
-      IvfStream.assignOnIngest(b0, centers))
+      IvfStream.encode(b0, FloatCenters(centers)))
     // retire something so the vacuum has real work: fold trigger 0
     // copy-on-write via a committed replay
     IvfStream.installBatch(spark, s"$root/idx", 0L,
-      IvfStream.assignOnIngest(b0, centers))
+      IvfStream.encode(b0, FloatCenters(centers)))
     // forge trigger 5 crashed BETWEEN its leaf write and its commit —
     // the restart replay is conceptually mid-flight from here
     val b5 = e.filter(col("vec_id") >= 100 && col("vec_id") < 150)
-    IvfStream.assignOnIngest(b5, centers)
+    IvfStream.encode(b5, FloatCenters(centers))
       .write.partitionBy("list").mode("overwrite")
       .parquet(s"$root/idx/batch=5")
     val fs = fsFor(root)
@@ -891,10 +892,10 @@ class SnapshotSpec extends SparkSpec {
       "vacuum must NOT reclaim the pending trigger's uncommitted leaf")
     // the replay now completes: same write + commit, exactly-once rows
     IvfStream.installBatch(spark, s"$root/idx", 5L,
-      IvfStream.assignOnIngest(b5, centers))
+      IvfStream.encode(b5, FloatCenters(centers)))
     val got = IvfStream.readIndex(spark, s"$root/idx")
-    val want = IvfStream.assignOnIngest(
-      e.filter(col("vec_id") < 150), centers)
+    val want = IvfStream.encode(
+      e.filter(col("vec_id") < 150), FloatCenters(centers))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "the completed replay must yield exactly-once rows")
     e.unpersist()
@@ -910,15 +911,15 @@ class SnapshotSpec extends SparkSpec {
     val b0 = e.filter(col("vec_id") < 100)
     val b1 = e.filter(col("vec_id") >= 100 && col("vec_id") < 200)
     IvfStream.installBatch(spark, s"$root/idx", 0L,
-      IvfStream.assignOnIngest(b0, centers))
+      IvfStream.encode(b0, FloatCenters(centers)))
     IvfStream.installBatch(spark, s"$root/idx", 1L,
-      IvfStream.assignOnIngest(b1, centers))
+      IvfStream.encode(b1, FloatCenters(centers)))
     // fold trigger 1 into a rewrite leaf (a committed replay), then
     // vacuum: the retired batch=1 dir AND the generations that
     // referenced it are both reclaimed — exactly the window the r14
     // ADVICE named, where the next replay used to look "fresh"
     IvfStream.installBatch(spark, s"$root/idx", 1L,
-      IvfStream.assignOnIngest(b1, centers))
+      IvfStream.encode(b1, FloatCenters(centers)))
     IndexManifest.vacuum(spark, s"$root/idx", keepGens = 1)
     val fs = fsFor(root)
     assert(!fs.exists(new Path(s"$root/idx/batch=1")),
@@ -933,7 +934,7 @@ class SnapshotSpec extends SparkSpec {
     // post-restart replay of trigger 1: no dir, no manifest reference
     // in retained history — only the tombstone knows. Must be a no-op.
     IvfStream.installBatch(spark, s"$root/idx", 1L,
-      IvfStream.assignOnIngest(b1, centers))
+      IvfStream.encode(b1, FloatCenters(centers)))
     assert(IndexManifest.pin(spark, s"$root/idx").gen === gen,
       "a tombstoned replay must not commit a generation")
     assert(rowSet(IvfStream.readIndex(spark, s"$root/idx")) === before,
@@ -942,8 +943,8 @@ class SnapshotSpec extends SparkSpec {
       "a tombstoned replay must not rewrite the reclaimed dir")
     // a genuinely fresh trigger still lands normally
     IvfStream.installBatch(spark, s"$root/idx", 2L,
-      IvfStream.assignOnIngest(
-        e.filter(col("vec_id") >= 200 && col("vec_id") < 210), centers))
+      IvfStream.encode(
+        e.filter(col("vec_id") >= 200 && col("vec_id") < 210), FloatCenters(centers)))
     assert(IvfStream.readIndex(spark, s"$root/idx").count() ===
       before.size + 10L)
     e.unpersist()

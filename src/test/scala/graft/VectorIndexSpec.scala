@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Similarity, VectorIndex}
 import graft.streaming.{IndexManifest, IvfStream}
+import graft.streaming.ModelStore.{PqQuantizer, SqQuantizer}
 
 /** [[graft.pipeline.VectorIndex]]: the tier matrix as ONE contract —
   * the identical lifecycle scenario (train → enroll → ingest → probe →
@@ -152,8 +153,9 @@ class VectorIndexSpec extends SparkSpec {
     vi.ingest(spark, e.select("vec_id", "embedding"), 0L)
     val qs = e.filter(col("vec_id") < 10)
     val got = vi.topK(spark, qs, e, k = 3)
+    val SqQuantizer(centers, codec) = vi.quantizer
     val want = Similarity.ivfSqTopKFromIndex(spark, qs,
-      IvfStream.readCodesIndex(spark, s"$tmp/idx"), vi.centers, vi.codec,
+      IvfStream.readIndex(spark, s"$tmp/idx", payload = "codes"), centers, codec,
       e, k = 3, shortlist = 30, nProbe = 4)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "facade probe diverges from the direct operator")
@@ -177,7 +179,7 @@ class VectorIndexSpec extends SparkSpec {
       "matryoshka tier must store the prefix, not the full vector")
     val (wantCenters, wantIdx) = Similarity.matryoshkaIvfBuildIndex(
       spark, e, dims, nLists = 4)
-    assert(vi.centers.zip(wantCenters).forall(p =>
+    assert(vi.quantizer.centers.zip(wantCenters).forall(p =>
       p._1.sameElements(p._2)),
       "facade training must equal matryoshkaIvfBuildIndex's")
     assert(idx.exceptAll(wantIdx).isEmpty && wantIdx.exceptAll(idx).isEmpty,
@@ -185,7 +187,7 @@ class VectorIndexSpec extends SparkSpec {
     val qs = e.filter(col("vec_id") < 10)
     val got = vi.topK(spark, qs, e, k = 3)
     val want = Similarity.matryoshkaIvfTopKFromIndex(spark, qs, idx,
-      vi.centers, e, k = 3, dims = dims, shortlist = 30, nProbe = 4)
+      vi.quantizer.centers, e, k = 3, dims = dims, shortlist = 30, nProbe = 4)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "facade matryoshka probe diverges from the direct operator")
     e.unpersist()
@@ -241,7 +243,7 @@ class VectorIndexSpec extends SparkSpec {
       IvfStream.MaintainPolicy(meanD2Max = 1.0))
     assert(rep.fired)
     val reloaded = VectorIndex.load(spark, s"$tmp/idx")
-    assert(reloaded.centers.zip(vi1.centers).forall(p =>
+    assert(reloaded.quantizer.centers.zip(vi1.quantizer.centers).forall(p =>
       p._1.sameElements(p._2)),
       "a reload after a fired maintain must carry the refreshed epoch")
     // loud on a half-persisted layout
@@ -315,7 +317,8 @@ class VectorIndexSpec extends SparkSpec {
       VectorIndex.Params(VectorIndex.PqTier(m = 8, nCodes = 16,
         opqIters = 3, opqAuto = true), nLists = 8,
         trainCap = n.toInt), s"$tmp/c")
-    assert(viC.model.rotation.nonEmpty)
+    val PqQuantizer(viModel) = viC.quantizer
+    assert(viModel.rotation.nonEmpty)
     blobs.unpersist(); correlated.unpersist()
   }
 }
